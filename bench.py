@@ -29,14 +29,15 @@ def build_line(summary: dict, timings: dict[str, float]) -> str:
     """
     short = {n.split("_", 1)[0]: round(v, 1) for n, v in sorted(timings.items())}
     line = json.dumps({**summary, "queries": short}, separators=(",", ":"))
-    keep_n = 120
-    while len(line) >= 1900 and keep_n > 0:
+    # down to zero kept entries: a summary-only line still prints
+    for keep_n in range(120, -1, -10):
+        if len(line) < 1900:
+            break
         keep = dict(sorted(short.items(), key=lambda kv: -kv[1])[:keep_n])
         line = json.dumps(
             {**summary, "queries_truncated": len(short) - len(keep), "queries": keep},
             separators=(",", ":"),
         )
-        keep_n -= 10
     return line
 
 

@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 __all__ = [
     "parse_german_number",
     "parse_german_date",
+    "german_number_sql",
+    "german_date_sql",
     "to_cents",
     "from_cents",
     "null_normalize",
@@ -28,8 +30,9 @@ __all__ = [
     "fingerprint",
     "category_level",
     "in_category_subtree",
-    "ci_contains",
     "amount_type",
+    "sql_string",
+    "sql_ident",
 ]
 
 
@@ -52,9 +55,20 @@ def parse_german_number(c: Column | str) -> Column:
     return cleaned.cast("decimal(18,2)")
 
 
+def german_number_sql(expr: str) -> str:
+    """parse_german_number as SQL text over the SQL expression `expr`, for
+    builders that assemble a whole projection as one string."""
+    return f"CAST(translate({expr}, ',.', '.') AS DECIMAL(18,2))"
+
+
 def parse_german_date(c: Column | str) -> Column:
     """'31.12.2024' → DATE (day-first)."""
     return F.to_date(_col(c), "d.M.yyyy")
+
+
+def german_date_sql(expr: str) -> str:
+    """parse_german_date as SQL text over the SQL expression `expr`."""
+    return f"to_date({expr}, 'd.M.yyyy')"
 
 
 def to_cents(c: Column | str) -> Column:
@@ -122,13 +136,17 @@ def in_category_subtree(c: Column | str, prefix: str) -> Column:
     return F.coalesce(_col(c), F.lit("")).startswith(prefix)
 
 
-def ci_contains(c: Column | str, needle: str) -> Column:
-    """Case-insensitive *literal* substring, null-safe (NULL → false).
+def sql_string(value: str) -> str:
+    """Python str → Spark SQL string literal that parses back to exactly
+    `value`. Backslash and quote are backslash-escaped (the parser's
+    default escaping), so user text such as `x' OR true OR 'y` stays data.
+    Every other character, newline included, is legal inside the quotes."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    Literal semantics (no regex metacharacters), matching pandas
-    str.contains(..., regex=False).
-    """
-    return F.lower(F.coalesce(_col(c), F.lit(""))).contains(needle.lower())
+
+def sql_ident(name: str) -> str:
+    """Column name → backquoted Spark SQL identifier (backquotes doubled)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def amount_type(c: Column | str = "amount") -> Column:

@@ -19,7 +19,16 @@ def get_spark(app_name: str = "pandaspark", aqe: bool = True) -> SparkSession:
     replan round-trip that dwarfs the query itself — measured at sf0.1:
     q11 rollup 1.17s→0.41s, q34 LSH 2.03s→1.37s with AQE off, identical
     plans otherwise. bench.py passes aqe=False only below a data-size
-    threshold; correctness runs and tests keep the production setting."""
+    threshold; correctness runs and tests keep the production setting.
+
+    Call-site capture (spark.python.sql.dataFrameDebugging.enabled) is
+    pinned off. PySpark 4.1 turns it on by default and then records the
+    Python call site of every Column operation in the JVM: each F.col,
+    F.when or comparison costs extra py4j round trips, which made building
+    the 330-rule cascade take ~23,700 round trips (~5.5 s on 4 vCPUs)
+    before any job ran. With it off, an analysis error loses PySpark's
+    `== DataFrame ==` call-site block but keeps its message and the JVM
+    stack trace."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     return (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -38,20 +47,10 @@ def get_spark(app_name: str = "pandaspark", aqe: bool = True) -> SparkSession:
         # vs 2.3 s with the cache sized to hold the whole workload).
         # Metaspace cost is a few KB per entry — negligible
         .config("spark.sql.codegen.cache.maxEntries", "5000")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         # no stderr progress bars: the bench driver captures a bounded tail
         # of merged output, and \r-spam competes with the JSON result line
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
-
-
-def prep(spark: SparkSession) -> SparkSession:
-    """Pin runtime confs that correctness depends on, regardless of who
-    built the session (the driver passes its own session into queries).
-
-    UTC matters because the testdata parquet stores naive timestamps which
-    DuckDB interprets as-is; Spark must not shift them through a local zone.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return spark

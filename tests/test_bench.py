@@ -58,3 +58,16 @@ def test_line_shrinks_below_window_even_with_extra_summary_keys():
     d = json.loads(line)
     assert d["spark_passes"] == 3 and d["duckdb_passes"] == 3
     assert d["queries_truncated"] == 400 - len(d["queries"])
+
+
+def test_line_falls_back_to_summary_only_when_ten_entries_overflow():
+    # keys long enough that even the 10 slowest entries exceed the window:
+    # truncation must go on to a summary-only line instead of failing the
+    # length assertion in main()
+    timings = {f"q{i:03d}{'x' * 200}_op": float(i) for i in range(1, 21)}
+    assert len(json.dumps({k.split("_", 1)[0]: v for k, v in list(timings.items())[:10]})) >= 1900
+    line = build_line(_SUMMARY, timings)
+    assert len(line) < 1900
+    d = json.loads(line)
+    assert d["queries"] == {} and d["queries_truncated"] == 20
+    assert d["metric"] == _SUMMARY["metric"]

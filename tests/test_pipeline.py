@@ -7,6 +7,7 @@ the cascade, DuckDB for the analytics queries).
 
 from __future__ import annotations
 
+import datetime as dt
 import hashlib
 import random
 
@@ -152,6 +153,158 @@ def test_cascade_matches_python_oracle(spark):
     # chunked compilation must be semantically identical
     got_chunked = [r.category for r in apply_cascade(df, RULES, chunk_size=2).collect()]
     assert got_chunked == expected
+
+
+# Rule and account text the cascade must treat as data: SQL quote and
+# escape characters, identifier quotes, LIKE wildcards, non-ASCII case
+# pairs, a newline, a literal backslash-n and an injection attempt.
+HOSTILE = ["'", "\\", "\\'", "`", '"', "%", "_", "ß", "Ä", "\n", "\\n", "x' OR true OR 'y"]
+
+
+def _hostile_rules():
+    """(rule, python predicate over a row dict) pairs: substring runs of
+    hostile needles, categories and accounts, with predicate rules between
+    the runs and an attribute whose name holds a backquote."""
+    pairs = [
+        (SubstringRule(f"cat{h}{i}", "party", f"p{h}"), None) for i, h in enumerate(HOSTILE)
+    ]
+    pairs.append((PredicateRule("amt'\\big", lambda: F.col("amount") > 50), lambda r: r["amount"] > 50))
+    pairs += [
+        (SubstringRule(h + "acct", "purpose", h, account=f"a{h}"), None) for h in HOSTILE
+    ]
+    pairs.append(
+        (
+            PredicateRule("x' OR true OR 'y", lambda: F.col("account") == "a'"),
+            lambda r: r["account"] == "a'",
+        )
+    )
+    pairs += [
+        (SubstringRule("ä-lower", "note`x", "ä"), None),
+        (SubstringRule("STRASSE", "note`x", "STRAßE"), None),
+        (SubstringRule("%lit", "note`x", "%"), None),
+        (SubstringRule("_lit", "note`x", "_"), None),
+    ]
+    return pairs
+
+
+def test_cascade_hostile_rule_text_matches_python_oracle(spark):
+    """Quotes, backslashes, backquotes, wildcards, non-ASCII and injection
+    text in needles, categories, accounts and attribute names compile to
+    the same last-match-wins result as the pure-Python forward loop —
+    over an existing category, whole and in chunks of two."""
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+    pairs = _hostile_rules()
+    rules = [r for r, _ in pairs]
+    rng = random.Random(7)
+    frags = HOSTILE + [f"P{h}" for h in HOSTILE] + ["plain", "Ä", "straße", "STRASSE", "ÄRGER", "x OR y", ""]
+
+    def text():
+        return None if rng.random() < 0.1 else "".join(rng.choice(frags) for _ in range(rng.randint(0, 3)))
+
+    rows = [
+        {
+            "party": text(),
+            "purpose": text(),
+            "note`x": text(),
+            "account": rng.choice([f"a{h}" for h in HOSTILE] + ["giro", None]),
+            "amount": round(rng.uniform(-100, 100), 2),
+            "category": rng.choice(["kept", "x' OR 'y", None]),
+        }
+        for _ in range(400)
+    ]
+
+    def oracle(row):
+        cat = row["category"]
+        for rule, pred in pairs:
+            if isinstance(rule, SubstringRule):
+                hay = (row[rule.attribute] or "").lower()
+                hit = rule.needle.lower() in hay and (
+                    rule.account is None or row["account"] == rule.account
+                )
+            else:
+                hit = pred(row)
+            if hit:
+                cat = rule.category
+        return cat
+
+    expected = [oracle(r) for r in rows]
+    # the table must exercise the rules: most categories are reached
+    assert len({c for c in expected} & {r.category for r in rules}) >= len(rules) - 4
+    schema = StructType(
+        [StructField(c, StringType()) for c in ("party", "purpose", "note`x", "account")]
+        + [StructField("amount", DoubleType()), StructField("category", StringType())]
+    )
+    df = spark.createDataFrame([tuple(r.values()) for r in rows], schema)
+    assert [r.category for r in apply_cascade(df, rules).collect()] == expected
+    got_chunked = [r.category for r in apply_cascade(df, rules, chunk_size=2).collect()]
+    assert got_chunked == expected
+
+
+def test_reader_keeps_account_names_and_shuffled_headers(spark, tmp_path):
+    """Account-map names are data (quote and backslash come back exactly),
+    an IBAN missing from the map gives a NULL account, and header columns
+    are found by name: shuffled order and two Währung columns parse."""
+    # the header line is found by its first three names; the rest may move
+    shuffled = "Buchung;Wertstellungsdatum;Auftraggeber/Empfänger;Saldo;Währung;Verwendungszweck;Betrag;Währung;Buchungstext"
+    rows = ["01.05.2024;02.05.2024;Haus & Co;1.234,56;EUR;Miete Mai;-1.000,00;EUR;Dauerauftrag"]
+    (tmp_path / "umsatz_DE11111111111111111111_2024.csv").write_text(
+        "\n".join(["Umsatzanzeige", shuffled] + rows) + "\n", encoding="iso-8859-1"
+    )
+    _write_csv(
+        tmp_path / "umsatz_DE99999999999999999999_2024.csv",
+        ["Umsatzanzeige", ""],
+        ["03.05.2024;03.05.2024;REWE;Lastschrift;   ;-5,00;10,00;EUR"],
+    )
+    names = {"DE11111111111111111111": "o'giro\\x", "DE22222222222222222222": "gesa'"}
+    got = sorted(read_ing_csv(spark, str(tmp_path), account_map=names).collect(), key=lambda r: r.party)
+    assert [tuple(r) for r in got] == [
+        ("o'giro\\x", dt.date(2024, 5, 1), dt.date(2024, 5, 2), "Haus & Co", "Dauerauftrag",
+         "Miete Mai", -1000.0, 1234.56),
+        (None, dt.date(2024, 5, 3), dt.date(2024, 5, 3), "REWE", "Lastschrift", None, -5.0, 10.0),
+    ]
+
+
+def _round_trips(monkeypatch):
+    """Counter of py4j commands sent from this thread to the JVM."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        sent[0] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    return sent
+
+
+def test_import_path_builds_in_few_round_trips(spark, csv_dir, monkeypatch):
+    """Building the import path's expressions is driver work paid on every
+    import: a 330-rule cascade may cost at most 8 py4j round trips more
+    than a 10-rule one, and reading one CSV file at most 100."""
+    from pandaspark.rules import compile_cascade
+
+    rules = [
+        SubstringRule(f"cat{i % 40}", ("party", "purpose", "book_text")[i % 3], f"needle{i}",
+                      account="giro" if i % 7 == 0 else None)
+        for i in range(330)
+    ]
+    one_file = f"{csv_dir}/umsatz_DE11111111111111111111_2024.csv"
+    compile_cascade(rules[:10])  # first use resolves JVM classes
+    read_ing_csv(spark, one_file, account_map=ACCOUNT_MAP)
+    sent = _round_trips(monkeypatch)
+
+    compile_cascade(rules[:10])
+    small, sent[0] = sent[0], 0
+    assert small > 0  # the counter sees this session's gateway traffic
+    compile_cascade(rules)
+    assert sent[0] <= small + 8, (small, sent[0])
+
+    sent[0] = 0
+    read_ing_csv(spark, one_file, account_map=ACCOUNT_MAP)
+    assert sent[0] <= 100, sent[0]
 
 
 def test_pipeline_end_to_end(spark, csv_dir, tmp_path):

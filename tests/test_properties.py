@@ -11,7 +11,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from pandaspark.functions import fingerprint, parse_german_number
+from pandaspark.functions import fingerprint, german_number_sql, parse_german_number
 from pandaspark.rules import SubstringRule, apply_cascade
 
 FAST = settings(
@@ -33,13 +33,14 @@ def _german(cents: int) -> str:
 def test_german_number_roundtrip(spark, cents_list):
     rows = [(i, _german(c)) for i, c in enumerate(cents_list)]
     df = spark.createDataFrame(rows, "i int, s string")
-    got = {
-        r.i: r.cents
-        for r in df.select(
-            "i", (parse_german_number("s") * 100).cast("long").alias("cents")
-        ).collect()
-    }
-    assert got == {i: c for i, c in enumerate(cents_list)}
+    out = df.select(
+        "i",
+        (parse_german_number("s") * 100).cast("long").alias("cents"),
+        # the SQL-text twin the CSV reader uses
+        F.expr(f"CAST({german_number_sql('s')} * 100 AS BIGINT)").alias("sql_cents"),
+    ).collect()
+    assert {r.i: r.cents for r in out} == {i: c for i, c in enumerate(cents_list)}
+    assert all(r.sql_cents == r.cents for r in out)
 
 
 _text = st.one_of(
