@@ -17,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pandaspark.queries import REGISTRY  # noqa: E402
-from pandaspark.session import get_spark  # noqa: E402
+from pandaspark.session import bench_session  # noqa: E402
 
 
 def build_line(summary: dict, timings: dict[str, float]) -> str:
@@ -43,26 +43,7 @@ def build_line(summary: dict, timings: dict[str, float]) -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # AQE is the production default (see session.get_spark docstring), but
-    # below ~1 GiB of input there is nothing for it to adapt — every shuffle
-    # already fits one target partition — and its per-stage replan
-    # round-trips dominate sub-second queries. Scale-aware toggle, explicit
-    # override via SPARK_GRAFT_AQE=0/1.
-    data_bytes = sum(
-        os.path.getsize(os.path.join(sf_dir, f))
-        for f in os.listdir(sf_dir)
-        if f.endswith(".parquet")
-    )
-    aqe_env = os.environ.get("SPARK_GRAFT_AQE")
-    aqe = (aqe_env == "1") if aqe_env in ("0", "1") else data_bytes >= 1 << 30
-    # Same scale-awareness for shuffle width: below ~1 GiB every shuffle
-    # fits a handful of partitions and 32-way task scheduling is pure
-    # overhead (measured at sf0.1: q66 1.7s->0.96s, q34 stabilized
-    # 1.6s, q82 1.7s->1.3s with 8). Map-side parallelism is unaffected —
-    # queries.spread() pins compute stages to defaultParallelism.
-    if data_bytes < 1 << 30:
-        os.environ.setdefault("PANDASPARK_SHUFFLE_PARTITIONS", "8")
-    spark = get_spark("pandaspark-bench", aqe=aqe)
+    spark = bench_session(sf_dir, "pandaspark-bench")
     # OFF, not ERROR: the streaming queries log benign post-completion
     # accumulator ERRORs (~100s of KB of stack traces) that can crowd the
     # JSON result line out of the driver's bounded merged-output capture.

@@ -38,10 +38,8 @@ FROM (SELECT doc_id, source, n_tok,
 
 def chunk_manifest(docs: DataFrame) -> DataFrame:
     """The chunking transform itself: (doc_id, source, text) → overlapping
-    token-window manifest rows. Pure stateless map + bounded explode, so the
-    SAME plan serves batch (q97) and a streaming append-mode source
-    (streaming.stream_chunk_manifest) — the tokenizer front door runs
-    identically over a parquet corpus and a live document feed."""
+    token-window manifest rows: a stateless map plus a bounded explode,
+    registered over the documents table as q97."""
     n_tok = F.regexp_count("text", F.lit(r"\S+")).cast("long")
     starts = F.sequence(
         F.lit(0).cast("long"),

@@ -1,94 +1,35 @@
 """Streaming-engine registry entries (q165-q166, q176-q179).
 
-These queries run the REAL Structured Streaming engine — file-source
-stream, watermark, windowed/session/join/dedup state stores, memory sink
-driven to completion with processAllAvailable — and register the result
-frame against the same ANSI oracles the batch forms use (q25's tumbling
-windows, q26's session islands, q65's interval join, plain DISTINCT).
-That makes the streaming path itself value-hash-checked by the driver,
-not just pytest-mirrored: on a bounded input, a correct streaming engine
-must produce byte-identical results to the batch plan.
+These queries run the REAL Structured Streaming engine over the events
+table and register the result against the same ANSI oracles the batch
+forms use (q25's tumbling windows, q26's session islands, q65's interval
+join, plain DISTINCT, latest-per-key). That makes the streaming path itself
+value-hash-checked, not just pytest-mirrored: on a bounded input, a
+correct streaming engine must produce byte-identical results to the batch
+plan.
 
-Scale shape: the file source lists and splits parquet like the batch
-scan; the windowed aggregate keeps only open-window state (watermark
-evicts the rest), and the memory sink stands in for the parquet/Kafka
-sink a deployment would use (`streaming.py` owns those paths). Reference
-parity: the reference has no streaming surface at all
-(/root/reference/panda.py is batch pandas) — this is pure
-beyond-reference capability.
+The reader, the memory-sink runner and the operators live in
+`pandaspark.streaming`; this module holds the oracles, the registrations,
+q176's stream-static join and q179's change-feed staging. Reference
+parity: the reference (panda.py) is batch pandas with no streaming
+surface, so this is beyond-reference capability.
 """
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import register, sql_cents_sum
-
-_uid = itertools.count()
-
-_EVENTS_TS = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
+from ..streaming import (
+    dedup_stream,
+    interval_join,
+    read_event_stream,
+    run_to_memory,
+    session_windows,
+    stream_cdc_apply,
+    windowed_counts,
 )
-
-_EVENTS_NANOS = T.StructType(
-    [f if f.name != "ts" else T.StructField("ts", T.LongType()) for f in _EVENTS_TS]
-)
-
-
-def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source event stream with the same two-generation ts dispatch as
-    queries.load(): nanos-int64 fixtures stream as LongType and truncate to
-    micros; native-timestamp fixtures stream as TimestampType directly."""
-    import os
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # same scale-aware shuffle width as queries.load(): the streaming state
-    # store hash-partitions on the shuffle width, and 200 near-empty state
-    # partitions is pure scheduling overhead at bench scales
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get(
-            "PANDASPARK_SHUFFLE_PARTITIONS",
-            str(spark.sparkContext.defaultParallelism),
-        ),
-    )
-    base = sf_dir.rstrip("/")
-    batch_ts = spark.read.parquet(f"{base}/events.parquet").schema["ts"].dataType
-    # the file source rejects a plain single-file path ("basePath must be a
-    # directory"); a glob is accepted and resolves basePath to the parent,
-    # covering both fixture layouts (single file and multi-part directory)
-    schema = _EVENTS_NANOS if isinstance(batch_ts, T.LongType) else _EVENTS_TS
-    raw = spark.readStream.format("parquet").schema(schema).load(f"{base}/events.[p]arquet")
-    if isinstance(batch_ts, T.LongType):
-        return raw.withColumn(
-            "ts", F.expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)")
-        )
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def _run_complete(df: DataFrame, prefix: str, mode: str = "complete") -> DataFrame:
-    """Drive a bounded stream to completion into a uniquely-named memory
-    sink (bench/driver call each query repeatedly in one session).
-    Aggregating plans use complete mode; joins/maps append."""
-    name = f"{prefix}_{next(_uid)}"
-    q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return df.sparkSession.table(name)
 
 
 _Q165_ORACLE = f"""
@@ -107,18 +48,7 @@ GROUP BY 1, 2
     "Structured Streaming tumbling-window agg, hash-checked against batch SQL",
 )
 def q165(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _event_stream(spark, sf_dir).withWatermark("ts", "2 hours")
-    agg = (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias(
-                "total_value"
-            ),
-        )
-        .select(F.col("w.start").alias("bucket"), "event_type", "n", "total_value")
-    )
-    return _run_complete(agg, "q165_tumbling")
+    return run_to_memory(windowed_counts(read_event_stream(spark, sf_dir)), "q165_tumbling")
 
 
 _Q166_ORACLE = """
@@ -151,18 +81,7 @@ FROM s GROUP BY user_id, session_no
     "Structured Streaming session windows, hash-checked against island SQL",
 )
 def q166(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _event_stream(spark, sf_dir).withWatermark("ts", "2 hours")
-    agg = (
-        e.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-    return _run_complete(agg, "q166_sessions")
+    return run_to_memory(session_windows(read_event_stream(spark, sf_dir)), "q166_sessions")
 
 
 # --- q176: stream-static broadcast enrichment ---------------------------------
@@ -190,7 +109,7 @@ GROUP BY 1, 2
 def _q176_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The un-started streaming plan (exposed so plan gates can assert the
     dim join broadcasts before the state-store shuffle)."""
-    e = _event_stream(spark, sf_dir).withWatermark("ts", "2 hours")
+    e = read_event_stream(spark, sf_dir).withWatermark("ts", "2 hours")
     dim = F.broadcast(
         spark.read.parquet(f"{sf_dir.rstrip('/')}/customer.parquet").select(
             F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
@@ -215,7 +134,7 @@ def _q176_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Structured Streaming stream-static broadcast join + windowed agg vs batch SQL",
 )
 def q176(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _run_complete(_q176_frame(spark, sf_dir), "q176_stream_static")
+    return run_to_memory(_q176_frame(spark, sf_dir), "q176_stream_static")
 
 
 # --- q177: stream-stream interval join ----------------------------------------
@@ -243,9 +162,7 @@ FROM events a JOIN events b
 def _q177_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The un-started streaming plan (exposed so plan gates can assert the
     double watermark + event-time-bounded join that keeps state evictable)."""
-    from .. import streaming as S
-
-    return S.interval_join(_event_stream(spark, sf_dir))
+    return interval_join(read_event_stream(spark, sf_dir))
 
 
 @register(
@@ -254,7 +171,7 @@ def _q177_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Structured Streaming watermarked stream-stream interval join vs batch SQL",
 )
 def q177(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _run_complete(_q177_frame(spark, sf_dir), "q177_stream_stream", mode="append")
+    return run_to_memory(_q177_frame(spark, sf_dir), "q177_stream_stream", mode="append")
 
 
 # --- q178: streaming state-store dedup -----------------------------------------
@@ -279,12 +196,10 @@ SELECT DISTINCT user_id, event_type FROM events
     "Structured Streaming state-store dropDuplicates vs batch DISTINCT",
 )
 def q178(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .. import streaming as S
-
-    deduped = S.dedup_stream(
-        _event_stream(spark, sf_dir), keys=["user_id", "event_type"]
+    deduped = dedup_stream(
+        read_event_stream(spark, sf_dir), keys=["user_id", "event_type"]
     ).select("user_id", "event_type")
-    return _run_complete(deduped, "q178_stream_dedup", mode="append")
+    return run_to_memory(deduped, "q178_stream_dedup", mode="append")
 
 
 # --- q179: streaming CDC apply through the versioned store ---------------------
@@ -322,7 +237,6 @@ def q179(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from . import load
-    from .. import streaming as S
 
     work = tempfile.mkdtemp(prefix="q179_cdc_")
     feed_dir, store_dir, ckpt = f"{work}/feed", f"{work}/store", f"{work}/ckpt"
@@ -358,7 +272,7 @@ def q179(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(feed_dir)
     )
-    q = S.stream_cdc_apply(change_stream, store_dir, ckpt, key="user_id", ts_col="ts")
+    q = stream_cdc_apply(change_stream, store_dir, ckpt, key="user_id", ts_col="ts")
     try:
         q.processAllAvailable()
     finally:

@@ -18,7 +18,7 @@ def get_spark(app_name: str = "pandaspark", aqe: bool = True) -> SparkSession:
     adapt, while each adaptive stage boundary costs a stage-materialize +
     replan round-trip that dwarfs the query itself — measured at sf0.1:
     q11 rollup 1.17s→0.41s, q34 LSH 2.03s→1.37s with AQE off, identical
-    plans otherwise. bench.py passes aqe=False only below a data-size
+    plans otherwise. bench_session passes aqe=False only below a data-size
     threshold; correctness runs and tests keep the production setting.
 
     Call-site capture (spark.python.sql.dataFrameDebugging.enabled) is
@@ -54,3 +54,26 @@ def get_spark(app_name: str = "pandaspark", aqe: bool = True) -> SparkSession:
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
+
+
+def bench_session(sf_dir: str, app_name: str) -> SparkSession:
+    """get_spark with the bench's scale rule, for bench.py and every script
+    whose numbers must match it. Below 1 GiB of parquet input at `sf_dir`:
+    - AQE is off. There is nothing for it to adapt (every shuffle already
+      fits one target partition), and its per-stage replan round trips
+      dominate sub-second queries. SPARK_GRAFT_AQE=0/1 overrides.
+    - PANDASPARK_SHUFFLE_PARTITIONS defaults to 8. 32-way task scheduling
+      is pure overhead there (measured at sf0.1: q66 1.7s->0.96s, q82
+      1.7s->1.3s). Map-side parallelism is unaffected: queries.spread()
+      pins compute stages to defaultParallelism."""
+    data_bytes = sum(
+        os.path.getsize(os.path.join(sf_dir, f))
+        for f in os.listdir(sf_dir)
+        if f.endswith(".parquet")
+    )
+    small = data_bytes < 1 << 30
+    aqe_env = os.environ.get("SPARK_GRAFT_AQE")
+    aqe = (aqe_env == "1") if aqe_env in ("0", "1") else not small
+    if small:
+        os.environ.setdefault("PANDASPARK_SHUFFLE_PARTITIONS", "8")
+    return get_spark(app_name, aqe=aqe)

@@ -1,26 +1,32 @@
-"""Structured Streaming surface (SURVEY.md §2.9).
+"""Structured Streaming operators (SURVEY.md §2.9).
 
-The reference's import loop (new CSV batches → parse → dedup → categorize →
-upsert) is inherently a stream; here it is expressed as Structured Streaming
-jobs. Batch and streaming share the same expression library — the cascade,
-fingerprints, and window aggs are identical Columns in both — so semantics
-can't drift between the paths.
+Everything here runs under the registry's streaming entries
+(queries/streaming_reg.py: q165, q166, q176-q179), which replay the
+bounded events table through the live engine and are value-hash-checked
+against batch SQL oracles:
 
-Scale design: file-source streams parallelize listing + read across
-executors; watermarks bound state; the upsert sink goes through
-foreachBatch so each micro-batch applies the same exactly-once
-fingerprint MERGE as the batch path.
+- `read_event_stream`: the file-source events stream, with the same
+  two-generation timestamp dispatch as queries.load().
+- `run_to_memory`: drives a bounded stream to completion into a memory sink.
+- `windowed_counts`, `session_windows`, `dedup_stream`, `interval_join`:
+  watermarked stateful operators (tumbling windows, session windows,
+  state-store dedup, stream-stream interval join). Each watermark bounds
+  its operator's state on an unbounded stream.
+- `stream_cdc_apply`: a change feed applied through foreachBatch to the
+  versioned snapshot store, one atomic commit per micro-batch.
 """
 
 from __future__ import annotations
 
+import itertools
+import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-EVENTS_SCHEMA = T.StructType(
+_EVENTS_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
         T.StructField("ts", T.TimestampType()),
@@ -31,57 +37,59 @@ EVENTS_SCHEMA = T.StructType(
     ]
 )
 
-
-DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
+_EVENTS_NANOS = T.StructType(
+    [f if f.name != "ts" else T.StructField("ts", T.LongType()) for f in _EVENTS_SCHEMA]
 )
 
+_uid = itertools.count()
 
-def read_document_stream(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-source stream over a documents directory — the live-ingest form
-    of the corpus scan (new parquet drops = new docs)."""
-    reader = spark.readStream.format(fmt).schema(DOCS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path)
+# stream_cdc_apply's change-feed convention: an `op` column whose value
+# "delete" marks a tombstone; any other value is an upsert
+_OP_COL = "op"
+_DELETE_OP = "delete"
 
 
-def stream_chunk_manifest(docs_stream: DataFrame) -> DataFrame:
-    """Streaming tokenizer front door: the SAME chunk_manifest transform as
-    batch q97 applied to a document stream. Stateless map + bounded explode
-    → append output mode, no watermark, no state store; each micro-batch
-    emits its docs' chunk rows exactly once. Batch parity asserted in
-    test_streaming_multimodal.py."""
-    from .queries.pipeline3 import chunk_manifest
-
-    return chunk_manifest(docs_stream)
-
-
-def read_event_stream(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """File-source stream over an events directory (new files = new data).
-    `max_files_per_trigger` paces micro-batches (tests use it to force
-    multi-batch runs; production uses it for ingestion back-pressure)."""
+def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source event stream with the same two-generation ts dispatch as
+    queries.load(): nanos-int64 fixtures stream as LongType and truncate to
+    micros; native-timestamp fixtures stream as TimestampType directly."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    reader = spark.readStream.format(fmt).schema(EVENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # same scale-aware shuffle width as queries.load(): the streaming state
+    # store hash-partitions on the shuffle width, and 200 near-empty state
+    # partitions is pure scheduling overhead at bench scales
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        os.environ.get(
+            "PANDASPARK_SHUFFLE_PARTITIONS",
+            str(spark.sparkContext.defaultParallelism),
+        ),
+    )
+    base = sf_dir.rstrip("/")
+    batch_ts = spark.read.parquet(f"{base}/events.parquet").schema["ts"].dataType
+    # the file source rejects a plain single-file path ("basePath must be a
+    # directory"); a glob is accepted and resolves basePath to the parent,
+    # covering both fixture layouts (single file and multi-part directory)
+    schema = _EVENTS_NANOS if isinstance(batch_ts, T.LongType) else _EVENTS_SCHEMA
+    raw = spark.readStream.format("parquet").schema(schema).load(f"{base}/events.[p]arquet")
+    if isinstance(batch_ts, T.LongType):
+        return raw.withColumn(
+            "ts", F.expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)")
+        )
+    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def run_to_memory(df: DataFrame, prefix: str, mode: str = "complete") -> DataFrame:
+    """Drive a bounded stream to completion into a uniquely-named memory
+    sink (callers run each query repeatedly in one session).
+    Aggregating plans use complete mode; joins/maps append."""
+    name = f"{prefix}_{next(_uid)}"
+    q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return df.sparkSession.table(name)
 
 
 def windowed_counts(
@@ -119,54 +127,6 @@ def session_windows(
         .select(
             "user_id", F.col("w.start").alias("session_start"), F.col("w.end").alias("session_end"), "n_events"
         )
-    )
-
-
-STATEFUL_TOTALS_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
-
-_TOTALS_STATE_SCHEMA = T.StructType(
-    [T.StructField("n", T.LongType()), T.StructField("cents", T.LongType())]
-)
-
-
-def stateful_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator via applyInPandasWithState:
-    per-user running (count, exact-cents total), emitted each micro-batch a
-    user appears in ("update" mode downstream).
-
-    This is the escape hatch for stateful semantics Spark's built-in
-    windowed aggs can't express (custom accumulators, CEP-ish logic).
-    State is per-key and Arrow-batched, so at scale it shards across
-    executors by the groupBy key exactly like an agg shuffle; value totals
-    are integer cents (associative, exact), so re-partitioning or batch
-    boundaries can't change results.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        n, cents = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            cents += int((pdf["value"] * 100).round().astype("int64").sum())
-        state.update((n, cents))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [cents / 100.0]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        STATEFUL_TOTALS_SCHEMA,
-        _TOTALS_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -252,33 +212,12 @@ def interval_join(
     return left.join(right, cond).select("user_id", "click_event", "view_event")
 
 
-def run_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
-    """Drive a bounded file-source stream to completion into an in-memory
-    sink (test/dev harness; production uses parquet/kafka sinks)."""
-    q = (
-        stream_df.writeStream.outputMode("complete" if _has_agg(stream_df) else "append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
-
-
-def _has_agg(df: DataFrame) -> bool:
-    return "Aggregate" in df._jdf.queryExecution().analyzed().toString()
-
-
-def stream_upsert_to_store(
+def _stream_upsert_to_store(
     batch_stream: DataFrame,
     store_path: str,
     apply_batch: Callable[[DataFrame, DataFrame], DataFrame],
     checkpoint: str,
     prepare_first: Callable[[DataFrame], DataFrame] | None = None,
-    compact_every: int | None = None,
 ):
     """foreachBatch exactly-once sink: every micro-batch runs the SAME
     merge as the batch path (e.g. store.upsert) against the CURRENT store
@@ -292,20 +231,8 @@ def stream_upsert_to_store(
     is the same property the reference's ON CONFLICT upsert relies on
     (panda.py:713-728). With Delta on the classpath this becomes MERGE
     INTO without changing callers.
-
-    compact_every=N folds store maintenance into the sink: after every Nth
-    committed snapshot the store is rewritten into one file set
-    (store.compact_store) — the operational answer to micro-batch
-    small-file accretion; content-neutral and crash-safe like any other
-    commit.
     """
-    from .store import (
-        commit_snapshot,
-        compact_store,
-        gc_snapshots,
-        latest_commit_path,
-        snapshot_versions,
-    )
+    from .store import commit_snapshot, gc_snapshots, latest_commit_path
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -318,10 +245,6 @@ def stream_upsert_to_store(
         else:
             merged = apply_batch(store, batch_df)
         commit_snapshot(merged, store_path)
-        # version numbers are monotonic even after GC, so every Nth COMMIT
-        # triggers a compaction (which itself commits the next version)
-        if compact_every and max(snapshot_versions(spark, store_path)) % compact_every == 0:
-            compact_store(spark, store_path)
         gc_snapshots(spark, store_path, keep=2)
 
     return (
@@ -331,73 +254,19 @@ def stream_upsert_to_store(
     )
 
 
-def stream_dedup_corpus(
-    doc_stream: DataFrame,
-    store_path: str,
-    checkpoint: str,
-    text_col: str = "text",
-):
-    """Streaming incremental corpus dedup — the streaming twin of registry
-    q79 (queries/pipeline2.py) and the live form of the reference's
-    import-loop dedup (panda.py:736-745: new batch vs existing rows, first
-    wins): each micro-batch of documents is content-hashed (normalized
-    sha256, same family as q30/q79), anti-joined against the committed
-    corpus snapshot, deduplicated within the batch (min doc_id wins —
-    deterministic, never dropDuplicates), and only novel docs append into
-    the next snapshot.
-
-    Composes stream_upsert_to_store's exactly-once commit protocol: a
-    replayed micro-batch re-hashes to the same keys and anti-joins to
-    nothing, so retries are no-ops; a crash mid-commit leaves the previous
-    snapshot readable. At scale the anti-join shuffles on the 32-byte hash
-    against a corpus-sized store — the same plan as q79's batch form.
-    """
-    hash_expr = F.sha2(
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), 256
-    )
-
-    def _dedup_merge(store: DataFrame, batch: DataFrame) -> DataFrame:
-        batch = batch.withColumn("_h", hash_expr)
-        # within-batch first-wins (deterministic min doc_id per hash)
-        w_first = batch.groupBy("_h").agg(F.min("doc_id").alias("doc_id"))
-        batch = batch.join(w_first, ["_h", "doc_id"], "left_semi")
-        novel = batch.join(store.select("_h"), "_h", "left_anti")
-        return store.unionByName(novel)
-
-    def _first_batch(batch: DataFrame) -> DataFrame:
-        batch = batch.withColumn("_h", hash_expr)
-        w_first = batch.groupBy("_h").agg(F.min("doc_id").alias("doc_id"))
-        return batch.join(w_first, ["_h", "doc_id"], "left_semi")
-
-    return stream_upsert_to_store(
-        doc_stream,
-        store_path,
-        lambda store, batch: _dedup_merge(store, _strip(batch)),
-        checkpoint,
-        prepare_first=_first_batch,
-    )
-
-
-def _strip(df: DataFrame) -> DataFrame:
-    return df.drop("_h") if "_h" in df.columns else df
-
-
 def stream_cdc_apply(
     change_stream: DataFrame,
     store_path: str,
     checkpoint: str,
     key: str,
     ts_col: str,
-    op_col: str = "op",
-    delete_op: str = "delete",
-    compact_every: int | None = None,
 ):
     """Streaming CDC apply — the foreachBatch MERGE pattern Delta documents
     for change feeds, on the engine's own snapshot store: each micro-batch
-    is a change feed carrying an op column ('upsert'/'delete'-style), is
-    reduced to the LATEST change per key within the batch (by (ts, op)
-    with a fixed tie order — deterministic under replay), and applied to
-    the current snapshot through store.merge_into:
+    is a change feed carrying an `op` column ('delete' = tombstone, anything
+    else = upsert), is reduced to the LATEST change per key within the
+    batch (by (ts, op) with a fixed tie order — deterministic under
+    replay), and applied to the current snapshot through store.merge_into:
 
         MATCHED  + last op is delete  -> DELETE   (tombstone)
         MATCHED                       -> UPDATE   (take batch values)
@@ -406,14 +275,14 @@ def stream_cdc_apply(
     Exactly-once by composition: the reduction and merge are deterministic
     functions of (snapshot, batch), so a replayed micro-batch recommits an
     identical snapshot; a crash mid-write leaves the previous version
-    current (same protocol as stream_upsert_to_store). One full-outer
+    current (same protocol as _stream_upsert_to_store). One full-outer
     shuffle on the key per micro-batch; the store never rewrites more than
     the merge output."""
     from .store import merge_into
 
     def _latest(batch: DataFrame) -> DataFrame:
         w = Window.partitionBy(key).orderBy(
-            F.col(ts_col).desc(), F.col(op_col).desc()
+            F.col(ts_col).desc(), F.col(_OP_COL).desc()
         )
         return (
             batch.withColumn("_rn", F.row_number().over(w))
@@ -429,21 +298,20 @@ def stream_cdc_apply(
             b,
             [key],
             matched_update={c: f"s.{c}" for c in data_cols if c in b.columns},
-            matched_delete=f"s.{op_col} = '{delete_op}'",
+            matched_delete=f"s.{_OP_COL} = '{_DELETE_OP}'",
             not_matched_insert={c: f"s.{c}" for c in store.columns},
-            not_matched_insert_condition=f"s.{op_col} <> '{delete_op}'",
+            not_matched_insert_condition=f"s.{_OP_COL} <> '{_DELETE_OP}'",
         )
 
     def _first(batch: DataFrame) -> DataFrame:
         b = _latest(batch)
-        keep = b.filter(F.col(op_col) != delete_op)
-        return keep.drop(op_col)
+        keep = b.filter(F.col(_OP_COL) != _DELETE_OP)
+        return keep.drop(_OP_COL)
 
-    return stream_upsert_to_store(
+    return _stream_upsert_to_store(
         change_stream,
         store_path,
         _apply,
         checkpoint,
         prepare_first=_first,
-        compact_every=compact_every,
     )

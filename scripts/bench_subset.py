@@ -1,7 +1,7 @@
-"""Bench-matched per-query timing for a subset: mirrors bench.py's exact
-session conditions (get_spark aqe off below 1 GiB, PANDASPARK_SHUFFLE_PARTITIONS=8,
-noop sink, min-of-N) AND times the DuckDB oracle alongside, printing the
-ratio the judge computes ((spark - floor) / duck).
+"""Bench-matched per-query timing for a subset: bench.py's session
+(session.bench_session), noop sink and min-of-N, AND times the DuckDB
+oracle alongside, printing the ratio the judge computes
+((spark - floor) / duck).
 
 Usage: python scripts/bench_subset.py [sf_dir] q112 q138 ...
 Env: BS_RUNS (default 3), BS_FLOOR (default 0.21)
@@ -24,18 +24,10 @@ FLOOR = float(os.environ.get("BS_FLOOR", "0.21"))
 
 
 def main() -> None:
-    data_bytes = sum(
-        os.path.getsize(os.path.join(SF_DIR, f))
-        for f in os.listdir(SF_DIR)
-        if f.endswith(".parquet")
-    )
-    if data_bytes < 1 << 30:
-        os.environ.setdefault("PANDASPARK_SHUFFLE_PARTITIONS", "8")
-
     from pandaspark.queries import REGISTRY
-    from pandaspark.session import get_spark
+    from pandaspark.session import bench_session
 
-    spark = get_spark("bench-subset", aqe=data_bytes >= 1 << 30)
+    spark = bench_session(SF_DIR, "bench-subset")
     spark.sparkContext.setLogLevel("OFF")
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
 

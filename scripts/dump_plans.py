@@ -1,9 +1,8 @@
 """Dump .explain('formatted') for registry queries to plans/<tag>/<prefix>_<suffix>.txt.
 
 Usage: python scripts/dump_plans.py <tag> <suffix> [sf_dir] q55 q126 ...
-Writes plans/<tag>/q55_<suffix>.txt etc. Uses the same session conditions
-as bench.py (AQE off + 8 shuffle partitions below 1 GiB input) so the
-captured plan is the plan the bench actually runs.
+Writes plans/<tag>/q55_<suffix>.txt etc. Uses bench.py's session
+(session.bench_session) so the captured plan is the plan the bench runs.
 """
 from __future__ import annotations
 
@@ -22,18 +21,10 @@ else:
 
 
 def main() -> None:
-    data_bytes = sum(
-        os.path.getsize(os.path.join(SF_DIR, f))
-        for f in os.listdir(SF_DIR)
-        if f.endswith(".parquet")
-    )
-    if data_bytes < 1 << 30:
-        os.environ.setdefault("PANDASPARK_SHUFFLE_PARTITIONS", "8")
-
     from pandaspark.queries import REGISTRY
-    from pandaspark.session import get_spark
+    from pandaspark.session import bench_session
 
-    spark = get_spark("dump-plans", aqe=data_bytes >= 1 << 30)
+    spark = bench_session(SF_DIR, "dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", TAG)
     os.makedirs(out_dir, exist_ok=True)

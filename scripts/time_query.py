@@ -1,4 +1,5 @@
-"""Min-of-N wall timing for individual registry queries at a given SF.
+"""Min-of-N wall timing for individual registry queries at a given SF, on
+bench.py's session (session.bench_session).
 
 Usage: python scripts/time_query.py [sf_dir] q55 q82 ...   (N via TQ_RUNS)
 """
@@ -15,20 +16,12 @@ else:
     SF_DIR, NAMES = "/root/testdata/sf0.1", _args
 RUNS = int(os.environ.get("TQ_RUNS", "3"))
 
-from pyspark.sql import SparkSession
-
 import __spark_entry__ as entry
+from pandaspark.session import bench_session
 
 
 def main():
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .appName("time-query")
-        .getOrCreate()
-    )
+    spark = bench_session(SF_DIR, "time-query")
     qs = entry.queries()
     picks = [n for n in qs if any(n.startswith(p) for p in NAMES)] if NAMES else list(qs)
     if NAMES and not picks:

@@ -32,3 +32,14 @@ def ddb():
         )
     yield con
     con.close()
+
+
+def paced_stream(spark, path: str):
+    """File-source parquet stream over `path` (a directory or glob) that
+    reads one file per micro-batch, so rows in different files meet only
+    through streaming state. The schema is read from the files."""
+    return (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+    )

@@ -5,6 +5,7 @@ own, and degrade (never crash) if the registry outgrows the window."""
 from __future__ import annotations
 
 import json
+import os
 
 from bench import build_line
 
@@ -71,3 +72,22 @@ def test_line_falls_back_to_summary_only_when_ten_entries_overflow():
     d = json.loads(line)
     assert d["queries"] == {} and d["queries_truncated"] == 20
     assert d["metric"] == _SUMMARY["metric"]
+
+
+def test_bench_session_applies_the_scale_rule(tmp_path, monkeypatch):
+    """bench.py and the timing scripts share one session rule: below 1 GiB
+    of parquet input, AQE off and shuffle width 8, with SPARK_GRAFT_AQE=0/1
+    overriding the AQE choice. No JVM: get_spark is stubbed."""
+    from pandaspark import session
+
+    (tmp_path / "t.parquet").write_bytes(b"x" * 1024)
+    calls = []
+    monkeypatch.setattr(session, "get_spark", lambda app, aqe: calls.append((app, aqe)))
+    monkeypatch.delenv("PANDASPARK_SHUFFLE_PARTITIONS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_AQE", raising=False)
+
+    session.bench_session(str(tmp_path), "b")
+    monkeypatch.setenv("SPARK_GRAFT_AQE", "1")
+    session.bench_session(str(tmp_path), "b")
+    assert calls == [("b", False), ("b", True)]
+    assert os.environ["PANDASPARK_SHUFFLE_PARTITIONS"] == "8"

@@ -1,6 +1,6 @@
-"""Storage-layout gates: bucketed tables must join WITHOUT a shuffle, and
-the custom stateful streaming operator must agree with its batch oracle
-across micro-batch boundaries."""
+"""Storage-layout gates: bucketed tables must join WITHOUT a shuffle,
+partitioned and z-ordered stores must prune, and the LSH and sketch
+aggregates must stay inside their error bounds."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from pandaspark.queries import load
 from pandaspark.store import write_bucketed
-from pandaspark.streaming import read_event_stream, stateful_user_totals
 
 from .conftest import SF_DIR
 
@@ -77,50 +76,6 @@ def test_minhash_lsh_recall_and_candidate_rate(spark, ddb):
     recall = len(true_pairs & cand) / len(true_pairs)
     assert recall >= 0.9, f"LSH recall {recall:.2f} on near-identical pairs"
     assert len(cand) / all_pairs < 0.02, f"candidate flood: {len(cand)}/{all_pairs:.0f}"
-
-
-@pytest.fixture(scope="module")
-def paced_events_dir(tmp_path_factory, spark):
-    """Events split across several files so maxFilesPerTrigger=1 forces a
-    genuinely multi-micro-batch stream (state must carry across batches)."""
-    d = str(tmp_path_factory.mktemp("events_paced"))
-    load(spark, SF_DIR, "events").repartition(4).write.mode("overwrite").parquet(d)
-    return d
-
-
-def test_stateful_totals_match_batch_across_microbatches(spark, paced_events_dir):
-    stream = read_event_stream(spark, paced_events_dir, max_files_per_trigger=1)
-    q = (
-        stateful_user_totals(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("user_totals")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got_df = spark.sql("SELECT * FROM user_totals")
-    # "update" emits one row per user per micro-batch it appears in; the
-    # final state is the row with the highest n_events per user
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    final = (
-        got_df.withColumn("rn", F.row_number().over(w)).filter("rn = 1").drop("rn")
-    )
-    got = {r.user_id: (r.n_events, r.total_value) for r in final.collect()}
-
-    # batch oracle with the SAME per-element rounding (pandas round-half-even)
-    pdf = load(spark, SF_DIR, "events").select("user_id", "value").toPandas()
-    pdf["cents"] = (pdf["value"] * 100).round().astype("int64")
-    by_user = pdf.groupby("user_id").agg(n=("cents", "size"), cents=("cents", "sum"))
-    want = {
-        int(uid): (int(row["n"]), row["cents"] / 100.0)
-        for uid, row in by_user.iterrows()
-    }
-    assert got == want and len(got) > 0
 
 
 def test_sketch_aggregates_error_bounds(spark):

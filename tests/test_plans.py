@@ -366,6 +366,23 @@ def _analyzed(df) -> str:
     return df._jdf.queryExecution().analyzed().toString()
 
 
+@pytest.mark.parametrize(
+    "name, group_key",
+    [("q165_stream_tumbling", "window"), ("q166_stream_sessions", "session_window")],
+)
+def test_q165_q166_stream_state_is_watermarked(spark, monkeypatch, name, group_key):
+    """q165 (tumbling) and q166 (session) must group by their event-time
+    window under exactly one watermark: it is what lets the state store
+    finalize and evict closed windows on an unbounded stream."""
+    from pandaspark.queries import streaming_reg
+
+    # the entry's frame, un-started: swap the memory-sink runner for identity
+    monkeypatch.setattr(streaming_reg, "run_to_memory", lambda df, *a, **k: df)
+    plan = _analyzed(REGISTRY[name].fn(spark, SF_DIR))
+    assert plan.count("EventTimeWatermark") == 1, f"{name} lost or doubled its watermark"
+    assert f"Aggregate [{group_key}#" in plan, f"{name} no longer groups by {group_key}"
+
+
 def test_q176_streaming_dim_join_broadcasts(spark):
     """The stream-static join must broadcast the dim: shuffling the stream
     against customer would rebuild an exchange every micro-batch."""

@@ -4,7 +4,7 @@ The reference's DuckDB store commits atomically (panda.py:713-728: a
 crashed import can't destroy committed rows). These tests pin the parquet
 substitute: snapshot versioning with the `_SUCCESS` marker as the commit
 point, for both the batch `write_store` path and the streaming
-`stream_upsert_to_store` sink — including the lost-batch regression where
+`_stream_upsert_to_store` sink — including the lost-batch regression where
 micro-batch N+1 must observe micro-batch N's merge.
 """
 
@@ -23,9 +23,9 @@ from pandaspark.store import (
     read_store,
     write_store,
 )
-from pandaspark.streaming import read_event_stream, stream_upsert_to_store
+from pandaspark.streaming import _stream_upsert_to_store
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, paced_stream
 
 
 def _touch_garbage_version(root: str, version: int, name: str = "part-junk") -> None:
@@ -157,8 +157,8 @@ def test_stream_upsert_chains_micro_batches(spark, tmp_path):
         return store.join(batch, "event_id", "left_anti").unionByName(batch)
 
     root = str(tmp_path / "stream_store")
-    q = stream_upsert_to_store(
-        read_event_stream(spark, str(src) + "/f*", max_files_per_trigger=1),
+    q = _stream_upsert_to_store(
+        paced_stream(spark, str(src) + "/f*"),
         root,
         merge,
         checkpoint=str(tmp_path / "ck"),
@@ -183,72 +183,6 @@ def test_stream_upsert_chains_micro_batches(spark, tmp_path):
     # batch 1's rows in the store it read
     bumped = [v for v in g.values() if v >= 1000.0]
     assert len(bumped) == s1.count()
-
-
-def test_stream_dedup_corpus_matches_sequential_first_wins(spark, tmp_path):
-    """Streaming incremental corpus dedup (the q79 twin): three doc
-    micro-batches with within-batch AND cross-batch content duplicates;
-    the final snapshot must contain exactly the first-winning doc per
-    normalized content hash, where "first" = earliest batch, then lowest
-    doc_id. The expectation is an independent Python fold (hashlib + re),
-    not the Spark code under test."""
-    import hashlib
-    import re as _re
-
-    from pandaspark.streaming import stream_dedup_corpus
-
-    docs = [r.asDict() for r in load(spark, SF_DIR, "documents")
-            .filter(F.col("text").isNotNull()).limit(60).collect()]
-    assert len(docs) == 60
-    b1, b2, b3 = docs[:20], docs[20:40], docs[40:60]
-    # cross-batch dups: 5 docs of batch 2 re-deliver batch-1 texts
-    for i in range(5):
-        b2[i]["text"] = b1[i]["text"]
-    # within-batch dups in batch 3 (two clones of one text, higher doc_ids)
-    b3[10]["text"] = b3[2]["text"]
-    b3[11]["text"] = b3[2]["text"]
-    # and batch-3 re-delivery of a batch-2-only text
-    b3[12]["text"] = b2[7]["text"]
-
-    src = tmp_path / "docs_src"
-    doc_schema = load(spark, SF_DIR, "documents").schema
-    for i, b in enumerate((b1, b2, b3)):
-        spark.createDataFrame(b, schema=doc_schema).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-
-    root = str(tmp_path / "corpus_store")
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(doc_schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(src) + "/f*")
-    )
-    q = stream_dedup_corpus(stream, root, checkpoint=str(tmp_path / "ck_dedup"))
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    # independent first-wins fold
-    def norm_hash(text):
-        return hashlib.sha256(_re.sub(r"\s+", " ", text.lower()).strip().encode()).hexdigest()
-
-    want: dict[str, int] = {}
-    for batch in (b1, b2, b3):
-        for row in sorted(batch, key=lambda r: r["doc_id"]):
-            want.setdefault(norm_hash(row["text"]), row["doc_id"])
-
-    from pandaspark.store import latest_commit_path
-
-    got = spark.read.parquet(latest_commit_path(spark, root))
-    got_rows = {r.doc_id: r._h for r in got.select("doc_id", "_h").collect()}
-    assert set(got_rows.keys()) == set(want.values())
-    assert len(got_rows) == len(want)
-    # committed hash column agrees with the independent hash
-    inv = {v: k for k, v in want.items()}
-    for doc_id, h in got_rows.items():
-        assert h == inv[doc_id]
 
 
 def test_compact_store_is_content_neutral_and_versioned(spark, tmp_path):
@@ -340,49 +274,6 @@ def test_upsert_to_path_parquet_backend_and_delta_seam(spark, tmp_path):
         upsert_to_path(spark, root, b2, backend="delta")
     with pytest.raises(ValueError):
         upsert_to_path(spark, root, b2, backend="iceberg")
-
-
-def test_stream_upsert_with_auto_compaction(spark, tmp_path):
-    """compact_every folds maintenance into the sink: content must equal
-    the batch-path fold exactly, and the final snapshot (a compaction
-    commit) must be a single file set."""
-    events = load(spark, SF_DIR, "events").limit(300).cache()
-    src = tmp_path / "csrc"
-    s1 = events.filter(F.col("event_id") % 3 == 0)
-    s2 = events.filter(F.col("event_id") % 3 == 1)
-    s3 = s1.withColumn("value", F.col("value") + 1000.0)
-    for i, s in enumerate((s1, s2, s3)):
-        s.coalesce(2).write.parquet(str(src / f"f{i}"))
-
-    def merge(store, batch):
-        return store.join(batch, "event_id", "left_anti").unionByName(batch)
-
-    root = str(tmp_path / "cstream")
-    q = stream_upsert_to_store(
-        read_event_stream(spark, str(src) + "/f*", max_files_per_trigger=1),
-        root,
-        merge,
-        checkpoint=str(tmp_path / "cck"),
-        compact_every=2,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    from pandaspark.store import latest_commit_path
-
-    want = None
-    for i in range(3):
-        b = spark.read.parquet(str(src / f"f{i}"))
-        want = b if want is None else merge(want, b)
-    current = latest_commit_path(spark, root)
-    got = spark.read.parquet(current)
-    g = {r.event_id: r.value for r in got.collect()}
-    w = {r.event_id: r.value for r in want.collect()}
-    assert g == w
-    data_files = [f for f in os.listdir(current) if f.endswith(".parquet")]
-    assert len(data_files) == 1  # last commit was a compaction
 
 
 def test_diff_snapshots_classifies_adds_removes_changes(spark, tmp_path):
@@ -530,12 +421,7 @@ def test_stream_cdc_apply_with_tombstones(spark, tmp_path):
     for i, b in enumerate((b1, b2, b3)):
         spark.createDataFrame(b, schema).coalesce(1).write.parquet(str(src / f"f{i}"))
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(str(src) + "/f*")
-    )
+    stream = paced_stream(spark, str(src) + "/f*")
     root = str(tmp_path / "cdc_store")
     q = stream_cdc_apply(
         stream, root, checkpoint=str(tmp_path / "ck_cdc"), key="k", ts_col="ts"

@@ -16,15 +16,15 @@ from pyspark.sql import functions as F
 from pandaspark.multimodal import decode_media, frame_sample, read_media_dir
 from pandaspark.queries import REGISTRY
 from pandaspark.streaming import (
+    _EVENTS_SCHEMA,
     dedup_stream,
     interval_join,
-    read_event_stream,
     run_to_memory,
     session_windows,
     windowed_counts,
 )
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, paced_stream
 
 
 @pytest.fixture(scope="module")
@@ -39,8 +39,7 @@ def events_dir(tmp_path_factory, spark):
 
 
 def test_windowed_counts_matches_batch(spark, events_dir):
-    stream = read_event_stream(spark, events_dir)
-    got = run_to_memory(windowed_counts(stream), "win_counts")
+    got = run_to_memory(windowed_counts(paced_stream(spark, events_dir)), "win_counts")
     want = REGISTRY["q25_tumbling_window"].fn(spark, SF_DIR)
     g = {(str(r.bucket), r.event_type): (r.n, r.total_value) for r in got.collect()}
     w = {(str(r.bucket), r.event_type): (r.n, r.total_value) for r in want.collect()}
@@ -48,8 +47,7 @@ def test_windowed_counts_matches_batch(spark, events_dir):
 
 
 def test_session_windows_agree_with_batch_sessionization(spark, events_dir):
-    stream = read_event_stream(spark, events_dir)
-    got = run_to_memory(session_windows(stream), "sessions")
+    got = run_to_memory(session_windows(paced_stream(spark, events_dir)), "sessions")
     per_user = (
         got.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_sessions")).collect()
     )
@@ -68,8 +66,7 @@ def test_dedup_stream_drops_redelivered_events(spark, events_dir, tmp_path):
     base = load(spark, SF_DIR, "events")
     base.write.mode("overwrite").parquet(d)
     base.write.mode("append").parquet(d)
-    stream = read_event_stream(spark, d, max_files_per_trigger=1)
-    got = run_to_memory(dedup_stream(stream), "dedup_stream")
+    got = run_to_memory(dedup_stream(paced_stream(spark, d)), "dedup_stream", mode="append")
     assert got.count() == base.count()
     assert got.select("event_id").distinct().count() == base.count()
 
@@ -78,8 +75,9 @@ def test_stream_stream_interval_join_matches_batch(spark, events_dir):
     # maxFilesPerTrigger=1 forces multi-micro-batch execution, so matching
     # click/view rows arrive in DIFFERENT batches and must meet via join
     # state — the actual stream-stream machinery under test
-    stream = read_event_stream(spark, events_dir, max_files_per_trigger=1)
-    got = run_to_memory(interval_join(stream), "ss_join")
+    got = run_to_memory(
+        interval_join(paced_stream(spark, events_dir)), "ss_join", mode="append"
+    )
     want = REGISTRY["q65_interval_join"].fn(spark, SF_DIR)
     g = {(r.user_id, r.click_event, r.view_event) for r in got.collect()}
     w = {(r.user_id, r.click_event, r.view_event) for r in want.collect()}
@@ -94,8 +92,6 @@ def test_interval_join_sub_buckets_hot_key_parity(spark, tmp_path):
     mirror, across real micro-batch boundaries."""
     import datetime as dt
 
-    from pandaspark.streaming import EVENTS_SCHEMA
-
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     rows, eid = [], 0
     for i in range(60):  # hot user: every view falls in every click's window
@@ -108,7 +104,7 @@ def test_interval_join_sub_buckets_hot_key_parity(spark, tmp_path):
         eid += 1
         rows.append((eid, t0 + dt.timedelta(minutes=u) - dt.timedelta(seconds=30), u, "view", 1.0, "{}"))
         eid += 1
-    batch = spark.createDataFrame(rows, EVENTS_SCHEMA)
+    batch = spark.createDataFrame(rows, _EVENTS_SCHEMA)
     d = str(tmp_path / "hot_events")
     # 4 files -> 4 micro-batches at maxFilesPerTrigger=1: matching pairs
     # arrive in different batches and must meet through join state
@@ -136,15 +132,13 @@ def test_interval_join_sub_buckets_hot_key_parity(spark, tmp_path):
     got_salted = {
         (r.user_id, r.click_event, r.view_event)
         for r in run_to_memory(
-            interval_join(read_event_stream(spark, d, max_files_per_trigger=1), sub_buckets=4),
-            "ss_join_salted",
+            interval_join(paced_stream(spark, d), sub_buckets=4), "ss_join_salted", mode="append"
         ).collect()
     }
     got_plain = {
         (r.user_id, r.click_event, r.view_event)
         for r in run_to_memory(
-            interval_join(read_event_stream(spark, d, max_files_per_trigger=1)),
-            "ss_join_plain",
+            interval_join(paced_stream(spark, d)), "ss_join_plain", mode="append"
         ).collect()
     }
     assert got_salted == want
@@ -156,7 +150,7 @@ def test_interval_join_sub_buckets_shard_the_state_key(spark, events_dir):
     (so the state store partitions on (user_id, bucket), not user_id alone),
     and the deterministic salt actually spreads a single hot key over all
     sub-buckets (the whole point of the mitigation)."""
-    stream = read_event_stream(spark, events_dir)
+    stream = paced_stream(spark, events_dir)
     salted = interval_join(stream, sub_buckets=4)
     plan = salted._jdf.queryExecution().analyzed().toString()
     assert "_bkt" in plan and "_vbkt" in plan
@@ -334,8 +328,6 @@ def test_watermark_drops_late_data_and_finalizes_windows(spark, tmp_path):
     emitted exactly once, when the watermark crosses its end."""
     import datetime as dt
 
-    from pandaspark.streaming import EVENTS_SCHEMA, read_event_stream, windowed_counts
-
     src = tmp_path / "stream_src"
     src.mkdir()
     ck = str(tmp_path / "ck")
@@ -343,7 +335,7 @@ def test_watermark_drops_late_data_and_finalizes_windows(spark, tmp_path):
     def write_file(name, rows):
         df = spark.createDataFrame(
             [(i, ts, 1, et, v, None) for i, (ts, et, v) in enumerate(rows)],
-            EVENTS_SCHEMA,
+            _EVENTS_SCHEMA,
         )
         df.coalesce(1).write.mode("overwrite").parquet(str(src / name))
 
@@ -352,8 +344,9 @@ def test_watermark_drops_late_data_and_finalizes_windows(spark, tmp_path):
     # watermark to 11:10 > 11:00 → the 10:00 window becomes finalizable)
     write_file("f1", [(t(10, 5), "click", 1.0), (t(11, 40), "click", 1.0)])
 
-    stream = read_event_stream(spark, str(src) + "/*", max_files_per_trigger=1)
-    agg = windowed_counts(stream, window="1 hour", watermark="30 minutes")
+    agg = windowed_counts(
+        paced_stream(spark, str(src) + "/*"), window="1 hour", watermark="30 minutes"
+    )
     q = (
         agg.writeStream.outputMode("append")
         .format("memory")
@@ -406,36 +399,11 @@ def test_feature_extract_composes_with_similarity(spark, media_dir):
         extract_features(df).collect()
 
 
-def test_stream_chunk_manifest_matches_batch(spark, tmp_path_factory):
-    """The streaming chunk manifest over a multi-batch document feed must
-    emit exactly the batch q97 rows (stateless map → append parity)."""
-    from pandaspark.queries import load
-    from pandaspark.streaming import read_document_stream, run_to_memory, stream_chunk_manifest
-
-    d = str(tmp_path_factory.mktemp("docs_stream"))
-    # several small files so maxFilesPerTrigger forces multiple micro-batches
-    load(spark, SF_DIR, "documents").repartition(4).write.mode("overwrite").parquet(d)
-
-    got = run_to_memory(
-        stream_chunk_manifest(read_document_stream(spark, d, max_files_per_trigger=1)),
-        "chunks_stream",
-    )
-    # batch side reads the SAME re-partitioned files through the same
-    # shared transform, so any divergence is streaming-specific
-    from pandaspark.queries.pipeline3 import chunk_manifest
-
-    want = chunk_manifest(spark.read.parquet(d).select("doc_id", "source", "text"))
-    key = lambda r: (r["doc_id"], r["chunk_idx"], r["tok_start"], r["tok_end"], r["source"])
-    assert sorted(map(key, (r.asDict() for r in got.collect()))) == sorted(
-        map(key, (r.asDict() for r in want.collect()))
-    )
-
-
 def test_streaming_registry_entries_handle_nanos_fixtures(spark, tmp_path):
     """q165/q166 must work on BOTH event fixture generations. Build an
     int64-nanos parquet (TIMESTAMP(NANOS), readable only via the
     nanosAsLong conf) and check the streaming tumbling agg equals the
-    batch q25 plan on the same data — the _event_stream dispatch mirrors
+    batch q25 plan on the same data — read_event_stream's dispatch mirrors
     queries.load()'s."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -471,7 +439,7 @@ def test_streaming_registry_entries_handle_nanos_fixtures(spark, tmp_path):
 
 
 def test_new_streaming_entries_match_batch_on_nanos_fixture(spark, tmp_path):
-    """q176/q177/q178 share _event_stream's two-generation ts dispatch with
+    """q176/q177/q178 share read_event_stream's two-generation ts dispatch with
     q165 — assert each equals its batch mirror on an int64-nanos fixture
     (join against the static dim, interval pairs, DISTINCT keys)."""
     import pyarrow as pa
