@@ -148,27 +148,40 @@ def cmd_restore(args) -> int:
     return 0
 
 
-def cmd_analyze(args) -> int:
-    from . import analytics
+# the analytics reports `analyze --report` runs: each takes the working
+# set plus what --year / --pattern supply
+_REPORTS = (
+    "uncategorized_expenses",
+    "cumulative_uncategorized",
+    "income_overview",
+    "expense_overview",
+    "keyword_costs",
+    "regex_amount_extract",
+)
 
-    spark = _spark()
+
+def cmd_analyze(args) -> int:
+    import inspect
+
+    from . import analytics
     from .store import read_store
 
-    df = analytics.with_cat(read_store(spark, args.store))
-    report = getattr(analytics, args.report, None)
-    if report is None:
-        avail = [
-            n
-            for n in dir(analytics)
-            if not n.startswith("_") and callable(getattr(analytics, n))
-        ]
-        print(f"unknown report {args.report!r}; available: {avail}", file=sys.stderr)
-        return 2
     kwargs = {}
     if args.year is not None:
         kwargs["year"] = args.year
     if args.pattern is not None:
         kwargs["patterns" if args.report == "keyword_costs" else "pattern"] = args.pattern
+    if args.report not in _REPORTS:
+        print(f"unknown report {args.report!r}; available: {list(_REPORTS)}", file=sys.stderr)
+        return 2
+    report = getattr(analytics, args.report)
+    try:
+        # the working set binds in place of None once Spark is up
+        inspect.signature(report).bind(None, **kwargs)
+    except TypeError as e:
+        print(f"report {args.report!r}: {e}; available: {list(_REPORTS)}", file=sys.stderr)
+        return 2
+    df = analytics.with_cat(read_store(_spark(), args.store))
     _print_df(report(df, **kwargs), args.limit)
     return 0
 

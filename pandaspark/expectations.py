@@ -107,74 +107,3 @@ def compile_suite(df: DataFrame, checks: list[Check]) -> DataFrame:
     )
     return wide.select(F.explode(tidy).alias("r")).select("r.*")
 
-
-# --- constraint suggestion (Deequ's suggestion mode) --------------------------
-
-_SUGGEST_NDV_CAP = 10  # accepted_values only for tiny domains
-
-
-def suggest_checks(df: DataFrame, columns: list[str] | None = None) -> list[Check]:
-    """Profile a table in ONE stats pass and propose the Check suite the
-    data currently satisfies — the admission-control bootstrap: run it on
-    a known-good snapshot, then `compile_suite` the result against every
-    future batch.
-
-    Suggestions per column (each holds on the profiled data by
-    construction):
-      - not_null        when the column has zero nulls
-      - unique          when non-null values are all distinct AND no nulls
-      - accepted_values for string columns with NDV <= 10 (the distinct
-                        set is collected to the driver ONLY after the
-                        stats pass has proven it tiny — driver-safe)
-      - in_range        for numeric columns (observed [min, max])
-      - non_negative    for numeric columns with min >= 0 (tighter prior
-                        than the observed range, emitted alongside it)
-
-    The stats pass is one multi-aggregate scan (map-side partials); the
-    only second touch is the bounded distinct-set collection for tiny
-    string domains. At 100 TB: one scan plus K tiny lookups.
-    """
-    from pyspark.sql.types import NumericType, StringType
-
-    fields = [
-        f
-        for f in df.schema.fields
-        if columns is None or f.name in columns
-    ]
-    aggs = [F.count(F.lit(1)).cast("long").alias("_n")]
-    for f in fields:
-        c = F.col(f.name)
-        aggs.append(F.count_if(c.isNull()).cast("long").alias(f"{f.name}__nulls"))
-        aggs.append(F.countDistinct(c).cast("long").alias(f"{f.name}__ndv"))
-        if isinstance(f.dataType, NumericType):
-            aggs.append(F.min(c).alias(f"{f.name}__min"))
-            aggs.append(F.max(c).alias(f"{f.name}__max"))
-    [stats] = df.agg(*aggs).collect()
-
-    out: list[Check] = []
-    for f in fields:
-        nulls = stats[f"{f.name}__nulls"]
-        ndv = stats[f"{f.name}__ndv"]
-        non_null = stats["_n"] - nulls
-        if nulls == 0:
-            out.append(Check(f"{f.name}_not_null", f.name, "not_null"))
-        if nulls == 0 and non_null > 0 and ndv == non_null:
-            out.append(Check(f"{f.name}_unique", f.name, "unique"))
-        if isinstance(f.dataType, StringType) and 0 < ndv <= _SUGGEST_NDV_CAP:
-            vals = tuple(
-                sorted(
-                    r[0]
-                    for r in df.select(f.name).filter(F.col(f.name).isNotNull())
-                    .distinct()
-                    .collect()
-                )
-            )
-            out.append(
-                Check(f"{f.name}_domain", f.name, "accepted_values", values=vals)
-            )
-        if isinstance(f.dataType, NumericType) and non_null > 0:
-            lo, hi = stats[f"{f.name}__min"], stats[f"{f.name}__max"]
-            out.append(Check(f"{f.name}_range", f.name, "in_range", lo=lo, hi=hi))
-            if lo >= 0:
-                out.append(Check(f"{f.name}_nonneg", f.name, "non_negative"))
-    return out

@@ -1,7 +1,7 @@
-"""Multimodal columns (SURVEY.md §2.11): image/audio/video as opaque
-`binary` columns with typed metadata, processed by Arrow-batched pandas
-iterators (`mapInPandas`) — the only place this engine leaves the JVM,
-because byte-level media decoding has no Catalyst expression.
+"""Media codecs (SURVEY.md §2.11): stdlib-only kernels that turn image
+and audio bytes into typed metadata, pixels and samples. q201 runs them
+inside an Arrow-batched applyInPandas group — byte-level media decoding
+has no Catalyst expression, so this is where the engine leaves the JVM.
 
 Decode kernels are REAL for every format the Python stdlib can handle:
 
@@ -14,81 +14,16 @@ Decode kernels are REAL for every format the Python stdlib can handle:
   JPEG  — header decode (SOF0/1/2 frame dimensions by marker scan)
 
 Only genuinely absent codecs (JPEG entropy decode, MP4/MKV/WebM video,
-MP3/FLAC audio) and exotic PNG variants raise NotImplementedError; `deterministic_fake=True`
-remains available to exercise the plumbing with stable pseudo-metadata.
+MP3/FLAC audio) and exotic PNG variants raise NotImplementedError.
 Encoders (`encode_wav`, `encode_bmp`, `encode_ppm`, `encode_png`) exist so tests and
 the registry query can round-trip real bytes through the real kernels.
-
-Scale notes: binaryFile splits per-file (one file = one row); set
-`spark.sql.files.maxPartitionBytes` so a partition's worth of media fits in
-executor memory; metadata-only transforms stay columnar (the binary column
-is pruned away unless referenced).
 """
 
 from __future__ import annotations
 
-import hashlib
 import io
 import struct
 import wave
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("length", T.LongType(), True),
-        T.StructField("modification_time", T.TimestampType(), True),
-    ]
-)
-
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("format", T.StringType(), True),  # wav|bmp|ppm|png|gif|jpeg
-        T.StructField("content_sha256", T.StringType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-        T.StructField("sample_rate", T.IntegerType(), True),
-        T.StructField("n_channels", T.IntegerType(), True),
-        T.StructField("sample_width", T.IntegerType(), True),
-    ]
-)
-
-_KIND_BY_EXT = {
-    "jpg": "image", "jpeg": "image", "png": "image", "gif": "image",
-    "bmp": "image", "ppm": "image",
-    "wav": "audio", "mp3": "audio", "flac": "audio",
-    "mp4": "video", "mkv": "video", "webm": "video",
-}
-
-
-def read_media_dir(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """Scan a directory of media files into the canonical media frame.
-
-    Caveat (observed upstream behavior): the binaryFile source silently
-    skips zero-byte files — corrupt-empty media never reaches the decode
-    stage, so dead-file monitoring must happen at the listing layer.
-    """
-    raw = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(path)
-    ext = F.lower(F.element_at(F.split(F.col("path"), r"\."), -1))
-    kind_map = F.create_map(*[F.lit(x) for kv in _KIND_BY_EXT.items() for x in kv])
-    return raw.select(
-        F.col("path"),
-        F.coalesce(F.element_at(kind_map, ext), F.lit("unknown")).alias("kind"),
-        F.col("content"),
-        F.col("length"),
-        F.col("modificationTime").alias("modification_time"),
-    )
 
 
 # --- encoders (fixture + round-trip side) ------------------------------------
@@ -408,7 +343,7 @@ def decode_bytes(content: bytes) -> dict:
     if content[:8] == b"\x89PNG\r\n\x1a\n":
         # metadata pass: full-decode when the variant is supported (also
         # validates the stream), else degrade to header dims — the same
-        # header-only treatment GIF/JPEG get here. extract_features is
+        # header-only treatment GIF/JPEG get here. decode_png_pixels is
         # where an undecodable PNG must raise.
         try:
             px = decode_png_pixels(content)
@@ -427,167 +362,4 @@ def decode_bytes(content: bytes) -> dict:
     raise NotImplementedError(
         f"no stdlib codec for content starting {content[:8]!r} "
         "(MP4/MKV/WebM/MP3/FLAC decode requires ffmpeg-class libraries)"
-    )
-
-
-def _fake_decode(content: bytes) -> tuple[int, int, int]:
-    """Deterministic pseudo-decode: stable dims from the content hash.
-    Kept for plumbing tests and for kinds with no stdlib codec."""
-    h = hashlib.sha256(content).digest()
-    width = 16 + h[0] % 240
-    height = 16 + h[1] % 240
-    n_frames = 1 + h[2] % 32
-    return width, height, n_frames
-
-
-def decode_media(df: DataFrame, deterministic_fake: bool = False) -> DataFrame:
-    """Decode binary media to typed metadata via an Arrow-batched pandas
-    iterator. The real path runs the stdlib codecs in `decode_bytes`
-    (WAV/BMP/PPM full decode; PNG/GIF/JPEG header decode) and raises on
-    genuinely undecodable bytes; `deterministic_fake=True` exercises the
-    identical batch plumbing with hash-derived metadata."""
-
-    def _decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in DECODED_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                content = bytes(row["content"]) if row["content"] is not None else b""
-                rec = {
-                    "path": row["path"],
-                    "kind": row["kind"],
-                    "content_sha256": hashlib.sha256(content).hexdigest(),
-                    "n_bytes": len(content),
-                }
-                if deterministic_fake:
-                    w, h, nf = _fake_decode(content)
-                    rec.update(
-                        format="fake", width=w, height=h,
-                        n_frames=nf if row["kind"] == "video" else 1,
-                        sample_rate=None, n_channels=None, sample_width=None,
-                    )
-                else:
-                    rec.update(decode_bytes(content))
-                out.append(rec)
-            yield pd.DataFrame(out, columns=cols)
-
-    return df.mapInPandas(_decode_batch, DECODED_SCHEMA)
-
-
-FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), True),
-    ]
-)
-
-
-def image_features(px, dim: int = 64):
-    """Deterministic image embedding from an HxWx3 uint8 array: a 4x4
-    spatial grid of RGB means (48 dims) + a 16-bin gray histogram
-    (fractions), L2-normalized. No model — but a REAL function of the
-    pixels, so near-identical images embed near-identically."""
-    import numpy as np
-
-    assert dim == 64, "image feature layout is fixed at 64 dims"
-    h, w, _ = px.shape
-    grid = np.zeros((4, 4, 3), dtype=np.float64)
-    ys = np.linspace(0, h, 5).astype(int)
-    xs = np.linspace(0, w, 5).astype(int)
-    for i in range(4):
-        for j in range(4):
-            cell = px[ys[i]:max(ys[i + 1], ys[i] + 1), xs[j]:max(xs[j + 1], xs[j] + 1)]
-            grid[i, j] = cell.reshape(-1, 3).mean(axis=0) / 255.0
-    gray = px.astype(np.float64).mean(axis=2)
-    hist, _ = np.histogram(gray, bins=16, range=(0.0, 256.0))
-    hist = hist / max(gray.size, 1)
-    vec = np.concatenate([grid.reshape(-1), hist])
-    n = np.linalg.norm(vec)
-    return vec / n if n > 0 else vec
-
-
-def audio_features(samples, dim: int = 64):
-    """Deterministic audio embedding from int16 samples: 32 block RMS
-    values + 32 block zero-crossing rates, L2-normalized."""
-    import numpy as np
-
-    assert dim == 64, "audio feature layout is fixed at 64 dims"
-    s = np.asarray(samples, dtype=np.float64)
-    if s.size == 0:
-        return np.zeros(64)
-    bounds = np.linspace(0, s.size, 33).astype(int)
-    rms, zcr = [], []
-    for i in range(32):
-        blk = s[bounds[i]:max(bounds[i + 1], bounds[i] + 1)]
-        rms.append(np.sqrt(np.mean(blk * blk)) / 32768.0)
-        sign = blk >= 0
-        zcr.append(float(np.count_nonzero(sign[1:] != sign[:-1])) / max(blk.size, 1))
-    vec = np.array(rms + zcr)
-    n = np.linalg.norm(vec)
-    return vec / n if n > 0 else vec
-
-
-def extract_features(df: DataFrame, dim: int = 64, deterministic_fake: bool = False) -> DataFrame:
-    """Media → embedding column, Arrow-batched (mapInPandas). The real
-    path decodes pixels/samples with the stdlib codecs and computes a
-    deterministic feature vector (grid-RGB+histogram for images, block
-    RMS+ZCR for audio) — the same `array<float>` shape as the
-    `embeddings` table, so downstream similarity ops (cosine top-k, LSH
-    ANN, near-dup) compose unchanged. Formats without a pixel codec
-    (GIF/JPEG/video) raise unless `deterministic_fake=True`, which
-    derives a stable unit-norm vector from the content hash.
-
-    Scale: embedding extraction is embarrassingly parallel over files; the
-    binary column never leaves the task, only `dim` floats shuffle."""
-
-    def _embed_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                content = bytes(row["content"]) if row["content"] is not None else b""
-                if deterministic_fake:
-                    h = hashlib.sha256(content).digest()
-                    raw = np.frombuffer(
-                        (h * ((dim * 4) // len(h) + 1))[: dim * 4], dtype=np.uint32
-                    )
-                    vec = (raw.astype(np.float64) / np.iinfo(np.uint32).max) - 0.5
-                    vec = vec / np.linalg.norm(vec)
-                elif content[:4] == b"RIFF" and content[8:12] == b"WAVE":
-                    _, samples = decode_wav_samples(content)
-                    vec = audio_features(samples, dim)
-                elif content[:2] == b"BM":
-                    vec = image_features(decode_bmp_pixels(content), dim)
-                elif content[:2] == b"P6":
-                    vec = image_features(decode_ppm_pixels(content), dim)
-                elif content[:8] == b"\x89PNG\r\n\x1a\n":
-                    vec = image_features(decode_png_pixels(content), dim)
-                else:
-                    raise NotImplementedError(
-                        "feature extraction requires a pixel/sample codec "
-                        "(WAV/BMP/PPM/PNG here); pass deterministic_fake=True "
-                        "for formats without one"
-                    )
-                out.append(
-                    {
-                        "path": row["path"],
-                        "kind": row["kind"],
-                        "embedding": np.asarray(vec, dtype=np.float32).tolist(),
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in FEATURES_SCHEMA.fields])
-
-    return df.mapInPandas(_embed_batch, FEATURES_SCHEMA)
-
-
-def frame_sample(df: DataFrame, every_nth: int = 8) -> DataFrame:
-    """Frame-sampling plan for video rows: explodes sampled frame indices
-    (video frame decode has no stdlib codec; index arithmetic is the real,
-    tested part)."""
-    decoded = df.filter(F.col("kind") == "video")
-    idx = F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_nth))
-    return decoded.withColumn("frame_index", F.explode(idx)).select(
-        "path", "content_sha256", "n_frames", "frame_index"
     )

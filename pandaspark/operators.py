@@ -1,6 +1,8 @@
 """Composite operators Spark lacks natively (SURVEY.md §2.4 note,
-pyspark guide 'Common OLAP patterns'): as-of join, range join helper,
-latest-per-key compaction. All compositions of built-in ops — no UDFs.
+pyspark guide 'Common OLAP patterns'): as-of join, salted join,
+latest-per-key compaction, two-phase global ranks and running totals,
+bucket-refine quantiles, and the byte-gated broadcast. All compositions
+of built-in ops — no UDFs.
 """
 
 from __future__ import annotations
@@ -145,126 +147,6 @@ def asof_join_bucketed(
     out = lefts.join(carry, ["_k", "_bkt"], "left").select(
         *left.columns, *[best[c].alias(c) for c in payload_cols]
     )
-    return out
-
-
-def range_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    left_point: str,
-    right_lo: str,
-    right_hi: str,
-    bucket_width: int,
-) -> DataFrame:
-    """point-in-interval join scaled by bucketing: explode each interval to
-    the buckets it covers, equi-join on bucket, then re-check the exact
-    predicate. Turns an O(N*M) cross-range join into a hash join whose
-    fanout is interval_width / bucket_width."""
-    lb = (F.col(left_point) / bucket_width).cast("long").alias("_bucket")
-    rb = F.explode(
-        F.sequence(
-            (F.col(right_lo) / bucket_width).cast("long"),
-            (F.col(right_hi) / bucket_width).cast("long"),
-        )
-    ).alias("_bucket")
-    lt = left.select("*", lb)
-    rt = right.select("*", rb)
-    return lt.join(rt, "_bucket").filter(
-        (F.col(left_point) >= F.col(right_lo)) & (F.col(left_point) <= F.col(right_hi))
-    ).drop("_bucket")
-
-
-def exact_quantiles_two_phase(
-    df: DataFrame,
-    group_col: str,
-    value: Column,
-    qs: list[float],
-) -> DataFrame:
-    """Exact interpolated quantiles per group WITHOUT the object-hash
-    percentile aggregate — the 100 TB form of q27's `F.percentile`.
-
-    The built-in exact percentile materializes every group's full value
-    multiset inside the aggregation buffer (ObjectHashAggregate) — at
-    100 TB a hot group's buffer is the group, i.e. an executor OOM. This
-    operator computes the same numbers from distributed order statistics;
-    no task ever holds more than one partition:
-
-      1. range-partition by (group, value): global order without a global
-         sort; per-partition local ranks via a window bounded by partition
-         width;
-      2. per-(partition, group) counts prefix-sum into broadcast offsets →
-         exact global rank of every row within its group;
-      3. each quantile needs only ranks floor(pos) and floor(pos)+1
-         (pos = q*(n-1)) — two rows per (group, q) join against the ranked
-         frame; linear interpolation `v_lo + (v_hi - v_lo) * frac` is the
-         same IEEE expression Spark's Percentile and DuckDB's
-         quantile_cont evaluate, so results are bit-identical (asserted in
-         tests against F.percentile).
-
-    `value` should be an integral column (e.g. exact cents) so ranking is
-    total and engine-portable. Returns one row per group with a column per
-    requested quantile, named q_<percent-with-underscores>."""
-    one = F.lit(1)
-    vals = df.select(F.col(group_col), value.alias("_v"))
-    # checkpoint-the-layout (see sequential_ids): counts and ranks must
-    # read one materialized range partitioning, not two re-sampled ones
-    ranged = (
-        vals.repartitionByRange(group_col, "_v")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    pc = ranged.groupBy("_pid", group_col).agg(F.count(one).alias("_n"))
-    off_w = (
-        Window.partitionBy(group_col)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off = pc.withColumn(
-        "_off", F.coalesce(F.sum("_n").over(off_w), F.lit(0).cast("long"))
-    ).select("_pid", group_col, "_off")
-    local_w = Window.partitionBy("_pid", group_col).orderBy("_v")
-    ranked = (
-        ranged.withColumn("_lr", F.row_number().over(local_w).cast("long") - 1)
-        .join(F.broadcast(off), ["_pid", group_col])
-        .select(F.col(group_col), "_v", (F.col("_lr") + F.col("_off")).alias("_rank"))
-    )
-    sizes = pc.groupBy(group_col).agg(F.sum("_n").alias("_n"))
-    q_structs = F.array(
-        *[
-            F.struct(
-                F.lit(q).alias("_q"),
-                (F.lit(q) * (F.col("_n") - 1).cast("double")).alias("_pos"),
-            )
-            for q in qs
-        ]
-    )
-    targets = sizes.select(group_col, "_n", F.explode(q_structs).alias("_t")).select(
-        group_col,
-        F.col("_t._q").alias("_q"),
-        F.col("_t._pos").alias("_pos"),
-        F.floor("_t._pos").cast("long").alias("_lo"),
-        F.least(F.floor("_t._pos").cast("long") + 1, F.col("_n") - 1).alias("_hi"),
-    )
-    lo_j = targets.join(
-        ranked.select(F.col(group_col), F.col("_rank"), F.col("_v").alias("_vlo")),
-        (F.col("_rank") == F.col("_lo")) & (targets[group_col] == ranked[group_col]),
-    ).select(targets[group_col].alias(group_col), "_q", "_pos", "_lo", "_hi", "_vlo")
-    both = lo_j.join(
-        ranked.select(F.col(group_col).alias("_g2"), F.col("_rank"), F.col("_v").alias("_vhi")),
-        (F.col("_rank") == F.col("_hi")) & (F.col(group_col) == F.col("_g2")),
-    )
-    frac = F.col("_pos") - F.floor("_pos")
-    interp = (
-        F.col("_vlo").cast("double")
-        + (F.col("_vhi").cast("double") - F.col("_vlo").cast("double")) * frac
-    )
-    long_form = both.select(F.col(group_col), F.col("_q"), interp.alias("_val"))
-    out = long_form.groupBy(group_col).pivot(
-        "_q", [float(q) for q in qs]
-    ).agg(F.first("_val"))
-    renames = {str(float(q)): f"q_{str(q).replace('.', '_')}" for q in qs}
-    for old, new in renames.items():
-        out = out.withColumnRenamed(old, new)
     return out
 
 
@@ -697,138 +579,6 @@ def grouped_weighted_median(
             F.any_value("_tw").alias(total_alias),
         )
         .withColumnRenamed("_g", group_col)
-    )
-
-
-def merge_asof(
-    left: DataFrame,
-    right: DataFrame,
-    by: str | list[str],
-    left_time: str = "ts",
-    right_time: str = "ts",
-    direction: str = "backward",
-    tolerance: int | None = None,
-    suffix: str = "_right",
-) -> DataFrame:
-    """pandas.merge_asof parity as ONE keyed window pass (no join at all).
-
-    For each left row, attach the matching right row's columns (LEFT join
-    semantics — unmatched left rows keep nulls):
-
-    - direction='backward': latest right with right_time <= left_time
-    - direction='forward':  earliest right with right_time >= left_time
-    - direction='nearest':  the temporally closer of the two; equal
-      distance resolves backward (pandas' rule)
-    - tolerance: maximum |time delta| for a match. Times compare in
-      MICROSECONDS when the time columns are timestamps (tolerance is
-      then microseconds too), natively otherwise.
-
-    Exact matches count in every direction (pandas allow_exact_matches).
-    Among several right rows at the SAME admissible time, the one with
-    the greatest (time-adjacent) position in the (time, payload) sort
-    order wins for backward and the least for forward — deterministic,
-    documented, and irrelevant when right times are unique per key.
-
-    Plan shape (the 100 TB argument): both inputs union into one frame,
-    and every subsequent step is a window PARTITIONED BY the `by` keys —
-    shuffle each side once on the key, sort within partition, zero
-    join fan-out. The O(matches) intermediate of the naive non-equi-join
-    formulation (asof_join above, kept as the semantic anchor) never
-    materializes. q154 is the registry's oracle-checked single-table
-    instance of the same trick.
-    """
-    if direction not in ("backward", "forward", "nearest"):
-        raise ValueError(f"direction must be backward/forward/nearest: {direction}")
-    keys = [by] if isinstance(by, str) else list(by)
-    if not keys:
-        raise ValueError("merge_asof requires at least one `by` key")
-
-    renames = {
-        c: c + suffix
-        for c in right.columns
-        if c in left.columns and c not in keys
-    }
-    for old, new in renames.items():
-        right = right.withColumnRenamed(old, new)
-    right_time = renames.get(right_time, right_time)
-    payload_cols = [c for c in right.columns if c not in keys]
-
-    def ordcol(df: DataFrame, c: str) -> Column:
-        t = df.schema[c].dataType.typeName()
-        return F.unix_micros(F.col(c)) if t.startswith("timestamp") else F.col(c)
-
-    lt = ordcol(left, left_time)
-    payload = F.struct(
-        ordcol(right, right_time).alias("__t"),
-        *[F.col(c).alias(c) for c in payload_cols],
-    )
-    lu = left.select(
-        *[F.col(c) for c in keys],
-        lt.alias("__t_ord"),
-        F.lit(1).alias("__is_left"),
-        *[F.col(c) for c in left.columns if c not in keys],
-        F.lit(None).cast(
-            T.StructType(
-                [T.StructField("__t", T.LongType())]
-                + [T.StructField(c, right.schema[c].dataType) for c in payload_cols]
-            )
-        ).alias("__p"),
-    )
-    ru = right.filter(F.col(right_time).isNotNull()).select(
-        *[F.col(c) for c in keys],
-        ordcol(right, right_time).alias("__t_ord"),
-        F.lit(0).alias("__is_left"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c)
-          for c in left.columns if c not in keys],
-        payload.alias("__p"),
-    )
-    u = lu.unionByName(ru)
-
-    out = u
-    prev_p = next_p = None
-    if direction in ("backward", "nearest"):
-        # right rows sort BEFORE left rows at equal times, so exact
-        # matches land in the strictly-preceding frame
-        wb = (
-            Window.partitionBy(*keys)
-            .orderBy("__t_ord", "__is_left", "__p")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        prev_p = F.last("__p", ignorenulls=True).over(wb)
-        out = out.withColumn("__prev", prev_p)
-    if direction in ("forward", "nearest"):
-        # right rows sort AFTER left rows at equal times for the
-        # strictly-following frame to include exact matches
-        wf = (
-            Window.partitionBy(*keys)
-            .orderBy("__t_ord", (1 - F.col("__is_left")), "__p")
-            .rowsBetween(1, Window.unboundedFollowing)
-        )
-        next_p = F.first("__p", ignorenulls=True).over(wf)
-        out = out.withColumn("__next", next_p)
-
-    big = F.lit((1 << 62)).cast("long")
-    if direction == "backward":
-        delta = F.col("__t_ord") - F.col("__prev.__t")
-        ok = delta.isNotNull() & ((delta <= F.lit(tolerance)) if tolerance is not None else F.lit(True))
-        chosen = F.when(ok, F.col("__prev"))
-    elif direction == "forward":
-        delta = F.col("__next.__t") - F.col("__t_ord")
-        ok = delta.isNotNull() & ((delta <= F.lit(tolerance)) if tolerance is not None else F.lit(True))
-        chosen = F.when(ok, F.col("__next"))
-    else:
-        back = F.coalesce(F.col("__t_ord") - F.col("__prev.__t"), big)
-        fwd = F.coalesce(F.col("__next.__t") - F.col("__t_ord"), big)
-        nearest = F.when(back <= fwd, F.col("__prev")).otherwise(F.col("__next"))
-        best = F.least(back, fwd)
-        ok = (best < big) & ((best <= F.lit(tolerance)) if tolerance is not None else F.lit(True))
-        chosen = F.when(ok, nearest)
-
-    res = out.filter(F.col("__is_left") == 1).withColumn("__m", chosen)
-    return res.select(
-        *[F.col(c) for c in keys],
-        *[F.col(c) for c in left.columns if c not in keys],
-        *[F.col("__m").getField(c).alias(c) for c in payload_cols],
     )
 
 

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import load, register, round4, sha_int, spread, sql_round4, sql_sha_int
-from .text import _norm_text
+from .text import _char_shingles, _norm_text
 
 
 # --- q74: token-budget sequence packing -------------------------------------
@@ -461,13 +461,7 @@ GROUP BY n.lang, p.pred_lang
 @register("q82_lang_classifier", _Q82_ORACLE, "trigram-profile lang-ID with confusion matrix")
 def q82(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load(spark, sf_dir, "documents").filter(F.col("text").isNotNull()))
-    tc = F.col("t")
-    trigrams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(tc) - 2, F.lit(1))),
-            lambda i: F.substring(tc, i, F.lit(3)),
-        )
-    )
+    trigrams = F.array_distinct(_char_shingles(F.col("t"), 3))
     grams = d.select("doc_id", "lang", _norm_text().alias("t")).select(
         "doc_id", "lang", F.explode_outer(trigrams).alias("g")
     )

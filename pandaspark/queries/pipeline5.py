@@ -72,7 +72,7 @@ from . import (
     sql_sha_int,
 )
 from .similarity import _dot, _norm
-from .text import _norm_text
+from .text import _char_shingles, _norm_text
 
 # --- q115: SemDeDup (cluster-bounded cosine near-dedup) ---------------------
 
@@ -404,13 +404,7 @@ WHERE inter * {_PP_T_DEN} >= uni * {_PP_T_NUM}
 )
 def q118(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    tc = F.col("t")
-    shingles = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(tc) - (_PP_K - 1), F.lit(1))),
-            lambda i: F.substring(tc, i, F.lit(_PP_K)),
-        )
-    )
+    shingles = F.array_distinct(_char_shingles(F.col("t"), _PP_K))
     # explode_outer, NOT explode: plain explode plants an implicit
     # "array non-empty" filter that Catalyst pushes below the exchange all
     # the way to the scan, re-deriving the whole shingle pipeline inside

@@ -554,6 +554,7 @@ from .text import (  # noqa: E402
     _minhash_oracle_ctes,
     _N_HASHES,
     _SHINGLE_K,
+    _lsh_bands,
     attach_shingle_sets,
     minhash_signatures,
 )
@@ -608,32 +609,7 @@ def q126(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row of a pair carries the same n_eq (signatures are deterministic
     # per doc_id), so both return the same value at identical cost, but
     # max() is correct even without that invariant.
-    from .text import _BANDS, _ROWS_PER_BAND
-
-    sigs = minhash_signatures(spark, sf_dir)
-    bands = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        sha_int(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.col("sig")[bi * _ROWS_PER_BAND + r].cast("string")
-                                    for r in range(_ROWS_PER_BAND)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for bi in range(_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "sig", "bb.band", "bb.bucket").localCheckpoint(eager=False)
+    bands = _lsh_bands(minhash_signatures(spark, sf_dir), "sig")
     # ^ same cut as text.candidates_from_signatures: the self-join's build
     # side is a BroadcastExchange, under which nothing can be reused, so
     # without the checkpoint the full signature pipeline (shingle explode +

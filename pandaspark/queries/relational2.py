@@ -36,8 +36,7 @@ def q27(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nothing corpus-sized is sorted or shuffled at ANY scale. Same
     # continuous-percentile definition as F.percentile/quantile_cont
     # (v = lo + frac*(hi-lo) at 0-based rank p*(n-1)); the oracle is
-    # unchanged and still hash-matches. operators.exact_quantiles_two_phase
-    # remains the range-partitioned alternative (bit-identical by test).
+    # unchanged and still hash-matches.
     from pandaspark.operators import grouped_quantiles_bucket_refine
 
     li = load(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")

@@ -8,7 +8,7 @@ one hash aggregation on doc-hash or lang — the natural shuffle keys.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pandaspark import operators
@@ -19,6 +19,17 @@ from . import load, register, round4, sha_int, spread, sql_sha_int
 def _norm_text(c="text"):
     """Normalization for content hashing: lowercase, collapse whitespace."""
     return F.trim(F.regexp_replace(F.lower(F.col(c) if isinstance(c, str) else c), r"\s+", " "))
+
+
+def _char_shingles(t: Column, k: int) -> Column:
+    """Every length-k character substring of `t`, in order and with
+    repeats; a text shorter than k yields itself as its one shingle, so
+    the array is never empty. `t` must be a column reference (see q33:
+    lambdas capture it)."""
+    return F.transform(
+        F.sequence(F.lit(1), F.greatest(F.length(t) - (k - 1), F.lit(1))),
+        lambda i: F.substring(t, i, F.lit(k)),
+    )
 
 
 # --- q30: exact dedup via content hash ------------------------------------
@@ -265,11 +276,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # must capture a column ref, not the regex expression). No
     # array_distinct on shingles: min() is insensitive to duplicates, so
     # MinHash signatures are identical without the O(len^2) dedup pass.
-    tc = F.col("t")
-    raw_shingles = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(tc) - (_SHINGLE_K - 1), F.lit(1))),
-        lambda i: F.substring(tc, i, F.lit(_SHINGLE_K)),
-    )
+    raw_shingles = _char_shingles(F.col("t"), _SHINGLE_K)
     # One string hash per shingle, then 16 universal-hash permutations
     # (a*h + b mod p) — the classic MinHash family. The 16 per-slot minima
     # run as EXPLODE → hash-aggregate (16 codegen'd min() aggs with map-side
@@ -299,24 +306,14 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def candidates_from_signatures(banded: DataFrame) -> DataFrame:
-    """Band the signatures into LSH buckets; bucket-join yields candidate
-    near-dup pairs (doc_a < doc_b). Fanout is bounded by band width — the
-    canonical scalable near-dedup join, never all-pairs.
-
-    `bands` is localCheckpoint'd before the self-join: the join's build
-    side is a BroadcastExchange, and nothing under a broadcast can be a
-    ReusedExchange — so without the cut BOTH sides re-derive the entire
-    signature pipeline (shingle explode, per-shingle sha, 16-min
-    aggregate run TWICE; only the repartition exchange was reused —
-    plans/r11/q34_before.txt ops (6)-(10) vs (14)-(18)). The checkpoint
-    payload is tiny ((doc_id, band, bucket) — 16 rows/doc) while the
-    deduped pipeline is the dominant compute. Measured at sf0.1 (r11,
-    interleaved min-of-5): q34 0.893 -> 0.745, q55 1.667 -> 1.552,
-    q175 1.635 -> 1.588 — faster in 15/15 pairs. At 100 TB: one
-    signature pass per query instead of two."""
-    bands = banded.select(
+def _lsh_bands(sigs: DataFrame, *carry: str) -> DataFrame:
+    """Cut each 16-slot signature into _BANDS bands of _ROWS_PER_BAND
+    slots and hash each band to a bucket: (doc_id, *carry, band, bucket),
+    one row per (doc, band), localCheckpoint'd for the band self-join
+    (see candidates_from_signatures)."""
+    return sigs.select(
         "doc_id",
+        *carry,
         F.explode(
             F.array(
                 *[
@@ -336,7 +333,26 @@ def candidates_from_signatures(banded: DataFrame) -> DataFrame:
                 ]
             )
         ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket").localCheckpoint(eager=False)
+    ).select("doc_id", *carry, "bb.band", "bb.bucket").localCheckpoint(eager=False)
+
+
+def candidates_from_signatures(banded: DataFrame) -> DataFrame:
+    """Band the signatures into LSH buckets; bucket-join yields candidate
+    near-dup pairs (doc_a < doc_b). Fanout is bounded by band width — the
+    canonical scalable near-dedup join, never all-pairs.
+
+    `bands` is localCheckpoint'd before the self-join: the join's build
+    side is a BroadcastExchange, and nothing under a broadcast can be a
+    ReusedExchange — so without the cut BOTH sides re-derive the entire
+    signature pipeline (shingle explode, per-shingle sha, 16-min
+    aggregate run TWICE; only the repartition exchange was reused —
+    plans/r11/q34_before.txt ops (6)-(10) vs (14)-(18)). The checkpoint
+    payload is tiny ((doc_id, band, bucket) — _BANDS rows/doc) while the
+    deduped pipeline is the dominant compute. Measured at sf0.1 (r11,
+    interleaved min-of-5): q34 0.893 -> 0.745, q55 1.667 -> 1.552,
+    q175 1.635 -> 1.588 — faster in 15/15 pairs. At 100 TB: one
+    signature pass per query instead of two."""
+    bands = _lsh_bands(banded)
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -406,13 +422,7 @@ def attach_shingle_sets(spark: SparkSession, sf_dir: str, cand: DataFrame) -> Da
         .distinct()
     )
     n_cand_docs = cand_ids.count()
-    tc = F.col("t")
-    shingles = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(tc) - (_SHINGLE_K - 1), F.lit(1))),
-            lambda i: F.substring(tc, i, F.lit(_SHINGLE_K)),
-        )
-    )
+    shingles = F.array_distinct(_char_shingles(F.col("t"), _SHINGLE_K))
     sh = (
         spread(load(spark, sf_dir, "documents").filter(F.col("text").isNotNull()))
         .join(operators.gated_broadcast(cand_ids, n_cand_docs), "doc_id", "left_semi")

@@ -384,36 +384,6 @@ def upsert_to_path(
     raise ValueError(f"unknown upsert backend: {backend!r}")
 
 
-def compact_store(
-    spark: SparkSession,
-    root: str,
-    target_files: int = 1,
-    partition_by: list[str] | None = None,
-) -> str:
-    """Small-files compaction (the OPTIMIZE-shaped maintenance op):
-    rewrite the CURRENT snapshot into `target_files` files (per partition
-    when `partition_by` is given) as a brand-new committed version.
-
-    Streaming upserts accrete one file set per micro-batch commit; at
-    100 TB that means ever-more, ever-smaller files — more scan tasks,
-    smaller row groups, weaker column statistics. Periodic compaction
-    restores scan shape without changing a single row: readers never see a
-    half-compacted store (the new version only becomes current at its
-    _SUCCESS marker), the pre-compaction snapshot stays in the time-travel
-    window, and a crash mid-compaction is an ignorable garbage directory.
-    Content-neutrality is asserted by test (exact row multiset equality).
-    """
-    current = latest_commit_path(spark, root)
-    if current is None:
-        raise FileNotFoundError(f"no committed store snapshot under {root}")
-    df = spark.read.parquet(current)
-    if partition_by:
-        out = df.repartition(target_files, *partition_by)
-    else:
-        out = df.coalesce(target_files)
-    return commit_snapshot(out, root, partition_by=partition_by)
-
-
 def snapshot_versions(spark: SparkSession, root: str) -> list[int]:
     """Committed snapshot versions, oldest first (the time-travel axis)."""
     return sorted(v for v, ok in _version_dirs(spark, root).items() if ok)
@@ -442,58 +412,6 @@ def read_store(spark: SparkSession, path: str, version: int | None = None) -> Da
         df.withColumn("amount", from_cents("amount_cents"))
         .withColumn("balance", from_cents("balance_cents"))
         .drop("amount_cents", "balance_cents")
-    )
-
-
-def diff_snapshots(
-    spark: SparkSession,
-    root: str,
-    v_from: int,
-    v_to: int,
-    key: str = "fingerprint",
-    compare_cols: list[str] | None = None,
-) -> DataFrame:
-    """Change-data capture between two committed snapshots in the
-    time-travel window: one full-outer join on the key classifies every
-    row as added / removed / changed (null-safe struct comparison over
-    `compare_cols`, default all non-key columns); unchanged rows drop out.
-    This is the table-diff primitive Delta/Iceberg expose as CDF — here it
-    is derived from the snapshots themselves, so it needs no change log.
-    At scale the join shuffles both snapshots on the key once; output is
-    change-sized."""
-    committed = snapshot_versions(spark, root)
-    for v in (v_from, v_to):
-        if v not in committed:
-            raise FileNotFoundError(f"no committed snapshot v{v} under {root}")
-    a = spark.read.parquet(f"{root}/v{v_from:0{_VERSION_WIDTH}d}")
-    b = spark.read.parquet(f"{root}/v{v_to:0{_VERSION_WIDTH}d}")
-    # schema evolution between versions: compare over the UNION of columns
-    # (newer side's order first, departed columns appended), reading a
-    # version that lacks a column as typed NULL — so an added column shows
-    # up as "changed" exactly where the new snapshot populated it, and a
-    # dropped column as "changed" where the old one had values
-    cols = compare_cols or (
-        [c for c in b.columns if c != key]
-        + [c for c in a.columns if c != key and c not in b.columns]
-    )
-    types = {**dict(a.dtypes), **dict(b.dtypes)}
-
-    def _align(df: DataFrame) -> DataFrame:
-        missing = [c for c in cols if c not in df.columns]
-        return df.withColumns({c: F.lit(None).cast(types[c]) for c in missing})
-
-    a_s = _align(a).select(F.col(key), F.struct(*cols).alias("_a"))
-    b_s = _align(b).select(F.col(key), F.struct(*cols).alias("_b"))
-    j = a_s.join(b_s, key, "full_outer")
-    change = (
-        F.when(F.col("_a").isNull(), F.lit("added"))
-        .when(F.col("_b").isNull(), F.lit("removed"))
-        .when(~F.col("_a").eqNullSafe(F.col("_b")), F.lit("changed"))
-    )
-    return (
-        j.withColumn("change_type", change)
-        .filter(F.col("change_type").isNotNull())
-        .select(key, "change_type")
     )
 
 
@@ -608,104 +526,3 @@ def restore_yaml(spark: SparkSession, path: str, schema) -> DataFrame:
 
     str_schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
     return _cast_to_schema(raw.mapInPandas(parse, str_schema), schema)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    keys: list[str],
-    num_buckets: int = 8,
-    sort_by: list[str] | None = None,
-) -> None:
-    """Bucketed table layout: co-locates join/agg keys at write time so
-    repeated joins on `keys` between tables bucketed the same way run with
-    NO shuffle exchange — the decisive layout optimization for a 100 TB
-    fact⋈fact join that would otherwise shuffle both sides every query.
-    Verified by tests/test_layout.py (plan contains no Exchange)."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(num_buckets, *keys)
-    if sort_by:
-        writer = writer.sortBy(*sort_by)
-    writer.saveAsTable(table)
-
-
-def _zvalue(cols: list[str], bits: int) -> "F.Column":
-    """Morton (Z-order) interleave of `bits`-bit normalized columns.
-
-    Built as a sum of shift/mask terms over the *_zn normalized columns —
-    pure codegen'd integer ops, no UDF. With k columns, output bit
-    (b*k + i) carries bit b of column i."""
-    terms = []
-    for i, c in enumerate(cols):
-        for b in range(bits):
-            terms.append(
-                F.shiftleft(
-                    F.shiftright(F.col(f"_zn_{c}"), b).bitwiseAND(F.lit(1)),
-                    b * len(cols) + i,
-                )
-            )
-    z = terms[0]
-    for t in terms[1:]:
-        z = z + t
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    num_files: int = 16,
-    bits: int = 16,
-) -> None:
-    """Z-order-clustered parquet layout (the OPTIMIZE ZORDER BY of
-    Delta/Iceberg): rows are range-partitioned and sorted by the Morton
-    interleave of `cols`, so each output file covers a small HYPERCUBE of
-    the key space instead of a thin slab of one column. Parquet min/max
-    row-group statistics (and the engine's scan-level skipping) then prune
-    files for predicates on ANY of the clustered columns — the decisive
-    layout choice when a 100 TB table serves point/range lookups on two or
-    more independent dimensions.
-
-    Normalization per column is a global min/max (one 1-row aggregate,
-    driver-scalar) → `bits`-bit integer via exact integer scaling. The
-    interleave itself is codegen'd shift/mask arithmetic — no UDF.
-    Pruning effectiveness is measured by `file_zone_maps` and asserted in
-    tests/test_layout.py."""
-    stats = df.agg(
-        *[F.min(c).alias(f"_min_{c}") for c in cols],
-        *[F.max(c).alias(f"_max_{c}") for c in cols],
-    ).first()
-    top = (1 << bits) - 1
-    out = df
-    for c in cols:
-        lo, hi = stats[f"_min_{c}"], stats[f"_max_{c}"]
-        span = max(int(hi) - int(lo), 1)
-        out = out.withColumn(
-            f"_zn_{c}",
-            ((F.col(c).cast("long") - F.lit(int(lo))) * top / F.lit(span)).cast("long"),
-        )
-    out = (
-        out.withColumn("_z", _zvalue(cols, bits))
-        .repartitionByRange(num_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop(*[f"_zn_{c}" for c in cols], "_z")
-    )
-    out.write.mode("overwrite").parquet(path)
-
-
-def file_zone_maps(spark: SparkSession, path: str, cols: list[str]) -> DataFrame:
-    """Per-file min/max zone maps for `cols` — the same statistics a scan
-    uses for file/row-group skipping, surfaced as a DataFrame so layout
-    quality is testable: a predicate `c BETWEEN x AND y` must read only
-    files whose [min_c, max_c] intersects it."""
-    df = spark.read.parquet(path).withColumn("_file", F.input_file_name())
-    return df.groupBy("_file").agg(
-        *[m for c in cols for m in (F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}"))]
-    )
-
-
-def files_touched(zone_maps: DataFrame, col: str, lo, hi) -> int:
-    """How many files a range predicate on `col` must read under the given
-    zone maps (driver-side count of a report-sized table)."""
-    return zone_maps.filter(
-        (F.col(f"max_{col}") >= lo) & (F.col(f"min_{col}") <= hi)
-    ).count()

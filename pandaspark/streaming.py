@@ -48,6 +48,16 @@ _uid = itertools.count()
 _OP_COL = "op"
 _DELETE_OP = "delete"
 
+# event-time settings of the stateful operators (the registry's values)
+_WATERMARK = "2 hours"
+_WINDOW = "1 hour"  # windowed_counts' tumbling window
+_SESSION_GAP = "30 minutes"  # session_windows' inactivity gap
+# interval_join pairs each click with the same user's views in the
+# preceding _LOOKBACK
+_LEFT_TYPE = "click"
+_RIGHT_TYPE = "view"
+_LOOKBACK = "30 minutes"
+
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source event stream with the same two-generation ts dispatch as
@@ -92,9 +102,7 @@ def run_to_memory(df: DataFrame, prefix: str, mode: str = "complete") -> DataFra
     return df.sparkSession.table(name)
 
 
-def windowed_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
+def windowed_counts(events: DataFrame) -> DataFrame:
     """Tumbling event-time window aggregation with late-data watermark.
 
     The watermark bounds streaming state: windows older than max(event_time)
@@ -103,8 +111,8 @@ def windowed_counts(
     semantics, oracle-checked there.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", _WINDOW).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             (F.sum(F.round(F.col("value") * 100).cast("long")) / F.lit(100.0)).alias("total_value"),
@@ -113,16 +121,14 @@ def windowed_counts(
     )
 
 
-def session_windows(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Native session windows: a session closes after `gap` of user
+def session_windows(events: DataFrame) -> DataFrame:
+    """Native session windows: a session closes after _SESSION_GAP of user
     inactivity. Batch mirror: q26 (lag + gap cumsum) — same session
     boundaries for micro-precision timestamps.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", _WATERMARK)
+        .groupBy(F.session_window("ts", _SESSION_GAP).alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id", F.col("w.start").alias("session_start"), F.col("w.end").alias("session_end"), "n_events"
@@ -130,9 +136,7 @@ def session_windows(
     )
 
 
-def dedup_stream(
-    events: DataFrame, keys: list[str] | None = None, watermark: str = "2 hours"
-) -> DataFrame:
+def dedup_stream(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Streaming exactly-once dedup via the state store: the native form of
     the reference's fingerprint upsert (SURVEY.md S6/J1) for in-flight data
     — a re-delivered event (at-least-once source, retried file, replayed
@@ -142,19 +146,12 @@ def dedup_stream(
     plain dropDuplicates on the same keys (exact for unique-keyed data);
     asserted equal across micro-batch boundaries in tests."""
     keyed = keys or ["event_id"]
-    return events.withWatermark("ts", watermark).dropDuplicates(keyed)
+    return events.withWatermark("ts", _WATERMARK).dropDuplicates(keyed)
 
 
-def interval_join(
-    events: DataFrame,
-    left_type: str = "click",
-    right_type: str = "view",
-    lookback: str = "30 minutes",
-    watermark: str = "2 hours",
-    sub_buckets: int = 1,
-) -> DataFrame:
-    """Stream-stream inner join: each `left_type` event pairs with the same
-    user's `right_type` events in the preceding `lookback` window.
+def interval_join(events: DataFrame, sub_buckets: int = 1) -> DataFrame:
+    """Stream-stream inner join: each click pairs with the same user's
+    views in the preceding _LOOKBACK window.
 
     Both sides carry watermarks and the join condition bounds event time in
     both directions — the two requirements for Spark to know when a buffered
@@ -180,22 +177,22 @@ def interval_join(
     of the mitigation docs/SCALING.md prescribes for q177's skew100 plant.
     """
     left = (
-        events.filter(F.col("event_type") == left_type)
+        events.filter(F.col("event_type") == _LEFT_TYPE)
         .select("user_id", F.col("event_id").alias("click_event"), F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", _WATERMARK)
     )
     right = (
-        events.filter(F.col("event_type") == right_type)
+        events.filter(F.col("event_type") == _RIGHT_TYPE)
         .select(
             F.col("user_id").alias("v_user"),
             F.col("event_id").alias("view_event"),
             F.col("ts").alias("view_ts"),
         )
-        .withWatermark("view_ts", watermark)
+        .withWatermark("view_ts", _WATERMARK)
     )
     cond = (
         (F.col("user_id") == F.col("v_user"))
-        & (F.col("view_ts") >= F.col("click_ts") - F.expr(f"INTERVAL {lookback}"))
+        & (F.col("view_ts") >= F.col("click_ts") - F.expr(f"INTERVAL {_LOOKBACK}"))
         & (F.col("view_ts") <= F.col("click_ts"))
     )
     if sub_buckets > 1:

@@ -117,3 +117,19 @@ def test_cli_unknown_names_fail_cleanly(capsys):
     assert main(["query", "--name", "nope", "--sf-dir", SF_DIR]) == 2
     with pytest.raises(SystemExit):
         main(["bogus-command"])
+
+
+def test_cli_analyze_rejects_reports_and_flags_it_cannot_run(tmp_path, capsys):
+    """An unknown report name, or flags that do not fit the report, exit 2
+    with the report table before any store is read."""
+    store = str(tmp_path / "absent")
+    for flags in (
+        ["--report", "DataFrame"],
+        ["--report", "with_cat"],
+        ["--report", "keyword_costs"],
+        ["--report", "regex_amount_extract", "--pattern", "x", "--year", "2024"],
+    ):
+        assert main(["analyze", "--store", store, *flags]) == 2
+        err = capsys.readouterr().err
+        assert "expense_overview" in err and "regex_amount_extract" in err
+        assert "with_cat" not in err.split("available")[1]

@@ -61,38 +61,6 @@ def test_suite_is_one_aggregate_pass(spark):
     assert plan.count("LogicalRDD") == 1
 
 
-def test_suggested_checks_hold_on_the_profiled_data(spark):
-    """Suggestion soundness: the suite proposed from a snapshot must pass
-    with zero violations when compiled against that same snapshot."""
-    from pandaspark.expectations import suggest_checks
-
-    df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    checks = suggest_checks(df)
-    names = {c.name for c in checks}
-    assert "o_orderkey_unique" in names          # PK is all-distinct, no nulls
-    assert "o_orderstatus_domain" in names       # 3-value domain
-    assert "o_totalprice_nonneg" in names
-    out = compile_suite(df, checks).collect()
-    assert out and all(r.passed and r.n_violations == 0 for r in out)
-
-
-def test_suggested_suite_catches_a_regressed_batch(spark):
-    """The admission-control loop: a later batch violating the learned
-    domain/range/uniqueness must be flagged by the suggested suite."""
-    from pyspark.sql import functions as F
-
-    from pandaspark.expectations import suggest_checks
-
-    base = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    checks = suggest_checks(base)
-    bad = base.limit(5).withColumn("o_orderstatus", F.lit("Z")).unionByName(
-        base.limit(3).withColumn("o_totalprice", F.lit(-1.0))
-    )
-    got = {r.check_name: r for r in compile_suite(bad, checks).collect()}
-    assert not got["o_orderstatus_domain"].passed
-    assert not got["o_totalprice_nonneg"].passed
-
-
 def test_empty_suite_yields_empty_tidy_frame(spark):
     """Zero checks (a filtered-down programmatic suite) must compile to an
     empty tidy frame, not an explode-of-empty-array analysis error."""

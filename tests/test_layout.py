@@ -1,47 +1,11 @@
-"""Storage-layout gates: bucketed tables must join WITHOUT a shuffle,
-partitioned and z-ordered stores must prune, and the LSH and sketch
-aggregates must stay inside their error bounds."""
+"""Storage-layout gates: the year-partitioned store must prune, and the
+LSH and sketch aggregates must stay inside their error bounds."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from pandaspark.queries import load
-from pandaspark.store import write_bucketed
-
 from .conftest import SF_DIR
-
-
-@pytest.fixture(scope="module")
-def bucket_db(spark, tmp_path_factory):
-    loc = tmp_path_factory.mktemp("warehouse")
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bucketdb LOCATION '{loc}'")
-    yield "bucketdb"
-    spark.sql("DROP DATABASE IF EXISTS bucketdb CASCADE")
-
-
-def test_bucketed_join_has_no_shuffle(spark, bucket_db):
-    o = load(spark, SF_DIR, "orders").select("o_orderkey", "o_totalprice")
-    li = load(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(o, f"{bucket_db}.orders_b", ["o_orderkey"], 4, sort_by=["o_orderkey"])
-    write_bucketed(li, f"{bucket_db}.lineitem_b", ["l_orderkey"], 4, sort_by=["l_orderkey"])
-
-    ob = spark.table(f"{bucket_db}.orders_b")
-    lb = spark.table(f"{bucket_db}.lineitem_b")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = ob.join(lb, ob["o_orderkey"] == lb["l_orderkey"])
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, "bucketed co-located join still shuffles"
-        assert "SortMergeJoin" in plan
-        # and it still returns the right rows
-        n = joined.count()
-        want = o.join(li, o["o_orderkey"] == li["l_orderkey"]).count()
-        assert n == want > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_minhash_lsh_recall_and_candidate_rate(spark, ddb):
@@ -140,54 +104,3 @@ def test_year_partitioned_store_prunes_partitions(spark, tmp_path):
     pf = [l for l in scan.splitlines() if "PartitionFilters" in l][0]
     assert "book_year" in pf, f"analytics year filter did not prune: {pf}"
     assert q.count() == sum(1 for r in rows if r[2].year == 2024)
-
-
-def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
-    """Z-order clustering must beat single-column sorting for multi-
-    dimensional pruning: a range predicate on EITHER clustered column
-    touches a small fraction of files, while a linear sort only prunes its
-    own sort column (the secondary column's per-file ranges stay
-    full-width). Zone maps are the same min/max statistics the parquet
-    scan uses for row-group skipping."""
-    from pandaspark.store import file_zone_maps, files_touched, write_zordered
-
-    li = load(spark, SF_DIR, "lineitem").select("l_partkey", "l_suppkey", "l_quantity")
-    n_files = 16
-    zpath = str(tmp_path / "zorder")
-    lpath = str(tmp_path / "linear")
-    write_zordered(li, zpath, ["l_partkey", "l_suppkey"], num_files=n_files)
-    (
-        li.repartitionByRange(n_files, "l_partkey")
-        .sortWithinPartitions("l_partkey")
-        .write.mode("overwrite")
-        .parquet(lpath)
-    )
-
-    zmaps = file_zone_maps(spark, zpath, ["l_partkey", "l_suppkey"])
-    lmaps = file_zone_maps(spark, lpath, ["l_partkey", "l_suppkey"])
-    assert zmaps.count() == n_files
-    assert lmaps.count() == n_files
-
-    # narrow range on each dimension (~10% of the key space)
-    pk_hi = li.agg(F.max("l_partkey")).first()[0]
-    sk_hi = li.agg(F.max("l_suppkey")).first()[0]
-    pk_rng = (1, max(pk_hi // 10, 2))
-    sk_rng = (1, max(sk_hi // 10, 2))
-
-    z_pk = files_touched(zmaps, "l_partkey", *pk_rng)
-    z_sk = files_touched(zmaps, "l_suppkey", *sk_rng)
-    l_pk = files_touched(lmaps, "l_partkey", *pk_rng)
-    l_sk = files_touched(lmaps, "l_suppkey", *sk_rng)
-
-    # linear layout: primary column prunes hard, secondary not at all
-    assert l_pk <= n_files // 4
-    assert l_sk == n_files
-    # z-order: BOTH dimensions prune below the linear layout's secondary
-    assert z_pk < n_files, f"z-order failed to prune partkey: {z_pk}/{n_files}"
-    assert z_sk < n_files, f"z-order failed to prune suppkey: {z_sk}/{n_files}"
-    assert z_pk + z_sk < l_pk + l_sk, (z_pk, z_sk, l_pk, l_sk)
-
-    # row-multiset preserved by the rewrite (clustering is content-neutral)
-    a = spark.read.parquet(zpath).groupBy("l_partkey", "l_suppkey").count()
-    b = li.groupBy("l_partkey", "l_suppkey").count()
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()

@@ -1,4 +1,4 @@
-"""Edge-case tests for composite operators (asof/range/latest-per-key)."""
+"""Edge-case tests for composite operators (asof/latest-per-key/two-phase)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pandaspark.operators import (
     asof_join,
     asof_join_bucketed,
     latest_per_key,
-    range_join_bucketed,
 )
 
 
@@ -80,16 +79,6 @@ def test_asof_join_bucketed_equals_anchor_on_q28_shape(spark):
         for r in asof_join_bucketed(o, e, **kwargs).collect()
     }
     assert got == want and len(got) == o.count()
-
-
-def test_range_join_bucketed_hits_and_boundaries(spark):
-    pts = spark.createDataFrame([(1, 15), (2, 250), (3, 20), (4, 21)], "pid int, x int")
-    iv = spark.createDataFrame([(10, 20, "a"), (200, 300, "b")], "lo int, hi int, name string")
-    got = sorted(
-        (r.pid, r.name) for r in range_join_bucketed(pts, iv, "x", "lo", "hi", 50).collect()
-    )
-    # boundaries inclusive on both ends; 21 falls outside [10,20]
-    assert got == [(1, "a"), (2, "b"), (3, "a")]
 
 
 def test_latest_per_key_deterministic(spark):
@@ -211,48 +200,6 @@ def test_salted_join_equals_plain_join_on_skewed_keys(spark):
         assert salted.exceptAll(plain).count() == 0
 
 
-def test_exact_quantiles_two_phase_equals_builtin_percentile(spark):
-    """The distributed order-statistics quantile must be bit-identical to
-    F.percentile (which is itself oracle-verified against DuckDB's
-    quantile_cont in q27) on the q27 data shape."""
-    from pandaspark.operators import exact_quantiles_two_phase
-    from pandaspark.queries import load as qload
-
-    from .conftest import SF_DIR
-
-    li = qload(spark, SF_DIR, "lineitem").select("l_returnflag", "l_extendedprice")
-    cents = F.round(F.col("l_extendedprice") * 100).cast("long")
-
-    want = {
-        r.l_returnflag: (r.m, r.p)
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F.percentile(cents, 0.5).alias("m"),
-            F.percentile(cents, 0.9).alias("p"),
-        )
-        .collect()
-    }
-    got = {
-        r.l_returnflag: (r.q_0_5, r.q_0_9)
-        for r in exact_quantiles_two_phase(
-            li, "l_returnflag", cents, [0.5, 0.9]
-        ).collect()
-    }
-    assert got == want and len(got) == 3
-    # scale property: local ranking windows are keyed by the pinned
-    # range-partition id (the exchange hides behind the layout checkpoint's
-    # Scan ExistingRDD — see sequential_ids), and no per-group object
-    # aggregate holds the full value multiset
-    plan = (
-        exact_quantiles_two_phase(li, "l_returnflag", cents, [0.5])
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    norm = plan.lower().replace(" ", "")
-    assert "windowspecdefinition(_pid" in norm
-    assert "existingrdd" in norm
-    assert "ObjectHashAggregate" not in plan
-
-
 class TestChunkManifest:
     """Edge semantics of the q97 sliding-window chunk manifest: full token
     coverage, stride-aligned starts, clamped ends — the invariants a
@@ -320,75 +267,6 @@ def test_sequential_ids_dense_at_scale(spark):
     agg2 = rt.agg(F.max("rt").alias("mx"), F.count_distinct("rt").alias("d")).collect()[0]
     # cumsum of all-ones in a total order is also the dense sequence 1..n
     assert (agg2.mx, agg2.d) == (n, n)
-
-
-def test_merge_asof_matches_pandas_all_directions(spark):
-    """The window-union merge_asof must reproduce pandas.merge_asof
-    (backward/forward/nearest, with and without tolerance, exact matches
-    counting, unmatched lefts as nulls) on multi-key integer data with
-    unique right times per key."""
-    import pandas as pd
-
-    from pandaspark.operators import merge_asof
-
-    lrows = [(k, t) for k in (1, 2, 3) for t in (5, 10, 14, 20, 33, 40)]
-    rrows = [
-        (1, 3, "a"), (1, 10, "b"), (1, 22, "c"), (1, 35, "d"),
-        (2, 12, "e"), (2, 13, "f"), (2, 41, "g"),
-        # key 3: no right rows at all
-    ]
-    l = spark.createDataFrame(lrows, "k int, t long")
-    r = spark.createDataFrame(rrows, "k int, t long, v string")
-    lp = pd.DataFrame(lrows, columns=["k", "t"]).sort_values("t").reset_index(drop=True)
-    rp = pd.DataFrame(rrows, columns=["k", "t", "v"]).sort_values("t").reset_index(drop=True)
-
-    for direction in ("backward", "forward", "nearest"):
-        for tol in (None, 4):
-            got = {
-                (row.k, row.t): row.v
-                for row in merge_asof(
-                    l, r, by="k", left_time="t", right_time="t",
-                    direction=direction, tolerance=tol,
-                ).collect()
-            }
-            pd_kwargs = {"tolerance": tol} if tol is not None else {}
-            want_df = pd.merge_asof(
-                lp, rp, on="t", by="k", direction=direction, **pd_kwargs
-            )
-            want = {
-                (row.k, row.t): (None if pd.isna(row.v) else row.v)
-                for row in want_df.itertuples()
-            }
-            assert got == want, f"direction={direction} tolerance={tol}"
-            # right's colliding time column comes back renamed; spot-check
-            # its presence once
-        assert "t_right" in merge_asof(l, r, by="k", left_time="t", right_time="t").columns
-
-
-def test_merge_asof_timestamps_and_plan_has_no_join(spark):
-    """Timestamp columns compare in exact microseconds, and the physical
-    plan is window-only — no join operator anywhere (the O(matches)
-    intermediate never exists)."""
-    import datetime as dt
-
-    from pandaspark.operators import merge_asof
-
-    base = dt.datetime(2024, 1, 1)
-    l = spark.createDataFrame(
-        [(1, base + dt.timedelta(microseconds=10))], "k int, ts timestamp"
-    )
-    r = spark.createDataFrame(
-        [
-            (1, base + dt.timedelta(microseconds=7), "x"),
-            (1, base + dt.timedelta(microseconds=12), "y"),
-        ],
-        "k int, ts timestamp, v string",
-    )
-    out = merge_asof(l, r, by="k", direction="nearest")
-    [row] = out.collect()
-    assert row.v == "y"  # delta 2us forward beats 3us backward
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan, plan
 
 
 def test_ranked_running_total_equals_composed_form(spark):

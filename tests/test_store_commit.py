@@ -185,42 +185,6 @@ def test_stream_upsert_chains_micro_batches(spark, tmp_path):
     assert len(bumped) == s1.count()
 
 
-def test_compact_store_is_content_neutral_and_versioned(spark, tmp_path):
-    """Compaction must rewrite the current snapshot into fewer files as a
-    NEW version: identical row multiset, fewer data files, old snapshot
-    still readable through time travel."""
-    from pandaspark.store import (
-        commit_snapshot,
-        compact_store,
-        latest_commit_path,
-        snapshot_versions,
-    )
-
-    root = str(tmp_path / "cstore")
-    base = load(spark, SF_DIR, "orders").limit(200)
-    commit_snapshot(base.repartition(8), root)
-    v_before = snapshot_versions(spark, root)
-    p_before = latest_commit_path(spark, root)
-    files_before = [
-        f for f in os.listdir(p_before) if f.endswith(".parquet")
-    ]
-    assert len(files_before) == 8
-
-    compact_store(spark, root, target_files=1)
-
-    p_after = latest_commit_path(spark, root)
-    assert p_after != p_before
-    assert snapshot_versions(spark, root) == v_before + [v_before[-1] + 1]
-    files_after = [f for f in os.listdir(p_after) if f.endswith(".parquet")]
-    assert len(files_after) == 1
-    a = spark.read.parquet(p_before)
-    b = spark.read.parquet(p_after)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # pre-compaction version remains in the time-travel window
-    old = spark.read.parquet(p_before)
-    assert old.count() == 200
-
-
 def test_upsert_to_path_parquet_backend_and_delta_seam(spark, tmp_path):
     """The MERGE seam: parquet backend folds batches through the atomic
     snapshot protocol with ON-CONFLICT semantics (matched rows take the
@@ -274,127 +238,6 @@ def test_upsert_to_path_parquet_backend_and_delta_seam(spark, tmp_path):
         upsert_to_path(spark, root, b2, backend="delta")
     with pytest.raises(ValueError):
         upsert_to_path(spark, root, b2, backend="iceberg")
-
-
-def test_diff_snapshots_classifies_adds_removes_changes(spark, tmp_path):
-    """Snapshot CDC: v1→v2 with one removed row, one added row, one changed
-    row, and the rest untouched must classify exactly those keys."""
-    from pandaspark.store import commit_snapshot, diff_snapshots
-
-    root = str(tmp_path / "diffstore")
-    v1 = spark.createDataFrame(
-        [("a", 1, "x"), ("b", 2, "y"), ("c", 3, "z"), ("d", 4, "w")],
-        "fingerprint string, val int, tag string",
-    )
-    commit_snapshot(v1, root)
-    v2 = spark.createDataFrame(
-        [("b", 2, "y"), ("c", 30, "z"), ("d", 4, "w"), ("e", 5, "v")],
-        "fingerprint string, val int, tag string",
-    )
-    commit_snapshot(v2, root)
-    got = {
-        r.fingerprint: r.change_type
-        for r in diff_snapshots(spark, root, 1, 2).collect()
-    }
-    assert got == {"a": "removed", "c": "changed", "e": "added"}
-    # column-scoped diff: comparing only `tag` sees no change on c
-    got_tag = {
-        r.fingerprint: r.change_type
-        for r in diff_snapshots(spark, root, 1, 2, compare_cols=["tag"]).collect()
-    }
-    assert got_tag == {"a": "removed", "e": "added"}
-    import pytest
-
-    with pytest.raises(FileNotFoundError):
-        diff_snapshots(spark, root, 1, 9)
-
-
-def test_incremental_stats_maintenance_via_snapshot_diff(spark, tmp_path):
-    """Incremental view maintenance: per-lang doc counts maintained from a
-    snapshot CDC delta must equal a fresh recompute on the new snapshot —
-    the warehouse pattern where 100 TB of stats update from a change-sized
-    diff instead of a full rescan."""
-    from pandaspark.store import commit_snapshot, diff_snapshots
-
-    root = str(tmp_path / "ivm")
-    docs = load(spark, SF_DIR, "documents").select("doc_id", "lang", "text").limit(100)
-    v1 = docs.filter(F.col("doc_id") % 4 != 0)
-    commit_snapshot(v1.withColumn("fingerprint", F.col("doc_id").cast("string")), root)
-    # v2: some removed, some added, one lang flipped
-    v2 = (
-        docs.filter(F.col("doc_id") % 5 != 0)
-        .withColumn(
-            "lang", F.when(F.col("doc_id") % 7 == 0, F.lit("xx")).otherwise(F.col("lang"))
-        )
-    )
-    commit_snapshot(v2.withColumn("fingerprint", F.col("doc_id").cast("string")), root)
-
-    stats_v1 = v1.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    delta = diff_snapshots(spark, root, 1, 2)
-    s1 = spark.read.parquet(f"{root}/v000001")
-    s2 = spark.read.parquet(f"{root}/v000002")
-    # per-lang delta: -1 for removed/changed-away rows (old lang), +1 for
-    # added/changed-into rows (new lang)
-    minus = (
-        delta.filter(F.col("change_type").isin("removed", "changed"))
-        .join(s1.select("fingerprint", "lang"), "fingerprint")
-        .groupBy("lang")
-        .agg((-F.count(F.lit(1))).alias("d"))
-    )
-    plus = (
-        delta.filter(F.col("change_type").isin("added", "changed"))
-        .join(s2.select("fingerprint", "lang"), "fingerprint")
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    maintained = (
-        stats_v1.select("lang", F.col("n").alias("d"))
-        .unionByName(minus)
-        .unionByName(plus)
-        .groupBy("lang")
-        .agg(F.sum("d").alias("n"))
-        .filter(F.col("n") > 0)
-    )
-    fresh = v2.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    m = {r.lang: r.n for r in maintained.collect()}
-    f = {r.lang: r.n for r in fresh.collect()}
-    assert m == f and "xx" in f
-
-
-def test_diff_snapshots_across_schema_evolution(spark, tmp_path):
-    """Snapshot CDC when a column was ADDED between versions (and one
-    dropped): the diff compares over the union of columns, reading the
-    version that lacks a column as typed NULL — added columns surface as
-    'changed' exactly where the new snapshot populated them, and the diff
-    never errors on the asymmetric schemas."""
-    from pandaspark.store import commit_snapshot, diff_snapshots
-
-    root = str(tmp_path / "evostore")
-    v1 = spark.createDataFrame(
-        [("a", 1, "x"), ("b", 2, "y"), ("c", 3, "z")],
-        "fingerprint string, val int, legacy string",
-    )
-    commit_snapshot(v1, root)
-    # v2 adds `score`, drops `legacy`, changes nothing else on a/b; c gone
-    v2 = spark.createDataFrame(
-        [("a", 1, 10), ("b", 2, None), ("d", 4, 40)],
-        "fingerprint string, val int, score int",
-    )
-    commit_snapshot(v2, root)
-    got = {
-        r.fingerprint: r.change_type
-        for r in diff_snapshots(spark, root, 1, 2).collect()
-    }
-    # a: score NULL->10 AND legacy x->NULL => changed
-    # b: score stays NULL, but legacy y->NULL => changed
-    # c: removed; d: added
-    assert got == {"a": "changed", "b": "changed", "c": "removed", "d": "added"}
-    # scoped to the surviving common column, a and b are unchanged
-    got_val = {
-        r.fingerprint: r.change_type
-        for r in diff_snapshots(spark, root, 1, 2, compare_cols=["val"]).collect()
-    }
-    assert got_val == {"c": "removed", "d": "added"}
 
 
 def test_stream_cdc_apply_with_tombstones(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Streaming and multimodal plumbing tests.
+"""Streaming tests and media codec tests.
 
 Streaming queries are driven to completion with the memory sink over the
 bounded events parquet; results must agree with the batch mirrors (q25/q26
@@ -7,13 +7,11 @@ semantics), which are themselves oracle-checked.
 
 from __future__ import annotations
 
-import hashlib
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-from pandaspark.multimodal import decode_media, frame_sample, read_media_dir
 from pandaspark.queries import REGISTRY
 from pandaspark.streaming import (
     _EVENTS_SCHEMA,
@@ -174,50 +172,24 @@ def test_interval_join_sub_buckets_shard_the_state_key(spark, events_dir):
     assert n_buckets == 4
 
 
-@pytest.fixture()
-def media_dir(tmp_path):
-    files = {
-        "a.jpg": b"\xff\xd8fakejpegbytes",
-        "b.png": b"\x89PNGfake",
-        "c.mp4": b"\x00\x00ftypisomfakevideo",
-        "d.bin": b"unknownkind",
-    }
-    for name, payload in files.items():
-        (tmp_path / name).write_bytes(payload)
-    return str(tmp_path), files
+def test_real_decode_rejects_absent_codecs():
+    """The REAL decode path must fail loudly on truncated/fake bytes (a
+    JPEG with no SOF, a bad PNG signature, a video container, an unknown
+    blob), not fabricate metadata."""
+    from pandaspark.multimodal import decode_bytes
+
+    for payload in (
+        b"\xff\xd8fakejpegbytes",
+        b"\x89PNGfake",
+        b"\x00\x00ftypisomfakevideo",
+        b"unknownkind",
+    ):
+        with pytest.raises(NotImplementedError, match="no stdlib codec|SOF"):
+            decode_bytes(payload)
 
 
-def test_multimodal_decode_plumbing(spark, media_dir):
-    path, files = media_dir
-    df = read_media_dir(spark, path)
-    kinds = {r.path.rsplit("/", 1)[-1]: r.kind for r in df.select("path", "kind").collect()}
-    assert kinds == {"a.jpg": "image", "b.png": "image", "c.mp4": "video", "d.bin": "unknown"}
-
-    decoded = decode_media(df, deterministic_fake=True)
-    rows = {r.path.rsplit("/", 1)[-1]: r for r in decoded.collect()}
-    assert rows["a.jpg"].content_sha256 == hashlib.sha256(files["a.jpg"]).hexdigest()
-    assert rows["a.jpg"].n_bytes == len(files["a.jpg"])
-    assert 16 <= rows["b.png"].width <= 255 and rows["b.png"].n_frames == 1
-    assert rows["c.mp4"].n_frames >= 1
-
-    frames = frame_sample(decoded, every_nth=4).collect()
-    assert all(f.frame_index % 4 == 0 for f in frames)
-    assert len({f.path for f in frames}) == 1  # only the video row explodes
-
-
-def test_real_decode_rejects_absent_codecs(spark, media_dir):
-    """The fixture dir holds truncated/fake bytes (a JPEG with no SOF, an
-    unknown blob): the REAL decode path must fail loudly on them, not
-    fabricate metadata."""
-    path, _ = media_dir
-    df = read_media_dir(spark, path)
-    with pytest.raises(Exception, match="NotImplementedError|no stdlib codec|SOF"):
-        decode_media(df, deterministic_fake=False).collect()
-
-
-@pytest.fixture()
-def real_media_dir(tmp_path):
-    """Real decodable files, written through the module's own encoders plus
+def _real_media():
+    """Real decodable media bytes, built by the module's own encoders plus
     hand-crafted PNG/GIF/JPEG headers."""
     import struct
 
@@ -240,7 +212,7 @@ def real_media_dir(tmp_path):
         + b"\xff\xc0" + struct.pack(">H", 11) + b"\x08" + struct.pack(">HH", 77, 99)
         + b"\x03" + b"\x00" * 2
     )
-    files = {
+    return {
         "img.bmp": encode_bmp(px),
         "img.ppm": encode_ppm(px),
         "tone.wav": encode_wav(samples, sample_rate=8000),
@@ -248,29 +220,24 @@ def real_media_dir(tmp_path):
         "hdr.gif": gif,
         "hdr.jpg": jpeg,
     }
-    for name, payload in files.items():
-        (tmp_path / name).write_bytes(payload)
-    return str(tmp_path), px, samples
 
 
-def test_real_decode_kernels_end_to_end(spark, real_media_dir):
-    """binaryFile scan -> REAL stdlib decode: every format yields its true
-    dimensions/audio metadata (no fakes anywhere in this path)."""
-    path, px, samples = real_media_dir
-    rows = {
-        r.path.rsplit("/", 1)[-1]: r
-        for r in decode_media(read_media_dir(spark, path)).collect()
-    }
-    assert rows["img.bmp"].format == "bmp"
-    assert (rows["img.bmp"].width, rows["img.bmp"].height) == (5, 3)
-    assert (rows["img.ppm"].width, rows["img.ppm"].height) == (5, 3)
+def test_real_decode_kernels_end_to_end():
+    """REAL stdlib decode: every format yields its true dimensions/audio
+    metadata (no fakes anywhere in this path)."""
+    from pandaspark.multimodal import decode_bytes
+
+    rows = {name: decode_bytes(payload) for name, payload in _real_media().items()}
+    assert rows["img.bmp"]["format"] == "bmp"
+    assert (rows["img.bmp"]["width"], rows["img.bmp"]["height"]) == (5, 3)
+    assert (rows["img.ppm"]["width"], rows["img.ppm"]["height"]) == (5, 3)
     w = rows["tone.wav"]
-    assert (w.format, w.sample_rate, w.n_channels, w.sample_width, w.n_frames) == (
-        "wav", 8000, 1, 2, 300,
-    )
-    assert (rows["hdr.png"].width, rows["hdr.png"].height) == (40, 30)
-    assert (rows["hdr.gif"].width, rows["hdr.gif"].height) == (12, 34)
-    assert (rows["hdr.jpg"].width, rows["hdr.jpg"].height) == (99, 77)
+    assert (
+        w["format"], w["sample_rate"], w["n_channels"], w["sample_width"], w["n_frames"]
+    ) == ("wav", 8000, 1, 2, 300)
+    assert (rows["hdr.png"]["width"], rows["hdr.png"]["height"]) == (40, 30)
+    assert (rows["hdr.gif"]["width"], rows["hdr.gif"]["height"]) == (12, 34)
+    assert (rows["hdr.jpg"]["width"], rows["hdr.jpg"]["height"]) == (99, 77)
 
 
 def test_codec_round_trips_are_exact():
@@ -300,30 +267,8 @@ def test_codec_round_trips_are_exact():
     assert np.array_equal(back, s)
 
 
-def test_real_features_identical_pixels_embed_identically(spark, real_media_dir):
-    """The BMP and PPM hold the SAME pixels through different containers:
-    the real feature path must embed them identically (cosine == 1), and
-    all real embeddings are unit-norm."""
-    import numpy as np
-
-    from pandaspark.multimodal import extract_features
-
-    path, px, samples = real_media_dir
-    df = read_media_dir(spark, path, glob="*.{bmp,ppm,wav}")
-    feats = {
-        r.path.rsplit("/", 1)[-1]: np.array(r.embedding, dtype=np.float64)
-        for r in extract_features(df).collect()
-    }
-    assert set(feats) == {"img.bmp", "img.ppm", "tone.wav"}
-    for v in feats.values():
-        assert v.shape == (64,) and abs(np.linalg.norm(v) - 1.0) < 1e-5
-    cos = float(feats["img.bmp"] @ feats["img.ppm"])
-    assert cos > 0.999999
-    assert float(feats["img.bmp"] @ feats["tone.wav"]) < 0.999
-
-
 def test_watermark_drops_late_data_and_finalizes_windows(spark, tmp_path):
-    """Append-mode windowed agg with a 30-min watermark: a row arriving
+    """Append-mode windowed agg with its 2-hour watermark: a row arriving
     after the watermark passed its window must be DROPPED, and a window is
     emitted exactly once, when the watermark crosses its end."""
     import datetime as dt
@@ -340,13 +285,15 @@ def test_watermark_drops_late_data_and_finalizes_windows(spark, tmp_path):
         df.coalesce(1).write.mode("overwrite").parquet(str(src / name))
 
     t = lambda h, m: dt.datetime(2024, 3, 1, h, m)
-    # batch 1: one event in the 10:00 window, one at 11:40 (advances
-    # watermark to 11:10 > 11:00 → the 10:00 window becomes finalizable)
-    write_file("f1", [(t(10, 5), "click", 1.0), (t(11, 40), "click", 1.0)])
-
-    agg = windowed_counts(
-        paced_stream(spark, str(src) + "/*"), window="1 hour", watermark="30 minutes"
+    # batch 1: one event each in the 10:00 and 11:00 windows, one at 13:10
+    # (advances the watermark to 11:10 > 11:00 → the 10:00 window becomes
+    # finalizable)
+    write_file(
+        "f1",
+        [(t(10, 5), "click", 1.0), (t(11, 40), "click", 1.0), (t(13, 10), "click", 1.0)],
     )
+
+    agg = windowed_counts(paced_stream(spark, str(src) + "/*"))
     q = (
         agg.writeStream.outputMode("append")
         .format("memory")
@@ -358,7 +305,7 @@ def test_watermark_drops_late_data_and_finalizes_windows(spark, tmp_path):
         q.processAllAvailable()
         # batch 2: a LATE row for the already-finalized 10:00 window (must
         # be dropped) plus a fresh row to trigger emission
-        write_file("f2", [(t(10, 20), "click", 99.0), (t(12, 30), "click", 1.0)])
+        write_file("f2", [(t(10, 20), "click", 99.0), (t(14, 30), "click", 1.0)])
         q.processAllAvailable()
     finally:
         q.stop()
@@ -367,36 +314,9 @@ def test_watermark_drops_late_data_and_finalizes_windows(spark, tmp_path):
         "SELECT * FROM wm_test").collect()}
     # the 10:00 window was emitted with ONLY the on-time event — the late
     # 99.0-value row did not leak in. The 11:00 window finalized via the
-    # no-data batch after the watermark advanced past 12:00. The 12:00
-    # window (12:30 event) is still open → absent from the append sink.
+    # no-data batch after the watermark advanced to 12:30. The 13:00 and
+    # 14:00 windows are still open → absent from the append sink.
     assert rows == {t(10, 0): ("click", 1, 1.0), t(11, 0): ("click", 1, 1.0)}
-
-
-def test_feature_extract_composes_with_similarity(spark, media_dir):
-    """Fake-embedding extraction yields the same array<float> shape as the
-    embeddings table; cosine top-k over the extracted vectors runs
-    unchanged (decode → features → similarity composition)."""
-    import numpy as np
-
-    from pandaspark.multimodal import extract_features
-    from pandaspark.vectorops import cosine_topk_arrow
-
-    path, files = media_dir
-    df = read_media_dir(spark, path)
-    feats = extract_features(df, dim=64, deterministic_fake=True)
-    rows = feats.collect()
-    assert len(rows) == len(files)
-    for r in rows:
-        v = np.array(r.embedding, dtype=np.float64)
-        assert v.shape == (64,) and abs(np.linalg.norm(v) - 1.0) < 1e-5
-
-    base = feats.selectExpr("abs(hash(path)) as vec_id", "embedding")
-    q0 = base.collect()[0]
-    top = cosine_topk_arrow(base, [(int(q0.vec_id), list(q0.embedding))], k=2).collect()
-    assert len(top) == 2 and all(r.qid == q0.vec_id for r in top)
-
-    with pytest.raises(Exception, match="NotImplementedError|requires"):
-        extract_features(df).collect()
 
 
 def test_streaming_registry_entries_handle_nanos_fixtures(spark, tmp_path):
@@ -572,33 +492,18 @@ def test_png_round_trip_exercises_every_filter():
         decode_png_pixels(bad[:40])
 
 
-def test_png_flows_through_decode_and_features(spark, tmp_path):
-    """PNG is a first-class image format end-to-end: decode_media reports
-    true dimensions and extract_features embeds PNG pixels — identical
-    pixels embed identically across PNG/BMP/PPM containers."""
+def test_png_flows_through_decode_and_features():
+    """PNG is a first-class image format: the metadata decode fully
+    decodes an encoded PNG and reports its true dimensions."""
     import numpy as np
 
-    from pandaspark.multimodal import (
-        decode_media,
-        encode_bmp,
-        encode_png,
-        encode_ppm,
-        extract_features,
-        read_media_dir,
-    )
+    from pandaspark.multimodal import decode_bytes, encode_png
 
     rng = np.random.RandomState(3)
     px = rng.randint(0, 256, size=(12, 8, 3)).astype(np.uint8)
-    (tmp_path / "a.png").write_bytes(encode_png(px))
-    (tmp_path / "b.bmp").write_bytes(encode_bmp(px))
-    (tmp_path / "c.ppm").write_bytes(encode_ppm(px))
-    media = read_media_dir(spark, str(tmp_path))
-    dec = {r.path.rsplit("/", 1)[-1]: r for r in decode_media(media).collect()}
-    assert dec["a.png"].format == "png"
-    assert (dec["a.png"].width, dec["a.png"].height) == (8, 12)
-    feats = {r.path.rsplit("/", 1)[-1]: r.embedding
-             for r in extract_features(media).collect()}
-    assert feats["a.png"] == feats["b.bmp"] == feats["c.ppm"]
+    dec = decode_bytes(encode_png(px))
+    assert dec["format"] == "png"
+    assert (dec["width"], dec["height"]) == (8, 12)
 
 
 def test_q201_kernel_one_row_per_media_across_arrow_batches(spark):
