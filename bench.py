@@ -16,7 +16,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pandaspark.queries import REGISTRY  # noqa: E402
+from pandaspark.queries import REGISTRY, oracle_views  # noqa: E402
 from pandaspark.session import bench_session  # noqa: E402
 
 
@@ -153,13 +153,7 @@ def main() -> None:
         import duckdb
 
         con = duckdb.connect()
-        for t in (
-            "region nation customer supplier part orders lineitem events "
-            "documents embeddings".split()
-        ):
-            con.execute(
-                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-            )
+        oracle_views(con, sf_dir)
         # same consecutive min-of-N structure and projection-based uniform
         # budget clamp as the Spark half (symmetry)
         duck_passes = runs

@@ -112,15 +112,6 @@ def keyword_costs(df: DataFrame, patterns: str, year: int | None = None) -> Data
     )
 
 
-def category_cost_between(df: DataFrame, cat: str, start: str, end: str, account: str | None = None) -> DataFrame:
-    """Query 6 shape: one category's spend in a date window (YoY compares
-    are two calls)."""
-    base = df.filter((F.col("cat") == cat) & (F.col("book_date") > F.lit(start)) & (F.col("book_date") < F.lit(end)))
-    if account:
-        base = base.filter(F.col("account") == account)
-    return base.agg(F.count("*").alias("n"), F.round(F.sum("amount"), 2).alias("total"))
-
-
 def regex_amount_extract(df: DataFrame, pattern: str, source: str = "purpose") -> DataFrame:
     """Query 7 shape: pull a German-formatted number out of free text
     (e.g. interest parts 'Zinsen 123,45') and sum it."""

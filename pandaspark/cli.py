@@ -104,7 +104,7 @@ def cmd_ing_import(args) -> int:
     if latest_commit_path(spark, args.store) is not None:
         next_id = next_transaction_id(read_store(spark, args.store))
     prepared = prepare_for_store(batch, next_id=next_id)
-    committed = upsert_to_path(spark, args.store, prepared, backend=args.backend)
+    committed = upsert_to_path(spark, args.store, prepared)
     n = read_store(spark, args.store).count()
     print(f"imported {batch.count()} rows -> {committed} ({n} total)")
     return 0
@@ -231,7 +231,6 @@ def build_parser() -> argparse.ArgumentParser:
     s.add_argument("--store", required=True)
     s.add_argument("--rules", default=None)
     s.add_argument("--account-map", default=None, help="JSON {IBAN: account-name}")
-    s.add_argument("--backend", default="parquet", choices=["parquet", "delta"])
     s.set_defaults(fn=cmd_ing_import)
 
     s = sub.add_parser("categorize", help="re-run the rule cascade over the store")

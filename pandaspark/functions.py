@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "parse_german_number",
-    "parse_german_date",
     "german_number_sql",
     "german_date_sql",
     "to_cents",
@@ -28,9 +27,7 @@ __all__ = [
     "null_normalize",
     "effective_category",
     "fingerprint",
-    "category_level",
     "in_category_subtree",
-    "amount_type",
     "sql_string",
     "sql_ident",
 ]
@@ -61,13 +58,9 @@ def german_number_sql(expr: str) -> str:
     return f"CAST(translate({expr}, ',.', '.') AS DECIMAL(18,2))"
 
 
-def parse_german_date(c: Column | str) -> Column:
-    """'31.12.2024' → DATE (day-first)."""
-    return F.to_date(_col(c), "d.M.yyyy")
-
-
 def german_date_sql(expr: str) -> str:
-    """parse_german_date as SQL text over the SQL expression `expr`."""
+    """'31.12.2024' → DATE (day-first), as SQL text over the SQL
+    expression `expr`."""
     return f"to_date({expr}, 'd.M.yyyy')"
 
 
@@ -126,11 +119,6 @@ def fingerprint(
     return F.sha2(F.concat_ws("|", *parts), 256)
 
 
-def category_level(c: Column | str, level: int) -> Column:
-    """Nth level of a '::'-hierarchical category (0-based); NULL past depth."""
-    return F.element_at(F.split(_col(c), "::"), level + 1)
-
-
 def in_category_subtree(c: Column | str, prefix: str) -> Column:
     """Null-safe subtree test: cat startswith prefix (NULL → false)."""
     return F.coalesce(_col(c), F.lit("")).startswith(prefix)
@@ -147,8 +135,3 @@ def sql_string(value: str) -> str:
 def sql_ident(name: str) -> str:
     """Column name → backquoted Spark SQL identifier (backquotes doubled)."""
     return "`" + name.replace("`", "``") + "`"
-
-
-def amount_type(c: Column | str = "amount") -> Column:
-    """'Gutschrift' (credit) if amount > 0 else 'Abbuchung' (debit)."""
-    return F.when(_col(c) > 0, F.lit("Gutschrift")).otherwise(F.lit("Abbuchung"))

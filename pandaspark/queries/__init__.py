@@ -19,18 +19,32 @@ Cross-engine determinism conventions (oracle value-hash is exact):
 
 from __future__ import annotations
 
+import os
 import re
 import weakref
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import events_ts, pin_read_confs
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
 )
+
+
+def oracle_views(con, sf_dir: str) -> None:
+    """Register every table at `sf_dir` as a view on the DuckDB connection
+    `con`, the names the oracle SQL reads. Fixture tables are single files;
+    Spark-written tables are directories of part files, globbed here."""
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path = f"{path}/*.parquet"
+        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{path}'")
 
 
 @dataclass(frozen=True)
@@ -51,50 +65,10 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return deco
 
 
-import os  # noqa: E402
-
-
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # the caller may hand us a default-config session (200 shuffle
-    # partitions); size shuffles to the machine — AQE coalesces further.
-    # PANDASPARK_SHUFFLE_PARTITIONS overrides for sub-GiB runs where
-    # per-task scheduling overhead dominates shuffle width (bench.py sets
-    # it scale-aware); unset → track the machine, the production default.
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get(
-            "PANDASPARK_SHUFFLE_PARTITIONS",
-            str(spark.sparkContext.defaultParallelism),
-        ),
-    )
-    if table == "events":
-        # events.ts has shipped in two physical forms across test-data
-        # generations: TIMESTAMP(NANOS) (readable only via the nanosAsLong
-        # legacy conf, which surfaces it as int64 nanoseconds) and plain
-        # TIMESTAMP(MICROS, isAdjustedToUTC=false) (the current fixtures,
-        # read natively as TIMESTAMP_NTZ). We set the conf unconditionally
-        # and dispatch on the OBSERVED schema type — LongType means the
-        # nanos path, anything else the native-timestamp path — normalizing
-        # both to a session-TZ (UTC) TimestampType column so every
-        # downstream query and oracle sees identical micros values.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-        from pyspark.sql.types import LongType
-
-        if isinstance(df.schema["ts"].dataType, LongType):
-            # Floor division, not `div` (truncate-toward-zero): pre-epoch
-            # nanos must round DOWN to the containing microsecond to match
-            # floor-semantics oracles. Identical for the 2024+ fixtures.
-            # Stay in integer arithmetic — floor(ts/1000.0) would round
-            # through a 53-bit double on ~1.7e18 nano values. Subtracting
-            # pmod (always in [0,1000)) makes the numerator an exact
-            # multiple, so `div` equals mathematical floor for any sign.
-            return df.withColumn(
-                "ts", F.expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)")
-            )
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    pin_read_confs(spark)
+    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    return events_ts(df) if table == "events" else df
 
 
 # Weak-keyed so an entry dies WITH its session: a dict keyed on

@@ -712,7 +712,6 @@ from .text import (  # noqa: E402
 )
 
 _CONT_HI = 0.9
-_CONT_JACC = 0.8
 
 _Q175_ORACLE = _minhash_oracle_ctes() + f""",
 sh AS (

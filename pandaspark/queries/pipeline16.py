@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import load, register, round4, sha_int, spread, sql_round4, sql_sha_int
+from . import load, register, sha_int, sql_sha_int
 
 # --- q192: FD discovery over a candidate set ---------------------------------
 

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import load, register, round4, spread
+from .similarity import _sq_dist, _sql_sq_dist
 
 _CHUNK = 32  # tokens per chunk
 _STRIDE = 24  # tokens between chunk starts (CHUNK - STRIDE = 8 overlap)
@@ -183,16 +184,6 @@ _KM_K = 5
 _KM_DIMS = 64
 
 
-def _km_sql_dist(v: str, c: str) -> str:
-    # left-fold of per-dim squared deltas, seeded by the first element —
-    # bit-equal to Spark's aggregate(zip_with(...), 0.0, +) fold (adding the
-    # 0.0 seed is IEEE-exact for the non-negative first square)
-    return (
-        f"list_reduce([({v}[i+1] - {c}[i+1]) * ({v}[i+1] - {c}[i+1]) "
-        f"FOR i IN range({_KM_DIMS})], (x, y) -> x + y)"
-    )
-
-
 def _km_sql_centroid() -> str:
     # floor(x*1e6 + 0.5), NOT library round(): library rounding is
     # engine-divergent on knife-edge doubles (see round4's docstring), and
@@ -208,10 +199,10 @@ def _km_sql_assign(cents: str) -> str:
     return f"""
   SELECT vec_id, emb, cluster, d FROM (
     SELECT e.vec_id, e.emb, c.cluster,
-           {_km_sql_dist('e.emb', 'c.centroid')} AS d,
+           {_sql_sq_dist('e.emb', 'c.centroid', _KM_DIMS)} AS d,
            row_number() OVER (
              PARTITION BY e.vec_id
-             ORDER BY {_km_sql_dist('e.emb', 'c.centroid')}, c.cluster) AS rk
+             ORDER BY {_sql_sq_dist('e.emb', 'c.centroid', _KM_DIMS)}, c.cluster) AS rk
     FROM e CROSS JOIN {cents} c)
   WHERE rk = 1"""
 
@@ -252,15 +243,6 @@ def q100(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).localCheckpoint(eager=False)
 
-    def dist(v, c):
-        # HOF fold, not an unrolled term chain — see similarity._dot for
-        # the measured codegen-fallback regression of unrolling
-        return F.aggregate(
-            F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     def assign(cents):
         # K rows per vector via broadcast; argmin as a min(struct) hash
         # aggregate (ties break to the lowest cluster id through the
@@ -268,7 +250,7 @@ def q100(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored = e.crossJoin(F.broadcast(cents)).select(
             "vec_id",
             "emb",
-            F.struct(dist(F.col("emb"), F.col("centroid")).alias("d"), "cluster").alias(
+            F.struct(_sq_dist(F.col("emb"), F.col("centroid")).alias("d"), "cluster").alias(
                 "dc"
             ),
         )

@@ -71,7 +71,7 @@ from . import (
     sql_round4,
     sql_sha_int,
 )
-from .similarity import _dot, _norm
+from .similarity import _dot, _norm, _sq_dist, _sql_sq_dist
 from .text import _char_shingles, _norm_text
 
 # --- q115: SemDeDup (cluster-bounded cosine near-dedup) ---------------------
@@ -94,15 +94,6 @@ _SD_DIMS = 64
 _SD_TAU = 0.35  # threshold on the round4'd cosine (engine-exact boundary)
 
 
-def _sd_sql_dist(v: str, c: str) -> str:
-    # left-fold of per-dim squared deltas — bit-equal to Spark's
-    # aggregate(zip_with) fold (0.0 seed is IEEE-exact, q100's convention)
-    return (
-        f"list_reduce([({v}[i+1] - {c}[i+1]) * ({v}[i+1] - {c}[i+1]) "
-        f"FOR i IN range({_SD_DIMS})], (x, y) -> x + y)"
-    )
-
-
 _Q115_ORACLE = f"""
 WITH e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -113,7 +104,7 @@ a AS (
     SELECT e.vec_id, e.v, c.cluster,
            row_number() OVER (
              PARTITION BY e.vec_id
-             ORDER BY {_sd_sql_dist('e.v', 'c.cen')}, c.cluster) AS rk
+             ORDER BY {_sql_sq_dist('e.v', 'c.cen', _SD_DIMS)}, c.cluster) AS rk
     FROM e CROSS JOIN c0 c)
   WHERE rk = 1
 ),
@@ -159,15 +150,6 @@ def q115(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("cluster"), F.col("v").alias("cen"))
     )
 
-    def dist(v, c):
-        # HOF fold, not an unrolled term chain — see similarity._dot for
-        # the measured codegen-fallback regression of unrolling
-        return F.aggregate(
-            F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     # nearest-centroid assignment: K rows per vector via broadcast, argmin
     # as a min(struct) hash aggregate (ties to the lowest cluster id) —
     # q100's idiom, never a per-vector window
@@ -176,7 +158,7 @@ def q115(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "v",
-            F.struct(dist(F.col("v"), F.col("cen")).alias("d"), "cluster").alias("dc"),
+            F.struct(_sq_dist(F.col("v"), F.col("cen")).alias("d"), "cluster").alias("dc"),
         )
         .groupBy("vec_id")
         .agg(F.min("dc").alias("m"), F.any_value("v").alias("v"))

@@ -709,8 +709,6 @@ def q132(spark: SparkSession, sf_dir: str) -> DataFrame:
 # collect, no per-round growth in plan input — covered sets are
 # gram-table-bounded.
 
-_GC_STEPS = 3
-
 _Q133_ORACLE = """
 WITH n AS (
   SELECT doc_id,

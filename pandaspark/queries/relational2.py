@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import asof_join_bucketed, latest_per_key
-from . import load, register, spread, sql_cents_sum, cents_sum
+from . import load, register, sql_cents_sum, cents_sum
 from .relational import cents
 
 

@@ -40,6 +40,26 @@ def _norm(a):
     ))
 
 
+def _sq_dist(v, c):
+    # squared Euclidean distance, the same HOF fold as _dot
+    return F.aggregate(
+        F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _sql_sq_dist(v: str, c: str, dims: int) -> str:
+    # DuckDB twin of _sq_dist: a left-fold of per-dim squared deltas seeded
+    # by the first element — bit-equal to Spark's aggregate(zip_with(...),
+    # 0.0, +) fold (adding the 0.0 seed is IEEE-exact for the non-negative
+    # first square)
+    return (
+        f"list_reduce([({v}[i+1] - {c}[i+1]) * ({v}[i+1] - {c}[i+1]) "
+        f"FOR i IN range({dims})], (x, y) -> x + y)"
+    )
+
+
 # --- q40: brute-force cosine top-k ----------------------------------------
 
 _Q40_ORACLE = f"""

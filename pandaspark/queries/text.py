@@ -90,9 +90,6 @@ def q31(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q32: heuristic language scoring (stopword hits) ----------------------
 
-_STOPWORDS = ["the", "and", "der", "und", "le", "la", "el", "los"]
-
-
 def _sql_hits(word: str) -> str:
     return f"length(regexp_extract_all(lower(text), '\\b{word}\\b'))"
 

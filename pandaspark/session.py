@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for the local[32] harness.
+"""SparkSession factory tuned for the local[32] harness, and the read
+rules every registry table read applies to the caller's session.
 
 At cluster scale the same settings apply, except shuffle partitions should
 track executor cores (AQE coalesces down at runtime, so erring high is safe).
@@ -8,7 +9,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def get_spark(app_name: str = "pandaspark", aqe: bool = True) -> SparkSession:
@@ -77,3 +80,46 @@ def bench_session(sf_dir: str, app_name: str) -> SparkSession:
     if small:
         os.environ.setdefault("PANDASPARK_SHUFFLE_PARTITIONS", "8")
     return get_spark(app_name, aqe=aqe)
+
+
+def pin_read_confs(spark: SparkSession) -> None:
+    """The confs a registry read sets on the caller's session, which may be
+    a default-config one (the batch loader and the event stream share them):
+    - the session timezone is UTC, so naive parquet timestamps read the
+      same under any host or session zone.
+    - shuffles are sized to the machine (200 partitions by default; AQE
+      coalesces further). PANDASPARK_SHUFFLE_PARTITIONS overrides for
+      sub-GiB runs where per-task scheduling overhead dominates shuffle
+      width (bench_session sets it scale-aware); unset, it tracks the
+      machine, the production default. The streaming state store
+      hash-partitions on this width too.
+    - TIMESTAMP(NANOS) columns read as int64 nanoseconds (see events_ts)."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        os.environ.get(
+            "PANDASPARK_SHUFFLE_PARTITIONS",
+            str(spark.sparkContext.defaultParallelism),
+        ),
+    )
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
+def events_ts(df: DataFrame) -> DataFrame:
+    """Normalize events.ts to a session-TZ (UTC) TimestampType column of
+    micros, batch or stream. events.ts has shipped in two physical forms
+    across test-data generations: TIMESTAMP(NANOS) (readable only via the
+    nanosAsLong conf, which surfaces it as int64 nanoseconds) and plain
+    TIMESTAMP(MICROS, isAdjustedToUTC=false) (the current fixtures, read
+    natively as TIMESTAMP_NTZ). This dispatches on the OBSERVED type:
+    LongType means the nanos path, anything else the native path."""
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        # Floor division, not `div` (truncate-toward-zero): pre-epoch
+        # nanos must round DOWN to the containing microsecond to match
+        # floor-semantics oracles. Identical for the 2024+ fixtures.
+        # Stay in integer arithmetic — floor(ts/1000.0) would round
+        # through a 53-bit double on ~1.7e18 nano values. Subtracting
+        # pmod (always in [0,1000)) makes the numerator an exact
+        # multiple, so `div` equals mathematical floor for any sign.
+        return df.withColumn("ts", F.expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)"))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))

@@ -5,8 +5,7 @@ Parquet, pure DataFrame ops.
 Behavioral spec: /root/reference/panda.py:596-745. The reference uses a
 DuckDB table with `INSERT ... ON CONFLICT (fingerprint) DO UPDATE`; here the
 same exactly-once semantics come from a fingerprint equi-key MERGE rewritten
-as anti-join + union (Delta MERGE would be the drop-in upgrade when its jars
-are on the classpath — the interface below doesn't change).
+as anti-join + union.
 
 Scale notes (100 TB):
   - fingerprint is a deterministic sha2 over the natural key → upsert joins
@@ -21,11 +20,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .functions import fingerprint, from_cents, to_cents
+from .operators import latest_per_key, sequential_ids
 
 NATURAL_KEY = ["account", "book_date", "valuta_date", "party", "book_text", "purpose", "amount"]
 CANONICAL_ORDER = ["book_date", "account", "valuta_date", "party", "purpose"]
@@ -62,15 +62,11 @@ def merge_import(existing: DataFrame, incoming: DataFrame) -> DataFrame:
     a window with an explicit priority picks the survivor, because Spark's
     dropDuplicates keeps an arbitrary row.
     """
-    tagged = existing.withColumn("_prio", F.lit(0)).unionByName(
-        incoming.withColumn("_prio", F.lit(1)), allowMissingColumns=True
+    # latest_per_key keeps the highest _prio per key: the existing row
+    tagged = existing.withColumn("_prio", F.lit(1)).unionByName(
+        incoming.withColumn("_prio", F.lit(0)), allowMissingColumns=True
     )
-    w = Window.partitionBy(*NATURAL_KEY).orderBy("_prio")
-    return (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_prio", "_rn")
-    )
+    return latest_per_key(tagged, NATURAL_KEY, ["_prio"]).drop("_prio")
 
 
 def assign_ids(df: DataFrame, next_id: int = 1) -> DataFrame:
@@ -78,8 +74,6 @@ def assign_ids(df: DataFrame, next_id: int = 1) -> DataFrame:
     the shared two-phase numbering operator (operators.sequential_ids):
     range-partition, number per partition in parallel, add broadcast
     prefix offsets. No single-partition window."""
-    from .operators import sequential_ids
-
     return sequential_ids(df, CANONICAL_ORDER, alias="transaction_id", start=next_id)
 
 
@@ -329,59 +323,15 @@ def merge_into(
     return j.filter(keep).select(*[_out(c) for c in out_cols])
 
 
-def upsert_to_path(
-    spark: SparkSession,
-    root: str,
-    batch: DataFrame,
-    backend: str = "parquet",
-) -> str:
-    """The durable MERGE seam (reference: panda.py:713-728 ON CONFLICT
-    upsert). backend='parquet' (default) runs `upsert` against the current
-    snapshot and commits the merge through the versioned atomic protocol —
-    pure Spark, no extra jars. backend='delta' is the documented drop-in:
-    it issues a real `MERGE INTO` keyed on fingerprint when delta-spark is
-    on the classpath, and fails loudly (never silently degrades) when it
-    is not — the call site and semantics stay identical, which is the
-    whole point of the seam.
-
-    Returns the committed snapshot path (parquet) or the table root
-    (delta)."""
-    if backend == "parquet":
-        current = latest_commit_path(spark, root)
-        store = spark.read.parquet(current) if current is not None else None
-        merged = batch if store is None else upsert(store, batch)
-        return commit_snapshot(merged, root)
-    if backend == "delta":
-        try:
-            from delta.tables import DeltaTable  # type: ignore
-        except ImportError as e:  # pragma: no cover - delta not in container
-            raise ImportError(
-                "backend='delta' needs delta-spark on the classpath; "
-                "use backend='parquet' (snapshot-commit upsert) otherwise"
-            ) from e
-        if DeltaTable.isDeltaTable(spark, root):
-            (
-                DeltaTable.forPath(spark, root)
-                .alias("t")
-                .merge(batch.alias("s"), "t.fingerprint = s.fingerprint")
-                .whenMatchedUpdate(
-                    set={
-                        c: f"s.{c}"
-                        for c in (
-                            "transfer_category",
-                            "category",
-                            "category_manual",
-                            "balance_cents",
-                        )
-                    }
-                )
-                .whenNotMatchedInsertAll()
-                .execute()
-            )
-        else:
-            batch.write.format("delta").save(root)
-        return root
-    raise ValueError(f"unknown upsert backend: {backend!r}")
+def upsert_to_path(spark: SparkSession, root: str, batch: DataFrame) -> str:
+    """The durable MERGE (reference: panda.py:713-728 ON CONFLICT upsert):
+    runs `upsert` against the current snapshot and commits the merge
+    through the versioned atomic protocol. Returns the committed snapshot
+    path."""
+    current = latest_commit_path(spark, root)
+    store = spark.read.parquet(current) if current is not None else None
+    merged = batch if store is None else upsert(store, batch)
+    return commit_snapshot(merged, root)
 
 
 def snapshot_versions(spark: SparkSession, root: str) -> list[int]:

@@ -19,12 +19,14 @@ against batch SQL oracles:
 from __future__ import annotations
 
 import itertools
-import os
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .operators import latest_per_key
+from .session import events_ts, pin_read_confs
 
 _EVENTS_SCHEMA = T.StructType(
     [
@@ -60,33 +62,20 @@ _LOOKBACK = "30 minutes"
 
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source event stream with the same two-generation ts dispatch as
-    queries.load(): nanos-int64 fixtures stream as LongType and truncate to
-    micros; native-timestamp fixtures stream as TimestampType directly."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # same scale-aware shuffle width as queries.load(): the streaming state
-    # store hash-partitions on the shuffle width, and 200 near-empty state
-    # partitions is pure scheduling overhead at bench scales
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get(
-            "PANDASPARK_SHUFFLE_PARTITIONS",
-            str(spark.sparkContext.defaultParallelism),
-        ),
-    )
+    """File-source event stream with the same confs and two-generation ts
+    dispatch as queries.load(): nanos-int64 fixtures stream as LongType and
+    truncate to micros; native-timestamp fixtures stream as TimestampType
+    directly."""
+    pin_read_confs(spark)
     base = sf_dir.rstrip("/")
     batch_ts = spark.read.parquet(f"{base}/events.parquet").schema["ts"].dataType
     # the file source rejects a plain single-file path ("basePath must be a
     # directory"); a glob is accepted and resolves basePath to the parent,
     # covering both fixture layouts (single file and multi-part directory)
     schema = _EVENTS_NANOS if isinstance(batch_ts, T.LongType) else _EVENTS_SCHEMA
-    raw = spark.readStream.format("parquet").schema(schema).load(f"{base}/events.[p]arquet")
-    if isinstance(batch_ts, T.LongType):
-        return raw.withColumn(
-            "ts", F.expr("timestamp_micros((ts - pmod(ts, 1000)) div 1000)")
-        )
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events_ts(
+        spark.readStream.format("parquet").schema(schema).load(f"{base}/events.[p]arquet")
+    )
 
 
 def run_to_memory(df: DataFrame, prefix: str, mode: str = "complete") -> DataFrame:
@@ -226,8 +215,7 @@ def _stream_upsert_to_store(
     epoch). The merge function must therefore be idempotent — fingerprint/
     key-based upserts are (re-applying the same rows is a no-op) — which
     is the same property the reference's ON CONFLICT upsert relies on
-    (panda.py:713-728). With Delta on the classpath this becomes MERGE
-    INTO without changing callers.
+    (panda.py:713-728).
     """
     from .store import commit_snapshot, gc_snapshots, latest_commit_path
 
@@ -277,18 +265,8 @@ def stream_cdc_apply(
     the merge output."""
     from .store import merge_into
 
-    def _latest(batch: DataFrame) -> DataFrame:
-        w = Window.partitionBy(key).orderBy(
-            F.col(ts_col).desc(), F.col(_OP_COL).desc()
-        )
-        return (
-            batch.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-
     def _apply(store: DataFrame, batch: DataFrame) -> DataFrame:
-        b = _latest(batch)
+        b = latest_per_key(batch, [key], [ts_col, _OP_COL])
         data_cols = [c for c in store.columns if c != key]
         return merge_into(
             store,
@@ -301,7 +279,7 @@ def stream_cdc_apply(
         )
 
     def _first(batch: DataFrame) -> DataFrame:
-        b = _latest(batch)
+        b = latest_per_key(batch, [key], [ts_col, _OP_COL])
         keep = b.filter(F.col(_OP_COL) != _DELETE_OP)
         return keep.drop(_OP_COL)
 

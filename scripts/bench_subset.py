@@ -24,7 +24,7 @@ FLOOR = float(os.environ.get("BS_FLOOR", "0.21"))
 
 
 def main() -> None:
-    from pandaspark.queries import REGISTRY
+    from pandaspark.queries import REGISTRY, oracle_views
     from pandaspark.session import bench_session
 
     spark = bench_session(SF_DIR, "bench-subset")
@@ -38,11 +38,7 @@ def main() -> None:
     import duckdb
 
     con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    oracle_views(con, SF_DIR)
 
     for name in picks:
         spec = REGISTRY[name]

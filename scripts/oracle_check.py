@@ -23,6 +23,7 @@ import duckdb
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as entry
+from pandaspark.queries import oracle_views
 
 
 def norm(v):
@@ -72,13 +73,7 @@ def main():
         builder = builder.config("spark.sql.session.timeZone", os.environ["OC_TZ"])
     spark = builder.getOrCreate()
     con = duckdb.connect()
-    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
-        # fixture tables are single files; Spark-written tables are
-        # directories of part files — glob those for DuckDB
-        path = f"{SF_DIR}/{t}.parquet"
-        if os.path.isdir(path):
-            path = f"{path}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    oracle_views(con, SF_DIR)
 
     qs = entry.queries()
     oracles = entry.oracle_sql()

@@ -8,7 +8,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pandaspark.queries import TABLES
+from pandaspark.queries import oracle_views
 from pandaspark.session import get_spark
 
 SF_DIR = os.environ.get("PANDASPARK_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -26,10 +26,7 @@ def spark():
 @pytest.fixture(scope="session")
 def ddb():
     con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    oracle_views(con, SF_DIR)
     yield con
     con.close()
 

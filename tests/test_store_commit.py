@@ -185,13 +185,10 @@ def test_stream_upsert_chains_micro_batches(spark, tmp_path):
     assert len(bumped) == s1.count()
 
 
-def test_upsert_to_path_parquet_backend_and_delta_seam(spark, tmp_path):
-    """The MERGE seam: parquet backend folds batches through the atomic
-    snapshot protocol with ON-CONFLICT semantics (matched rows take the
-    batch's derived fields, keep store identity fields); the delta backend
-    fails loudly without delta-spark instead of silently degrading."""
-    import pytest
-
+def test_upsert_to_path_folds_batches_through_snapshots(spark, tmp_path):
+    """The durable MERGE folds batches through the atomic snapshot protocol
+    with ON-CONFLICT semantics (matched rows take the batch's derived
+    fields, keep store identity fields)."""
     from pandaspark.store import latest_commit_path, upsert_to_path
 
     root = str(tmp_path / "seam")
@@ -234,10 +231,6 @@ def test_upsert_to_path_parquet_backend_and_delta_seam(spark, tmp_path):
         .count()
         == 0
     )
-    with pytest.raises((ImportError, ValueError)):
-        upsert_to_path(spark, root, b2, backend="delta")
-    with pytest.raises(ValueError):
-        upsert_to_path(spark, root, b2, backend="iceberg")
 
 
 def test_stream_cdc_apply_with_tombstones(spark, tmp_path):

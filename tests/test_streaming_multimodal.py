@@ -485,11 +485,20 @@ def test_png_round_trip_exercises_every_filter():
     )
     with pytest.raises(NotImplementedError, match="bit_depth=16"):
         decode_png_pixels(blob16)
-    # truncated IDAT is corrupt, not silently wrong
-    bad = encode_png(px)
-    trunc = bad.replace(b"IEND", b"XEND")  # drop IEND; also corrupt stream below
-    with pytest.raises(Exception):
-        decode_png_pixels(bad[:40])
+    # a damaged image raises, never decodes to silently wrong pixels
+    ihdr = chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
+    stream = zlib.compress(b"".join(b"\x00" + px[y].tobytes() for y in range(h)))
+    cut = b"\x89PNG\r\n\x1a\n" + ihdr + chunk(b"IDAT", stream[: len(stream) // 2])
+    with pytest.raises(zlib.error, match="-5"):  # stream ends mid-IDAT
+        decode_png_pixels(cut + chunk(b"IEND", b""))
+    flipped = stream[:10] + bytes([stream[10] ^ 0xFF]) + stream[11:]
+    with pytest.raises(zlib.error, match="-3"):  # invalid deflate data
+        decode_png_pixels(b"\x89PNG\r\n\x1a\n" + ihdr + chunk(b"IDAT", flipped))
+    short = zlib.compress(b"\x00" * (h * (1 + w * 3) - 1))  # valid zlib, a byte short
+    with pytest.raises(NotImplementedError, match="corrupt"):
+        decode_png_pixels(b"\x89PNG\r\n\x1a\n" + ihdr + chunk(b"IDAT", short))
+    with pytest.raises(NotImplementedError, match="without IHDR/IDAT"):
+        decode_png_pixels(blob[:40])  # signature + IHDR + a cut IDAT header
 
 
 def test_png_flows_through_decode_and_features():

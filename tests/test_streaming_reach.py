@@ -5,17 +5,20 @@ in pandaspark/ outside that file — in practice by the registry's
 streaming entries. An operator only tests call is dead library code:
 delete it, or make it private if a public operator depends on it.
 
-The census modules (store, multimodal, operators, expectations) follow a
-wider rule: a public name must be reached from the package, the entry
-point, bench.py, scripts/ or perfbench/ (not its tests), directly or
-through a reached definition of its own module. Test reference
-implementations are listed by name with the reason they stay.
+Every other top-level definition in pandaspark/, public or private, must
+be reached from a program path: the package, the entry point, bench.py,
+scripts/ or perfbench/ (not its tests). The roots are module-level
+statements, decorated definitions, names another program file uses and
+string literals that name a definition; a definition a root uses is
+reached too. Test reference implementations are listed by name with the
+reason they stay.
 """
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = ROOT / "pandaspark"
@@ -59,15 +62,16 @@ def test_every_public_streaming_name_has_a_caller_in_the_package():
     assert sorted(public - used) == []
 
 
-CENSUS = ("store.py", "multimodal.py", "operators.py", "expectations.py")
-
-# public names no program path calls, kept because tests need them
+# definitions no program path reaches, kept because tests need them;
+# they count as roots, so their own private helpers need no entry
 TEST_REFERENCES = {
     "asof_join": "semantic anchor that asof_join_bucketed (q28) must equal",
     "two_phase_running_total": "composed reference form for ranked_running_total",
     "encode_bmp": "builds the BMP fixtures of the decode_bytes tests",
     "encode_ppm": "builds the PPM fixtures of the decode_bytes tests",
     "encode_png": "builds the PNG fixtures of the decode_bytes tests",
+    "cosine_topk_arrow": "ROADMAP item 7 gives them a caller or deletes them",
+    "load_query_vectors": "ROADMAP item 7 gives them a caller or deletes them",
 }
 
 
@@ -81,29 +85,87 @@ def _program_files() -> list[pathlib.Path]:
     return files
 
 
-def _unreached(tree: ast.Module, used: set[str]) -> set[str]:
+def _references(tree: ast.AST) -> set[str]:
+    """Names a tree uses, plus its string literals: a string can name a
+    definition (cli._REPORTS dispatches reports by name). Docstrings and
+    __all__ entries name things without using them."""
+    skip = set()
+    for node in ast.walk(tree):
+        body = getattr(node, "body", None)
+        if (
+            isinstance(node, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+            and body
+            and isinstance(body[0], ast.Expr)
+            and isinstance(body[0].value, ast.Constant)
+        ):
+            skip.add(id(body[0].value))
+        elif isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+        ):
+            skip.update(id(n) for n in ast.walk(node.value))
+    strings = {
+        n.value for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in skip
+    }
+    return _used_names(tree) | strings
+
+
+def _unreached(tree: ast.Module, used: set[str], keep) -> set[str]:
     defs = _definitions(tree)
-    # module-level statements that define nothing run on import
+    # module-level statements that define nothing run on import, and a
+    # decorated definition hands itself to its decorator (@register)
     roots = [n for n in tree.body if n not in defs.values()]
     reached = set()
-    todo = [name for name in defs if name in used]
-    todo += [name for node in roots for name in _used_names(node) if name in defs]
+    todo = [
+        name for name, node in defs.items()
+        if name in used or name in keep or getattr(node, "decorator_list", None)
+    ]
+    todo += [name for node in roots for name in _references(node) if name in defs]
     while todo:
         name = todo.pop()
         if name not in reached:
             reached.add(name)
-            todo += [n for n in _used_names(defs[name]) if n in defs]
-    return _public_names(tree) - reached
+            todo += [n for n in _references(defs[name]) if n in defs]
+    return {n for n in defs if not (n.startswith("__") and n.endswith("__"))} - reached
 
 
-def test_every_public_census_name_is_reached_from_a_program_path():
-    used_by = {p: _used_names(ast.parse(p.read_text())) for p in _program_files()}
-    unreached = set()
-    for name in CENSUS:
-        module = PKG / name
+def test_every_definition_is_reached_from_a_program_path():
+    used_by = {p: _references(ast.parse(p.read_text())) for p in _program_files()}
+    stray, unlisted = set(), set()
+    for module in PKG.rglob("*.py"):
+        tree = ast.parse(module.read_text())
         used = set().union(*(u for p, u in used_by.items() if p != module))
-        unreached |= _unreached(ast.parse(module.read_text()), used)
-    stray = sorted(unreached - TEST_REFERENCES.keys())
-    assert stray == [], f"reached only from tests: {stray}"
+        stray |= _unreached(tree, used, TEST_REFERENCES)
+        unlisted |= _unreached(tree, used, ())
+    assert sorted(stray) == [], f"reached only from tests: {sorted(stray)}"
     # a listed reference that gains a caller leaves the list
-    assert sorted(TEST_REFERENCES.keys() - unreached) == []
+    assert sorted(TEST_REFERENCES.keys() - unlisted) == []
+
+
+_NOQA_F401 = re.compile(r"# noqa: [\w,]*F401")
+
+
+def _unused_imports(path: pathlib.Path) -> list[str]:
+    text = path.read_text()
+    lines = text.splitlines()
+    tree = ast.parse(text)
+    loaded = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    unused = []
+    for node in ast.walk(tree):
+        if not isinstance(node, (ast.Import, ast.ImportFrom)) or _NOQA_F401.search(lines[node.lineno - 1]):
+            continue
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        for alias in node.names:
+            bound = alias.asname or alias.name.split(".")[0]
+            if bound not in loaded:
+                unused.append(f"{path.relative_to(ROOT)}:{node.lineno} {bound}")
+    return unused
+
+
+def test_every_import_in_the_package_is_used():
+    """The repo has no linter: an import nothing reads is dead code.
+    Imports made for their side effect (the registry's query modules)
+    carry `# noqa: F401`."""
+    unused = [u for path in sorted(PKG.rglob("*.py")) for u in _unused_imports(path)]
+    assert unused == []
