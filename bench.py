@@ -17,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pandaspark.queries import REGISTRY, oracle_views  # noqa: E402
-from pandaspark.session import bench_session  # noqa: E402
+from pandaspark.session import bench_session, release  # noqa: E402
 
 
 def build_line(summary: dict, timings: dict[str, float]) -> str:
@@ -76,31 +76,10 @@ def main() -> None:
     bench_t0 = time.perf_counter()
     spark_passes = 0
     timings: dict[str, float] = {}
-    # Inter-query hygiene, OUTSIDE the timed region: dead localCheckpoint
-    # RDDs from earlier queries are only unpersisted when the JVM's
-    # ContextCleaner notices their references died, which needs a Python
-    # GC (drops the py4j handles) followed by a JVM GC. Without this,
-    # late-alphabet queries are charged rent for ~100 predecessors' cached
-    # blocks (measured at sf0.1: q138 3.26 s in-bench vs 0.94 s in a fresh
-    # session — the same contamination mechanism docs/SCALING.md finding
-    # #2 caught at 100×). Every ~15 queries keeps the pause amortized.
-    import gc as _gc
-
-    def _release(i: int) -> None:
-        # deterministic eviction first: the finished query's localCheckpoint
-        # RDDs are dead (its frame was deleted) but stay cached until a GC
-        # cycle notices — unpersist every persistent RDD directly, so query
-        # i+1 never pays block-store rent for query i (measured: q138
-        # 3.26 s in-bench vs 0.94 s fresh before any hygiene; the GC-only
-        # form still left ~0.5 s/query of residue on checkpoint-heavy names)
-        # blocking=True: async removal bleeds block-manager work into the
-        # NEXT query's timed region (observed as random multi-second spikes)
-        jsc = spark.sparkContext._jsc
-        for rdd in jsc.getPersistentRDDs().values():
-            rdd.unpersist(True)
-        if i % 15 == 14:
-            _gc.collect()
-            spark._jvm.System.gc()
+    # Inter-query hygiene, OUTSIDE the timed region (session.release):
+    # without it, late-alphabet queries are charged rent for ~100
+    # predecessors' cached checkpoint blocks — the same contamination
+    # mechanism docs/SCALING.md finding #2 caught at 100×.
 
     # Min-of-N runs are CONSECUTIVE per query, not pass-structured: with
     # full passes over 201 queries, every repeat of a query arrives after
@@ -110,7 +89,7 @@ def main() -> None:
     # min-of-3 passes converges to the churned number, never the steady
     # one). Consecutive runs measure the query's steady state, which is
     # what a cluster running the query over real data volumes would see.
-    # _release still runs between runs so run k+1 never reads run k's
+    # release still runs between runs so run k+1 never reads run k's
     # cached checkpoint blocks.
     # Budget clamp is PROJECTION-based so degradation is uniform across the
     # alphabet: an extra pass (r > 0) runs only while elapsed + the
@@ -138,7 +117,7 @@ def main() -> None:
             if r == 0:
                 pass1_sum += dt
             del df
-            _release(i)
+            release(spark, i)
 
     total = round(sum(timings.values()), 3)
 

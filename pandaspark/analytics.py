@@ -74,13 +74,13 @@ def income_overview(df: DataFrame, year: int = 2024) -> DataFrame:
     )
 
 
-def expense_overview(df: DataFrame, year: int = 2024, accounts: list[str] | None = None) -> DataFrame:
+def expense_overview(df: DataFrame, year: int = 2024) -> DataFrame:
     """Query 4: spending matrix category × account with row totals.
 
     Pivot with an *explicit* value list (unbounded pivots explode columns
     and force an extra distinct scan at scale).
     """
-    accounts = accounts or ANALYSIS_ACCOUNTS
+    accounts = ANALYSIS_ACCOUNTS
     base = df.filter(
         _year_filter(df, year)
         & ~in_category_subtree("cat", "intern")
@@ -112,12 +112,12 @@ def keyword_costs(df: DataFrame, patterns: str, year: int | None = None) -> Data
     )
 
 
-def regex_amount_extract(df: DataFrame, pattern: str, source: str = "purpose") -> DataFrame:
+def regex_amount_extract(df: DataFrame, pattern: str) -> DataFrame:
     """Query 7 shape: pull a German-formatted number out of free text
     (e.g. interest parts 'Zinsen 123,45') and sum it."""
     from .functions import parse_german_number
 
-    extracted = F.regexp_extract(F.coalesce(source, F.lit("")), pattern, 1)
+    extracted = F.regexp_extract(F.coalesce("purpose", F.lit("")), pattern, 1)
     return (
         df.withColumn("_extracted", extracted)
         .filter(F.col("_extracted") != "")

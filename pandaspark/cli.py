@@ -128,21 +128,20 @@ def cmd_categorize(args) -> int:
 
 
 def cmd_backup(args) -> int:
-    from .store import backup_json, backup_yaml, read_store
+    from .store import backup_yaml, read_store
 
     spark = _spark()
     df = _to_storage(read_store(spark, args.store))
-    (backup_yaml if args.format == "yaml" else backup_json)(df, args.out)
+    backup_yaml(df, args.out)
     print(f"backed up {df.count()} rows -> {args.out}")
     return 0
 
 
 def cmd_restore(args) -> int:
-    from .store import TRANSACTIONS_SCHEMA, restore_json, restore_yaml, write_store
+    from .store import TRANSACTIONS_SCHEMA, restore_yaml, write_store
 
     spark = _spark()
-    reader = restore_yaml if args.backup.endswith((".yaml", ".yml")) else restore_json
-    df = reader(spark, args.backup, TRANSACTIONS_SCHEMA)
+    df = restore_yaml(spark, args.backup, TRANSACTIONS_SCHEMA)
     write_store(df, args.store)
     print(f"restored {df.count()} rows -> {args.store}")
     return 0
@@ -194,12 +193,10 @@ def cmd_report(args) -> int:
     if args.pattern:
         kwargs["keyword_patterns"] = args.pattern
     if args.home_office_config:
-        import json as _json
-
         from .report import CostLine, HomeOfficeConfig
 
         with open(args.home_office_config) as fh:
-            cfg = _json.load(fh)
+            cfg = json.load(fh)
         kwargs["home_office"] = HomeOfficeConfig(
             area_total_m2=cfg["area_total_m2"],
             area_office_m2=cfg["area_office_m2"],
@@ -238,10 +235,9 @@ def build_parser() -> argparse.ArgumentParser:
     s.add_argument("--rules", required=True)
     s.set_defaults(fn=cmd_categorize)
 
-    s = sub.add_parser("backup", help="export the store to YAML/JSON lines")
+    s = sub.add_parser("backup", help="export the store to YAML")
     s.add_argument("--store", required=True)
     s.add_argument("--out", required=True)
-    s.add_argument("--format", default="yaml", choices=["yaml", "json"])
     s.set_defaults(fn=cmd_backup)
 
     s = sub.add_parser("restore", help="rebuild a store from a backup file")

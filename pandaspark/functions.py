@@ -85,36 +85,25 @@ def null_normalize(c: Column | str) -> Column:
     return F.when(c.rlike(r"^\s*$"), F.lit(None)).otherwise(c)
 
 
-def effective_category(
-    category_manual: Column | str = "category_manual",
-    category: Column | str = "category",
-) -> Column:
+def effective_category() -> Column:
     """cat = manual override if present (whitespace ≠ present) else rule result."""
-    return F.coalesce(null_normalize(category_manual), _col(category))
+    return F.coalesce(null_normalize("category_manual"), F.col("category"))
 
 
-def fingerprint(
-    account: Column | str = "account",
-    book_date: Column | str = "book_date",
-    valuta_date: Column | str = "valuta_date",
-    party: Column | str = "party",
-    book_text: Column | str = "book_text",
-    purpose: Column | str = "purpose",
-    amount_cents: Column | str = "amount_cents",
-) -> Column:
+def fingerprint() -> Column:
     """SHA-256 hex of the natural key, nulls → ''/'0', '|'-joined.
 
     concat_ws *skips* nulls while the reference inserts empty strings, so
     every field is coalesced explicitly — silent hash divergence otherwise.
     """
     parts = [
-        F.coalesce(_col(account).cast("string"), F.lit("")),
-        F.coalesce(F.date_format(_col(book_date), "yyyy-MM-dd"), F.lit("")),
-        F.coalesce(F.date_format(_col(valuta_date), "yyyy-MM-dd"), F.lit("")),
-        F.coalesce(_col(party).cast("string"), F.lit("")),
-        F.coalesce(_col(book_text).cast("string"), F.lit("")),
-        F.coalesce(_col(purpose).cast("string"), F.lit("")),
-        F.coalesce(_col(amount_cents).cast("string"), F.lit("0")),
+        F.coalesce(F.col("account").cast("string"), F.lit("")),
+        F.coalesce(F.date_format(F.col("book_date"), "yyyy-MM-dd"), F.lit("")),
+        F.coalesce(F.date_format(F.col("valuta_date"), "yyyy-MM-dd"), F.lit("")),
+        F.coalesce(F.col("party").cast("string"), F.lit("")),
+        F.coalesce(F.col("book_text").cast("string"), F.lit("")),
+        F.coalesce(F.col("purpose").cast("string"), F.lit("")),
+        F.coalesce(F.col("amount_cents").cast("string"), F.lit("0")),
     ]
     return F.sha2(F.concat_ws("|", *parts), 256)
 

@@ -55,7 +55,6 @@ def read_ing_csv(
     spark: SparkSession,
     path: str,
     account_map: dict[str, str] | None = None,
-    encoding: str = "ISO-8859-1",
 ) -> DataFrame:
     """Path (glob ok) of ING CSV exports → canonical 8-column frame:
     account, book_date, valuta_date, party, book_text, purpose, amount,
@@ -68,7 +67,8 @@ def read_ing_csv(
     account_map = account_map if account_map is not None else DEFAULT_ACCOUNT_MAP
     q = sql_string
 
-    txt = f"decode(content, {q(encoding)})"
+    # ING exports are Latin-1
+    txt = "decode(content, 'ISO-8859-1')"
     # Slice from the header line onward (preamble is variable-length).
     body = f"substring({txt}, instr({txt}, {q(HEADER_PREFIX)}), length({txt}))"
     files = (

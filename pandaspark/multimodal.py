@@ -29,15 +29,15 @@ import wave
 # --- encoders (fixture + round-trip side) ------------------------------------
 
 
-def encode_wav(samples, sample_rate: int = 8000, n_channels: int = 1) -> bytes:
-    """16-bit signed PCM WAV from an int sequence (values in int16 range).
+def encode_wav(samples, sample_rate: int = 8000) -> bytes:
+    """16-bit signed mono PCM WAV from an int sequence (values in int16 range).
     Exact round trip: decode(encode(s)) == s."""
     import numpy as np
 
     arr = np.asarray(samples, dtype=np.int16)
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
-        w.setnchannels(n_channels)
+        w.setnchannels(1)
         w.setsampwidth(2)
         w.setframerate(sample_rate)
         w.writeframes(arr.tobytes())

@@ -155,9 +155,8 @@ def salted_join(
     right: DataFrame,
     on: str,
     salt: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-resistant equi-join: a hot join key funnels all its rows into
+    """Skew-resistant inner equi-join: a hot join key funnels all its rows into
     ONE reducer of a shuffle join — the classic straggler at 100 TB. Here
     each left row gets a deterministic salt in [0, salt) (hash of the full
     row, so retries re-salt identically) and the right side replicates once
@@ -169,14 +168,12 @@ def salted_join(
     skewed; with AQE on, skew-join splitting does this adaptively for
     sort-merge joins — this is the static, plan-deterministic form (the
     join sibling of q50's salted two-phase aggregation)."""
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left joins")
     l_salt = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salt))
     lefts = left.withColumn("_salt", l_salt)
     rights = right.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
     )
-    return lefts.join(rights, [on, "_salt"], how).drop("_salt")
+    return lefts.join(rights, [on, "_salt"]).drop("_salt")
 
 
 def latest_per_key(
@@ -305,15 +302,13 @@ def ranked_running_total(
     df: DataFrame,
     order_cols: list[str],
     value: Column,
-    rank_alias: str = "rk",
     total_alias: str = "running_total",
-    start: int = 1,
 ) -> DataFrame:
-    """Global sequential ids AND the globally-ordered running total of
-    `value` over the SAME total order, in ONE two-phase pass — the fusion
-    of sequential_ids + two_phase_running_total for consumers that need
-    both (e.g. vocabulary-coverage curves: rank terms by frequency and
-    accumulate mass along the same order).
+    """Global sequential ids (`rk`, from 1) AND the globally-ordered
+    running total of `value` over the SAME total order, in ONE two-phase
+    pass — the fusion of sequential_ids + two_phase_running_total for
+    consumers that need both (e.g. vocabulary-coverage curves: rank terms
+    by frequency and accumulate mass along the same order).
 
     Composing the two operators pays the range shuffle, the layout
     checkpoint, the per-partition window, and the offsets job TWICE over
@@ -351,8 +346,9 @@ def ranked_running_total(
     return (
         local.join(F.broadcast(offsets), "_pid")
         .withColumn(
-            rank_alias,
-            (F.col("_rn") + F.col("_n_off") + F.lit(start - 1)).cast("long"),
+            "rk",
+            # sequential_ids' id expression at start=1
+            (F.col("_rn") + F.col("_n_off") + F.lit(0)).cast("long"),
         )
         .withColumn(total_alias, F.col("_local_cum") + F.col("_v_off"))
         .drop("_pid", "_v", "_rn", "_local_cum", "_n_off", "_v_off")
@@ -503,8 +499,6 @@ def grouped_weighted_median(
     group_col: str,
     value: Column,
     weight: Column,
-    value_alias: str = "wm_value",
-    total_alias: str = "total_weight",
     bucket_bits: int = 10,
 ) -> DataFrame:
     """Exact weighted median per group by HISTOGRAM-REFINE selection — the
@@ -532,7 +526,7 @@ def grouped_weighted_median(
     well under the value spread. Weights must be exact longs, so the
     result equals the windowed form bit-for-bit (asserted in
     tests/test_operators.py). Returns one row per group:
-    (group, value_alias = crossing value, total_alias)."""
+    (group, wm_value = crossing value, total_weight)."""
     vals = df.select(F.col(group_col).alias("_g"), value.alias("_v"), weight.alias("_w"))
     _require_integral(vals, "_v", "grouped_weighted_median(value)")
     _require_integral(vals, "_w", "grouped_weighted_median(weight)")
@@ -574,9 +568,9 @@ def grouped_weighted_median(
         crossed.groupBy("_g")
         .agg(
             F.min(F.when(F.col("_cum") * 2 >= F.col("_tw"), F.col("_v"))).alias(
-                value_alias
+                "wm_value"
             ),
-            F.any_value("_tw").alias(total_alias),
+            F.any_value("_tw").alias("total_weight"),
         )
         .withColumnRenamed("_g", group_col)
     )
@@ -620,15 +614,12 @@ def gated_broadcast(
     df: DataFrame,
     n_rows: int,
     row_bytes: int = ID_ROW_BYTES,
-    max_bytes: int | None = None,
 ) -> DataFrame:
     """Broadcast `df` only when its estimated size (measured `n_rows` x
     caller-estimated `row_bytes`) is under the byte gate; otherwise return
     it hinted shuffle-hash so joins against it stay hash joins without
-    requiring driver-side materialization of an unbounded side.
-    `max_bytes=None` reads the module default at call time so tests can
-    force the fallback path by patching BROADCAST_GATE_MAX_BYTES."""
-    gate = BROADCAST_GATE_MAX_BYTES if max_bytes is None else max_bytes
-    if n_rows * row_bytes <= gate:
+    requiring driver-side materialization of an unbounded side. The gate
+    is read at call time, so tests can patch BROADCAST_GATE_MAX_BYTES."""
+    if n_rows * row_bytes <= BROADCAST_GATE_MAX_BYTES:
         return F.broadcast(df)
     return df.hint("shuffle_hash")

@@ -132,7 +132,6 @@ def spread(df: DataFrame) -> DataFrame:
     sizes: list[int] | None = []
     for f in files:
         if f.startswith("file:"):
-            import os
             from urllib.parse import unquote, urlparse
 
             try:

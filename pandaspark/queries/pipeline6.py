@@ -419,7 +419,7 @@ def q123(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the composed sequential_ids->two_phase_running_total form paid each
     # twice (measured 1.82 s -> 1.45 s at sf0.1; exact-equal by test)
     cum = operators.ranked_running_total(
-        freq, ["neg", "tok"], F.col("cnt"), rank_alias="rk", total_alias="cum"
+        freq, ["neg", "tok"], F.col("cnt"), total_alias="cum"
     )
     total = freq.agg(F.sum("cnt").alias("total"))
     thr = F.explode(F.array(*[F.lit(v) for v in _COV_THRESHOLDS])).alias(

@@ -209,7 +209,7 @@ GROUP BY 1
 @register("q07_rule_cascade", _Q07_ORACLE, "ordered substring cascade via compile_cascade")
 def q07(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
-    d = apply_cascade(d, _DOC_RULES, target="category")
+    d = apply_cascade(d, _DOC_RULES)
     return (
         d.withColumn("category", F.coalesce("category", F.lit("uncategorized")))
         .groupBy("category")
@@ -241,7 +241,7 @@ GROUP BY 1
 @register("q08_scoped_rules", _Q08_ORACLE, "account-scoped + predicate rules, cascade precedence")
 def q08(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").withColumn("account", F.col("o_orderstatus"))
-    o = apply_cascade(o, _ORDER_RULES, target="category")
+    o = apply_cascade(o, _ORDER_RULES)
     return (
         o.withColumn("category", F.coalesce("category", F.lit("none")))
         .groupBy("category")

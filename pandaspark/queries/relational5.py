@@ -28,15 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import load, register
-
-
-def _rev_cents():
-    return F.round(
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100
-    ).cast("long")
-
-
-_SQL_REV_CENTS = "CAST(round(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)"
+from .relational4 import _SQL_REV_CENTS, _rev_cents
 
 
 # --- q105: predicate-only revenue scan (TPC-H Q6 shape) ---------------------

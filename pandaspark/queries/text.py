@@ -16,9 +16,9 @@ from pandaspark import operators
 from . import load, register, round4, sha_int, spread, sql_sha_int
 
 
-def _norm_text(c="text"):
+def _norm_text():
     """Normalization for content hashing: lowercase, collapse whitespace."""
-    return F.trim(F.regexp_replace(F.lower(F.col(c) if isinstance(c, str) else c), r"\s+", " "))
+    return F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
 
 
 def _char_shingles(t: Column, k: int) -> Column:

@@ -12,8 +12,7 @@ single narrow projection, fully Catalyst-optimizable, no UDF, no driver-side
 loop over data. At 100 TB this is one map-side pass fused into whole-stage
 codegen; a ~400-branch CASE WHEN may exceed the JIT method limit, in which
 case Spark transparently falls back to interpreted expression eval (still
-vectorized columnar reads) — `chunk_size` exists to split the cascade into
-sequential projections if profiling ever demands it.
+vectorized columnar reads).
 
 Building the expression is driver work, and it is paid on every import.
 Each contiguous run of SubstringRules is therefore written as ONE SQL string
@@ -121,24 +120,9 @@ def compile_cascade(rules: Sequence[Rule], existing: Column | None = None) -> Co
     return acc
 
 
-def apply_cascade(
-    df: DataFrame,
-    rules: Sequence[Rule],
-    target: str = "category",
-    chunk_size: int | None = None,
-) -> DataFrame:
-    """Derive `target` from the cascade. Pure (no mutation): categorization
-    is a view over the data, so re-running is idempotent by construction —
-    the reference's key semantic (SURVEY.md §3.2).
-
-    chunk_size splits the cascade into several sequential projections (each
-    overriding the last) to bound codegen method size; semantics identical.
-    """
-    existing = F.col(target) if target in df.columns else None
-    if not chunk_size:
-        return df.withColumn(target, compile_cascade(rules, existing))
-    acc = existing if existing is not None else F.lit(None).cast("string")
-    out = df.withColumn(target, acc)
-    for i in range(0, len(rules), chunk_size):
-        out = out.withColumn(target, compile_cascade(rules[i : i + chunk_size], F.col(target)))
-    return out
+def apply_cascade(df: DataFrame, rules: Sequence[Rule]) -> DataFrame:
+    """Derive `category` from the cascade. Pure (no mutation):
+    categorization is a view over the data, so re-running is idempotent by
+    construction — the reference's key semantic (SURVEY.md §3.2)."""
+    existing = F.col("category") if "category" in df.columns else None
+    return df.withColumn("category", compile_cascade(rules, existing))

@@ -7,6 +7,7 @@ track executor cores (AQE coalesces down at runtime, so erring high is safe).
 
 from __future__ import annotations
 
+import gc
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,7 +65,7 @@ def bench_session(sf_dir: str, app_name: str) -> SparkSession:
     whose numbers must match it. Below 1 GiB of parquet input at `sf_dir`:
     - AQE is off. There is nothing for it to adapt (every shuffle already
       fits one target partition), and its per-stage replan round trips
-      dominate sub-second queries. SPARK_GRAFT_AQE=0/1 overrides.
+      dominate sub-second queries.
     - PANDASPARK_SHUFFLE_PARTITIONS defaults to 8. 32-way task scheduling
       is pure overhead there (measured at sf0.1: q66 1.7s->0.96s, q82
       1.7s->1.3s). Map-side parallelism is unaffected: queries.spread()
@@ -75,11 +76,29 @@ def bench_session(sf_dir: str, app_name: str) -> SparkSession:
         if f.endswith(".parquet")
     )
     small = data_bytes < 1 << 30
-    aqe_env = os.environ.get("SPARK_GRAFT_AQE")
-    aqe = (aqe_env == "1") if aqe_env in ("0", "1") else not small
     if small:
         os.environ.setdefault("PANDASPARK_SHUFFLE_PARTITIONS", "8")
-    return get_spark(app_name, aqe=aqe)
+    return get_spark(app_name, aqe=not small)
+
+
+def release(spark: SparkSession, i: int) -> None:
+    """Hygiene between timed runs, for bench.py and every script whose
+    numbers must match it; call it outside the timed region.
+
+    A finished query's localCheckpoint RDDs are dead but stay cached until
+    the JVM's ContextCleaner notices, which needs a Python GC (drops the
+    py4j handles) and then a JVM GC. Until then the next query pays
+    block-store rent for them (measured at sf0.1: q138 3.26 s in-bench vs
+    0.94 s in a fresh session; GC alone still left ~0.5 s/query on
+    checkpoint-heavy names). So every persistent RDD is unpersisted
+    directly, blocking: asynchronous removal bleeds block-manager work
+    into the next timed run as multi-second spikes. The GCs run when
+    `i % 15 == 14`, which keeps their pause amortized."""
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(True)
+    if i % 15 == 14:
+        gc.collect()
+        spark._jvm.System.gc()
 
 
 def pin_read_confs(spark: SparkSession) -> None:

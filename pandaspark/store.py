@@ -200,16 +200,16 @@ def commit_snapshot(
     return target
 
 
-def gc_snapshots(spark: SparkSession, root: str, keep: int = 2) -> list[int]:
-    """Drop all but the newest `keep` committed snapshots plus any garbage
+def gc_snapshots(spark: SparkSession, root: str) -> list[int]:
+    """Drop all but the newest two committed snapshots plus any garbage
     (uncommitted) versions older than the current one. Returns dropped
-    version numbers. Time-travel window = `keep`."""
+    version numbers."""
     versions = _version_dirs(spark, root)
     committed = sorted(v for v, ok in versions.items() if ok)
     if not committed:
         return []
     current = committed[-1]
-    keep_set = set(committed[-keep:])
+    keep_set = set(committed[-2:])
     fs, jvm = _hadoop_fs(spark, root)
     dropped = []
     for v, ok in sorted(versions.items()):
@@ -220,14 +220,14 @@ def gc_snapshots(spark: SparkSession, root: str, keep: int = 2) -> list[int]:
     return dropped
 
 
-def write_store(df: DataFrame, path: str, partition_by_year: bool = True) -> None:
+def write_store(df: DataFrame, path: str) -> None:
     """Persist the canonical table as a new committed snapshot (atomic —
     see the versioned-commit notes above). Partitioned by year(book_date)
     so the analysis queries (all year-filtered) get partition pruning;
     sorted within partitions for stable output and better parquet RLE."""
     out = df.withColumn("book_year", F.year("book_date"))
     out = out.sortWithinPartitions(*CANONICAL_ORDER)
-    commit_snapshot(out, path, partition_by=["book_year"] if partition_by_year else None)
+    commit_snapshot(out, path, partition_by=["book_year"])
 
 
 def merge_into(
@@ -334,23 +334,12 @@ def upsert_to_path(spark: SparkSession, root: str, batch: DataFrame) -> str:
     return commit_snapshot(merged, root)
 
 
-def snapshot_versions(spark: SparkSession, root: str) -> list[int]:
-    """Committed snapshot versions, oldest first (the time-travel axis)."""
-    return sorted(v for v, ok in _version_dirs(spark, root).items() if ok)
-
-
-def read_store(spark: SparkSession, path: str, version: int | None = None) -> DataFrame:
+def read_store(spark: SparkSession, path: str) -> DataFrame:
     """Load the canonical table as the analysis working set: euros derived
     from cents, canonical order (lazy — order applied by consumers).
-    Resolves the current committed snapshot — or a specific one via
-    `version` (time travel across the GC window); legacy plain-parquet
+    Resolves the current committed snapshot; legacy plain-parquet
     directories read as-is."""
-    if version is not None:
-        if version not in snapshot_versions(spark, path):
-            raise FileNotFoundError(f"no committed snapshot v{version} under {path}")
-        current = f"{path}/v{version:0{_VERSION_WIDTH}d}"
-    else:
-        current = latest_commit_path(spark, path)
+    current = latest_commit_path(spark, path)
     if current is None:
         raise FileNotFoundError(f"no committed store snapshot under {path}")
     df = spark.read.parquet(current)
@@ -371,26 +360,11 @@ def next_transaction_id(store: DataFrame) -> int:
     return int(row["m"]) + 1
 
 
-def backup_json(df: DataFrame, path: str) -> None:
-    """Row-oriented, human-diffable backup — the S8 YAML sink re-expressed
-    (migrate.py:14-36 semantics): dates ISO-formatted, canonical row order,
-    JSON-lines instead of YAML (streamable, splittable, schema-stable).
-    Single file for diffability at personal scale; drop coalesce(1) for
-    cluster-scale backups."""
-    _iso_dates(df).sort(*[c for c in CANONICAL_ORDER if c in df.columns]).coalesce(
-        1
-    ).write.mode("overwrite").json(path)
-
-
 def _cast_to_schema(raw: DataFrame, schema) -> DataFrame:
-    """Backup text formats carry ISO strings; re-type against the explicit
-    schema (never inferSchema on money columns)."""
+    """The backup carries ISO strings; re-type against the explicit schema
+    (never inferSchema on money columns)."""
     cols = []
     for field in schema.fields:
-        if field.name not in raw.columns:
-            # serializers omit null fields; an all-null column vanishes
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-            continue
         c = F.col(field.name)
         if field.dataType.typeName() == "date":
             cols.append(F.to_date(c, "yyyy-MM-dd").alias(field.name))
@@ -399,11 +373,6 @@ def _cast_to_schema(raw: DataFrame, schema) -> DataFrame:
         else:
             cols.append(c.cast(field.dataType).alias(field.name))
     return raw.select(*cols)
-
-
-def restore_json(spark: SparkSession, path: str, schema) -> DataFrame:
-    """S9 inverse: JSON-lines backup → typed frame."""
-    return _cast_to_schema(spark.read.json(path), schema)
 
 
 def _iso_dates(df: DataFrame) -> DataFrame:
@@ -417,7 +386,7 @@ def _iso_dates(df: DataFrame) -> DataFrame:
 
 
 def backup_yaml(df: DataFrame, path: str) -> None:
-    """S8 proper: the reference's YAML backup format (migrate.py:14-36) —
+    """S8: the reference's YAML backup format (migrate.py:14-36) —
     a block-style list of records, dates ISO-formatted. Each partition
     emits a valid `- key: value` sequence fragment, and YAML sequences
     concatenate, so the format stays distributed-writable; canonical sort +
@@ -454,7 +423,7 @@ def backup_yaml(df: DataFrame, path: str) -> None:
 
 
 def restore_yaml(spark: SparkSession, path: str, schema) -> DataFrame:
-    """S9 proper: YAML backup → typed frame. Reads whole files (each file
+    """S9: YAML backup → typed frame. Reads whole files (each file
     is one YAML sequence), parses per file in Arrow batches, then re-types
     against the explicit schema."""
     import yaml

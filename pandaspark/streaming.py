@@ -138,7 +138,7 @@ def dedup_stream(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
     return events.withWatermark("ts", _WATERMARK).dropDuplicates(keyed)
 
 
-def interval_join(events: DataFrame, sub_buckets: int = 1) -> DataFrame:
+def interval_join(events: DataFrame) -> DataFrame:
     """Stream-stream inner join: each click pairs with the same user's
     views in the preceding _LOOKBACK window.
 
@@ -148,22 +148,9 @@ def interval_join(events: DataFrame, sub_buckets: int = 1) -> DataFrame:
     unbounded stream. Batch mirror: queries/relational3.py q65 (identical
     pairs, oracle-checked); tests assert stream==batch across micro-batches.
 
-    Hot-key regime (`sub_buckets` > 1): the join state store shuffles both
-    sides by the equi-join key, so a hot user (20% of a 100 TB stream on
-    one key) lands ALL its buffered rows in one state partition and its
-    output — inherently n_clicks x n_views pairs per window — is produced
-    by one task. Sub-bucketing shards that key: the left side gets a
-    deterministic bucket `pmod(xxhash64(click_event), B)` (a secondary
-    column, so replayed micro-batches re-derive the same bucket — required
-    for exactly-once), the right side is exploded across all B buckets, and
-    the bucket joins as an extra equi-key. Every (click, view) pair still
-    meets exactly once — in the click's bucket — so results are identical
-    to the unsalted join (parity asserted on a planted-hot-key fixture in
-    tests/test_streaming_multimodal.py), while the hot key's state and its
-    quadratic output now spread over B state partitions. Cost: right-side
-    state is replicated B times (bounded by the same watermark eviction);
-    choose B ~ hot-key share x shuffle width. This is the implemented form
-    of the mitigation docs/SCALING.md prescribes for q177's skew100 plant.
+    The state store shuffles both sides by user, so a hot user lands all
+    its buffered rows, and its quadratic output, in one state partition
+    (docs/SCALING.md, skew section).
     """
     left = (
         events.filter(F.col("event_type") == _LEFT_TYPE)
@@ -184,17 +171,6 @@ def interval_join(events: DataFrame, sub_buckets: int = 1) -> DataFrame:
         & (F.col("view_ts") >= F.col("click_ts") - F.expr(f"INTERVAL {_LOOKBACK}"))
         & (F.col("view_ts") <= F.col("click_ts"))
     )
-    if sub_buckets > 1:
-        # watermark metadata survives these stateless projections, so
-        # eviction semantics are unchanged on both sides
-        left = left.withColumn(
-            "_bkt", F.pmod(F.xxhash64(F.col("click_event")), F.lit(sub_buckets))
-        )
-        right = right.withColumn(
-            "_vbkt",
-            F.explode(F.sequence(F.lit(0).cast("long"), F.lit(sub_buckets - 1).cast("long"))),
-        )
-        cond = cond & (F.col("_bkt") == F.col("_vbkt"))
     return left.join(right, cond).select("user_id", "click_event", "view_event")
 
 
@@ -230,7 +206,7 @@ def _stream_upsert_to_store(
         else:
             merged = apply_batch(store, batch_df)
         commit_snapshot(merged, store_path)
-        gc_snapshots(spark, store_path, keep=2)
+        gc_snapshots(spark, store_path)
 
     return (
         batch_stream.writeStream.foreachBatch(_apply)

@@ -1,5 +1,6 @@
 """Bench-matched per-query timing for a subset: bench.py's session
-(session.bench_session), noop sink and min-of-N, AND times the DuckDB
+(session.bench_session), noop sink, min-of-N and untimed hygiene between
+runs (session.release), AND times the DuckDB
 oracle alongside, printing the ratio the judge computes
 ((spark - floor) / duck).
 
@@ -25,7 +26,7 @@ FLOOR = float(os.environ.get("BS_FLOOR", "0.21"))
 
 def main() -> None:
     from pandaspark.queries import REGISTRY, oracle_views
-    from pandaspark.session import bench_session
+    from pandaspark.session import bench_session, release
 
     spark = bench_session(SF_DIR, "bench-subset")
     spark.sparkContext.setLogLevel("OFF")
@@ -40,6 +41,7 @@ def main() -> None:
     con = duckdb.connect()
     oracle_views(con, SF_DIR)
 
+    n_runs = 0
     for name in picks:
         spec = REGISTRY[name]
         best = float("inf")
@@ -47,6 +49,8 @@ def main() -> None:
             t0 = time.perf_counter()
             spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
+            release(spark, n_runs)
+            n_runs += 1
         dbest = float("inf")
         if spec.oracle is not None:
             for _ in range(RUNS):

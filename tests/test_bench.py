@@ -76,18 +76,50 @@ def test_line_falls_back_to_summary_only_when_ten_entries_overflow():
 
 def test_bench_session_applies_the_scale_rule(tmp_path, monkeypatch):
     """bench.py and the timing scripts share one session rule: below 1 GiB
-    of parquet input, AQE off and shuffle width 8, with SPARK_GRAFT_AQE=0/1
-    overriding the AQE choice. No JVM: get_spark is stubbed."""
+    of parquet input, AQE off and shuffle width 8; from 1 GiB, AQE on.
+    No JVM: get_spark is stubbed."""
     from pandaspark import session
 
-    (tmp_path / "t.parquet").write_bytes(b"x" * 1024)
+    small, large = tmp_path / "small", tmp_path / "large"
+    small.mkdir()
+    large.mkdir()
+    (small / "t.parquet").write_bytes(b"x" * 1024)
+    with open(large / "t.parquet", "wb") as f:
+        f.truncate(1 << 30)  # sparse: sized, not written
     calls = []
     monkeypatch.setattr(session, "get_spark", lambda app, aqe: calls.append((app, aqe)))
     monkeypatch.delenv("PANDASPARK_SHUFFLE_PARTITIONS", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_AQE", raising=False)
 
-    session.bench_session(str(tmp_path), "b")
-    monkeypatch.setenv("SPARK_GRAFT_AQE", "1")
-    session.bench_session(str(tmp_path), "b")
-    assert calls == [("b", False), ("b", True)]
+    session.bench_session(str(small), "b")
     assert os.environ["PANDASPARK_SHUFFLE_PARTITIONS"] == "8"
+    session.bench_session(str(large), "b")
+    assert calls == [("b", False), ("b", True)]
+
+
+def test_release_unpersists_blocking_and_collects_every_15th_call(monkeypatch):
+    """The hygiene bench.py and scripts/bench_subset.py run between timed
+    runs: every persistent RDD is unpersisted blocking on every call, and
+    both GCs run on every 15th call. No JVM: the session is a stub."""
+    from types import SimpleNamespace
+
+    from pandaspark import session
+
+    unpersisted, gcs = [], []
+
+    class _Rdd:
+        def unpersist(self, blocking):
+            unpersisted.append(blocking)
+
+    rdds = {1: _Rdd(), 2: _Rdd()}
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(_jsc=SimpleNamespace(getPersistentRDDs=lambda: rdds)),
+        _jvm=SimpleNamespace(System=SimpleNamespace(gc=lambda: gcs.append("jvm"))),
+    )
+    monkeypatch.setattr(session.gc, "collect", lambda: gcs.append("py"))
+
+    for i in range(30):
+        session.release(spark, i)
+        assert unpersisted == [True] * 2 * (i + 1)
+        assert len(gcs) == 2 * ((i + 1) // 15)
+    # the Python GC drops the py4j handles before the JVM GC runs
+    assert gcs == ["py", "jvm"] * 2

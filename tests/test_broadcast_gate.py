@@ -77,18 +77,15 @@ def test_gate_fallback_matches_broadcast_path(spark, neardup_dir, qname, monkeyp
 
 def test_gated_broadcast_unit(spark, monkeypatch):
     df = spark.range(5)
+    monkeypatch.setattr(operators, "BROADCAST_GATE_MAX_BYTES", 100)
     # under the byte gate → broadcast hint
-    hinted = operators.gated_broadcast(df, 5, row_bytes=16, max_bytes=100)
+    hinted = operators.gated_broadcast(df, 5, row_bytes=16)
     assert "broadcast" in hinted._jdf.queryExecution().logical().toString().lower()
     # over the gate → shuffle-hash hint, never a bare frame
-    fallback = operators.gated_broadcast(df, 11, row_bytes=16, max_bytes=100)
+    fallback = operators.gated_broadcast(df, 11, row_bytes=16)
     logical = fallback._jdf.queryExecution().logical().toString().lower()
     assert "shuffle_hash" in logical
     # the gate is byte-based: the same row count over-gates once the
     # caller declares a fat per-row payload (the shingle-array case)
-    fat = operators.gated_broadcast(df, 5, row_bytes=operators.SHINGLE_ROW_BYTES, max_bytes=100)
+    fat = operators.gated_broadcast(df, 5, row_bytes=operators.SHINGLE_ROW_BYTES)
     assert "shuffle_hash" in fat._jdf.queryExecution().logical().toString().lower()
-    # max_bytes=None reads the module constant at call time (test seam)
-    monkeypatch.setattr(operators, "BROADCAST_GATE_MAX_BYTES", 0)
-    patched = operators.gated_broadcast(df, 1)
-    assert "shuffle_hash" in patched._jdf.queryExecution().logical().toString().lower()

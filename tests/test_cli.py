@@ -98,11 +98,27 @@ def test_cli_import_categorize_analyze_backup(cli_env, spark, capsys):
 
     # backup → restore round-trip preserves the row multiset
     backup = str(cli_env["dir"] / "backup.yaml")
-    assert main(["backup", "--store", store, "--out", backup, "--format", "yaml"]) == 0
+    assert main(["backup", "--store", store, "--out", backup]) == 0
     restored = str(cli_env["dir"] / "restored")
     assert main(["restore", "--backup", backup, "--store", restored]) == 0
     a = read_store(spark, store).drop("book_year")
     b = read_store(spark, restored).drop("book_year")
+    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+def test_cli_backup_format_does_not_follow_the_file_name(cli_env, spark, tmp_path):
+    """Backup and restore share one format (YAML), whatever the file is
+    called: a backup written to a `.json` name restores to the same rows."""
+    store = str(tmp_path / "store")
+    argv = ["ing-import", cli_env["csv"], "--store", store, "--account-map", cli_env["amap"]]
+    assert main(argv) == 0
+    backup = str(tmp_path / "backup.json")
+    assert main(["backup", "--store", store, "--out", backup]) == 0
+    restored = str(tmp_path / "restored")
+    assert main(["restore", "--backup", backup, "--store", restored]) == 0
+    a = read_store(spark, store).drop("book_year")
+    b = read_store(spark, restored).drop("book_year")
+    assert a.count() == 3
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 

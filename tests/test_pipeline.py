@@ -150,9 +150,6 @@ def test_cascade_matches_python_oracle(spark):
     got = [r.category for r in apply_cascade(df, RULES).collect()]
     # createDataFrame preserves row order on collect for a local list
     assert got == expected
-    # chunked compilation must be semantically identical
-    got_chunked = [r.category for r in apply_cascade(df, RULES, chunk_size=2).collect()]
-    assert got_chunked == expected
 
 
 # Rule and account text the cascade must treat as data: SQL quote and
@@ -237,8 +234,6 @@ def test_cascade_hostile_rule_text_matches_python_oracle(spark):
     )
     df = spark.createDataFrame([tuple(r.values()) for r in rows], schema)
     assert [r.category for r in apply_cascade(df, rules).collect()] == expected
-    got_chunked = [r.category for r in apply_cascade(df, rules, chunk_size=2).collect()]
-    assert got_chunked == expected
 
 
 def test_reader_keeps_account_names_and_shuffled_headers(spark, tmp_path):
@@ -434,6 +429,7 @@ def test_yaml_backup_roundtrip(spark, csv_dir, tmp_path):
     want = {key(r): strip(r) for r in (x.asDict() for x in stored.collect())}
     got = {key(r): strip(r) for r in (x.asDict() for x in restored.collect())}
     assert got == want and len(got) == 8
+    assert all(x.imported_at is not None for x in restored.collect())
 
     import glob as _g
 
@@ -444,37 +440,3 @@ def test_yaml_backup_roundtrip(spark, csv_dir, tmp_path):
     assert isinstance(docs, list) and len(docs) == 8
     assert docs[0]["book_date"] == str(sorted(want)[0][1])
     assert open(part).read().lstrip().startswith("- ")  # block-style list
-
-
-def test_json_backup_roundtrip(spark, csv_dir, tmp_path):
-    """S8/S9: JSON-lines backup with ISO dates restores to an identical
-    typed frame (order-insensitive row-set equality, exact cents)."""
-    from pandaspark.store import backup_json, restore_json
-
-    raw = read_ing_csv(spark, csv_dir, account_map=ACCOUNT_MAP)
-    stored = prepare_for_store(apply_cascade(merge_import(raw.limit(0), raw), RULES))
-    path = str(tmp_path / "backup_json")
-    backup_json(stored, path)
-
-    restored = restore_json(spark, path, stored.schema)
-    # same names and types (nullability is legitimately loosened by the
-    # text round-trip)
-    assert [(f.name, f.dataType) for f in restored.schema.fields] == [
-        (f.name, f.dataType) for f in stored.schema.fields
-    ]
-    key = lambda r: (r["account"], str(r["book_date"]), r["fingerprint"])
-    # imported_at is current_timestamp(): re-evaluated per job on the lazy
-    # frame, so it can't be compared across two materializations
-    strip = lambda r: {k: v for k, v in r.items() if k != "imported_at"}
-    want = {key(r): strip(r) for r in (x.asDict() for x in stored.collect())}
-    got = {key(r): strip(r) for r in (x.asDict() for x in restored.collect())}
-    assert got == want and len(got) == 8
-    assert all(x.imported_at is not None for x in restored.collect())
-
-    # the backup is human-diffable JSON-lines with ISO dates
-    import glob as _g
-    import json as _j
-
-    part = _g.glob(f"{path}/part-*.json")[0]
-    first = _j.loads(open(part).read().splitlines()[0])
-    assert first["book_date"] == str(sorted(want)[0][1])

@@ -1366,7 +1366,7 @@ def test_ranked_running_total_matches_python_reference(spark, rows):
     got = sorted(
         (r.rk, r.k, r.i, r.v, r.rt)
         for r in ranked_running_total(
-            df, ["k", "i"], F.col("v"), rank_alias="rk", total_alias="rt"
+            df, ["k", "i"], F.col("v"), total_alias="rt"
         ).collect()
     )
     want = []

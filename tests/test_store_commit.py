@@ -61,12 +61,12 @@ def test_gc_keeps_live_window_and_drops_garbage(spark, tmp_path):
     os.remove(f"{root}/v000001/_SUCCESS")
     _touch_garbage_version(root, 5)
 
-    dropped = gc_snapshots(spark, root, keep=2)
+    dropped = gc_snapshots(spark, root)
     assert set(dropped) == {1, 2}
     assert os.path.isdir(f"{root}/v000005")
     assert latest_commit_path(spark, root).endswith("v000004")
     assert spark.read.parquet(latest_commit_path(spark, root)).count() == 4
-    # previous snapshot retained for time travel
+    # the previous snapshot is retained
     assert spark.read.parquet(f"{root}/v000003").count() == 3
 
 
@@ -95,32 +95,6 @@ def test_write_store_never_clobbers_previous_snapshot(spark, tmp_path):
     assert read_store(spark, root).count() == 20
     # both snapshots exist on disk; the first is still fully readable
     assert spark.read.parquet(f"{root}/v000001").count() == first == 50
-
-
-def test_read_store_time_travel(spark, tmp_path):
-    """read_store(version=N) reads a retained older snapshot; unknown or
-    garbage versions raise instead of silently reading junk."""
-    import pytest as _pt
-
-    from pandaspark.store import snapshot_versions
-
-    root = str(tmp_path / "tt")
-
-    def frame(n):
-        return spark.range(n).select(
-            F.col("id").alias("transaction_id"),
-            (F.col("id") * 100).cast("long").alias("amount_cents"),
-            F.lit(None).cast("long").alias("balance_cents"),
-        )
-
-    commit_snapshot(frame(3), root)
-    commit_snapshot(frame(5), root)
-    _touch_garbage_version(root, 3)
-    assert snapshot_versions(spark, root) == [1, 2]
-    assert read_store(spark, root).count() == 5
-    assert read_store(spark, root, version=1).count() == 3
-    with _pt.raises(FileNotFoundError):
-        read_store(spark, root, version=3)  # garbage: never committed
 
 
 def test_read_store_legacy_plain_directory(spark, tmp_path):

@@ -82,11 +82,10 @@ def test_stream_stream_interval_join_matches_batch(spark, events_dir):
     assert g == w and len(g) > 0
 
 
-def test_interval_join_sub_buckets_hot_key_parity(spark, tmp_path):
-    """q177's skew mitigation as a real operator: a planted hot key (user 0
-    carries 60 clicks x 60 views inside one lookback window — the
-    output-quadratic regime from docs/SCALING.md) must produce IDENTICAL
-    pairs through the sub-bucketed join, the unsalted join, and the batch
+def test_interval_join_hot_key_parity(spark, tmp_path):
+    """A planted hot key (user 0 carries 60 clicks x 60 views inside one
+    lookback window — the output-quadratic regime from docs/SCALING.md)
+    must produce IDENTICAL pairs through the stream join and the batch
     mirror, across real micro-batch boundaries."""
     import datetime as dt
 
@@ -127,49 +126,13 @@ def test_interval_join_sub_buckets_hot_key_parity(spark, tmp_path):
     # PRECEDING hot view -> n(n-1)/2 pairs, plus one per cold user
     assert len(want) == 60 * 59 // 2 + 20
 
-    got_salted = {
-        (r.user_id, r.click_event, r.view_event)
-        for r in run_to_memory(
-            interval_join(paced_stream(spark, d), sub_buckets=4), "ss_join_salted", mode="append"
-        ).collect()
-    }
     got_plain = {
         (r.user_id, r.click_event, r.view_event)
         for r in run_to_memory(
             interval_join(paced_stream(spark, d)), "ss_join_plain", mode="append"
         ).collect()
     }
-    assert got_salted == want
     assert got_plain == want
-
-
-def test_interval_join_sub_buckets_shard_the_state_key(spark, events_dir):
-    """Plan + sharding gate: the bucket participates in the join's equi-key
-    (so the state store partitions on (user_id, bucket), not user_id alone),
-    and the deterministic salt actually spreads a single hot key over all
-    sub-buckets (the whole point of the mitigation)."""
-    stream = paced_stream(spark, events_dir)
-    salted = interval_join(stream, sub_buckets=4)
-    plan = salted._jdf.queryExecution().analyzed().toString()
-    assert "_bkt" in plan and "_vbkt" in plan
-    plain_plan = interval_join(stream)._jdf.queryExecution().analyzed().toString()
-    assert "_bkt" not in plain_plan
-    # output schema is unchanged — the bucket never leaks to consumers
-    assert salted.columns == ["user_id", "click_event", "view_event"]
-
-    # one key's click rows must land in every sub-bucket: same expression
-    # the operator salts with, evaluated on the batch frame
-    from pandaspark.queries import load
-
-    clicks = load(spark, SF_DIR, "events").filter(F.col("event_type") == "click")
-    hot = clicks.groupBy("user_id").count().orderBy(F.desc("count")).first().user_id
-    n_buckets = (
-        clicks.filter(F.col("user_id") == hot)
-        .select(F.pmod(F.xxhash64("event_id"), F.lit(4)).alias("b"))
-        .distinct()
-        .count()
-    )
-    assert n_buckets == 4
 
 
 def test_real_decode_rejects_absent_codecs():

@@ -12,6 +12,10 @@ statements, decorated definitions, names another program file uses and
 string literals that name a definition; a definition a root uses is
 reached too. Test reference implementations are listed by name with the
 reason they stay.
+
+Every defaulted parameter of those definitions must be set by a program
+call; a parameter no program call sets is a constant. Test seams are
+listed by name with the reason they stay.
 """
 
 from __future__ import annotations
@@ -169,3 +173,87 @@ def test_every_import_in_the_package_is_used():
     carry `# noqa: F401`."""
     unused = [u for path in sorted(PKG.rglob("*.py")) for u in _unused_imports(path)]
     assert unused == []
+
+
+# defaulted parameters no program path sets, kept because tests set them
+TEST_SEAMS = {
+    "main.argv": "tests drive the CLI in-process",
+    "asof_join_bucketed.bucket_seconds": "forces bucket crossings on second-scale data",
+    "grouped_quantiles_bucket_refine.bucket_bits": "forces bucket collisions on small data",
+    "grouped_weighted_median.bucket_bits": "forces bucket collisions on small data",
+}
+
+
+def _defaulted_params(fn: ast.FunctionDef, method: bool) -> dict[str, tuple[int | None, str]]:
+    """name -> (position or None for keyword-only, source of the default)."""
+    static = any(ast.unparse(d) == "staticmethod" for d in fn.decorator_list)
+    positional = fn.args.posonlyargs + fn.args.args
+    if method and not static:
+        positional = positional[1:]
+    first = len(positional) - len(fn.args.defaults)
+    out = {
+        arg.arg: (first + i, ast.unparse(default))
+        for i, (arg, default) in enumerate(zip(positional[first:], fn.args.defaults))
+    }
+    for arg, default in zip(fn.args.kwonlyargs, fn.args.kw_defaults):
+        if default is not None:
+            out[arg.arg] = (None, ast.unparse(default))
+    return out
+
+
+def _option_functions() -> list[tuple[str, ast.FunctionDef, bool]]:
+    """Top-level functions of pandaspark/ and methods of its top-level
+    classes; nested functions are out of scope."""
+    fns = []
+    for module in sorted(PKG.rglob("*.py")):
+        for node in ast.parse(module.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                fns.append((node.name, node, False))
+            elif isinstance(node, ast.ClassDef):
+                fns += [
+                    (f.name, f, True) for f in node.body
+                    if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+                ]
+    return fns
+
+
+def _set_params(call: ast.Call, params: dict[str, tuple[int | None, str]]) -> set[str]:
+    if any(isinstance(a, ast.Starred) for a in call.args) or any(
+        k.arg is None for k in call.keywords
+    ):
+        return set(params)
+    passed = {k.arg: k.value for k in call.keywords}
+    for name, (pos, _) in params.items():
+        if pos is not None and pos < len(call.args):
+            passed[name] = call.args[pos]
+    return {
+        name for name, value in passed.items()
+        if name in params and ast.unparse(value) != params[name][1]
+    }
+
+
+def test_every_option_is_set_by_a_program_path():
+    """A defaulted parameter every program call leaves at its default is
+    a constant: each option doubles the configurations tests must
+    cover. A call sets a parameter when it passes it, by keyword or by
+    position, as source text that differs from the default's; *args or
+    **kwargs set them all."""
+    calls: dict[str, list[ast.Call]] = {}
+    for path in _program_files():
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls.setdefault(name, []).append(node)
+    unset = set()
+    for name, fn, method in _option_functions():
+        if name in TEST_REFERENCES:
+            continue
+        params = _defaulted_params(fn, method)
+        for call in calls.get(name, []):
+            params = {p: v for p, v in params.items() if p not in _set_params(call, params)}
+        unset |= {f"{name}.{p}" for p in params}
+    unused = sorted(unset - TEST_SEAMS.keys())
+    assert unused == [], f"options no program path sets: {unused}"
+    # a seam that gains a program caller leaves the list
+    assert sorted(TEST_SEAMS.keys() - unset) == []
