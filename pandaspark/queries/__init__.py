@@ -29,7 +29,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import events_ts, pin_read_confs
+from ..session import events_ts, pin_read_confs, read_parquet
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -67,7 +67,7 @@ def register(name: str, oracle: str | None, doc: str = ""):
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     pin_read_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{table}.parquet")
     return events_ts(df) if table == "events" else df
 
 

@@ -3,10 +3,12 @@ target-domain data selection, and table statistics.
 
 q134 power iteration: the dominant principal direction of the embedding
 corpus computed WITHOUT materializing the Gram matrix — each iteration is
-one matrix-free pass (dot products against a broadcast direction, then a
+one matrix-free pass (dot products against the current direction, then a
 64-key positional aggregate), the pattern every distributed PCA/spectral
-method reduces to. Integer fixed-point throughout so the result is
-bit-exact against the DuckDB oracle (same discipline as q112's PageRank).
+method reduces to. The driver collects the 64 sums, renormalizes them and
+puts the next direction into the plan as a literal array. Integer
+fixed-point throughout so the result is bit-exact against the DuckDB
+oracle (same discipline as q112's PageRank).
 
 q135 DSIR-shaped data selection (Xie et al. 2023, "Data Selection for
 Language Models via Importance Resampling"): score out-of-domain documents
@@ -43,11 +45,12 @@ from .text import _norm_text
 # keeps BIGINT exact to n ~ 7e6 vectors per aggregation; beyond that the
 # d-divisor (1e8) scales up — a knob, not a redesign.
 #
-# Scale shape (100 TB): the direction w rides a 1-row broadcast; each
+# Scale shape (100 TB): the direction w rides in the plan as a 64-element
+# literal array, bounded by the dimension, not by the corpus; each
 # iteration is one scan (dot product is a codegen'd HOF fold) plus a 64-key
-# positional sum with map-side partials. No Gram matrix (64x64 = 4096 agg
-# columns) and no driver-side vectors; the 64-row collect_list runs inside
-# a 1-group aggregate, bounded by the dimension.
+# positional sum with map-side partials, whose <= 64 rows the driver
+# collects and renormalizes. No Gram matrix (64x64 = 4096 agg columns), and
+# no vector of the corpus ever reaches the driver.
 
 _PI_DIM = 64
 _PI_MICRO = 1_000_000
@@ -92,37 +95,39 @@ def q134(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding", lambda x: F.floor(x.cast("double") * _PI_MICRO + F.lit(0.5)).cast("long")
         ).alias("vq"),
     )
-    # the quantized matrix feeds every iteration's two joins — pin it
+    # the quantized matrix feeds every iteration's scan — pin it
     e = spread(e).localCheckpoint(eager=False)
 
-    w = spark.range(1).select(
-        F.array_repeat(F.lit(_PI_MICRO).cast("long"), _PI_DIM).alias("warr")
-    )
-    u = None
+    w = [_PI_MICRO] * _PI_DIM
     for _ in range(_PI_ITERS):
-        d = e.crossJoin(F.broadcast(w)).select(
-            "vq",
-            F.expr(
-                f"aggregate(zip_with(vq, warr, (a, b) -> a * b),"
-                f" CAST(0 AS BIGINT), (acc, x) -> acc + x) div {_PI_DDIV}"
-            ).alias("ds"),
-        )
-        u = (
-            d.select(F.col("ds"), F.posexplode("vq").alias("pos", "x"))
+        warr = ", ".join("NULL" if x is None else str(x) for x in w)
+        rows = sorted(
+            e.select(
+                F.expr(
+                    f"aggregate(zip_with(vq, CAST(array({warr}) AS ARRAY<BIGINT>),"
+                    f" (a, b) -> a * b), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+                    f" div {_PI_DDIV}"
+                ).alias("ds"),
+                F.posexplode("vq").alias("pos", "x"),
+            )
             .groupBy("pos")
             .agg(F.sum(F.col("x") * F.col("ds")).alias("u"))
+            .collect()
         )
-        m = u.agg(F.greatest(F.max(F.abs("u")), F.lit(1).cast("long")).alias("m"))
-        u = (
-            u.crossJoin(F.broadcast(m))
-            .select("pos", F.expr(f"u div greatest(m div {_PI_MICRO}, CAST(1 AS BIGINT))").alias("w"))
-            .localCheckpoint(eager=False)
-        )
-        # rebuild the broadcastable direction: 64 rows -> one sorted array
-        w = u.agg(F.array_sort(F.collect_list(F.struct("pos", "w"))).alias("s")).select(
-            F.transform("s", lambda s: s["w"]).alias("warr")
-        )
-    return u.select(F.col("pos").cast("long").alias("dim"), F.col("w").alias("w_micro"))
+        # w = u div max(m div 1e6, 1), m = max(max|u|, 1): `div` truncates
+        # toward zero, Python's // floors, so the quotient takes u's sign
+        m = max([1] + [abs(u) for _, u in rows if u is not None])
+        den = max(m // _PI_MICRO, 1)
+        w = [None if u is None else (abs(u) // den) * (1 if u >= 0 else -1) for _, u in rows]
+    # VALUES needs a row, so a NULL row rides along and the filter drops it
+    # (an empty table yields no direction); both fold into one local relation
+    values = "".join(
+        f", ({p}, {'NULL' if x is None else x})" for (p, _), x in zip(rows, w)
+    )
+    return spark.sql(
+        "SELECT CAST(dim AS BIGINT) AS dim, CAST(w_micro AS BIGINT) AS w_micro"
+        f" FROM VALUES (NULL, NULL){values} AS t(dim, w_micro) WHERE dim IS NOT NULL"
+    )
 
 
 # --- q135: DSIR-shaped target-domain data selection ---------------------------

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import register, sql_cents_sum
+from ..session import read_parquet
 from ..streaming import (
     dedup_stream,
     interval_join,
@@ -111,7 +112,7 @@ def _q176_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim join broadcasts before the state-store shuffle)."""
     e = read_event_stream(spark, sf_dir).withWatermark("ts", "2 hours")
     dim = F.broadcast(
-        spark.read.parquet(f"{sf_dir.rstrip('/')}/customer.parquet").select(
+        read_parquet(spark, f"{sf_dir.rstrip('/')}/customer.parquet").select(
             F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
         )
     )
@@ -279,7 +280,7 @@ def q179(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
     from ..store import latest_commit_path
 
-    final = spark.read.parquet(latest_commit_path(spark, store_dir))
+    final = read_parquet(spark, latest_commit_path(spark, store_dir))
     return final.select(
         "user_id",
         F.col("ts").alias("last_ts"),

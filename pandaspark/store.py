@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 
 from .functions import fingerprint, from_cents, to_cents
 from .operators import latest_per_key, sequential_ids
+from .session import _hadoop_fs, read_parquet
 
 NATURAL_KEY = ["account", "book_date", "valuta_date", "party", "book_text", "purpose", "amount"]
 CANONICAL_ORDER = ["book_date", "account", "valuta_date", "party", "purpose"]
@@ -145,24 +146,17 @@ def upsert(store: DataFrame, batch: DataFrame) -> DataFrame:
 _VERSION_WIDTH = 6
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jvm
-
-
 def _version_dirs(spark: SparkSession, root: str) -> dict[int, bool]:
     """{version -> committed?} for every vNNNNNN child of root."""
-    fs, jvm = _hadoop_fs(spark, root)
-    root_path = jvm.org.apache.hadoop.fs.Path(root)
+    fs, Path = _hadoop_fs(spark, root)
+    root_path = Path(root)
     if not fs.exists(root_path):
         return {}
     out: dict[int, bool] = {}
     for st in fs.listStatus(root_path):
         name = st.getPath().getName()
         if st.isDirectory() and name.startswith("v") and name[1:].isdigit():
-            marker = jvm.org.apache.hadoop.fs.Path(f"{root}/{name}/_SUCCESS")
+            marker = Path(f"{root}/{name}/_SUCCESS")
             out[int(name[1:])] = bool(fs.exists(marker))
     return out
 
@@ -177,8 +171,8 @@ def latest_commit_path(spark: SparkSession, root: str) -> str | None:
         return f"{root}/v{max(committed):0{_VERSION_WIDTH}d}"
     if versions:
         return None  # only garbage (uncommitted) versions present
-    fs, jvm = _hadoop_fs(spark, root)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(root)):
+    fs, Path = _hadoop_fs(spark, root)
+    if fs.exists(Path(root)):
         return root
     return None
 
@@ -210,12 +204,12 @@ def gc_snapshots(spark: SparkSession, root: str) -> list[int]:
         return []
     current = committed[-1]
     keep_set = set(committed[-2:])
-    fs, jvm = _hadoop_fs(spark, root)
+    fs, Path = _hadoop_fs(spark, root)
     dropped = []
     for v, ok in sorted(versions.items()):
         if v in keep_set or (not ok and v > current):
             continue  # live window, or a write possibly in flight
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/v{v:0{_VERSION_WIDTH}d}"), True)
+        fs.delete(Path(f"{root}/v{v:0{_VERSION_WIDTH}d}"), True)
         dropped.append(v)
     return dropped
 
@@ -329,7 +323,7 @@ def upsert_to_path(spark: SparkSession, root: str, batch: DataFrame) -> str:
     through the versioned atomic protocol. Returns the committed snapshot
     path."""
     current = latest_commit_path(spark, root)
-    store = spark.read.parquet(current) if current is not None else None
+    store = read_parquet(spark, current) if current is not None else None
     merged = batch if store is None else upsert(store, batch)
     return commit_snapshot(merged, root)
 
@@ -342,7 +336,7 @@ def read_store(spark: SparkSession, path: str) -> DataFrame:
     current = latest_commit_path(spark, path)
     if current is None:
         raise FileNotFoundError(f"no committed store snapshot under {path}")
-    df = spark.read.parquet(current)
+    df = read_parquet(spark, current)
     # book_year (the partition column) stays in the working set: year
     # filters that reference it prune whole partition directories, which a
     # filter on year(book_date) alone can never do (analytics._year_filter

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .operators import latest_per_key
-from .session import events_ts, pin_read_confs
+from .session import events_ts, pin_read_confs, read_parquet
 
 _EVENTS_SCHEMA = T.StructType(
     [
@@ -68,7 +68,7 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly."""
     pin_read_confs(spark)
     base = sf_dir.rstrip("/")
-    batch_ts = spark.read.parquet(f"{base}/events.parquet").schema["ts"].dataType
+    batch_ts = read_parquet(spark, f"{base}/events.parquet").schema["ts"].dataType
     # the file source rejects a plain single-file path ("basePath must be a
     # directory"); a glob is accepted and resolves basePath to the parent,
     # covering both fixture layouts (single file and multi-part directory)
@@ -198,7 +198,7 @@ def _stream_upsert_to_store(
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         current = latest_commit_path(spark, store_path)
-        store = spark.read.parquet(current) if current is not None else None
+        store = read_parquet(spark, current) if current is not None else None
         if store is None:
             # no snapshot yet: the first batch seeds the store (optionally
             # normalized by prepare_first, e.g. within-batch dedup)

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .session import read_parquet
+
 _OUT_SCHEMA = T.StructType(
     [
         T.StructField("qid", T.LongType()),
@@ -86,7 +88,7 @@ def load_query_vectors(
     """Driver-side collect of the (small) query set — mirrors q40's
     broadcast side."""
     rows = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        read_parquet(spark, f"{sf_dir}/embeddings.parquet")
         .filter(F.col("vec_id") < n_queries)
         .select("vec_id", "embedding")
         .collect()

@@ -88,12 +88,19 @@ def test_bench_session_applies_the_scale_rule(tmp_path, monkeypatch):
         f.truncate(1 << 30)  # sparse: sized, not written
     calls = []
     monkeypatch.setattr(session, "get_spark", lambda app, aqe: calls.append((app, aqe)))
-    monkeypatch.delenv("PANDASPARK_SHUFFLE_PARTITIONS", raising=False)
+    before = os.environ.get("PANDASPARK_SHUFFLE_PARTITIONS")
+    # delenv records nothing for an unset variable, so bench_session's
+    # setdefault would outlive the test; setenv first records the state
+    # that undo restores
+    monkeypatch.setenv("PANDASPARK_SHUFFLE_PARTITIONS", "x")
+    monkeypatch.delenv("PANDASPARK_SHUFFLE_PARTITIONS")
 
     session.bench_session(str(small), "b")
     assert os.environ["PANDASPARK_SHUFFLE_PARTITIONS"] == "8"
     session.bench_session(str(large), "b")
     assert calls == [("b", False), ("b", True)]
+    monkeypatch.undo()
+    assert os.environ.get("PANDASPARK_SHUFFLE_PARTITIONS") == before
 
 
 def test_release_unpersists_blocking_and_collects_every_15th_call(monkeypatch):

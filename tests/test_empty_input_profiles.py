@@ -1,13 +1,15 @@
-"""Empty-input behavior of the column-profiling queries (q136/q197).
+"""Empty-input behavior of the column-profiling queries (q136/q197) and
+of q134's power iteration.
 
-Both queries compute their non-null row counts as a SUM over a per-value
-histogram; on an EMPTY table that SUM is NULL where the DuckDB oracles'
-count(col) is 0. The queries coalesce the sum to 0. These tests run the
-FULL driver-style compare — Spark query AND registered oracle SQL, both
-against zero-row copies of the fixtures — so an sf-dir with an empty
-table provably hash-matches the oracle on both engines (reference
-parity: the reference's profiling paths emit 0-counts on empty frames
-too).
+Both profiling queries compute their non-null row counts as a SUM over a
+per-value histogram; on an EMPTY table that SUM is NULL where the DuckDB
+oracles' count(col) is 0. The queries coalesce the sum to 0. q134 builds
+its result on the driver from the rows each iteration collects, and none
+come back from an empty table. These tests run the FULL driver-style
+compare — Spark query AND registered oracle SQL, both against zero-row
+copies of the fixtures — so an sf-dir with an empty table provably
+hash-matches the oracle on both engines (reference parity: the
+reference's profiling paths emit 0-counts on empty frames too).
 """
 from __future__ import annotations
 
@@ -21,11 +23,14 @@ from pandaspark.queries import REGISTRY
 from tests.conftest import SF_DIR
 
 
+_TABLES = ("lineitem", "documents", "orders", "embeddings")
+
+
 @pytest.fixture(scope="module")
 def empty_sf_dir(spark, tmp_path_factory):
-    """Zero-row copies of the tables q136/q197 read, exact same schemas."""
+    """Zero-row copies of the tables q136/q197/q134 read, exact same schemas."""
     d = str(tmp_path_factory.mktemp("empty_sf"))
-    for t in ("lineitem", "documents", "orders"):
+    for t in _TABLES:
         spark.read.parquet(os.path.join(SF_DIR, f"{t}.parquet")).limit(0).write.mode(
             "overwrite"
         ).parquet(os.path.join(d, f"{t}.parquet"))
@@ -44,7 +49,7 @@ def _norm(v):
 
 def _oracle_rows(empty_sf_dir, sql):
     con = duckdb.connect()
-    for t in ("lineitem", "documents", "orders"):
+    for t in _TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"'{os.path.join(empty_sf_dir, t + '.parquet')}/*.parquet'"
@@ -96,5 +101,14 @@ def test_q197_prices_empty_tables_as_zero_counts(spark, empty_sf_dir):
         assert r["plain_bytes"] is None
         assert r["dict_bytes"] is None
         assert r["use_dict"] is None
+    ocols, orows = _oracle_rows(empty_sf_dir, spec.oracle)
+    _assert_driver_compare(sdf, srows, ocols, orows)
+
+
+def test_q134_returns_no_direction_for_an_empty_table(spark, empty_sf_dir):
+    spec = REGISTRY["q134_power_iteration"]
+    sdf = spec.fn(spark, empty_sf_dir)
+    srows = sdf.collect()
+    assert srows == []
     ocols, orows = _oracle_rows(empty_sf_dir, spec.oracle)
     _assert_driver_compare(sdf, srows, ocols, orows)

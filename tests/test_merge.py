@@ -8,7 +8,6 @@ fingerprint upsert.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from pandaspark import store
 

@@ -23,14 +23,11 @@ from pandaspark.analytics import (
 from pandaspark.ingest import read_ing_csv
 from pandaspark.rules import PredicateRule, SubstringRule, apply_cascade, rules_from_map
 from pandaspark.store import (
-    NATURAL_KEY,
-    assign_ids,
     merge_import,
     next_transaction_id,
     prepare_for_store,
     read_store,
     upsert,
-    with_fingerprint,
     write_store,
 )
 

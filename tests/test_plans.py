@@ -54,16 +54,27 @@ def test_no_python_row_udfs_in_plan(spark, name):
         assert "FlatMapGroupsInPandas" not in plan, f"{name} uses applyInPandas outside the dense-linalg exception"
 
 
+# queries whose driver loop collects a result bounded by a constant, not by
+# the data: each q134 power iteration collects its <= 64 per-dimension sums
+# (one row per embedding dimension) and puts the next direction into the
+# plan as a literal (ROADMAP item 4 names this move)
+_BOUNDED_COLLECT = {"q134_power_iteration"}
+
+
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_no_driver_collect_in_query_bodies(name):
     """A registered query must return a lazy plan end-to-end: any
     .collect()/.toPandas()/.toLocalIterator() inside the body funnels the
     data through the driver — the scale failure q45 used to have (the whole
     embeddings table in every task closure). Enforced at the source level
-    because a driver collect never shows up in the final plan."""
+    because a driver collect never shows up in the final plan. A query in
+    _BOUNDED_COLLECT may .collect() once, and only that."""
     import inspect
 
     src = inspect.getsource(REGISTRY[name].fn)
+    if name in _BOUNDED_COLLECT:
+        assert src.count(".collect(") == 1, f"{name} collects more than its bounded aggregate"
+        src = src.replace(".collect(", "")
     for banned in (".collect(", ".toPandas(", ".toLocalIterator("):
         assert banned not in src, f"{name} pulls data to the driver via {banned})"
 

@@ -168,10 +168,12 @@ def _unused_imports(path: pathlib.Path) -> list[str]:
 
 
 def test_every_import_in_the_package_is_used():
-    """The repo has no linter: an import nothing reads is dead code.
-    Imports made for their side effect (the registry's query modules)
-    carry `# noqa: F401`."""
-    unused = [u for path in sorted(PKG.rglob("*.py")) for u in _unused_imports(path)]
+    """The repo has no linter: an import nothing reads is dead code, in the
+    package, its tests, scripts/ and bench.py. Imports made for their side
+    effect (the registry's query modules) carry `# noqa: F401`."""
+    files = [*PKG.rglob("*.py"), *(ROOT / "tests").rglob("*.py"),
+             *(ROOT / "scripts").rglob("*.py"), ROOT / "bench.py"]
+    unused = [u for path in sorted(files) for u in _unused_imports(path)]
     assert unused == []
 
 
