@@ -56,17 +56,6 @@ def _load_rules(path: str | None):
     return rules_from_map(conv)
 
 
-def _to_storage(df: DataFrame) -> DataFrame:
-    """Working-set frame (euros, from read_store) → storage frame."""
-    from .functions import to_cents
-    from .store import TRANSACTIONS_SCHEMA
-
-    out = df.withColumn("amount_cents", to_cents("amount")).withColumn(
-        "balance_cents", to_cents("balance")
-    )
-    return out.select(*[f.name for f in TRANSACTIONS_SCHEMA.fields])
-
-
 def _print_df(df: DataFrame, limit: int) -> None:
     rows = df.limit(limit).collect()
     cols = df.columns
@@ -100,19 +89,22 @@ def cmd_ing_import(args) -> int:
     rules = _load_rules(args.rules)
     if rules:
         batch = apply_cascade(batch, rules)
-    next_id = 1
+    before, next_id = 0, 1
     if latest_commit_path(spark, args.store) is not None:
-        next_id = next_transaction_id(read_store(spark, args.store))
+        store = read_store(spark, args.store)
+        before, next_id = store.count(), next_transaction_id(store)
     prepared = prepare_for_store(batch, next_id=next_id)
     committed = upsert_to_path(spark, args.store, prepared)
+    # both counts read committed snapshots' parquet footers; counting the
+    # batch would re-run the CSV → dedup → cascade pipeline
     n = read_store(spark, args.store).count()
-    print(f"imported {batch.count()} rows -> {committed} ({n} total)")
+    print(f"imported {n - before} new rows -> {committed} ({n} total)")
     return 0
 
 
 def cmd_categorize(args) -> int:
     from .rules import apply_cascade
-    from .store import read_store, write_store
+    from .store import read_store, to_storage, write_store
 
     spark = _spark()
     rules = _load_rules(args.rules)
@@ -121,17 +113,17 @@ def cmd_categorize(args) -> int:
         return 2
     df = read_store(spark, args.store)
     recat = apply_cascade(df, rules)
-    write_store(_to_storage(recat), args.store)
+    write_store(to_storage(recat), args.store)
     n = recat.filter(F.col("category").isNotNull()).count()
     print(f"categorized: {n} rows have a category")
     return 0
 
 
 def cmd_backup(args) -> int:
-    from .store import backup_yaml, read_store
+    from .store import backup_yaml, read_store, to_storage
 
     spark = _spark()
-    df = _to_storage(read_store(spark, args.store))
+    df = to_storage(read_store(spark, args.store))
     backup_yaml(df, args.out)
     print(f"backed up {df.count()} rows -> {args.out}")
     return 0

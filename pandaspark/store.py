@@ -1,15 +1,17 @@
 """Transaction store (SURVEY.md §2.1 S5-S7, §2.4 J1-J2, §2.2 P11/P13):
-fingerprinting, existing-wins dedup, upsert, canonical ordering — on plain
-Parquet, pure DataFrame ops.
+fingerprinting, existing-wins dedup, fingerprint MERGE, canonical ordering
+— on plain Parquet, pure DataFrame ops.
 
 Behavioral spec: /root/reference/panda.py:596-745. The reference uses a
 DuckDB table with `INSERT ... ON CONFLICT (fingerprint) DO UPDATE`; here the
-same exactly-once semantics come from a fingerprint equi-key MERGE rewritten
-as anti-join + union.
+same exactly-once semantics come from `merge_into` on the fingerprint key.
+Every snapshot of the table — import, categorize, restore — is committed by
+`write_store`, in one layout: partitioned by book_year, sorted within
+partitions. `to_storage` is the one working-set → storage conversion.
 
 Scale notes (100 TB):
-  - fingerprint is a deterministic sha2 over the natural key → upsert joins
-    are equi-joins, broadcastable when a batch is small vs the store.
+  - fingerprint is a deterministic sha2 over the natural key → the MERGE
+    is an equi-join, broadcastable when a batch is small vs the store.
   - "existing wins" dedup uses a window over the natural key with an
     explicit priority, never dropDuplicates (which keeps an arbitrary row).
   - sequential transaction_id is a *global* ordering — inherently serial.
@@ -51,11 +53,6 @@ TRANSACTIONS_SCHEMA = T.StructType(
 )
 
 
-def with_fingerprint(df: DataFrame) -> DataFrame:
-    """Attach the natural-key SHA-256 (expects amount_cents present)."""
-    return df.withColumn("fingerprint", fingerprint())
-
-
 def merge_import(existing: DataFrame, incoming: DataFrame) -> DataFrame:
     """Append a parsed batch to the working set, existing row winning on
     natural-key collision, then canonical sort. Mirrors concat +
@@ -70,55 +67,33 @@ def merge_import(existing: DataFrame, incoming: DataFrame) -> DataFrame:
     return latest_per_key(tagged, NATURAL_KEY, ["_prio"]).drop("_prio")
 
 
-def assign_ids(df: DataFrame, next_id: int = 1) -> DataFrame:
-    """Sequential transaction_id in canonical order, starting at next_id —
-    the shared two-phase numbering operator (operators.sequential_ids):
-    range-partition, number per partition in parallel, add broadcast
-    prefix offsets. No single-partition window."""
-    return sequential_ids(df, CANONICAL_ORDER, alias="transaction_id", start=next_id)
+def to_storage(df: DataFrame) -> DataFrame:
+    """Working-set frame (euro floats, as `read_store` returns it) → the
+    stored columns: money cents-encoded, TRANSACTIONS_SCHEMA's columns in
+    order (book_year and any other working column dropped)."""
+    return df.withColumns(
+        {"amount_cents": to_cents("amount"), "balance_cents": to_cents("balance")}
+    ).select(*[f.name for f in TRANSACTIONS_SCHEMA.fields])
 
 
 def prepare_for_store(df: DataFrame, next_id: int = 1) -> DataFrame:
-    """Working-set frame (euro floats) → storage frame: cents encode,
-    fingerprint, id assignment, canonical column set."""
-    out = df.withColumn("amount_cents", to_cents("amount")).withColumn(
-        "balance_cents", to_cents("balance")
-    )
-    out = with_fingerprint(out)
-    out = assign_ids(out, next_id=next_id)
-    cols = [f.name for f in TRANSACTIONS_SCHEMA.fields if f.name != "imported_at"]
-    for c in ("transfer_category", "category", "category_manual"):
-        if c not in out.columns:
-            out = out.withColumn(c, F.lit(None).cast("string"))
-    return out.select(*cols).withColumn("imported_at", F.current_timestamp())
-
-
-def upsert(store: DataFrame, batch: DataFrame) -> DataFrame:
-    """Fingerprint-keyed MERGE semantics on plain DataFrames: matched rows
-    take the batch's derived fields (categories, balance) but KEEP the
-    store's transaction_id and imported_at; unmatched rows insert whole.
-
-    Equivalent to the reference's ON CONFLICT (fingerprint) DO UPDATE.
-    An equi-join on a sha2 key distributes evenly (no skew by construction).
-    """
-    updated_cols = ["transfer_category", "category", "category_manual", "balance_cents"]
-    b_flagged = batch.select(
-        "fingerprint", *[F.col(c).alias(f"_new_{c}") for c in updated_cols]
-    ).withColumn("_has_match", F.lit(True))
-    joined = store.join(b_flagged, "fingerprint", "left")
-    # ON CONFLICT DO UPDATE overwrites with EXCLUDED values even when NULL,
-    # so gate on the match flag, not coalesce.
-    kept = [
-        (
-            F.when(F.col("_has_match"), F.col(f"_new_{c}")).otherwise(F.col(c)).alias(c)
-            if c in updated_cols
-            else F.col(c)
-        )
-        for c in store.columns
-    ]
-    updated_store = joined.select(*kept)
-    inserts = batch.join(store.select("fingerprint"), "fingerprint", "left_anti")
-    return updated_store.unionByName(inserts.select(*store.columns))
+    """Parsed batch (euro floats) → storage frame: NULL categories where
+    the batch has none, fingerprint over the cents-encoded natural key,
+    import timestamp, and transaction_id numbered from next_id in
+    canonical order by the two-phase operator (operators.sequential_ids:
+    range-partition, number per partition, add broadcast prefix offsets;
+    no single-partition window)."""
+    # every stored column the batch lacks starts NULL; to_storage encodes
+    # the money, then the fingerprint and the ids replace their NULLs
+    have = set(df.columns)  # one schema round trip, not one per field
+    absent = {
+        f.name: F.lit(None).cast(f.dataType.simpleString())
+        for f in TRANSACTIONS_SCHEMA.fields
+        if f.name not in have
+    }
+    out = to_storage(df.withColumns({**absent, "imported_at": F.current_timestamp()}))
+    out = out.withColumn("fingerprint", fingerprint())
+    return sequential_ids(out, CANONICAL_ORDER, alias="transaction_id", start=next_id)
 
 
 # --- atomic versioned commit ------------------------------------------------
@@ -129,9 +104,12 @@ def upsert(store: DataFrame, batch: DataFrame) -> DataFrame:
 # property: a failure mid-overwrite leaves the ONLY copy of the store
 # half-deleted. The substitute here is a versioned snapshot layout:
 #
-#   <root>/v000001/  ... parquet snapshot (+ _SUCCESS commit marker)
-#   <root>/v000002/  ...
+#   <root>/v000001/book_year=2023/ ...  parquet snapshot (+ _SUCCESS
+#   <root>/v000001/book_year=2024/ ...  commit marker)
+#   <root>/v000002/...
 #
+# (write_store lays every transactions snapshot out by book_year; the
+# streaming store's snapshots are flat.)
 # A writer NEVER touches the live snapshot: it writes a fresh vN+1
 # directory and the job-commit `_SUCCESS` marker (written last by Spark's
 # FileOutputCommitter) IS the atomic commit point. Readers resolve
@@ -141,7 +119,8 @@ def upsert(store: DataFrame, batch: DataFrame) -> DataFrame:
 # Hadoop filesystem, and is what Delta/Iceberg formalize with a log —
 # they remain the drop-in upgrade behind this interface. Single-writer by
 # design (as is the reference's CLI); concurrent writers need the
-# Delta/Iceberg optimistic-commit path.
+# Delta/Iceberg optimistic-commit path. A root with no vNNNNNN child is
+# an empty store.
 
 _VERSION_WIDTH = 6
 
@@ -162,19 +141,11 @@ def _version_dirs(spark: SparkSession, root: str) -> dict[int, bool]:
 
 
 def latest_commit_path(spark: SparkSession, root: str) -> str | None:
-    """Path of the current (highest committed) snapshot, or None if the
-    store is empty. A plain parquet directory (legacy layout, no vN
-    children) resolves to itself."""
-    versions = _version_dirs(spark, root)
-    committed = [v for v, ok in versions.items() if ok]
-    if committed:
-        return f"{root}/v{max(committed):0{_VERSION_WIDTH}d}"
-    if versions:
-        return None  # only garbage (uncommitted) versions present
-    fs, Path = _hadoop_fs(spark, root)
-    if fs.exists(Path(root)):
-        return root
-    return None
+    """Path of the current (highest committed) snapshot, or None while
+    no snapshot is committed (no vNNNNNN child, or only uncommitted
+    ones)."""
+    committed = [v for v, ok in _version_dirs(spark, root).items() if ok]
+    return f"{root}/v{max(committed):0{_VERSION_WIDTH}d}" if committed else None
 
 
 def commit_snapshot(
@@ -214,14 +185,18 @@ def gc_snapshots(spark: SparkSession, root: str) -> list[int]:
     return dropped
 
 
-def write_store(df: DataFrame, path: str) -> None:
-    """Persist the canonical table as a new committed snapshot (atomic —
-    see the versioned-commit notes above). Partitioned by year(book_date)
-    so the analysis queries (all year-filtered) get partition pruning;
-    sorted within partitions for stable output and better parquet RLE."""
+def write_store(df: DataFrame, path: str) -> str:
+    """Commit a storage frame as the store's next snapshot (atomic — see
+    the versioned-commit notes above) and return its path. The one writer
+    of the transactions table: partitioned by year(book_date) so the
+    analysis queries (all year-filtered) get partition pruning; sorted
+    within partitions for stable output and better parquet RLE."""
     out = df.withColumn("book_year", F.year("book_date"))
-    out = out.sortWithinPartitions(*CANONICAL_ORDER)
-    commit_snapshot(out, path, partition_by=["book_year"])
+    # book_year leads: a partitioned write needs its rows ordered by the
+    # partition column, and puts its own sort on book_year alone in place
+    # of any sort that does not start with it
+    out = out.sortWithinPartitions("book_year", *CANONICAL_ORDER)
+    return commit_snapshot(out, path, partition_by=["book_year"])
 
 
 def merge_into(
@@ -255,8 +230,8 @@ def merge_into(
     Like Delta, a target row must match at most ONE source row, or the
     update is ambiguous — callers dedupe the source on the key first
     (`latest_per_key` is the standard pre-step). The result is the merged
-    target relation, lazily; durability comes from committing it through
-    `commit_snapshot` (same protocol as `upsert_to_path`).
+    target relation, lazily; durability comes from committing it as a
+    snapshot (`upsert_to_path` commits through `write_store`).
 
     Plan shape at 100 TB: ONE full-outer equi-join shuffle on the merge
     keys carries all four clauses; every clause is a projection/filter on
@@ -318,21 +293,26 @@ def merge_into(
 
 
 def upsert_to_path(spark: SparkSession, root: str, batch: DataFrame) -> str:
-    """The durable MERGE (reference: panda.py:713-728 ON CONFLICT upsert):
-    runs `upsert` against the current snapshot and commits the merge
-    through the versioned atomic protocol. Returns the committed snapshot
-    path."""
+    """The durable fingerprint MERGE (reference: panda.py:713-728, ON
+    CONFLICT (fingerprint) DO UPDATE): matched rows take the batch's
+    derived fields, even when NULL; unmatched batch rows insert whole.
+    `batch` is a storage frame (`prepare_for_store`). Commits through
+    `write_store` and returns the committed snapshot path."""
     current = latest_commit_path(spark, root)
-    store = read_parquet(spark, current) if current is not None else None
-    merged = batch if store is None else upsert(store, batch)
-    return commit_snapshot(merged, root)
+    if current is not None:
+        store = read_parquet(spark, current).drop("book_year")
+        # a re-sent row keeps the store's transaction_id and imported_at
+        derived = ["transfer_category", "category", "category_manual", "balance_cents"]
+        batch = merge_into(
+            store, batch, ["fingerprint"], matched_update={c: f"s.{c}" for c in derived}
+        )
+    return write_store(batch, root)
 
 
 def read_store(spark: SparkSession, path: str) -> DataFrame:
     """Load the canonical table as the analysis working set: euros derived
     from cents, canonical order (lazy — order applied by consumers).
-    Resolves the current committed snapshot; legacy plain-parquet
-    directories read as-is."""
+    Resolves the current committed snapshot; `to_storage` converts back."""
     current = latest_commit_path(spark, path)
     if current is None:
         raise FileNotFoundError(f"no committed store snapshot under {path}")

@@ -182,7 +182,7 @@ def _stream_upsert_to_store(
     prepare_first: Callable[[DataFrame], DataFrame] | None = None,
 ):
     """foreachBatch exactly-once sink: every micro-batch runs the SAME
-    merge as the batch path (e.g. store.upsert) against the CURRENT store
+    merge as the batch path (store.merge_into) against the CURRENT store
     snapshot and commits the result as a new snapshot via the versioned
     atomic-commit protocol (store.commit_snapshot): batch N+1 reads batch
     N's merge, and a crash mid-write leaves the previous snapshot intact.

@@ -66,6 +66,8 @@ def main():
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.driver.memory", os.environ.get("OC_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # stage progress bars would interleave with the per-query lines
+        .config("spark.ui.showConsoleProgress", "false")
         .appName("oracle-check")
     )
     if os.environ.get("OC_TZ"):

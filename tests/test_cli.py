@@ -6,6 +6,7 @@ re-import, and the registry query runner."""
 from __future__ import annotations
 
 import json
+import pathlib
 
 import pytest
 
@@ -120,6 +121,79 @@ def test_cli_backup_format_does_not_follow_the_file_name(cli_env, spark, tmp_pat
     b = read_store(spark, restored).drop("book_year")
     assert a.count() == 3
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+def test_cli_daily_loop_imports_into_categorized_and_restored_stores(
+    cli_env, spark, tmp_path, capsys
+):
+    """The reference's daily loop: import, categorize, import a new file
+    that re-sends one row, back up, restore into a fresh store, import
+    again. Every commit has the same book_year layout, so an import reads
+    a categorized or restored store like any other."""
+
+    def csv(month, rows):
+        path = tmp_path / f"umsatz_DE11111111111111111111_2024-{month}.csv"
+        lines = ["Umsatzanzeige;Datei erstellt am: 01.04.2024", "", CSV_HEADER, *rows]
+        path.write_text("\n".join(lines) + "\n", encoding="iso-8859-1")
+        return str(path)
+
+    resent = "17.01.2024;17.01.2024;Stadtwerke;Lastschrift;Strom;-80,00;4.654,56;EUR"
+    feb = csv("02", [
+        resent,
+        "01.02.2024;01.02.2024;REWE Märkte GmbH;Lastschrift;Einkauf;-12,00;4.642,56;EUR",
+        "02.02.2024;02.02.2024;Kreuzwerker;Gehalt/Rente;Gehalt Februar;3.500,00;8.142,56;EUR",
+    ])
+    mar = csv("03", [
+        resent,
+        "01.03.2024;01.03.2024;Stadtwerke;Lastschrift;Strom;-81,00;8.061,56;EUR",
+    ])
+    store, restored = str(tmp_path / "store"), str(tmp_path / "restored")
+
+    def ing_import(path, root):
+        argv = ["ing-import", path, "--store", root, "--rules", cli_env["rules"],
+                "--account-map", cli_env["amap"]]
+        assert main(argv) == 0
+
+    def strom_jan(root):
+        rows = read_store(spark, root).filter("party = 'Stadtwerke' AND amount = -80.0").collect()
+        assert len(rows) == 1
+        return rows[0]
+
+    ing_import(cli_env["csv"], store)
+    assert read_store(spark, store).count() == 3
+    tid = strom_jan(store).transaction_id
+    rules2 = tmp_path / "rules2.json"
+    rules2.write_text(json.dumps({"food": {"party": ["rewe"]}}))
+    assert main(["categorize", "--store", store, "--rules", str(rules2)]) == 0
+
+    capsys.readouterr()
+    ing_import(feb, store)
+    out = capsys.readouterr().out
+    assert "imported 2 new rows -> " in out and "(5 total)" in out
+    df = read_store(spark, store)
+    assert df.count() == 5
+    assert df.select("transaction_id").distinct().count() == 5
+    assert strom_jan(store).transaction_id == tid
+    assert strom_jan(store).category == "wohnen::strom"
+
+    backup = str(tmp_path / "backup.yaml")
+    assert main(["backup", "--store", store, "--out", backup]) == 0
+    assert main(["restore", "--backup", backup, "--store", restored]) == 0
+    assert read_store(spark, restored).count() == 5
+    ing_import(mar, restored)
+    df = read_store(spark, restored)
+    assert df.count() == 6
+    assert df.select("transaction_id").distinct().count() == 6
+    assert strom_jan(restored).transaction_id == tid
+
+    for root in (store, restored):
+        snaps = sorted(p for p in pathlib.Path(root).iterdir() if p.name.startswith("v"))
+        assert [p.name for p in snaps] == (
+            ["v000001", "v000002", "v000003"] if root == store else ["v000001", "v000002"]
+        )
+        for snap in snaps:
+            assert (snap / "_SUCCESS").exists()
+            assert any(c.name.startswith("book_year=") for c in snap.iterdir()), snap
 
 
 def test_cli_query_runner(capsys):

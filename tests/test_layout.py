@@ -89,6 +89,15 @@ def test_year_partitioned_store_prunes_partitions(spark, tmp_path):
     assert "book_year" in pf, pf
     assert got.count() == sum(1 for r in rows if r[2].year == 2024) > 0
 
+    # each data file holds its rows in canonical order
+    from pandaspark.store import CANONICAL_ORDER
+
+    files = list(tmp_path.glob("store/v000001/book_year=*/*.parquet"))
+    assert files
+    for f in files:
+        keys = [tuple(r) for r in spark.read.parquet(str(f)).select(*CANONICAL_ORDER).collect()]
+        assert keys == sorted(keys), f
+
     # the END-TO-END loop (§4.2): read_store keeps book_year and the
     # analytics year filters reference it, so a year-scoped ANALYTICS query
     # prunes partition directories — not just a hand-written raw filter

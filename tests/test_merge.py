@@ -1,8 +1,8 @@
 """Multi-clause MERGE INTO (store.merge_into): Delta-style semantics on
 plain DataFrames — matched update, conditional matched delete, not-matched
 insert (auto and explicit), not-matched-by-source delete, three-valued
-logic on clause conditions, and equivalence with the specialized
-fingerprint upsert.
+logic on clause conditions, and the fingerprint upsert configuration
+that store.upsert_to_path commits.
 """
 
 from __future__ import annotations
@@ -115,9 +115,9 @@ def test_missing_key_raises(spark, target, source):
 
 
 def test_merge_reproduces_fingerprint_upsert(spark):
-    """The specialized banking upsert is one configuration of the general
-    MERGE: matched rows take the batch's derived fields (even when NULL),
-    keep store identity columns; unmatched insert whole."""
+    """The banking upsert is one configuration of the general MERGE:
+    matched rows take the batch's derived fields (even when NULL), keep
+    store identity columns; unmatched insert whole."""
     from datetime import date
 
     schema = (
@@ -141,7 +141,13 @@ def test_merge_reproduces_fingerprint_upsert(spark):
         schema,
     ).select(*cols)
 
-    expected = store.upsert(st, batch)
+    expected = [
+        (1, "DE1", date(2024, 1, 1), 100, 1000, "food", None, None, "fp1"),
+        # matched: derived fields from the batch, the NULL manual category
+        # included; id, account, dates and amount stay the store's
+        (2, "DE1", date(2024, 1, 2), 200, 1250, "rent2", None, "tc", "fp2"),
+        (0, "DE1", date(2024, 1, 3), 300, 1500, "fuel", None, None, "fp3"),
+    ]
     got = store.merge_into(
         st,
         batch,
@@ -151,7 +157,7 @@ def test_merge_reproduces_fingerprint_upsert(spark):
             for c in ("transfer_category", "category", "category_manual", "balance_cents")
         },
     )
-    assert _rows(expected) == _rows(got)
+    assert sorted(expected) == _rows(got)
 
 
 def test_merge_plan_is_one_join(spark, target, source):

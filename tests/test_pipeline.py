@@ -27,7 +27,7 @@ from pandaspark.store import (
     next_transaction_id,
     prepare_for_store,
     read_store,
-    upsert,
+    upsert_to_path,
     write_store,
 )
 
@@ -346,15 +346,18 @@ def test_pipeline_end_to_end(spark, csv_dir, tmp_path):
     assert amounts["REWE Märkte GmbH"] == -54.30
 
     # upsert idempotency: same batch twice → unchanged count, same ids
-    once = upsert(stored, stored)
+    upsert_to_path(spark, store_path, stored)
+    once = read_store(spark, store_path)
     assert once.count() == 8
-    twice = upsert(once, stored)
+    upsert_to_path(spark, store_path, stored)
+    twice = read_store(spark, store_path)
     assert twice.count() == 8
     assert next_transaction_id(twice) == 9
 
     # upsert updates matched category fields but keeps transaction_id
     recat = stored.withColumn("category", F.lit("override"))
-    merged2 = upsert(stored, recat)
+    upsert_to_path(spark, store_path, recat)
+    merged2 = read_store(spark, store_path)
     got = merged2.filter(F.col("party") == "Kreuzwerker").collect()[0]
     assert got.category == "override" and got.transaction_id == row.transaction_id
 

@@ -35,6 +35,27 @@ def _touch_garbage_version(root: str, version: int, name: str = "part-junk") -> 
     (d / name).write_bytes(b"partial write, job died before commit")
 
 
+def _transactions(spark, n: int, category: str | None, balance_cents: int | None):
+    """The first n orders as a storage frame: one transaction per order,
+    fingerprinted on the order key."""
+    return load(spark, SF_DIR, "orders").limit(n).select(
+        F.col("o_orderkey").alias("transaction_id"),
+        F.lit("giro").alias("account"),
+        F.col("o_orderdate").alias("book_date"),
+        F.col("o_orderdate").alias("valuta_date"),
+        F.col("o_orderpriority").alias("party"),
+        F.lit(None).cast("string").alias("book_text"),
+        F.col("o_orderstatus").alias("purpose"),
+        (F.col("o_totalprice") * 100).cast("long").alias("amount_cents"),
+        F.lit(balance_cents).cast("long").alias("balance_cents"),
+        F.lit(None).cast("string").alias("transfer_category"),
+        F.lit(category).cast("string").alias("category"),
+        F.lit(None).cast("string").alias("category_manual"),
+        F.sha2(F.col("o_orderkey").cast("string"), 256).alias("fingerprint"),
+        F.current_timestamp().alias("imported_at"),
+    )
+
+
 def test_commit_snapshot_is_crash_safe(spark, tmp_path):
     root = str(tmp_path / "store")
     df1 = spark.range(5).withColumn("x", F.col("id") * 2)
@@ -72,41 +93,13 @@ def test_gc_keeps_live_window_and_drops_garbage(spark, tmp_path):
 
 def test_write_store_never_clobbers_previous_snapshot(spark, tmp_path):
     root = str(tmp_path / "txstore")
-    base = load(spark, SF_DIR, "orders").limit(50)
-    df = base.select(
-        F.col("o_orderkey").alias("transaction_id"),
-        F.lit("giro").alias("account"),
-        F.col("o_orderdate").alias("book_date"),
-        F.col("o_orderdate").alias("valuta_date"),
-        F.col("o_orderpriority").alias("party"),
-        F.lit(None).cast("string").alias("book_text"),
-        F.col("o_orderstatus").alias("purpose"),
-        (F.col("o_totalprice") * 100).cast("long").alias("amount_cents"),
-        F.lit(None).cast("long").alias("balance_cents"),
-        F.lit(None).cast("string").alias("transfer_category"),
-        F.lit(None).cast("string").alias("category"),
-        F.lit(None).cast("string").alias("category_manual"),
-        F.sha2(F.col("o_orderkey").cast("string"), 256).alias("fingerprint"),
-        F.current_timestamp().alias("imported_at"),
-    )
+    df = _transactions(spark, 50, None, None)
     write_store(df, root)
     first = read_store(spark, root).count()
     write_store(df.limit(20), root)
     assert read_store(spark, root).count() == 20
     # both snapshots exist on disk; the first is still fully readable
     assert spark.read.parquet(f"{root}/v000001").count() == first == 50
-
-
-def test_read_store_legacy_plain_directory(spark, tmp_path):
-    """Stores written before versioning (plain parquet dir) still read."""
-    root = str(tmp_path / "legacy")
-    spark.range(7).select(
-        F.col("id").alias("transaction_id"),
-        (F.col("id") * 100).cast("long").alias("amount_cents"),
-        F.lit(None).cast("long").alias("balance_cents"),
-    ).write.parquet(root)
-    got = read_store(spark, root)
-    assert got.count() == 7 and "amount" in got.columns
 
 
 def test_stream_upsert_chains_micro_batches(spark, tmp_path):
@@ -126,8 +119,8 @@ def test_stream_upsert_chains_micro_batches(spark, tmp_path):
         s.coalesce(1).write.parquet(str(src / f"f{i}"))
 
     def merge(store, batch):
-        # key-based upsert, batch wins — idempotent, same shape as
-        # store.upsert's fingerprint MERGE
+        # key-based upsert, batch wins — idempotent, like the fingerprint
+        # MERGE that store.upsert_to_path commits
         return store.join(batch, "event_id", "left_anti").unionByName(batch)
 
     root = str(tmp_path / "stream_store")
@@ -166,33 +159,11 @@ def test_upsert_to_path_folds_batches_through_snapshots(spark, tmp_path):
     from pandaspark.store import latest_commit_path, upsert_to_path
 
     root = str(tmp_path / "seam")
-    base = (
-        load(spark, SF_DIR, "orders")
-        .limit(50)
-        .select(
-            F.col("o_orderkey").alias("transaction_id"),
-            F.sha2(F.col("o_orderkey").cast("string"), 256).alias("fingerprint"),
-            F.lit("a").alias("category"),
-            F.lit(None).cast("string").alias("category_manual"),
-            F.lit(None).cast("string").alias("transfer_category"),
-            F.lit(100).cast("long").alias("balance_cents"),
-        )
-    )
+    base = _transactions(spark, 50, "a", 100)
     upsert_to_path(spark, root, base)
-    # second batch: 10 overlapping fingerprints with new category + 5 new rows
-    b2 = (
-        load(spark, SF_DIR, "orders")
-        .limit(65)
-        .select(
-            F.col("o_orderkey").alias("transaction_id"),
-            F.sha2(F.col("o_orderkey").cast("string"), 256).alias("fingerprint"),
-            F.lit("b").alias("category"),
-            F.lit(None).cast("string").alias("category_manual"),
-            F.lit(None).cast("string").alias("transfer_category"),
-            F.lit(200).cast("long").alias("balance_cents"),
-        )
-        .filter(F.col("transaction_id") % 2 == 0)
-    )
+    # second batch: the even orders of the first 65, new category: the
+    # ones among the first 50 overlap, the rest are new rows
+    b2 = _transactions(spark, 65, "b", 200).filter(F.col("transaction_id") % 2 == 0)
     upsert_to_path(spark, root, b2)
     got = spark.read.parquet(latest_commit_path(spark, root))
     n_base, n_b2 = base.count(), b2.count()
