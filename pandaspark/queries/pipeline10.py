@@ -17,10 +17,13 @@ from exact contingency counts.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import load, register, spread, sql_sha_int
+from . import load, register, spread, sql_round4, sql_sha_int
+from .similarity import _sql_cosine, cosine4_tiles
 
 _Q140_ORACLE = """
 WITH h AS (
@@ -166,19 +169,18 @@ _NN_STRIP = 2048  # src-row strip width: per-task transient = strip x block
 _NN_SELF = -(1 << 60)  # self-pair sentinel, safe under negation (int64.min isn't)
 
 
-def _block_nn_kernel(pdf):
-    """Per label block: the full cosine matrix in numpy strips, reduced to
-    ONE row per vector — best neighbor (c4 DESC, dst ASC tie-break) and
-    the top-_MM_K neighborhood sum. The dense-linalg exception (see
-    pandaspark/vectorops.py, q45): numpy's pairwise summation differs from
-    the engines' sequential folds by <=1e-15 relative, which the 4-dp
-    floor-rounding absorbs — hash-match asserted at sf0.001/0.01/0.1, 5x
-    and 25x. The HOF-expression form of the same query ran 313 s at 25x
-    (250M pairs through the interpreted fold); this kernel is ~30x less.
-    Columns are sorted by vec_id so a STABLE argsort of -c4 realizes the
-    (c4 DESC, dst ASC) order exactly; all kept quantities are int64.
-    At 100 TB the block is a cluster assignment (q115's lesson: bound the
-    block, not the corpus), so block_size^2 is a design constant."""
+def _block_nn_kernel(strip, pdf):
+    """Per label block: the full cosine matrix in numpy strips of `strip`
+    source rows (cosine4_tiles, the dense-linalg exception documented
+    there), reduced to ONE row per vector — best neighbor (c4 DESC, dst ASC
+    tie-break) and the top-_MM_K neighborhood sum. The HOF-expression form
+    of the same query ran 313 s at 25x (250M pairs through the interpreted
+    fold); this kernel is ~30x less. Each strip spans whole rows, which the
+    argsort needs. Columns are sorted by vec_id so a STABLE argsort of -c4
+    realizes the (c4 DESC, dst ASC) order exactly; all kept quantities are
+    int64. At 100 TB the block is a cluster assignment (q115's lesson:
+    bound the block, not the corpus), so block_size^2 is a design
+    constant."""
     import numpy as np
     import pandas as pd
 
@@ -198,16 +200,13 @@ def _block_nn_kernel(pdf):
     pdf = pdf.sort_values("vec_id")
     ids = pdf["vec_id"].to_numpy(dtype=np.int64)
     mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-    nrm = np.linalg.norm(mat, axis=1)
     label = np.int32(pdf["label"].iloc[0])
     k = min(_MM_K, n - 1)
     outs = []
-    for s0 in range(0, n, _NN_STRIP):
-        sl = slice(s0, min(s0 + _NN_STRIP, n))
-        cos = (mat[sl] @ mat.T) / np.outer(nrm[sl], nrm)
-        c4 = np.floor(cos * 1e4 + 0.5).astype(np.int64)
+    for sl, _, c4 in cosine4_tiles(mat, mat, strip, n):
+        c4 = c4.astype(np.int64)
         rows = np.arange(c4.shape[0])
-        c4[rows, s0 + rows] = _NN_SELF  # mask self-pairs
+        c4[rows, sl.start + rows] = _NN_SELF  # mask self-pairs
         order = np.argsort(-c4, axis=1, kind="stable")
         top = np.take_along_axis(c4, order[:, :k], axis=1)
         best = order[:, 0]
@@ -240,16 +239,17 @@ def _block_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     e = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    return e.groupBy("label").applyInPandas(_block_nn_kernel, schema)
+    # the strip width is bound at build time: Python workers re-import this
+    # module, so a width patched on the driver would not reach the kernel
+    kernel = functools.partial(_block_nn_kernel, _NN_STRIP)
+    return e.groupBy("label").applyInPandas(kernel, schema)
 
 
-_Q142_ORACLE = """
+_Q142_ORACLE = f"""
 WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 c AS (
   SELECT a.label, a.vec_id AS src, b.vec_id AS dst,
-         floor(list_dot_product(a.v, b.v)
-               / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
-               * 10000 + 0.5) / 10000.0 AS cosine
+         {sql_round4(_sql_cosine('a.v', 'b.v'))} AS cosine
   FROM e a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id
 ),
 best AS (
@@ -311,9 +311,7 @@ _Q143_ORACLE = f"""
 WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 c AS MATERIALIZED (
   SELECT a.label, a.vec_id AS src, b.vec_id AS dst,
-         CAST(floor(list_dot_product(a.v, b.v)
-               / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
-               * 10000 + 0.5) AS BIGINT) AS c4
+         CAST(floor(({_sql_cosine('a.v', 'b.v')}) * 10000 + 0.5) AS BIGINT) AS c4
   FROM e a JOIN e b ON a.label = b.label AND a.vec_id <> b.vec_id
 ),
 rk AS (

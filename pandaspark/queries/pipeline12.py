@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 
 from . import load, register, round4, spread, sql_round4
+from .similarity import _cosine, _sql_cosine
 
 # --- q167: sorted-neighborhood dedup ----------------------------------------
 #
@@ -631,13 +632,8 @@ WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe
 e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ee FROM embeddings),
 p AS (
   SELECT qid, vec_id,
-         floor(list_dot_product(qe, ee)
-               / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(ee, ee)))
-               * 10000 + 0.5) / 10000.0 AS cf,
-         floor(list_dot_product(qe[1:{_MRL_DIMS}], ee[1:{_MRL_DIMS}])
-               / (sqrt(list_dot_product(qe[1:{_MRL_DIMS}], qe[1:{_MRL_DIMS}]))
-                  * sqrt(list_dot_product(ee[1:{_MRL_DIMS}], ee[1:{_MRL_DIMS}])))
-               * 10000 + 0.5) / 10000.0 AS ct
+         {sql_round4(_sql_cosine('qe', 'ee'))} AS cf,
+         {sql_round4(_sql_cosine(f'qe[1:{_MRL_DIMS}]', f'ee[1:{_MRL_DIMS}]'))} AS ct
   FROM q JOIN e ON vec_id != qid
 ),
 r AS (
@@ -662,21 +658,15 @@ FROM r GROUP BY qid
     "recall@5 of 16-dim prefix cosine ranking vs full 64-dim (MRL truncation)",
 )
 def q173(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _dot, _norm
-
     e = spread(load(spark, sf_dir, "embeddings")).select("vec_id", "embedding")
     q = e.filter(F.col("vec_id") < _MRL_NQ).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
     pairs = F.broadcast(q).crossJoin(e).filter(F.col("vec_id") != F.col("qid"))
-
-    def cos(a, b):
-        return round4(_dot(a, b) / (_norm(a) * _norm(b)))
-
     qe, ee = F.col("qe"), F.col("embedding")
     qt, et = F.slice(qe, 1, _MRL_DIMS), F.slice(ee, 1, _MRL_DIMS)
     scored = pairs.select(
-        "qid", "vec_id", cos(qe, ee).alias("cf"), cos(qt, et).alias("ct")
+        "qid", "vec_id", round4(_cosine(qe, ee)).alias("cf"), round4(_cosine(qt, et)).alias("ct")
     )
     wf = Window.partitionBy("qid").orderBy(F.col("cf").desc(), "vec_id")
     wt = Window.partitionBy("qid").orderBy(F.col("ct").desc(), "vec_id")

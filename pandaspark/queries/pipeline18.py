@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import load, register, round4, sha_int, spread, sql_round4, sql_sha_int
-from .similarity import _DIMS, _K, _N_QUERIES, _dot, _norm, _sql_centroid_terms
+from .similarity import _DIMS, _K, _N_QUERIES, _cosine, _sql_centroid_terms, _sql_cosine
 
 # --- q198: multi-probe IVF recall curve --------------------------------------
 
@@ -62,9 +62,7 @@ ranked_cells AS (
          row_number() OVER (PARTITION BY qid ORDER BY ccos DESC, cell) AS prk
   FROM (
     SELECT q.qid, q.qe, c.cell,
-           floor(list_dot_product(qe, centroid)
-                 / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(centroid, centroid)))
-                 * 10000 + 0.5) / 10000.0 AS ccos
+           {sql_round4(_sql_cosine('qe', 'centroid'))} AS ccos
     FROM q CROSS JOIN cents c)
 ),
 probes AS (
@@ -74,9 +72,7 @@ probes AS (
 ),
 cand AS (
   SELECT p.nprobe, p.qid, e.vec_id,
-         floor(list_dot_product(p.qe, e.emb)
-               / (sqrt(list_dot_product(p.qe, p.qe)) * sqrt(list_dot_product(e.emb, e.emb)))
-               * 10000 + 0.5) / 10000.0 AS cosine
+         {sql_round4(_sql_cosine('p.qe', 'e.emb'))} AS cosine
   FROM probes p JOIN e ON e.label = p.cell AND e.vec_id != p.qid
 ),
 approx_tk AS (
@@ -88,9 +84,7 @@ approx_tk AS (
 exact_tk AS (
   SELECT q.qid, e.vec_id,
          row_number() OVER (PARTITION BY q.qid ORDER BY
-           floor(list_dot_product(q.qe, e.emb)
-                 / (sqrt(list_dot_product(q.qe, q.qe)) * sqrt(list_dot_product(e.emb, e.emb)))
-                 * 10000 + 0.5) / 10000.0 DESC, e.vec_id) AS rk
+           {sql_round4(_sql_cosine('q.qe', 'e.emb'))} DESC, e.vec_id) AS rk
   FROM q JOIN e ON e.vec_id != q.qid QUALIFY rk <= {_K}
 ),
 hits AS (
@@ -137,9 +131,7 @@ def q198(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
     qc = q.crossJoin(F.broadcast(cents.select(F.col("label").alias("cell"), "centroid")))
-    ccos = round4(
-        _dot(F.col("qe"), F.col("centroid")) / (_norm(F.col("qe")) * _norm(F.col("centroid")))
-    )
+    ccos = round4(_cosine(F.col("qe"), F.col("centroid")))
     wq = Window.partitionBy("qid").orderBy(F.col("ccos").desc(), "cell")
     ranked = (
         qc.select("qid", "qe", "cell", ccos.alias("ccos"))
@@ -154,9 +146,7 @@ def q198(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = F.broadcast(probes).join(e, F.col("label") == F.col("cell")).filter(
         F.col("vec_id") != F.col("qid")
     )
-    cosine = round4(
-        _dot(F.col("qe"), F.col("embedding")) / (_norm(F.col("qe")) * _norm(F.col("embedding")))
-    )
+    cosine = round4(_cosine(F.col("qe"), F.col("embedding")))
     scored = cand.select("nprobe", "qid", "vec_id", cosine.alias("cosine"))
     wk = Window.partitionBy("nprobe", "qid").orderBy(F.col("cosine").desc(), "vec_id")
     approx_tk = scored.withColumn("rk", F.row_number().over(wk)).filter(
@@ -170,9 +160,7 @@ def q198(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that cell — derivable from a K-row per-cell count broadcast.
     # exact baseline: brute force over all (q, e) pairs
     qe_all = q.crossJoin(e).filter(F.col("vec_id") != F.col("qid"))
-    ecos = round4(
-        _dot(F.col("qe"), F.col("embedding")) / (_norm(F.col("qe")) * _norm(F.col("embedding")))
-    )
+    ecos = round4(_cosine(F.col("qe"), F.col("embedding")))
     wx = Window.partitionBy("qid").orderBy(F.col("ecos").desc(), "vec_id")
     exact_tk = (
         qe_all.select("qid", "vec_id", ecos.alias("ecos"))

@@ -71,7 +71,7 @@ from . import (
     sql_round4,
     sql_sha_int,
 )
-from .similarity import _dot, _norm, _sq_dist, _sql_sq_dist
+from .similarity import _cosine, _sq_dist, _sql_cosine, _sql_sq_dist
 from .text import _char_shingles, _norm_text
 
 # --- q115: SemDeDup (cluster-bounded cosine near-dedup) ---------------------
@@ -110,10 +110,7 @@ a AS (
 ),
 p AS (
   SELECT x.cluster, x.vec_id AS ia, y.vec_id AS ib,
-         {sql_round4(
-             "list_dot_product(x.v, y.v) / (sqrt(list_dot_product(x.v, x.v))"
-             " * sqrt(list_dot_product(y.v, y.v)))"
-         )} AS cosine
+         {sql_round4(_sql_cosine('x.v', 'y.v'))} AS cosine
   FROM a x JOIN a y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
 )
 SELECT CAST(cluster AS BIGINT) AS cluster,
@@ -168,9 +165,7 @@ def q115(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     x, y = assigned.alias("x"), assigned.alias("y")
-    cos = round4(
-        _dot(F.col("x.v"), F.col("y.v")) / (_norm(F.col("x.v")) * _norm(F.col("y.v")))
-    )
+    cos = round4(_cosine(F.col("x.v"), F.col("y.v")))
     pairs = (
         x.join(
             y,

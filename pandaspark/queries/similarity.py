@@ -40,6 +40,55 @@ def _norm(a):
     ))
 
 
+def _cosine(a, b):
+    # the one Catalyst cosine; callers round it with round4
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _sql_cosine(a: str, b: str) -> str:
+    # DuckDB twin of _cosine: list_dot_product is the same sequential double
+    # fold as _dot, so sql_round4(_sql_cosine(a, b)) hash-matches
+    # round4(_cosine(a, b))
+    return (
+        f"list_dot_product({a}, {b})"
+        f" / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
+    )
+
+
+def cosine4_tiles(amat, bmat, rows: int, cols: int):
+    """The one numpy cosine: yields (sa, sb, c4) per (rows, cols) tile of
+    the amat x bmat score matrix, c4 = floor(cos * 1e4 + 0.5) as float64
+    (the round4 convention before its / 1e4).
+
+    The dense-linalg exception: the registry keeps every hot path JVM-side
+    (tests/test_plans.py forbids Python there), but an all-pairs cosine as
+    a Catalyst higher-order fold is interpreted per element, while numpy
+    scores a whole tile in one BLAS matmul. q45, q142 and q143 run this
+    kernel inside applyInPandas groups. numpy's pairwise summation differs
+    from the engines' sequential folds by <=1e-15 relative, which the 4-dp
+    floor-rounding absorbs — hash-match asserted at sf0.001/0.01/0.1 and 5x
+    (q142/q143 also at 25x).
+
+    Each entry is the same expression whatever the tile boundaries, so the
+    result is tile-invariant and the tile size only bounds per-task memory
+    (~3 tile-sized float64 temporaries: matmul result, outer of norms,
+    quotient). The arithmetic is kept in the un-tiled form's order (divide
+    by the outer product, THEN round): pre-normalizing rows would be
+    cheaper but changes the IEEE op order and risks knife-edge flips in
+    the 4th decimal the oracle hash would catch."""
+    import numpy as np
+
+    anorm = np.linalg.norm(amat, axis=1)
+    bnorm = np.linalg.norm(bmat, axis=1)
+    for s in range(0, len(amat), rows):
+        for t in range(0, len(bmat), cols):
+            sa, sb = slice(s, s + rows), slice(t, t + cols)
+            c4 = np.floor(
+                (amat[sa] @ bmat[sb].T) / np.outer(anorm[sa], bnorm[sb]) * 1e4 + 0.5
+            )
+            yield sa, sb, c4
+
+
 def _sq_dist(v, c):
     # squared Euclidean distance, the same HOF fold as _dot
     return F.aggregate(
@@ -68,10 +117,7 @@ WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe
 e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding FROM embeddings),
 c AS (
   SELECT qid, vec_id,
-         floor(list_dot_product(qe, embedding)
-               / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(embedding, embedding)))
-               * 10000 + 0.5) / 10000.0
-         AS cosine
+         {sql_round4(_sql_cosine('qe', 'embedding'))} AS cosine
   FROM q JOIN e ON vec_id != qid
 )
 SELECT qid, vec_id, cosine,
@@ -88,9 +134,7 @@ def q40(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
     joined = F.broadcast(q).crossJoin(e).filter(F.col("vec_id") != F.col("qid"))
-    cosine = round4(
-        _dot(F.col("qe"), F.col("embedding")) / (_norm(F.col("qe")) * _norm(F.col("embedding")))
-    )
+    cosine = round4(_cosine(F.col("qe"), F.col("embedding")))
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), "vec_id")
     return (
         joined.select("qid", "vec_id", cosine.alias("cosine"))
@@ -216,10 +260,7 @@ _Q45_ORACLE = f"""
 WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS embedding FROM embeddings)
 SELECT * FROM (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         floor(list_dot_product(a.embedding, b.embedding)
-               / (sqrt(list_dot_product(a.embedding, a.embedding))
-                  * sqrt(list_dot_product(b.embedding, b.embedding)))
-               * 10000 + 0.5) / 10000.0 AS cosine,
+         {sql_round4(_sql_cosine('a.embedding', 'b.embedding'))} AS cosine,
          CAST(a.label = b.label AS BIGINT) AS same_label
   FROM e a JOIN e b ON a.vec_id < b.vec_id)
 WHERE cosine >= {_NEAR_T}
@@ -235,8 +276,8 @@ def q45(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs cosine near-dup mining as a BLOCK-PARTITIONED join: rows
     hash into _N_BLOCKS blocks by vec_id; every unordered block pair (i,j)
     becomes one applyInPandas group whose kernel scores the (|i|,|j|)
-    sub-matrix in a single numpy matmul (the dense-linalg exception
-    documented in pandaspark/vectorops.py). Nothing touches the driver and
+    sub-matrix in numpy matmul tiles (the dense-linalg exception
+    documented at cosine4_tiles). Nothing touches the driver and
     no task holds more than two blocks — replication factor is _N_BLOCKS
     (≈2·sqrt(tasks)), the standard distributed exact all-pairs layout, so
     the operator scales out instead of OOMing the driver (the previous
@@ -244,10 +285,8 @@ def q45(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-threshold near-dup at 100 TB, q42's LSH buckets replace the
     all-pairs block grid entirely.
 
-    Exactness: scores are floor(dot/(na·nb)·1e4+0.5)/1e4; numpy's pairwise
-    summation vs the oracle's sequential fold differ by ≤1e-15 relative,
-    which the 4-decimal rounding absorbs — hash-match asserted at
-    sf0.001/0.01/0.1 by tests and the driver."""
+    Exactness: scores are floor(dot/(na·nb)·1e4+0.5)/1e4, see
+    cosine4_tiles."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -291,19 +330,14 @@ def q45(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
     )
 
-    # the score matrix is evaluated in fixed _Q45_TILE×_Q45_TILE strips: a whole
+    # the score matrix is evaluated in fixed _Q45_TILE×_Q45_TILE tiles: a whole
     # (|i|,|j|) cosine matrix is quadratic in the BLOCK size, and with a
     # fixed block COUNT the block size grows linearly with N — at the 100×
     # scale step (200k vectors, 25k-row blocks) one un-tiled block pair is
     # a 5 GB float64 matrix and 32 concurrent tasks OOMed a 48 GB heap's
-    # whole box. Tiling pins per-task transient memory at a
-    # CONSTANT ~3 tile-sized float64 temporaries (matmul result, outer of
-    # norms, quotient: ~3·_TILE²·8B ≈ 400 MB at 4096) at ANY data scale;
-    # only the linear row payload grows. The arithmetic inside a tile is
-    # kept byte-identical to the un-tiled form (divide by the outer
-    # product, THEN round) — pre-normalizing rows would be cheaper but
-    # changes the IEEE op order and risks knife-edge flips in the 4th
-    # decimal the oracle hash would catch.
+    # whole box. Tiling pins per-task transient memory at a CONSTANT
+    # (~400 MB at 4096, see cosine4_tiles) at ANY data scale; only the
+    # linear row payload grows.
     _TILE = _Q45_TILE  # captured at q45() build time into the kernel closure
     # (patch the module global BEFORE calling q45 — tests do)
 
@@ -317,45 +351,28 @@ def q45(spark: SparkSession, sf_dir: str) -> DataFrame:
         b_ids = b["vec_id"].to_numpy(dtype=np.int64)
         amat = np.array(list(a["embedding"]), dtype=np.float64)
         bmat = np.array(list(b["embedding"]), dtype=np.float64)
-        anorm = np.linalg.norm(amat, axis=1)
-        bnorm = np.linalg.norm(bmat, axis=1)
         a_lab_all = a["label"].to_numpy()
         b_lab_all = b["label"].to_numpy()
         outs = []
-        for s in range(0, len(a_ids), _TILE):
-            for t in range(0, len(b_ids), _TILE):
-                sa, sb = slice(s, s + _TILE), slice(t, t + _TILE)
-                # floor(x*1e4+0.5)/1e4 == the round4 convention
-                # (queries/__init__); tile-invariant: each entry is the
-                # same expression regardless of strip boundaries
-                cos = (
-                    np.floor(
-                        (amat[sa] @ bmat[sb].T)
-                        / np.outer(anorm[sa], bnorm[sb])
-                        * 1e4
-                        + 0.5
-                    )
-                    / 1e4
+        for sa, sb, c4 in cosine4_tiles(amat, bmat, _TILE, _TILE):
+            cos = c4 / 1e4
+            mask = cos >= _NEAR_T
+            if i == j:  # same block: each unordered pair once
+                mask &= a_ids[sa][:, None] < b_ids[sb][None, :]
+            ia, ib = np.nonzero(mask)
+            if not len(ia):
+                continue
+            ga, gb = a_ids[sa][ia], b_ids[sb][ib]
+            outs.append(
+                pd.DataFrame(
+                    {
+                        "vec_a": np.minimum(ga, gb),
+                        "vec_b": np.maximum(ga, gb),
+                        "cosine": cos[ia, ib],
+                        "same_label": (a_lab_all[sa][ia] == b_lab_all[sb][ib]).astype(np.int64),
+                    }
                 )
-                mask = cos >= _NEAR_T
-                if i == j:  # same block: each unordered pair once
-                    mask &= a_ids[sa][:, None] < b_ids[sb][None, :]
-                ia, ib = np.nonzero(mask)
-                if not len(ia):
-                    continue
-                ga, gb = a_ids[sa][ia], b_ids[sb][ib]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": np.minimum(ga, gb),
-                            "vec_b": np.maximum(ga, gb),
-                            "cosine": cos[ia, ib],
-                            "same_label": (
-                                a_lab_all[sa][ia] == b_lab_all[sb][ib]
-                            ).astype(np.int64),
-                        }
-                    )
-                )
+            )
         return pd.concat(outs, ignore_index=True) if outs else empty
 
     return rep.groupBy("bi", "bj").applyInPandas(score_block_pair, out_schema)
@@ -385,9 +402,7 @@ probe AS (
            row_number() OVER (PARTITION BY qid ORDER BY ccos DESC, cell) AS prk
     FROM (
       SELECT q.qid, q.qe, c.cell,
-             floor(list_dot_product(qe, centroid)
-                   / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(centroid, centroid)))
-                   * 10000 + 0.5) / 10000.0 AS ccos
+             {sql_round4(_sql_cosine('qe', 'centroid'))} AS ccos
       FROM q CROSS JOIN cents c))
   WHERE prk = 1
 )
@@ -395,9 +410,7 @@ SELECT qid, cell, vec_id, cosine,
        row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, vec_id) AS rk
 FROM (
   SELECT p.qid, p.cell, e.vec_id,
-         floor(list_dot_product(p.qe, e.emb)
-               / (sqrt(list_dot_product(p.qe, p.qe)) * sqrt(list_dot_product(e.emb, e.emb)))
-               * 10000 + 0.5) / 10000.0 AS cosine
+         {sql_round4(_sql_cosine('p.qe', 'e.emb'))} AS cosine
   FROM probe p JOIN e ON e.label = p.cell AND e.vec_id != p.qid)
 QUALIFY rk <= {_K}
 """
@@ -427,9 +440,7 @@ def q46(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
     qc = q.crossJoin(F.broadcast(cents.select(F.col("label").alias("cell"), "centroid")))
-    ccos = round4(
-        _dot(F.col("qe"), F.col("centroid")) / (_norm(F.col("qe")) * _norm(F.col("centroid")))
-    )
+    ccos = round4(_cosine(F.col("qe"), F.col("centroid")))
     wq = Window.partitionBy("qid").orderBy(F.col("ccos").desc(), "cell")
     probe = (
         qc.select("qid", "qe", "cell", ccos.alias("ccos"))
@@ -440,9 +451,7 @@ def q46(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = F.broadcast(probe).join(e, (F.col("label") == F.col("cell"))).filter(
         F.col("vec_id") != F.col("qid")
     )
-    cosine = round4(
-        _dot(F.col("qe"), F.col("embedding")) / (_norm(F.col("qe")) * _norm(F.col("embedding")))
-    )
+    cosine = round4(_cosine(F.col("qe"), F.col("embedding")))
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), "vec_id")
     return (
         cand.select("qid", "cell", "vec_id", cosine.alias("cosine"))

@@ -360,46 +360,24 @@ def _iso_dates(df: DataFrame) -> DataFrame:
 
 
 def backup_yaml(df: DataFrame, path: str) -> None:
-    """S8: the reference's YAML backup format (migrate.py:14-36) —
-    a block-style list of records, dates ISO-formatted. Each partition
-    emits a valid `- key: value` sequence fragment, and YAML sequences
-    concatenate, so the format stays distributed-writable; canonical sort +
-    coalesce(1) keeps the personal-scale backup human-diffable (drop the
-    coalesce for cluster-scale exports). Serialization runs in Arrow
-    batches (mapInPandas) — a text-format edge, not a relational hot path,
-    so the zero-UDF guarantee for registry queries is unaffected."""
+    """S8: the reference's YAML backup format (migrate.py:14-36) — one
+    block-style list of records in canonical order, dates ISO-formatted,
+    written by the driver to one plain file at `path`. A person can edit
+    it: there is no Spark output directory and no checksum sidecar that an
+    edit would break. A personal ledger fits in driver memory."""
     import yaml
 
-    from pyspark.sql import types as T
-
-    iso = _iso_dates(df).sort(*[c for c in CANONICAL_ORDER if c in df.columns]).coalesce(1)
-
-    def to_yaml(batches):
-        import math
-
-        import pandas as pd
-
-        for pdf in batches:
-            records = []
-            for rec in pdf.to_dict(orient="records"):
-                clean = {
-                    k: (None if (isinstance(v, float) and math.isnan(v)) or v is None else v)
-                    for k, v in rec.items()
-                }
-                records.append(clean)
-            if records:
-                yield pd.DataFrame(
-                    {"value": [yaml.safe_dump(records, sort_keys=False, allow_unicode=True)]}
-                )
-
-    out_schema = T.StructType([T.StructField("value", T.StringType())])
-    iso.mapInPandas(to_yaml, out_schema).write.mode("overwrite").text(path)
+    iso = _iso_dates(df).sort(*[c for c in CANONICAL_ORDER if c in df.columns])
+    records = [r.asDict() for r in iso.collect()]
+    with open(path, "w", encoding="utf-8") as f:
+        yaml.safe_dump(records, f, sort_keys=False, allow_unicode=True)
 
 
 def restore_yaml(spark: SparkSession, path: str, schema) -> DataFrame:
-    """S9: YAML backup → typed frame. Reads whole files (each file
-    is one YAML sequence), parses per file in Arrow batches, then re-types
-    against the explicit schema."""
+    """S9: YAML backup → typed frame. Reads whole files (each file is one
+    YAML sequence; `path` is a backup file, or a directory of them as
+    earlier versions wrote), parses per file in Arrow batches, then
+    re-types against the explicit schema."""
     import yaml
 
     from pyspark.sql import types as T

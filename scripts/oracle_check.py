@@ -4,7 +4,8 @@ Mimics the per-round driver check: fresh SparkSession, run every
 queries() entry at a given sf dir, run the matching oracle_sql() in
 DuckDB over parquet views, compare row count, sorted-column schema,
 and a value hash of the sorted rows. Prints one line per query and a
-summary; exit 1 on any mismatch.
+summary; exit 1 on any mismatch. Each `ok` line carries the value hash,
+so two sweeps can be diffed once the timings are cut off.
 
 Usage: python scripts/oracle_check.py [sf_dir] [query_prefix ...]
 """
@@ -108,15 +109,16 @@ def main():
         problems = []
         if len(rows) != len(orows):
             problems.append(f"rows {len(rows)}!={len(orows)}")
+        h = value_hash(cols, rows)
         if sorted(cols) != sorted(ocols):
             problems.append(f"schema {sorted(cols)}!={sorted(ocols)}")
-        elif value_hash(cols, rows) != value_hash(ocols, orows):
+        elif h != value_hash(ocols, orows):
             problems.append("hash mismatch")
         if problems:
             print(f"FAIL  {name}: {'; '.join(problems)}")
             bad.append(name)
         else:
-            print(f"ok    {name}  ({len(rows)} rows, {dt:.1f}s)")
+            print(f"ok    {name}  ({len(rows)} rows, {h}, {dt:.1f}s)")
     print(f"\n{len(names) - len(bad)}/{len(names)} green")
     if bad:
         print("failing:", ", ".join(bad))

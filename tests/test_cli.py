@@ -123,6 +123,27 @@ def test_cli_backup_format_does_not_follow_the_file_name(cli_env, spark, tmp_pat
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
+def test_cli_backup_is_one_file_a_person_can_edit(cli_env, spark, tmp_path):
+    """The backup is one plain YAML file: hand-edit a category_manual
+    value, and restore brings the edit in. No checksum sidecar is written
+    next to it for the edit to break."""
+    store = str(tmp_path / "store")
+    argv = ["ing-import", cli_env["csv"], "--store", store, "--account-map", cli_env["amap"]]
+    assert main(argv) == 0
+    backup = tmp_path / "backup.yaml"
+    assert main(["backup", "--store", store, "--out", str(backup)]) == 0
+    text = backup.read_text(encoding="utf-8")
+    assert text.count("category_manual: null") == 3
+    backup.write_text(text.replace("category_manual: null", "category_manual: urlaub", 1),
+                      encoding="utf-8")
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["backup.yaml", "store"]
+    restored = str(tmp_path / "restored")
+    assert main(["restore", "--backup", str(backup), "--store", restored]) == 0
+    manual = {r.party: r.category_manual for r in read_store(spark, restored).collect()}
+    # the first record in canonical order is the 15.01. REWE row
+    assert manual == {"REWE Märkte GmbH": "urlaub", "Kreuzwerker": None, "Stadtwerke": None}
+
+
 def test_cli_daily_loop_imports_into_categorized_and_restored_stores(
     cli_env, spark, tmp_path, capsys
 ):

@@ -7,9 +7,12 @@ the cascade, DuckDB for the analytics queries).
 
 from __future__ import annotations
 
+import collections
 import datetime as dt
+import gc
 import hashlib
 import random
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -258,18 +261,34 @@ def test_reader_keeps_account_names_and_shuffled_headers(spark, tmp_path):
 
 
 def _round_trips(monkeypatch):
-    """Counter of py4j commands sent from this thread to the JVM."""
+    """A counter of the py4j commands that `count(call)` sends from the
+    calling thread to the JVM, as a histogram of each command's first line.
+    Cyclic GC is run before the call and held off during it, so deletes of
+    Java handles that earlier tests left behind are not counted."""
     from py4j.clientserver import ClientServerConnection
 
-    sent = [0]
+    me = threading.get_ident()
+    sent = []
     send = ClientServerConnection.send_command
 
-    def counting(self, *args, **kwargs):
-        sent[0] += 1
-        return send(self, *args, **kwargs)
+    def counting(self, command, *args, **kwargs):
+        if threading.get_ident() == me:
+            sent.append(command.split("\n", 1)[0])
+        return send(self, command, *args, **kwargs)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)
-    return sent
+
+    def count(call):
+        gc.collect()
+        gc.disable()
+        sent.clear()
+        try:
+            call()
+        finally:
+            gc.enable()
+        return collections.Counter(sent)
+
+    return count
 
 
 def test_import_path_builds_in_few_round_trips(spark, csv_dir, monkeypatch):
@@ -286,17 +305,15 @@ def test_import_path_builds_in_few_round_trips(spark, csv_dir, monkeypatch):
     one_file = f"{csv_dir}/umsatz_DE11111111111111111111_2024.csv"
     compile_cascade(rules[:10])  # first use resolves JVM classes
     read_ing_csv(spark, one_file, account_map=ACCOUNT_MAP)
-    sent = _round_trips(monkeypatch)
+    count = _round_trips(monkeypatch)
 
-    compile_cascade(rules[:10])
-    small, sent[0] = sent[0], 0
-    assert small > 0  # the counter sees this session's gateway traffic
-    compile_cascade(rules)
-    assert sent[0] <= small + 8, (small, sent[0])
+    small = count(lambda: compile_cascade(rules[:10]))
+    assert small.total() > 0  # the counter sees this session's gateway traffic
+    big = count(lambda: compile_cascade(rules))
+    assert big.total() <= small.total() + 8, (small, big)
 
-    sent[0] = 0
-    read_ing_csv(spark, one_file, account_map=ACCOUNT_MAP)
-    assert sent[0] <= 100, sent[0]
+    csv = count(lambda: read_ing_csv(spark, one_file, account_map=ACCOUNT_MAP))
+    assert csv.total() <= 100, csv
 
 
 def test_pipeline_end_to_end(spark, csv_dir, tmp_path):
@@ -431,12 +448,9 @@ def test_yaml_backup_roundtrip(spark, csv_dir, tmp_path):
     assert got == want and len(got) == 8
     assert all(x.imported_at is not None for x in restored.collect())
 
-    import glob as _g
-
     import yaml as _y
 
-    part = _g.glob(f"{path}/part-*")[0]
-    docs = _y.safe_load(open(part).read())
+    docs = _y.safe_load(open(path).read())
     assert isinstance(docs, list) and len(docs) == 8
     assert docs[0]["book_date"] == str(sorted(want)[0][1])
-    assert open(part).read().lstrip().startswith("- ")  # block-style list
+    assert open(path).read().lstrip().startswith("- ")  # block-style list

@@ -33,16 +33,13 @@ def formatted_plan(spark, name: str) -> str:
 def test_no_python_row_udfs_in_plan(spark, name):
     plan = plan_of(spark, name)
     assert "BatchEvalPython" not in plan, f"{name} ships rows through Python row UDFs"
-    # Scalar Python UDFs (ArrowEvalPython) are never allowed. MapInPandas —
-    # Arrow-batched, vectorized — is allowed ONLY for the dense-linear-algebra
-    # exception (see pandaspark/vectorops.py docstring) and the stubbed
-    # multimodal module; everything else must stay JVM-side.
+    # Scalar Python UDFs (ArrowEvalPython) are never allowed. Pandas
+    # kernels — Arrow-batched, vectorized — are allowed ONLY for the
+    # dense-linear-algebra exception (q45, q142 and q143 score through
+    # similarity.cosine4_tiles; its docstring gives the rationale) and for
+    # q201's multimodal codec round trip (WAV encode/decode has no Catalyst
+    # expression); everything else must stay JVM-side.
     assert "ArrowEvalPython" not in plan, f"{name} uses Python UDFs in the hot path"
-    # q201's kernel is the multimodal codec round trip (WAV encode/decode
-    # has no Catalyst expression) — file-granularity groups, Arrow-batched.
-    # q142/q143 share the dense-linalg block-NN kernel (pipeline10.py):
-    # the HOF-fold form of the same all-pairs cosine ran 30x slower at 25x
-    # data — same exception class as q45's block matmul.
     _PANDAS_KERNEL_ALLOWED = {
         "q45_cosine_neardup",
         "q201_media_pipeline",

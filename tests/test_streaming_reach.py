@@ -16,6 +16,9 @@ reason they stay.
 Every defaulted parameter of those definitions must be set by a program
 call; a parameter no program call sets is a constant. Test seams are
 listed by name with the reason they stay.
+
+The cosine has one definition per engine, and its building blocks appear
+nowhere else in the package.
 """
 
 from __future__ import annotations
@@ -74,8 +77,6 @@ TEST_REFERENCES = {
     "encode_bmp": "builds the BMP fixtures of the decode_bytes tests",
     "encode_ppm": "builds the PPM fixtures of the decode_bytes tests",
     "encode_png": "builds the PNG fixtures of the decode_bytes tests",
-    "cosine_topk_arrow": "ROADMAP item 7 gives them a caller or deletes them",
-    "load_query_vectors": "ROADMAP item 7 gives them a caller or deletes them",
 }
 
 
@@ -144,6 +145,32 @@ def test_every_definition_is_reached_from_a_program_path():
     assert sorted(stray) == [], f"reached only from tests: {sorted(stray)}"
     # a listed reference that gains a caller leaves the list
     assert sorted(TEST_REFERENCES.keys() - unlisted) == []
+
+
+# the one cosine per engine (similarity.py), and the building block only it uses
+COSINE_HELPERS = {
+    "_sql_cosine": lambda n: isinstance(n, ast.Constant) and "list_dot_product(" in str(n.value),
+    "cosine4_tiles": lambda n: isinstance(n, ast.Call) and ast.unparse(n.func) == "np.outer",
+    "_cosine": lambda n: isinstance(n, ast.Call) and ast.unparse(n.func) == "_norm",
+}
+
+
+def test_one_cosine_per_engine():
+    """The 4-dp cosine is written once per engine: DuckDB text in
+    _sql_cosine, a Catalyst expression in _cosine, a numpy tile kernel in
+    cosine4_tiles. A list_dot_product( string, an np.outer( call or a
+    _norm( call anywhere else in the package is a second copy."""
+    stray = []
+    for path in sorted(PKG.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            owner = getattr(top, "name", None)
+            stray += [
+                f"{path.relative_to(ROOT)}:{node.lineno} outside {helper}"
+                for node in ast.walk(top)
+                for helper, uses in COSINE_HELPERS.items()
+                if owner != helper and uses(node)
+            ]
+    assert stray == []
 
 
 _NOQA_F401 = re.compile(r"# noqa: [\w,]*F401")
