@@ -13,6 +13,7 @@ import json
 import os
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -76,6 +77,7 @@ def main() -> None:
     bench_t0 = time.perf_counter()
     spark_passes = 0
     timings: dict[str, float] = {}
+    errors: dict[str, str] = {}  # query name -> exception class
     # Inter-query hygiene, OUTSIDE the timed region (session.release):
     # without it, late-alphabet queries are charged rent for ~100
     # predecessors' cached checkpoint blocks — the same contamination
@@ -110,13 +112,20 @@ def main() -> None:
                     spark_passes = min(spark_passes, r)
                     break
             t0 = time.perf_counter()
-            df = spec.fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            try:
+                spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            except Exception as e:
+                # one failing query costs its own timing, not the artifact:
+                # the sweep goes on and the failure is named in the detail
+                traceback.print_exc()
+                errors[name] = type(e).__name__
+                timings.pop(name, None)
+                release(spark, i)
+                break
             dt = round(time.perf_counter() - t0, 3)
             timings[name] = min(timings.get(name, dt), dt)
             if r == 0:
                 pass1_sum += dt
-            del df
             release(spark, i)
 
     total = round(sum(timings.values()), 3)
@@ -192,20 +201,23 @@ def main() -> None:
         "floor_est": floor_est,
         "slowest3": slowest,
     }
-    if duck:
+    # a query that failed on Spark has no timing: leave it out of both sides
+    common = [n for n in duck if n in timings]
+    if common:
         # short keys on the printed line (full-name triple incl. n_common
         # in BENCH_DETAIL.json) — headroom for a ~165-query registry
-        summary["spark_common"] = round(sum(timings[n] for n in duck), 3)
-        summary["duckdb_common"] = round(sum(duck.values()), 3)
+        summary["spark_common"] = round(sum(timings[n] for n in common), 3)
+        summary["duckdb_common"] = round(sum(duck[n] for n in common), 3)
         detail_extra["spark_total_common"] = summary["spark_common"]
         detail_extra["duckdb_total_common"] = summary["duckdb_common"]
-        detail_extra["n_common"] = len(duck)
+        detail_extra["n_common"] = len(common)
     with open(detail_path, "w") as f:
         json.dump(
             {
                 **summary,
                 **detail_extra,
                 "queries": timings,
+                "errors": errors,
                 "duckdb_queries": duck,
                 "comparison_note": (
                     "DuckDB = the reference's own SQL engine on identical parquet. "

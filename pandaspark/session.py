@@ -36,7 +36,21 @@ def get_spark(app_name: str = "pandaspark", aqe: bool = True) -> SparkSession:
     the 330-rule cascade take ~23,700 round trips (~5.5 s on 4 vCPUs)
     before any job ran. With it off, an analysis error loses PySpark's
     `== DataFrame ==` call-site block but keeps its message and the JVM
-    stack trace."""
+    stack trace.
+
+    Streaming checkpoints go through Spark's FileSystem-based checkpoint
+    manager. pip PySpark ships Hadoop without its native library, so the
+    local FileSystem runs a `chmod` process (RawLocalFileSystem.
+    setPermission) for each file and directory it creates, and the default
+    FileContext-based manager's rename also runs `readlink`
+    (FileUtil.readLink) for each checkpoint file it commits: 2-6 ms of
+    driver JVM time per process. q165 at sf0.001 on 4 shuffle partitions
+    spawned 152 (112 readlink, 40 chmod); with this manager 40 chmod, and
+    32 once run_to_memory also drops the checksum sidecars
+    (tests/test_streaming_checkpoints.py pins the count). This manager's
+    rename is FileSystem.rename, which is atomic on local disk and on
+    HDFS, so durable checkpoints keep their guarantee; an object store
+    needs the same care under either manager (docs/SCALING.md)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     return (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -56,6 +70,11 @@ def get_spark(app_name: str = "pandaspark", aqe: bool = True) -> SparkSession:
         # Metaspace cost is a few KB per entry — negligible
         .config("spark.sql.codegen.cache.maxEntries", "5000")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.ui.enabled", "false")
         # no stderr progress bars: the bench driver captures a bounded tail
         # of merged output, and \r-spam competes with the JSON result line

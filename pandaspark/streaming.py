@@ -60,6 +60,12 @@ _LEFT_TYPE = "click"
 _RIGHT_TYPE = "view"
 _LOOKBACK = "30 minutes"
 
+# the session confs a bounded replay starts with (run_to_memory)
+_REPLAY_CONFS = {
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
+    "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+}
+
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source event stream with the same confs and two-generation ts
@@ -81,13 +87,38 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_to_memory(df: DataFrame, prefix: str, mode: str = "complete") -> DataFrame:
     """Drive a bounded stream to completion into a uniquely-named memory
     sink (callers run each query repeatedly in one session).
-    Aggregating plans use complete mode; joins/maps append."""
+    Aggregating plans use complete mode; joins/maps append.
+
+    A bounded replay starts with _REPLAY_CONFS, set on the session around
+    start() and put back afterwards, also when the query fails:
+    - no checksum sidecar per checkpoint file. The checkpoint is a temp
+      directory that is deleted at stop(), so nothing ever reads the
+      checksums back.
+    - no trailing no-data micro-batch. It only advances the watermark and
+      evicts state, and every row of a bounded replay's output (complete
+      mode, or an append-mode join or dedup) is emitted by the batch that
+      read it: q177 ran 2 batches and q178 2, now 1 each, with the same
+      value hashes.
+    Each file the checkpoint writes costs the driver JVM spawned processes
+    (see get_spark): the checksum sidecars made 8 of q165's 40 at sf0.001
+    on 4 shuffle partitions. Durable streams (_stream_upsert_to_store,
+    stream_cdc_apply) keep both defaults: their checkpoint outlives the
+    query, and on an unbounded stream the no-data batch is what finalizes
+    windows once the watermark passes them."""
     name = f"{prefix}_{next(_uid)}"
-    q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+    conf = df.sparkSession.conf
+    old = {k: conf.get(k) for k in _REPLAY_CONFS}
     try:
-        q.processAllAvailable()
+        for k, v in _REPLAY_CONFS.items():
+            conf.set(k, v)
+        q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     finally:
-        q.stop()
+        for k, v in old.items():
+            conf.set(k, v)
     return df.sparkSession.table(name)
 
 

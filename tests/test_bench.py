@@ -130,3 +130,48 @@ def test_release_unpersists_blocking_and_collects_every_15th_call(monkeypatch):
         assert len(gcs) == 2 * ((i + 1) // 15)
     # the Python GC drops the py4j handles before the JVM GC runs
     assert gcs == ["py", "jvm"] * 2
+
+
+def test_sweep_goes_past_a_failing_query(tmp_path, monkeypatch, capsys):
+    """A query that raises is named under `errors` in BENCH_DETAIL.json and
+    left out of the timings; the sweep still times the others and prints
+    its line. No JVM: the session and a two-entry registry are stubs."""
+    from types import SimpleNamespace
+
+    import bench
+
+    class _Chain:
+        """Stands in for the session, a DataFrame and their writers: every
+        attribute and every call is the stub again."""
+
+        def __getattr__(self, name):
+            return self
+
+        def __call__(self, *a, **k):
+            return self
+
+    def broken(spark, sf_dir):
+        raise ValueError("no such column")
+
+    monkeypatch.setattr(bench, "bench_session", lambda sf_dir, app: _Chain())
+    monkeypatch.setattr(bench, "release", lambda spark, i: None)
+    monkeypatch.setattr(
+        bench,
+        "REGISTRY",
+        {
+            "q01_fine": SimpleNamespace(fn=lambda spark, sf_dir: _Chain(), oracle=None),
+            "q02_broken": SimpleNamespace(fn=broken, oracle=None),
+        },
+    )
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path / "sf0.1"))
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_DUCKDB", "0")
+
+    bench.main()
+
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert line["n_queries"] == 1 and set(line["queries"]) == {"q01"}
+    with open(tmp_path / "BENCH_DETAIL.json") as f:
+        detail = json.load(f)
+    assert detail["errors"] == {"q02_broken": "ValueError"}
+    assert set(detail["queries"]) == {"q01_fine"}

@@ -102,54 +102,88 @@ def test_write_store_never_clobbers_previous_snapshot(spark, tmp_path):
     assert spark.read.parquet(f"{root}/v000001").count() == first == 50
 
 
-def test_stream_upsert_chains_micro_batches(spark, tmp_path):
-    """The lost-batch regression: with maxFilesPerTrigger=1 forcing one
-    micro-batch per file, every batch's merge must be visible to the next —
-    the final store must equal folding the same merge over the files in
-    batch mode. The old implementation wrote `store_path+'_next'` and never
-    swapped, so all but the last batch vanished."""
+def _event_slices(spark):
+    """Three event slices, the contents of files f0..f2: disjoint, except
+    that f2 RE-DELIVERS f0's rows with value bumped by 1000 — a merge must
+    update them, not duplicate them."""
     events = load(spark, SF_DIR, "events").limit(300).cache()
-    src = tmp_path / "src"
-    # three files: disjoint event slices, except file 3 RE-DELIVERS file 1's
-    # rows with value bumped — the merge must update, not duplicate
     s1 = events.filter(F.col("event_id") % 3 == 0)
     s2 = events.filter(F.col("event_id") % 3 == 1)
     s3 = s1.withColumn("value", F.col("value") + 1000.0)
-    for i, s in enumerate((s1, s2, s3)):
-        s.coalesce(1).write.parquet(str(src / f"f{i}"))
+    return [s1, s2, s3]
 
-    def merge(store, batch):
-        # key-based upsert, batch wins — idempotent, like the fingerprint
-        # MERGE that store.upsert_to_path commits
-        return store.join(batch, "event_id", "left_anti").unionByName(batch)
 
-    root = str(tmp_path / "stream_store")
+def _merge(store, batch):
+    # key-based upsert, batch wins — idempotent, like the fingerprint
+    # MERGE that store.upsert_to_path commits
+    return store.join(batch, "event_id", "left_anti").unionByName(batch)
+
+
+def _run_upsert_stream(spark, src, root: str, checkpoint: str) -> None:
+    """Drive _stream_upsert_to_store over every file under `src`, one
+    micro-batch per file, until it has seen them all; then stop it."""
     q = _stream_upsert_to_store(
-        paced_stream(spark, str(src) + "/f*"),
-        root,
-        merge,
-        checkpoint=str(tmp_path / "ck"),
+        paced_stream(spark, str(src) + "/f*"), root, _merge, checkpoint=checkpoint
     )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
 
-    # batch-path fold over the same three files in order
+
+def _assert_store_is_batch_fold(spark, src, root: str, slices) -> None:
+    """The store at `root` equals folding _merge over src/f0..f2 in batch
+    mode, and f2's re-delivered rows carry its bumped values."""
     want = None
     for i in range(3):
         b = spark.read.parquet(str(src / f"f{i}"))
-        want = b if want is None else merge(want, b)
+        want = b if want is None else _merge(want, b)
 
     got = spark.read.parquet(latest_commit_path(spark, root))
-    assert got.count() == want.count() == s1.count() + s2.count()
+    assert got.count() == want.count() == slices[0].count() + slices[1].count()
     g = {r.event_id: r.value for r in got.collect()}
     w = {r.event_id: r.value for r in want.collect()}
     assert g == w
     # re-delivered rows took the batch value (+1000), proving batch 3 saw
     # batch 1's rows in the store it read
     bumped = [v for v in g.values() if v >= 1000.0]
-    assert len(bumped) == s1.count()
+    assert len(bumped) == slices[0].count()
+
+
+def test_stream_upsert_chains_micro_batches(spark, tmp_path):
+    """The lost-batch regression: with maxFilesPerTrigger=1 forcing one
+    micro-batch per file, every batch's merge must be visible to the next —
+    the final store must equal folding the same merge over the files in
+    batch mode. The old implementation wrote `store_path+'_next'` and never
+    swapped, so all but the last batch vanished."""
+    src, slices = tmp_path / "src", _event_slices(spark)
+    for i, s in enumerate(slices):
+        s.coalesce(1).write.parquet(str(src / f"f{i}"))
+    root = str(tmp_path / "stream_store")
+    _run_upsert_stream(spark, src, root, str(tmp_path / "ck"))
+    _assert_store_is_batch_fold(spark, src, root, slices)
+
+
+def test_stream_upsert_restarts_from_its_checkpoint(spark, tmp_path):
+    """A durable stream stopped after file 1 and restarted on the same
+    checkpoint once files 2 and 3 arrive resumes where it stopped: the
+    offset and commit logs tell the restarted query which file it has
+    already applied. The store ends as the batch fold, and there is one
+    committed snapshot version per micro-batch, so no batch ran twice."""
+    src, slices = tmp_path / "src", _event_slices(spark)
+    root, ck = str(tmp_path / "stream_store"), tmp_path / "ck"
+    slices[0].coalesce(1).write.parquet(str(src / "f0"))
+    _run_upsert_stream(spark, src, root, str(ck))
+    assert latest_commit_path(spark, root).endswith("v000001")
+
+    for i in (1, 2):
+        slices[i].coalesce(1).write.parquet(str(src / f"f{i}"))
+    _run_upsert_stream(spark, src, root, str(ck))
+
+    _assert_store_is_batch_fold(spark, src, root, slices)
+    batches = sorted(int(n) for n in os.listdir(ck / "commits") if n.isdigit())
+    assert batches == [0, 1, 2]
+    assert latest_commit_path(spark, root).endswith(f"v{len(batches):06d}")
 
 
 def test_upsert_to_path_folds_batches_through_snapshots(spark, tmp_path):
