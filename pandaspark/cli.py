@@ -81,10 +81,7 @@ def cmd_ing_import(args) -> int:
     if args.account_map:
         with open(args.account_map) as f:
             account_map = json.load(f)
-    frames = [read_ing_csv(spark, p, account_map=account_map) for p in args.csvs]
-    raw = frames[0]
-    for f in frames[1:]:
-        raw = raw.unionByName(f)
+    raw = read_ing_csv(spark, args.csvs, account_map=account_map)
     batch = merge_import(raw.limit(0), raw)  # batch-internal natural-key dedup
     rules = _load_rules(args.rules)
     if rules:

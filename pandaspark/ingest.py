@@ -53,12 +53,13 @@ CSV_COLUMNS = [
 
 def read_ing_csv(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     account_map: dict[str, str] | None = None,
 ) -> DataFrame:
-    """Path (glob ok) of ING CSV exports → canonical 8-column frame:
-    account, book_date, valuta_date, party, book_text, purpose, amount,
-    balance. Fully distributed; preamble length may differ per file.
+    """Path (glob ok) or paths of ING CSV exports → canonical 8-column
+    frame: account, book_date, valuta_date, party, book_text, purpose,
+    amount, balance. Fully distributed; preamble length may differ per
+    file.
 
     Built as a few SQL-text projections over the scan rather than a
     withColumn chain: the same expressions for a handful of py4j round

@@ -7,9 +7,30 @@ of built-in ops — no UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+def _rename_right(
+    left: DataFrame,
+    right: DataFrame,
+    right_on: Column | str,
+    right_time: str,
+    tiebreak: list[str] | None,
+) -> tuple[DataFrame, Column | str, str, list[str]]:
+    """The as-of joins' right side with `_right` appended to every column
+    name it shares with `left` (so the joined frame has unique names), and
+    the right-side column names passed along renamed to match."""
+    renames = {c: c + "_right" for c in right.columns if c in left.columns}
+    if isinstance(right_on, str):
+        right_on = renames.get(right_on, right_on)
+    return (
+        right.withColumnsRenamed(renames),
+        right_on,
+        renames.get(right_time, right_time),
+        [renames.get(c, c) for c in (tiebreak or [])],
+    )
 
 
 def asof_join(
@@ -31,15 +52,9 @@ def asof_join(
     form — same semantics (tests assert exact equality), bounded fanout.
     This function is the semantic anchor the scale variants must match.
     """
-    # rename colliding right columns so the joined frame has unique names
-    renames = {c: c + "_right" for c in right.columns if c in left.columns}
-    for old, new in renames.items():
-        right = right.withColumnRenamed(old, new)
-    right_time = renames.get(right_time, right_time)
-    tiebreak = [renames.get(c, c) for c in (tiebreak or [])]
-    if isinstance(right_on, str):
-        right_on = renames.get(right_on, right_on)
-
+    right, right_on, right_time, tiebreak = _rename_right(
+        left, right, right_on, right_time, tiebreak
+    )
     lt, rt = left[left_time], right[right_time]
     lkey = left[left_on] if isinstance(left_on, str) else left_on
     rkey = right[right_on] if isinstance(right_on, str) else right_on
@@ -76,14 +91,9 @@ def asof_join_bucketed(
          carry), else the carry row; unmatched left rows keep nulls (LEFT
          join semantics, same as the anchor).
     """
-    renames = {c: c + "_right" for c in right.columns if c in left.columns}
-    for old, new in renames.items():
-        right = right.withColumnRenamed(old, new)
-    right_time = renames.get(right_time, right_time)
-    tiebreak = [renames.get(c, c) for c in (tiebreak or [])]
-    if isinstance(right_on, str):
-        right_on = renames.get(right_on, right_on)
-
+    right, right_on, right_time, tiebreak = _rename_right(
+        left, right, right_on, right_time, tiebreak
+    )
     right = right.filter(F.col(right_time).isNotNull())
     rkey = right[right_on] if isinstance(right_on, str) else right_on
     lkey = left[left_on] if isinstance(left_on, str) else left_on
@@ -185,28 +195,32 @@ def latest_per_key(
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
-def sequential_ids(
-    df: DataFrame,
-    order_cols: list[str],
-    alias: str = "tid",
-    start: int = 1,
-    total_alias: str | None = None,
+def _sum_before(col: str, w: WindowSpec) -> Column:
+    """Exclusive prefix sum of `col` in `w`'s order: the sum over the rows
+    before this one, 0 for the first row."""
+    prior = w.rowsBetween(Window.unboundedPreceding, -1)
+    return F.coalesce(F.sum(col).over(prior), F.lit(0).cast("long"))
+
+
+def _two_phase(
+    df: DataFrame, order_cols: list[str], value: Column | None = None
 ) -> DataFrame:
-    """Globally-sequential row numbers in `order_cols` order WITHOUT a
-    single-partition window — the 100 TB form of SURVEY.md W2/P13
-    (known-hard list §7.4 item 4); reference semantic: panda.py:685-691.
+    """Global prefix counts (and prefix sums of an exact `value`) in
+    `order_cols` order WITHOUT a single-partition window: the 100 TB form
+    of SURVEY.md W1/W2/P13 (known-hard list §7.4 item 4) under
+    sequential_ids and ranked_running_total.
 
     Phase 1: repartitionByRange gives range-ordered partitions (equal keys
-    co-located, so numbering is deterministic for any total-order key);
-    row_number runs per partition in parallel. Phase 2: per-partition
-    counts prefix-sum into broadcast offsets — the only single-partition
-    work is a window over n_partitions rows. Exact-equal to the global
-    window form by construction (asserted in tests).
-
-    total_alias: when set, the output also carries the TOTAL row count in
-    that column — it falls out of the phase-2 counts frame for free, so
-    consumers that need n (quantile binning, share-of-total) skip a
-    separate count job over the ranked frame."""
+    co-located, so the numbering is deterministic for any total-order key);
+    row_number, and the local cumsum of `value`, run per partition in
+    parallel. Phase 2: per-partition counts (and value totals) prefix-sum
+    into broadcast offsets; the only single-partition work is a window over
+    n_partitions rows. Returns `df`'s rows with `_pid`, `_rn` (1-based
+    within the partition), `_n_off` (rows in earlier partitions) and
+    `_n_all` (all rows); with `value` also `_v`, `_local_cum` and `_v_off`
+    (the value total of earlier partitions). Unused columns prune out of
+    the plan. `value` must be exact (integer units) for partial sums plus
+    offsets to equal the sequential total bit-for-bit."""
     # CHECKPOINT, not just lineage: repartitionByRange picks its range
     # bounds by sampling with a seed derived from the physical RDD id, so
     # two independent evaluations of the same plan can land rows in
@@ -219,83 +233,53 @@ def sequential_ids(
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint(eager=False)
     )
-    part_w = Window.partitionBy("_pid").orderBy(
+    row_w = Window.partitionBy("_pid").orderBy(
         *[F.col(c).asc_nulls_first() for c in order_cols]
     )
-    counts = ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
-    offsets = counts.withColumn(
-        "_offset",
-        F.coalesce(
-            F.sum("_n").over(
-                Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0).cast("long"),
-        ),
-    )
-    if total_alias is not None:
-        offsets = offsets.withColumn(
-            total_alias,
-            F.sum("_n").over(
-                Window.orderBy("_pid").rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            ),
-        )
-    offsets = offsets.drop("_n")
-    return (
-        ranged.withColumn("_rn", F.row_number().over(part_w))
-        .join(F.broadcast(offsets), "_pid")
-        .withColumn(alias, (F.col("_rn") + F.col("_offset") + F.lit(start - 1)).cast("long"))
-        .drop("_pid", "_rn", "_offset")
-    )
+    windows = {"_rn": F.row_number().over(row_w)}
+    totals = [F.count(F.lit(1)).alias("_n")]
+    off_w = Window.orderBy("_pid")
+    prefixes = [
+        _sum_before("_n", off_w).alias("_n_off"),
+        F.sum("_n")
+        .over(off_w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .alias("_n_all"),
+    ]
+    if value is not None:
+        ranged = ranged.withColumn("_v", value)
+        cum_w = row_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        windows["_local_cum"] = F.sum("_v").over(cum_w)
+        totals.append(F.sum("_v").alias("_part_total"))
+        prefixes.append(_sum_before("_part_total", off_w).alias("_v_off"))
+    # one Window operator per phase: row_number and the cumsum share the
+    # _pid-keyed one, the count and value prefixes the offsets one
+    local = ranged.withColumns(windows)
+    offsets = local.groupBy("_pid").agg(*totals).select("_pid", *prefixes)
+    return local.join(F.broadcast(offsets), "_pid")
 
 
-def two_phase_running_total(
-    df: DataFrame, order_cols: list[str], value: Column, alias: str = "running_total"
+def sequential_ids(
+    df: DataFrame,
+    order_cols: list[str],
+    alias: str = "tid",
+    start: int = 1,
+    total_alias: str | None = None,
 ) -> DataFrame:
-    """Globally-ordered cumulative sum WITHOUT a single-partition window —
-    the 100 TB form of SURVEY.md W1 (known-hard list §7.4 item 4).
+    """Globally-sequential row numbers from `start` in `order_cols` order,
+    two-phase (_two_phase) — reference semantic: panda.py:685-691.
+    Exact-equal to the global window form by construction (asserted in
+    tests).
 
-    Phase 1: repartitionByRange on the sort key gives range-ordered
-    partitions; a window partitioned by spark_partition_id computes each
-    partition's local cumsum in parallel. Phase 2: per-partition totals
-    (one tiny row per partition) get prefix-summed and broadcast back as
-    offsets. The only single-partition work is the offsets window over
-    n_partitions rows. `value` must be exact (integer cents) so that
-    partial sums + offsets equal the sequential total bit-for-bit;
-    tests/test_operators.py asserts exact equality with the naive global
-    window.
-    """
-    # Same checkpoint-the-layout rule as sequential_ids: the offsets job
-    # and the cumsum job must see ONE range-partitioned materialization
-    # (range bounds are sampled per physical evaluation and not stable
-    # across re-evaluations of the plan).
-    ranged = (
-        df.repartitionByRange(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    part_w = Window.partitionBy("_pid").orderBy(
-        *[F.col(c).asc_nulls_first() for c in order_cols]
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local = ranged.withColumn("_v", value).withColumn(
-        "_local_cum", F.sum("_v").over(part_w)
-    )
-    totals = local.groupBy("_pid").agg(F.sum("_v").alias("_part_total"))
-    offsets = totals.withColumn(
-        "_offset",
-        F.coalesce(
-            F.sum("_part_total").over(
-                Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0).cast("long"),
-        ),
-    ).select("_pid", "_offset")
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(alias, F.col("_local_cum") + F.col("_offset"))
-        .drop("_pid", "_v", "_local_cum", "_offset")
-    )
+    total_alias: when set, the output also carries the TOTAL row count in
+    that column — it falls out of the phase-2 counts frame for free, so
+    consumers that need n (quantile binning, share-of-total) skip a
+    separate count job over the ranked frame."""
+    out = _two_phase(df, order_cols)
+    if total_alias is not None:
+        out = out.withColumnRenamed("_n_all", total_alias)
+    return out.withColumn(
+        alias, (F.col("_rn") + F.col("_n_off") + F.lit(start - 1)).cast("long")
+    ).drop("_pid", "_rn", "_n_off", "_n_all")
 
 
 def ranked_running_total(
@@ -306,52 +290,18 @@ def ranked_running_total(
 ) -> DataFrame:
     """Global sequential ids (`rk`, from 1) AND the globally-ordered
     running total of `value` over the SAME total order, in ONE two-phase
-    pass — the fusion of sequential_ids + two_phase_running_total for
-    consumers that need both (e.g. vocabulary-coverage curves: rank terms
-    by frequency and accumulate mass along the same order).
-
-    Composing the two operators pays the range shuffle, the layout
-    checkpoint, the per-partition window, and the offsets job TWICE over
-    an identical ordering; here phase 1 computes row_number and the local
-    cumsum over one range-partitioned materialization, and phase 2's
-    offsets frame carries both the count prefix and the value-sum prefix
-    (still n_partitions rows — the only partition-less window input).
-    Exact-equal to the composed form by construction; asserted in
-    tests/test_operators.py. `value` must be exact (integer units) for
-    partial sums + offsets to equal the sequential total bit-for-bit."""
-    ranged = (
-        df.repartitionByRange(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    order = [F.col(c).asc_nulls_first() for c in order_cols]
-    row_w = Window.partitionBy("_pid").orderBy(*order)
-    sum_w = row_w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local = (
-        ranged.withColumn("_v", value)
-        .withColumn("_rn", F.row_number().over(row_w))
-        .withColumn("_local_cum", F.sum("_v").over(sum_w))
-    )
-    totals = local.groupBy("_pid").agg(
-        F.count(F.lit(1)).alias("_n"), F.sum("_v").alias("_part_total")
-    )
-    off_w = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "_pid",
-        F.coalesce(F.sum("_n").over(off_w), F.lit(0).cast("long")).alias("_n_off"),
-        F.coalesce(F.sum("_part_total").over(off_w), F.lit(0).cast("long")).alias(
-            "_v_off"
-        ),
-    )
+    pass (_two_phase) — for consumers that need both (e.g. vocabulary-
+    coverage curves: rank terms by frequency and accumulate mass along the
+    same order). The range shuffle, the layout checkpoint, the
+    per-partition window and the offsets job are paid once for both
+    columns. Exact-equal to the global windows (row_number and sum over
+    Window.orderBy); asserted in tests/test_operators.py. `value` must be
+    exact (integer units)."""
     return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(
-            "rk",
-            # sequential_ids' id expression at start=1
-            (F.col("_rn") + F.col("_n_off") + F.lit(0)).cast("long"),
-        )
+        _two_phase(df, order_cols, value)
+        .withColumn("rk", (F.col("_rn") + F.col("_n_off")).cast("long"))
         .withColumn(total_alias, F.col("_local_cum") + F.col("_v_off"))
-        .drop("_pid", "_v", "_rn", "_local_cum", "_n_off", "_v_off")
+        .drop("_pid", "_v", "_rn", "_local_cum", "_n_off", "_n_all", "_v_off")
     )
 
 
@@ -409,12 +359,7 @@ def grouped_quantiles_bucket_refine(
     _require_integral(vals, "_v", "grouped_quantiles_bucket_refine(value)")
     bucket = F.shiftright(F.col("_v").cast("long"), bucket_bits)
     ps = vals.groupBy("_g", bucket.alias("_b")).agg(F.count(one).alias("_s"))
-    off_w = (
-        Window.partitionBy("_g").orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off = ps.withColumn(
-        "_off", F.coalesce(F.sum("_s").over(off_w), F.lit(0).cast("long"))
-    )
+    off = ps.withColumn("_off", _sum_before("_s", Window.partitionBy("_g").orderBy("_b")))
     tot = ps.groupBy("_g").agg(F.sum("_s").alias("_n"))
     q_structs = F.array(*[F.struct(F.lit(float(q)).alias("_q")) for q in qs])
     pos = F.col("_q") * (F.col("_n") - 1).cast("double")
@@ -532,12 +477,7 @@ def grouped_weighted_median(
     _require_integral(vals, "_w", "grouped_weighted_median(weight)")
     bucket = F.shiftright(F.col("_v").cast("long"), bucket_bits)
     ps = vals.groupBy("_g", bucket.alias("_b")).agg(F.sum("_w").alias("_s"))
-    off_w = (
-        Window.partitionBy("_g").orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off = ps.withColumn(
-        "_off", F.coalesce(F.sum("_s").over(off_w), F.lit(0).cast("long"))
-    )
+    off = ps.withColumn("_off", _sum_before("_s", Window.partitionBy("_g").orderBy("_b")))
     tw = ps.groupBy("_g").agg(F.sum("_s").alias("_tw"))
     meta = (
         off.join(F.broadcast(tw), "_g")

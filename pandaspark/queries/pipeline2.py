@@ -28,9 +28,10 @@ from .text import _char_shingles, _norm_text
 # token lands: seq_id = exclusive-prefix-sum(tokens) div B — the
 # concatenate-then-chunk semantics every LLM data loader uses. The prefix
 # sum is a per-language window; at 100 TB the production form is
-# operators.two_phase_running_total (range partitions + broadcast prefix
-# offsets, exact-equal by test) — the registered query keeps the window
-# form, whose partition key (lang) matches the report's grouping key.
+# the running total of operators.ranked_running_total (range partitions
+# + broadcast prefix offsets, exact-equal by test) — the registered query
+# keeps the window form, whose partition key (lang) matches the report's
+# grouping key.
 
 _PACK_BUDGET = 2048
 

@@ -29,10 +29,10 @@ visible; the only shuffles carry content hashes and 20 aggregate rows.
 q123 n-gram vocabulary coverage: "how many distinct 3-grams cover 50 / 90
 / 99% of all 3-gram occurrences" — the curve a tokenizer-vocabulary
 decision reads off. The global ranking and cumulative sum run through the
-repo's two-phase machinery (operators.sequential_ids +
-two_phase_running_total: range-partitioned, no single-partition window
-over the vocab — SURVEY §7.4 item 4), so the op survives a vocabulary
-that does not fit one task.
+repo's two-phase machinery (operators.ranked_running_total:
+range-partitioned, no single-partition window over the vocab — SURVEY
+§7.4 item 4), so the op survives a vocabulary that does not fit one
+task.
 
 q124 bag-of-words dedup groups: exact dedup (q30) misses documents whose
 words were reordered; hashing the SORTED distinct-token set catches them.
@@ -416,8 +416,8 @@ def q123(spark: SparkSession, sf_dir: str) -> DataFrame:
     # global rank + global cumsum WITHOUT a single-partition window, FUSED:
     # both ride one range partitioning of the (count desc, gram) total
     # order — one shuffle + one layout checkpoint + one offsets job where
-    # the composed sequential_ids->two_phase_running_total form paid each
-    # twice (measured 1.82 s -> 1.45 s at sf0.1; exact-equal by test)
+    # composing a ranking pass and a running-total pass paid each twice
+    # (measured 1.82 s -> 1.45 s at sf0.1; exact-equal by test)
     cum = operators.ranked_running_total(
         freq, ["neg", "tok"], F.col("cnt"), total_alias="cum"
     )

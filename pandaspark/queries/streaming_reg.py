@@ -235,11 +235,16 @@ FROM latest WHERE rn = 1 AND event_type <> 'error'
     "foreachBatch CDC apply (upsert/tombstone + atomic snapshot commits) vs latest-per-key SQL",
 )
 def q179(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import atexit
+    import shutil
     import tempfile
 
     from . import load
 
     work = tempfile.mkdtemp(prefix="q179_cdc_")
+    # the returned frame reads the store lazily: the directory goes when
+    # the interpreter exits
+    atexit.register(shutil.rmtree, work, True)
     feed_dir, store_dir, ckpt = f"{work}/feed", f"{work}/store", f"{work}/ckpt"
     feed = (
         load(spark, sf_dir, "events")

@@ -206,7 +206,6 @@ def merge_into(
     *,
     matched_update: dict[str, str] | None = None,
     matched_delete: str | None = None,
-    not_matched_insert: dict[str, str] | bool = True,
     not_matched_insert_condition: str | None = None,
     not_matched_by_source_delete: str | None = None,
 ) -> DataFrame:
@@ -218,14 +217,12 @@ def merge_into(
         WHEN MATCHED AND <matched_delete>            THEN DELETE
         WHEN MATCHED                                 THEN UPDATE SET <matched_update>
         WHEN NOT MATCHED [BY TARGET]
-          AND <not_matched_insert_condition>         THEN INSERT <not_matched_insert>
+          AND <not_matched_insert_condition>         THEN INSERT
         WHEN NOT MATCHED BY SOURCE AND <..._delete>  THEN DELETE
 
     Expressions are SQL strings over the aliases `t` (target) and `s`
-    (source) — e.g. ``{"qty": "t.qty + s.qty"}``. `not_matched_insert`
-    may be True (insert source values for same-named columns, NULL
-    elsewhere), False (drop unmatched source rows), or an explicit
-    column->expression map over `s`.
+    (source) — e.g. ``{"qty": "t.qty + s.qty"}``. An inserted row takes
+    the source's value for each same-named column, NULL elsewhere.
 
     Like Delta, a target row must match at most ONE source row, or the
     update is ambiguous — callers dedupe the source on the key first
@@ -238,10 +235,10 @@ def merge_into(
     that join (no second pass over either side), and AQE broadcasts the
     source leg when it is dim-sized.
     """
+    out_cols, src_cols = target.columns, set(source.columns)
     for k in on:
-        if k not in target.columns or k not in source.columns:
+        if k not in out_cols or k not in src_cols:
             raise ValueError(f"merge key {k!r} missing from target or source")
-    out_cols = target.columns
     t = target.withColumn("_t_present", F.lit(True)).alias("t")
     s = source.withColumn("_s_present", F.lit(True)).alias("s")
     cond = None
@@ -257,30 +254,20 @@ def merge_into(
     # a NULL delete-condition means "don't delete" (SQL three-valued logic:
     # the WHEN clause doesn't fire), so coalesce before negating
     _no = lambda e: ~F.coalesce(F.expr(e or "false"), F.lit(False))  # noqa: E731
-    if not_matched_insert is True:
-        ins_exprs = {c: f"s.{c}" for c in out_cols if c in source.columns}
-    elif not_matched_insert is False:
-        ins_exprs = None
-    else:
-        ins_exprs = dict(not_matched_insert)
 
     # the three row classes of a full-outer join are disjoint, so ONE
     # filter + ONE 3-way CASE projection realizes every clause without
     # re-executing the join (union-of-filters would run it twice)
-    keep = (matched & _no(matched_delete)) | (t_only & _no(not_matched_by_source_delete))
-    if ins_exprs is not None:
-        ins_ok = F.coalesce(
-            F.expr(not_matched_insert_condition or "true"), F.lit(False)
-        )
-        keep = keep | (s_only & ins_ok)
+    ins_ok = F.coalesce(F.expr(not_matched_insert_condition or "true"), F.lit(False))
+    keep = (
+        (matched & _no(matched_delete))
+        | (t_only & _no(not_matched_by_source_delete))
+        | (s_only & ins_ok)
+    )
     ttypes = dict(target.dtypes)
 
     def _out(c: str) -> F.Column:
-        ins = (
-            F.expr(ins_exprs[c])
-            if ins_exprs is not None and c in ins_exprs
-            else F.lit(None).cast(ttypes[c])
-        )
+        ins = F.col(f"s.{c}") if c in src_cols else F.lit(None).cast(ttypes[c])
         return (
             F.when(matched, upd.get(c, F.col(f"t.{c}")))
             .when(t_only, F.col(f"t.{c}"))

@@ -23,25 +23,9 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .operators import latest_per_key
 from .session import events_ts, pin_read_confs, read_parquet
-
-_EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
-_EVENTS_NANOS = T.StructType(
-    [f if f.name != "ts" else T.StructField("ts", T.LongType()) for f in _EVENTS_SCHEMA]
-)
 
 _uid = itertools.count()
 
@@ -69,16 +53,16 @@ _REPLAY_CONFS = {
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source event stream with the same confs and two-generation ts
-    dispatch as queries.load(): nanos-int64 fixtures stream as LongType and
-    truncate to micros; native-timestamp fixtures stream as TimestampType
-    directly."""
+    dispatch as queries.load(). The stream takes the schema the batch read
+    infers for the file (nanos-int64 fixtures read `ts` as LongType, native
+    ones as TIMESTAMP_NTZ); events_ts turns either into micros in the
+    session time zone."""
     pin_read_confs(spark)
     base = sf_dir.rstrip("/")
-    batch_ts = read_parquet(spark, f"{base}/events.parquet").schema["ts"].dataType
+    schema = read_parquet(spark, f"{base}/events.parquet").schema
     # the file source rejects a plain single-file path ("basePath must be a
     # directory"); a glob is accepted and resolves basePath to the parent,
     # covering both fixture layouts (single file and multi-part directory)
-    schema = _EVENTS_NANOS if isinstance(batch_ts, T.LongType) else _EVENTS_SCHEMA
     return events_ts(
         spark.readStream.format("parquet").schema(schema).load(f"{base}/events.[p]arquet")
     )
@@ -281,7 +265,6 @@ def stream_cdc_apply(
             [key],
             matched_update={c: f"s.{c}" for c in data_cols if c in b.columns},
             matched_delete=f"s.{_OP_COL} = '{_DELETE_OP}'",
-            not_matched_insert={c: f"s.{c}" for c in store.columns},
             not_matched_insert_condition=f"s.{_OP_COL} <> '{_DELETE_OP}'",
         )
 

@@ -244,3 +244,33 @@ def test_cli_analyze_rejects_reports_and_flags_it_cannot_run(tmp_path, capsys):
         err = capsys.readouterr().err
         assert "expense_overview" in err and "regex_amount_extract" in err
         assert "with_cat" not in err.split("available")[1]
+
+
+def test_cli_imports_several_csvs_through_one_read(cli_env, spark, tmp_path, capsys, monkeypatch):
+    """An import of several files reads them in one binaryFile scan, not
+    one scan per file joined by unions."""
+    from pandaspark import store as store_mod
+
+    paths = []
+    for month, row in [
+        ("04", "01.04.2024;01.04.2024;REWE Märkte GmbH;Lastschrift;Einkauf;-20,00;980,00;EUR"),
+        ("05", "02.05.2024;02.05.2024;Stadtwerke;Lastschrift;Strom;-80,00;900,00;EUR"),
+    ]:
+        path = tmp_path / f"umsatz_DE11111111111111111111_2024-{month}.csv"
+        path.write_text("\n".join([CSV_HEADER, row]) + "\n", encoding="iso-8859-1")
+        paths.append(str(path))
+    batches = []
+    prepare = store_mod.prepare_for_store
+
+    def spy(batch, next_id=1):
+        batches.append(batch)
+        return prepare(batch, next_id=next_id)
+
+    monkeypatch.setattr(store_mod, "prepare_for_store", spy)
+    capsys.readouterr()
+    argv = ["ing-import", *paths, "--store", str(tmp_path / "store"),
+            "--account-map", cli_env["amap"]]
+    assert main(argv) == 0
+    assert "imported 2 new rows -> " in capsys.readouterr().out
+    plan = batches[0]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan binaryFile") == 1, plan

@@ -1,8 +1,8 @@
 """Multi-clause MERGE INTO (store.merge_into): Delta-style semantics on
 plain DataFrames — matched update, conditional matched delete, not-matched
-insert (auto and explicit), not-matched-by-source delete, three-valued
-logic on clause conditions, and the fingerprint upsert configuration
-that store.upsert_to_path commits.
+insert (same-named columns, NULL fill), not-matched-by-source delete,
+three-valued logic on clause conditions, and the fingerprint upsert
+configuration that store.upsert_to_path commits.
 """
 
 from __future__ import annotations
@@ -78,23 +78,11 @@ def test_not_matched_by_source_delete(spark, target, source):
     assert {r[0] for r in out.collect()} == {2, 3, 4}
 
 
-def test_insert_false_drops_unmatched_source(spark, target, source):
-    out = store.merge_into(
-        target, source, ["k"], matched_update={"qty": "s.qty"}, not_matched_insert=False
-    )
-    assert {r[0] for r in out.collect()} == {1, 2, 3}
-
-
-def test_explicit_insert_map_and_null_fill(spark, target):
+def test_insert_null_fills_columns_the_source_lacks(spark, target):
     src = spark.createDataFrame([(9, 900)], "k int, amount int")
-    out = store.merge_into(
-        target,
-        src,
-        ["k"],
-        not_matched_insert={"k": "s.k", "qty": "s.amount div 10"},
-    )
+    out = store.merge_into(target, src, ["k"])
     ins = [r for r in out.collect() if r["k"] == 9][0]
-    assert ins["qty"] == 90 and ins["name"] is None
+    assert ins["qty"] is None and ins["name"] is None
     assert out.schema == target.schema
 
 

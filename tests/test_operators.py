@@ -92,7 +92,7 @@ def test_latest_per_key_deterministic(spark):
 def test_two_phase_running_total_equals_global_window(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-    from pandaspark.operators import two_phase_running_total
+    from pandaspark.operators import ranked_running_total
     from pandaspark.queries import load
 
     from .conftest import SF_DIR
@@ -101,7 +101,7 @@ def test_two_phase_running_total_equals_global_window(spark):
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     order_cols = ["o_orderdate", "o_orderkey"]
 
-    got = two_phase_running_total(o, order_cols, cents, alias="rt").select(
+    got = ranked_running_total(o, order_cols, cents, total_alias="rt").select(
         "o_orderkey", "rt"
     )
     naive_w = (
@@ -131,7 +131,7 @@ def test_sequence_packing_prefix_equals_two_phase_form(spark):
     no partition-width window anywhere in that path."""
     from pyspark.sql import Window
 
-    from pandaspark.operators import two_phase_running_total
+    from pandaspark.operators import ranked_running_total
     from pandaspark.queries import load as qload
 
     from .conftest import SF_DIR
@@ -157,8 +157,8 @@ def test_sequence_packing_prefix_equals_two_phase_form(spark):
     )
     # two-phase form: global inclusive cumsum over (lang, doc_id), then
     # subtract the per-lang prefix offset and the row's own value
-    cum = two_phase_running_total(
-        d, ["lang", "doc_id"], F.col("n_tokens"), alias="_cum"
+    cum = ranked_running_total(
+        d, ["lang", "doc_id"], F.col("n_tokens"), total_alias="_cum"
     )
     lang_tot = cum.groupBy("lang").agg(
         (F.min(F.col("_cum") - F.col("n_tokens"))).alias("_lang_start")
@@ -245,7 +245,7 @@ def test_sequential_ids_dense_at_scale(spark):
     ids are exactly the dense sequence 1..n (so max == n == distinct)."""
     from pyspark.sql import functions as F
 
-    from pandaspark.operators import sequential_ids, two_phase_running_total
+    from pandaspark.operators import ranked_running_total, sequential_ids
 
     n = 200_000
     # non-uniform key distribution (hash-scrambled) so range sampling has
@@ -262,19 +262,16 @@ def test_sequential_ids_dense_at_scale(spark):
     ).collect()[0]
     assert (agg.cnt, agg.mx, agg.mn, agg.d) == (n, n, 1, n)
 
-    rt = two_phase_running_total(df, ["k"], F.col("one").cast("long"), alias="rt")
+    rt = ranked_running_total(df, ["k"], F.col("one").cast("long"), total_alias="rt")
     agg2 = rt.agg(F.max("rt").alias("mx"), F.count_distinct("rt").alias("d")).collect()[0]
     # cumsum of all-ones in a total order is also the dense sequence 1..n
     assert (agg2.mx, agg2.d) == (n, n)
 
 
-def test_ranked_running_total_equals_composed_form(spark):
+def test_ranked_running_total_equals_global_windows(spark):
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
-    from pandaspark.operators import (
-        ranked_running_total,
-        sequential_ids,
-        two_phase_running_total,
-    )
+    from pandaspark.operators import ranked_running_total
     from pandaspark.queries import load
 
     from .conftest import SF_DIR
@@ -286,19 +283,23 @@ def test_ranked_running_total_equals_composed_form(spark):
     fused = ranked_running_total(
         o, order_cols, cents, total_alias="rt"
     ).select("o_orderkey", "rk", "rt")
-    composed = two_phase_running_total(
-        sequential_ids(o, order_cols, alias="rk"), order_cols, cents, alias="rt"
-    ).select("o_orderkey", "rk", "rt")
+    # the naive single-partition global windows: an independent reference
+    naive_w = Window.orderBy(*order_cols)
+    naive = o.select(
+        "o_orderkey",
+        F.row_number().over(naive_w).alias("rk"),
+        F.sum(cents)
+        .over(naive_w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .alias("rt"),
+    )
     got = {r.o_orderkey: (r.rk, r.rt) for r in fused.collect()}
-    want = {r.o_orderkey: (r.rk, r.rt) for r in composed.collect()}
+    want = {r.o_orderkey: (r.rk, r.rt) for r in naive.collect()}
     assert got == want and len(got) > 0
 
-    # fusion claim, asserted structurally on the fused plan (the composed
-    # form's duplicate range layout hides INSIDE its second checkpoint's
-    # RDD lineage, so plan-text comparison between the two is blind to
-    # it): row_number AND the cumulative sum must ride ONE _pid-keyed
-    # Window operator over ONE checkpointed layout — a physical Window
-    # line that carries both expressions
+    # fusion claim, asserted structurally on the plan: row_number AND the
+    # cumulative sum must ride ONE _pid-keyed Window operator over ONE
+    # checkpointed layout — a physical Window line that carries both
+    # expressions
     plan = fused._jdf.queryExecution().executedPlan().toString()
     # dedupe: AdaptiveSparkPlan prints initial + final plans
     win_lines = sorted({

@@ -15,6 +15,7 @@ import pytest
 from pandaspark.queries import REGISTRY
 
 from .conftest import SF_DIR
+from .test_pipeline import ACCOUNT_MAP, csv_dir  # noqa: F401 (fixture)
 
 
 def plan_of(spark, name: str) -> str:
@@ -410,3 +411,40 @@ def test_q177_stream_stream_join_state_is_evictable(spark):
     plan = _analyzed(_q177_frame(spark, SF_DIR))
     assert plan.count("EventTimeWatermark") == 2, "a join side lost its watermark"
     assert "Join Inner" in plan
+
+
+def _two_phase_shape(**counts) -> dict[str, int]:
+    zero = dict.fromkeys(("scans", "reused_exchanges", "python_execs"), 0)
+    return {**zero, **counts}
+
+
+# the callers of the two-phase prefix operator (operators.sequential_ids,
+# ranked_running_total): one range exchange, one count exchange and one
+# offsets exchange per two-phase pass, the offsets broadcast back, and the
+# range layout pinned behind a checkpoint
+_TWO_PHASE_SHAPES = {
+    "q14_sequential_ids": _two_phase_shape(exchanges=3, broadcasts=1, checkpoint_scans=2),
+    "q88_spend_deciles": _two_phase_shape(scans=1, exchanges=6, broadcasts=2, checkpoint_scans=2),
+    "q123_ngram_coverage": _two_phase_shape(exchanges=5, broadcasts=2, checkpoint_scans=3),
+    "q129_negative_sampling": _two_phase_shape(scans=1, exchanges=3, broadcasts=2, checkpoint_scans=2),
+    "q130_curriculum": _two_phase_shape(exchanges=3, broadcasts=1, checkpoint_scans=2),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_TWO_PHASE_SHAPES))
+def test_two_phase_callers_keep_their_plan_shape(spark, name):
+    from perfbench.metrics import plan_shape
+
+    assert plan_shape(plan_of(spark, name)) == _TWO_PHASE_SHAPES[name]
+
+
+def test_prepare_for_store_keeps_its_plan_shape(spark, csv_dir):
+    """The import path's numbering has q14's shape: the CSV scan sits
+    behind the layout checkpoint, so the final plan scans no file."""
+    from perfbench.metrics import plan_shape
+    from pandaspark.ingest import read_ing_csv
+    from pandaspark.store import prepare_for_store
+
+    batch = prepare_for_store(read_ing_csv(spark, csv_dir, account_map=ACCOUNT_MAP))
+    plan = batch._jdf.queryExecution().executedPlan().toString()
+    assert plan_shape(plan) == _two_phase_shape(exchanges=3, broadcasts=1, checkpoint_scans=2)

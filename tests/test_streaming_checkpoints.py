@@ -8,8 +8,9 @@ checkpoint manager, whose rename runs no `readlink`, and
 streaming.run_to_memory starts its bounded replays without checksum
 sidecars (fewer files) or a trailing no-data batch.
 These tests pin both settings, that the replay confs never outlive the
-replay, how many processes a replay spawns, and how many micro-batches
-each streaming registry entry runs.
+replay, how many processes a replay spawns, how many micro-batches
+each streaming registry entry runs, and that q179's work directory does
+not outlive the process.
 """
 
 from __future__ import annotations
@@ -156,3 +157,35 @@ print(json.dumps({{p: after[p] - before[p] for p in ("chmod", "readlink")}}))
     spawns = json.loads(out.stdout.strip().splitlines()[-1])
     assert spawns["readlink"] == 0, spawns
     assert spawns["chmod"] <= _Q165_CHMOD_MAX, spawns
+
+
+def test_q179_work_directory_goes_at_exit(tmp_path):
+    """q179 streams its change feed through a feed, store and checkpoint
+    under a temp directory; a fresh process that builds and collects it
+    leaves no q179_cdc_* directory in its TMPDIR."""
+    child = f"""
+import sys
+sys.path.insert(0, {_REPO!r})
+from pandaspark.queries import REGISTRY
+from pandaspark.session import get_spark
+
+spark = get_spark("q179-cleanup")
+spark.sparkContext.setLogLevel("ERROR")
+assert REGISTRY["q179_stream_cdc"].fn(spark, {SF_DIR!r}).collect()
+"""
+    env = {
+        **os.environ,
+        "TMPDIR": str(tmp_path),
+        "SPARK_GRAFT_CPUS": "2",
+        "PANDASPARK_SHUFFLE_PARTITIONS": "2",
+        "SPARK_DRIVER_MEM": "1g",
+    }
+    subprocess.run(
+        [sys.executable, "-c", child],
+        env=env,
+        cwd=str(tmp_path),
+        capture_output=True,
+        timeout=240,
+        check=True,
+    )
+    assert sorted(p.name for p in tmp_path.glob("q179_cdc_*")) == []

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from pandaspark.queries import REGISTRY
 from pandaspark.streaming import (
-    _EVENTS_SCHEMA,
     dedup_stream,
     interval_join,
     run_to_memory,
@@ -23,6 +22,11 @@ from pandaspark.streaming import (
 )
 
 from .conftest import SF_DIR, paced_stream
+
+# the events table's columns, for hand-built event batches
+EVENTS_DDL = (
+    "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+)
 
 
 @pytest.fixture(scope="module")
@@ -101,7 +105,7 @@ def test_interval_join_hot_key_parity(spark, tmp_path):
         eid += 1
         rows.append((eid, t0 + dt.timedelta(minutes=u) - dt.timedelta(seconds=30), u, "view", 1.0, "{}"))
         eid += 1
-    batch = spark.createDataFrame(rows, _EVENTS_SCHEMA)
+    batch = spark.createDataFrame(rows, EVENTS_DDL)
     d = str(tmp_path / "hot_events")
     # 4 files -> 4 micro-batches at maxFilesPerTrigger=1: matching pairs
     # arrive in different batches and must meet through join state
@@ -243,7 +247,7 @@ def test_watermark_drops_late_data_and_finalizes_windows(spark, tmp_path):
     def write_file(name, rows):
         df = spark.createDataFrame(
             [(i, ts, 1, et, v, None) for i, (ts, et, v) in enumerate(rows)],
-            _EVENTS_SCHEMA,
+            EVENTS_DDL,
         )
         df.coalesce(1).write.mode("overwrite").parquet(str(src / name))
 

@@ -73,7 +73,6 @@ def test_every_public_streaming_name_has_a_caller_in_the_package():
 # they count as roots, so their own private helpers need no entry
 TEST_REFERENCES = {
     "asof_join": "semantic anchor that asof_join_bucketed (q28) must equal",
-    "two_phase_running_total": "composed reference form for ranked_running_total",
     "encode_bmp": "builds the BMP fixtures of the decode_bytes tests",
     "encode_ppm": "builds the PPM fixtures of the decode_bytes tests",
     "encode_png": "builds the PNG fixtures of the decode_bytes tests",
