@@ -695,21 +695,14 @@ def q173(spark: SparkSession, sf_dir: str) -> DataFrame:
 # both engines take identical CASE branches.
 
 from .text import (  # noqa: E402
-    _SHINGLE_K,
-    _minhash_oracle_ctes,
+    _SHINGLE_SET_CTES,
     attach_shingle_sets,
     minhash_candidates,
 )
 
 _CONT_HI = 0.9
 
-_Q175_ORACLE = _minhash_oracle_ctes() + f""",
-sh AS (
-  SELECT doc_id,
-         list_distinct([substring(t, i, {_SHINGLE_K})
-                        FOR i IN range(1, greatest(length(t) - {_SHINGLE_K - 1}, 1) + 1)]) AS sh
-  FROM norm
-)
+_Q175_ORACLE = _SHINGLE_SET_CTES + f"""
 SELECT doc_a, doc_b, jaccard, cont_a, cont_b,
        CASE WHEN raw_ca >= {_CONT_HI} AND raw_cb >= {_CONT_HI} THEN 'neardup'
             WHEN raw_ca >= {_CONT_HI} THEN 'a_in_b'

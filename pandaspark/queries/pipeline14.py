@@ -6,7 +6,8 @@ was re-registered on this machinery in round 6). That exemption is lazy — a sk
 of its input, so a DuckDB replica produces the bit-identical sketch and
 the estimate itself becomes hash-checkable, error audit included. Every
 query here follows that discipline on the shared sha256-prefix family
-(`sha_int`, queries/__init__.py):
+(`sha_int`, queries/__init__.py), through the one copy per engine of each
+sketch in queries/sketches.py:
 
 q181 Count-Min heavy hitters: d=4 x w=64 CMS over event users — the
 sketch build is one map-side-combinable (row, bucket) count; estimates
@@ -74,36 +75,30 @@ from . import (
     sql_round4,
     sql_sha_int,
 )
+from .sketches import (
+    CMS_D,
+    CMS_W,
+    cms_buckets,
+    cms_sketch,
+    hll_estimate,
+    hll_registers,
+    keyed_hash,
+    sql_cms_sketch,
+    sql_hash_rows,
+    sql_hll_estimate,
+    sql_hll_registers,
+    sql_keyed_hash,
+)
 from .text import _norm_text
 
 # --- q181: Count-Min sketch heavy hitters with overcount audit --------------
 
-_CMS_D = 4  # hash rows
-_CMS_W = 64  # buckets per row (undersized on purpose: collisions are the test)
 _TOP = 20
-
-
-# NB: the hash-row variable is `hj`, NOT `j` — sql_sha_int expands to a
-# DuckDB list comprehension whose loop variable is `j`, which would shadow
-# an outer column named `j` inside the hash expression (observed: silently
-# wrong buckets, ~9% FP where ~1% is correct).
-def _cms_bucket_sql(hj: str) -> str:
-    return (
-        sql_sha_int(f"CAST({hj} AS VARCHAR) || '|' || CAST(user_id AS VARCHAR)")
-        + f" % {_CMS_W}"
-    )
 
 
 _Q181_ORACLE = f"""
 WITH ev AS (SELECT user_id FROM events),
-rows_j AS (
-  SELECT user_id, hj, {_cms_bucket_sql('hj')} AS bucket
-  FROM ev CROSS JOIN (SELECT unnest(range({_CMS_D})) AS hj)
-),
-sketch AS (
-  SELECT hj, bucket, CAST(count(*) AS BIGINT) AS cnt
-  FROM rows_j GROUP BY hj, bucket
-),
+sketch AS ({sql_cms_sketch('ev', 'user_id')}),
 exact AS (
   SELECT user_id, CAST(count(*) AS BIGINT) AS exact_cnt
   FROM ev GROUP BY user_id
@@ -113,8 +108,8 @@ top AS (
   ORDER BY exact_cnt DESC, user_id LIMIT {_TOP}
 ),
 probe AS (
-  SELECT t.user_id, t.exact_cnt, hj, {_cms_bucket_sql('hj')} AS bucket
-  FROM top t CROSS JOIN (SELECT unnest(range({_CMS_D})) AS hj)
+  SELECT t.user_id, t.exact_cnt, hj, {sql_keyed_hash('user_id', CMS_W)} AS bucket
+  FROM top t CROSS JOIN {sql_hash_rows(CMS_D)}
 )
 SELECT p.user_id, p.exact_cnt,
        CAST(min(s.cnt) AS BIGINT) AS cms_est,
@@ -122,21 +117,6 @@ SELECT p.user_id, p.exact_cnt,
 FROM probe p JOIN sketch s USING (hj, bucket)
 GROUP BY p.user_id, p.exact_cnt
 """
-
-
-def _cms_buckets(key: F.Column):
-    """(j, bucket) pairs for one key — the d CMS hash rows."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("j"),
-                (sha_int(F.concat_ws("|", F.lit(str(j)), key.cast("string"))) % _CMS_W).alias(
-                    "bucket"
-                ),
-            )
-            for j in range(_CMS_D)
-        ]
-    )
 
 
 @register(
@@ -147,23 +127,17 @@ def _cms_buckets(key: F.Column):
 def q181(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("user_id")
     # sketch FROM the per-key counts the heavy-hitter audit needs anyway
-    # (same rewrite as q189/q187, guide §2.3): cnt(j,bucket) = Σ key
-    # row-counts == hashing every row, with the d sha256 hashes run once
-    # per DISTINCT key and the table scanned once instead of twice.
+    # (same rewrite as q189/q187, guide §2.3): the table is scanned once
+    # instead of twice.
     exact = (
         ev.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("exact_cnt"))
         .localCheckpoint(eager=False)
     )
-    sketch = (
-        exact.select(F.explode(_cms_buckets(F.col("user_id"))).alias("jb"), "exact_cnt")
-        .select("jb.j", "jb.bucket", "exact_cnt")
-        .groupBy("j", "bucket")
-        .agg(F.sum("exact_cnt").alias("cnt"))
-    )
+    sketch = cms_sketch(exact, "user_id", "exact_cnt")
     top = exact.orderBy(F.col("exact_cnt").desc(), "user_id").limit(_TOP)
     probe = top.select(
-        "user_id", "exact_cnt", F.explode(_cms_buckets(F.col("user_id"))).alias("jb")
+        "user_id", "exact_cnt", F.explode(cms_buckets(F.col("user_id"))).alias("jb")
     ).select("user_id", "exact_cnt", "jb.j", "jb.bucket")
     return (
         probe.join(F.broadcast(sketch), ["j", "bucket"])
@@ -177,33 +151,9 @@ def q181(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q182: portable HyperLogLog distinct users per event type ---------------
 
-_HLL_M = 64  # registers (p=6); alpha_64 = 0.709 (Flajolet et al. 2007)
-
-
 _Q182_ORACLE = f"""
-WITH h AS (
-  SELECT event_type,
-         {sql_sha_int('CAST(user_id AS VARCHAR)')} AS hv,
-         user_id
-  FROM events
-),
-r AS (
-  SELECT event_type, hv % {_HLL_M} AS idx,
-         CASE WHEN hv // {_HLL_M} = 0 THEN 43
-              ELSE 43 - length(bin(hv // {_HLL_M})) END AS rho
-  FROM h
-),
-reg AS (
-  SELECT event_type, idx, max(rho) AS mreg FROM r GROUP BY event_type, idx
-),
-est AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_regs_hit,
-         0.709 * {_HLL_M * _HLL_M}.0
-           / (sum(1.0 / (CAST(1 AS BIGINT) << mreg))
-              + ({_HLL_M} - count(*)) * 1.0) AS hll_est
-  FROM reg GROUP BY event_type
-),
+WITH reg AS ({sql_hll_registers('events', 'event_type', 'user_id')}),
+est AS ({sql_hll_estimate('reg', 'event_type')}),
 exact AS (
   SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS exact_ndv
   FROM events GROUP BY event_type
@@ -228,35 +178,7 @@ def q182(spark: SparkSession, sf_dir: str) -> DataFrame:
     # countDistinct scan disappears. Interleaved sf0.1 A/B: 0.88 → 0.78 s
     # min, new side faster or equal in every pair.
     okd = ev.distinct().localCheckpoint(eager=False)
-    hv = sha_int(F.col("user_id").cast("string"))
-    # rho = leading-zero rank of the 42-bit suffix, via binary-string
-    # length — integer ops only, no libm log2
-    r = (
-        okd
-        .select("event_type", hv.alias("hv"))
-        .select(
-            "event_type",
-            (F.col("hv") % _HLL_M).alias("idx"),
-            F.when(F.expr(f"hv div {_HLL_M}") == 0, F.lit(43))
-            .otherwise(
-                F.lit(43)
-                - F.length(F.conv(F.expr(f"CAST(hv div {_HLL_M} AS STRING)"), 10, 2))
-            )
-            .alias("rho"),
-        )
-    )
-    reg = r.groupBy("event_type", "idx").agg(F.max("rho").alias("mreg"))
-    # sum of 2^-M terms: each is dyadic with denominator 2^43, so the sum
-    # fits 49 mantissa bits — exact under any partial-agg order
-    inv = F.lit(1.0) / F.expr("shiftleft(CAST(1 AS BIGINT), mreg)")
-    est = reg.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_regs_hit"),
-        (
-            F.lit(0.709)
-            * F.lit(float(_HLL_M * _HLL_M))
-            / (F.sum(inv) + (F.lit(_HLL_M) - F.count(F.lit(1))) * F.lit(1.0))
-        ).alias("hll_est"),
-    )
+    est = hll_estimate(hll_registers(okd, "event_type", "user_id"), "event_type")
     # count(user_id), not count(*): the oracle's count(DISTINCT user_id)
     # excludes NULLs, and a NULL user_id survives ev.distinct() as its own
     # pair row. The fixtures carry no NULL user_ids (so hashes are
@@ -281,21 +203,16 @@ _BLOOM_M = 4096  # bits
 _BLOOM_K = 3  # hash functions
 
 
-# same `hj` naming rule as _cms_bucket_sql — see the comment there
-def _bloom_pos_sql(hj: str, key: str) -> str:
-    return sql_sha_int(f"CAST({hj} AS VARCHAR) || '|' || CAST({key} AS VARCHAR)") + f" % {_BLOOM_M}"
-
-
 _Q183_ORACLE = f"""
 WITH members AS (SELECT p_partkey AS k FROM part WHERE p_size < 10),
 bits AS (
-  SELECT DISTINCT {_bloom_pos_sql('hj', 'k')} AS pos
-  FROM members CROSS JOIN (SELECT unnest(range({_BLOOM_K})) AS hj)
+  SELECT DISTINCT {sql_keyed_hash('k', _BLOOM_M)} AS pos
+  FROM members CROSS JOIN {sql_hash_rows(_BLOOM_K)}
 ),
 probe AS (SELECT DISTINCT l_partkey AS k FROM lineitem),
 probe_pos AS (
-  SELECT k, hj, {_bloom_pos_sql('hj', 'k')} AS pos
-  FROM probe CROSS JOIN (SELECT unnest(range({_BLOOM_K})) AS hj)
+  SELECT k, hj, {sql_keyed_hash('k', _BLOOM_M)} AS pos
+  FROM probe CROSS JOIN {sql_hash_rows(_BLOOM_K)}
 ),
 verdict AS (
   SELECT pp.k,
@@ -317,15 +234,6 @@ FROM verdict
 """
 
 
-def _bloom_positions(key: F.Column):
-    return F.array(
-        *[
-            (sha_int(F.concat_ws("|", F.lit(str(j)), key.cast("string"))) % _BLOOM_M)
-            for j in range(_BLOOM_K)
-        ]
-    )
-
-
 @register(
     "q183_bloom_audit",
     _Q183_ORACLE,
@@ -335,15 +243,12 @@ def q183(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load(spark, sf_dir, "part")
     li = load(spark, sf_dir, "lineitem")
     members = part.filter(F.col("p_size") < 10).select(F.col("p_partkey").alias("k"))
+    positions = F.array(*[keyed_hash(j, F.col("k"), _BLOOM_M) for j in range(_BLOOM_K)])
     # the filter itself: distinct set-bit positions — a few hundred rows,
     # broadcast to the probe side (the runtime-filter shape)
-    bits = (
-        members.select(F.explode(_bloom_positions(F.col("k"))).alias("pos")).distinct()
-    )
+    bits = members.select(F.explode(positions).alias("pos")).distinct()
     probe = li.select(F.col("l_partkey").alias("k")).distinct()
-    probe_pos = probe.select(
-        "k", F.posexplode(_bloom_positions(F.col("k"))).alias("j", "pos")
-    )
+    probe_pos = probe.select("k", F.posexplode(positions).alias("j", "pos"))
     hit = (
         probe_pos.join(F.broadcast(bits.withColumn("m", F.lit(1))), "pos", "left")
         .groupBy("k")
@@ -578,14 +483,7 @@ def q186(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q187_ORACLE = f"""
 WITH li AS (SELECT l_partkey FROM lineitem),
-rows_j AS (
-  SELECT hj,
-         {sql_sha_int("CAST(hj AS VARCHAR) || '|' || CAST(l_partkey AS VARCHAR)")}
-           % {_CMS_W} AS bucket
-  FROM li CROSS JOIN (SELECT unnest(range({_CMS_D})) AS hj)
-),
-sketch AS (SELECT hj, bucket, CAST(count(*) AS BIGINT) AS cnt
-           FROM rows_j GROUP BY hj, bucket),
+sketch AS ({sql_cms_sketch('li', 'l_partkey')}),
 est AS (SELECT min(s2) AS cms_f2
         FROM (SELECT hj, sum(cnt * cnt) AS s2 FROM sketch GROUP BY hj)),
 exact AS (SELECT CAST(sum(c * c) AS BIGINT) AS exact_f2
@@ -613,21 +511,14 @@ def q187(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable count plus arithmetic on 256 numbers."""
     li = load(spark, sf_dir, "lineitem").select("l_partkey")
     # sketch FROM the per-key counts the exact audit needs anyway (same
-    # rewrite as q189, guide §2.3): cnt(j,bucket) = Σ key row-counts is
-    # identical to hashing every row, but the d sha256 bucket hashes run
-    # once per DISTINCT key instead of once per row, and the table is
-    # scanned once instead of twice.
+    # rewrite as q189, guide §2.3): the table is scanned once instead of
+    # twice.
     kc = (
         li.groupBy("l_partkey")
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=False)
     )
-    sketch = (
-        kc.select(F.explode(_cms_buckets(F.col("l_partkey"))).alias("jb"), "c")
-        .select("jb.j", "jb.bucket", "c")
-        .groupBy("j", "bucket")
-        .agg(F.sum("c").alias("cnt"))
-    )
+    sketch = cms_sketch(kc, "l_partkey", "c")
     est = (
         sketch.groupBy("j")
         .agg(F.sum(F.col("cnt") * F.col("cnt")).alias("s2"))

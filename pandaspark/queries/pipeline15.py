@@ -57,15 +57,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from . import (
-    load,
-    register,
-    round4,
-    sha_int,
-    spread,
-    sql_round4,
-    sql_sha_int,
-)
+from . import load, register, round4, spread, sql_round4
+from .sketches import cms_sketch, sql_cms_sketch
 
 # --- q188: compaction-bin planner (sorted-fill bin packing) -----------------
 
@@ -136,25 +129,9 @@ def q188(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q189: CMS inner-product join-size estimate ------------------------------
 
-_CMS_D = 4
-_CMS_W = 64
-
-
-def _sql_sketch(table: str, key: str) -> str:
-    bucket = (
-        sql_sha_int(f"CAST(hj AS VARCHAR) || '|' || CAST({key} AS VARCHAR)")
-        + f" % {_CMS_W}"
-    )
-    return f"""
-  SELECT hj, bucket, CAST(count(*) AS BIGINT) AS cnt
-  FROM (SELECT {key}, hj, {bucket} AS bucket
-        FROM {table} CROSS JOIN (SELECT unnest(range({_CMS_D})) AS hj))
-  GROUP BY hj, bucket"""
-
-
 _Q189_ORACLE = f"""
-WITH se AS ({_sql_sketch('events', 'user_id')}),
-so AS ({_sql_sketch('orders', 'o_custkey')}),
+WITH se AS ({sql_cms_sketch('events', 'user_id')}),
+so AS ({sql_cms_sketch('orders', 'o_custkey')}),
 est AS (
   SELECT min(ip) AS cms_join_size
   FROM (SELECT se.hj, sum(se.cnt * so.cnt) AS ip
@@ -203,32 +180,10 @@ def q189(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=False)
         )
 
-    def sketch_from_counts(kdf: DataFrame, key: str) -> DataFrame:
-        pairs = F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("j"),
-                    (
-                        sha_int(
-                            F.concat_ws("|", F.lit(str(j)), F.col(key).cast("string"))
-                        )
-                        % _CMS_W
-                    ).alias("bucket"),
-                )
-                for j in range(_CMS_D)
-            ]
-        )
-        return (
-            kdf.select(F.explode(pairs).alias("jb"), "kc")
-            .select("jb.j", "jb.bucket", "kc")
-            .groupBy("j", "bucket")
-            .agg(F.sum("kc").alias("cnt"))
-        )
-
     ec = key_counts(load(spark, sf_dir, "events").select("user_id"), "user_id")
     oc = key_counts(load(spark, sf_dir, "orders").select("o_custkey"), "o_custkey")
-    se = sketch_from_counts(ec, "user_id")
-    so = sketch_from_counts(oc, "o_custkey")
+    se = cms_sketch(ec, "user_id", "kc")
+    so = cms_sketch(oc, "o_custkey", "kc")
     est = (
         se.alias("a")
         .join(so.alias("b"), ["j", "bucket"])

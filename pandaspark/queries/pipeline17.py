@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import load, register, round4, sha_int, spread, sql_round4, sql_sha_int
+from .sketches import hll_estimate, hll_registers, sql_hll_estimate, sql_hll_registers
 
 # --- q195: threshold-algorithm distributed top-k -----------------------------
 
@@ -190,26 +191,12 @@ def q195(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q196: sliding-window distinct via HLL register max-merge ----------------
 
-_HLL_M = 64
 _WIN_DAYS = 7
 
 
 _Q196_ORACLE = f"""
-WITH h AS (
-  SELECT CAST(ts AS DATE) AS day,
-         {sql_sha_int('CAST(user_id AS VARCHAR)')} AS hv,
-         user_id
-  FROM events
-),
-r AS (
-  SELECT day, hv % {_HLL_M} AS idx,
-         CASE WHEN hv // {_HLL_M} = 0 THEN 43
-              ELSE 43 - length(bin(hv // {_HLL_M})) END AS rho
-  FROM h
-),
-day_reg AS (
-  SELECT day, idx, max(rho) AS mreg FROM r GROUP BY day, idx
-),
+WITH h AS (SELECT CAST(ts AS DATE) AS day, user_id FROM events),
+day_reg AS ({sql_hll_registers('h', 'day', 'user_id')}),
 spine AS (SELECT DISTINCT day FROM h),
 win_reg AS (
   SELECT s.day, dr.idx, max(dr.mreg) AS mreg,
@@ -218,14 +205,7 @@ win_reg AS (
     ON dr.day BETWEEN s.day - {_WIN_DAYS - 1} AND s.day
   GROUP BY s.day, dr.idx
 ),
-est AS (
-  SELECT day,
-         CAST(count(*) AS BIGINT) AS n_regs_hit,
-         0.709 * {_HLL_M * _HLL_M}.0
-           / (sum(1.0 / (CAST(1 AS BIGINT) << mreg))
-              + ({_HLL_M} - count(*)) * 1.0) AS hll_est
-  FROM win_reg GROUP BY day
-),
+est AS ({sql_hll_estimate('win_reg', 'day')}),
 exact AS (
   SELECT s.day, CAST(count(DISTINCT h.user_id) AS BIGINT) AS exact_ndv
   FROM spine s JOIN h ON h.day BETWEEN s.day - {_WIN_DAYS - 1} AND s.day
@@ -257,18 +237,7 @@ def q196(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of three times. Interleaved sf0.1 A/B: 0.96 → 0.85 s min,
     # faster in 4/5 pairs.
     okd = ev.distinct().localCheckpoint(eager=False)
-    hv = sha_int(F.col("user_id").cast("string"))
-    r = okd.select("day", hv.alias("hv")).select(
-        "day",
-        (F.col("hv") % _HLL_M).alias("idx"),
-        F.when(F.expr(f"hv div {_HLL_M}") == 0, F.lit(43))
-        .otherwise(
-            F.lit(43)
-            - F.length(F.conv(F.expr(f"CAST(hv div {_HLL_M} AS STRING)"), 10, 2))
-        )
-        .alias("rho"),
-    )
-    day_reg = r.groupBy("day", "idx").agg(F.max("rho").alias("mreg"))
+    day_reg = hll_registers(okd, "day", "user_id")
     spine = okd.select("day").distinct()
     win_reg = (
         spine.alias("s")
@@ -281,15 +250,7 @@ def q196(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("s.day").alias("day"), F.col("dr.idx").alias("idx"))
         .agg(F.max("dr.mreg").alias("mreg"))
     )
-    inv = F.lit(1.0) / F.expr("shiftleft(CAST(1 AS BIGINT), mreg)")
-    est = win_reg.groupBy("day").agg(
-        F.count(F.lit(1)).cast("long").alias("n_regs_hit"),
-        (
-            F.lit(0.709)
-            * F.lit(float(_HLL_M * _HLL_M))
-            / (F.sum(inv) + (F.lit(_HLL_M) - F.count(F.lit(1))) * F.lit(1.0))
-        ).alias("hll_est"),
-    )
+    est = hll_estimate(win_reg, "day")
     exact = (
         spine.alias("s2")
         .join(

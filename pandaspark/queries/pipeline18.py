@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import load, register, round4, sha_int, spread, sql_round4, sql_sha_int
-from .similarity import _DIMS, _K, _N_QUERIES, _cosine, _sql_centroid_terms, _sql_cosine
+from .similarity import _K, _N_QUERIES, _centroids, _cosine, _sql_centroid_terms, _sql_cosine
 
 # --- q198: multi-probe IVF recall curve --------------------------------------
 
@@ -121,12 +121,7 @@ def q198(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Measured at sf0.1 (interleaved, 6 pairs): 2.04 → 1.84 s min.
     e = spread(load(spark, sf_dir, "embeddings")).localCheckpoint(eager=False)
     n_corpus = e.agg(F.count(F.lit(1)).cast("long").alias("n_corpus"))
-    centroid_terms = ", ".join(
-        f"CAST(SUM(CAST(ROUND(CAST(embedding[{i}] AS DOUBLE) * 1000000) AS BIGINT)) AS DOUBLE)"
-        f" / CAST(COUNT(1) AS DOUBLE) / 1000000.0"
-        for i in range(_DIMS)
-    )
-    cents = e.groupBy("label").agg(F.expr(f"ARRAY({centroid_terms})").alias("centroid"))
+    cents = _centroids(e)
     q = e.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )

@@ -551,9 +551,8 @@ def q125(spark: SparkSession, sf_dir: str) -> DataFrame:
 # estimate join, and q55's candidate-bounded exact verify — never all-pairs.
 
 from .text import (  # noqa: E402
-    _minhash_oracle_ctes,
     _N_HASHES,
-    _SHINGLE_K,
+    _SHINGLE_SET_CTES,
     _lsh_bands,
     attach_shingle_sets,
     minhash_signatures,
@@ -563,13 +562,7 @@ _Q126_EST = " + ".join(
     f"CAST(sa.m{i} = sb.m{i} AS BIGINT)" for i in range(_N_HASHES)
 )
 
-_Q126_ORACLE = f"""{_minhash_oracle_ctes()},
-sh AS (
-  SELECT doc_id,
-         list_distinct([substring(t, i, {_SHINGLE_K})
-                        FOR i IN range(1, greatest(length(t) - {_SHINGLE_K - 1}, 1) + 1)]) AS sh
-  FROM norm
-),
+_Q126_ORACLE = _SHINGLE_SET_CTES + f""",
 est AS (
   SELECT c.doc_a, c.doc_b, ({_Q126_EST}) AS n_eq
   FROM cand c

@@ -12,12 +12,11 @@ from . import (
     load,
     register,
     round4,
-    sha_int,
     sql_cents_sum,
     sql_round4,
-    sql_sha_int,
     cents_sum,
 )
+from .sketches import hll_estimate, hll_registers, sql_hll_estimate, sql_hll_registers
 
 
 # --- q49: ranking windows (dense_rank / percent_rank / ntile / lead) -------
@@ -280,32 +279,9 @@ def q52(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- q58: sketch aggregates (portable HLL distinct + base-2 histogram median)
 
-_Q58_HLL_M = 64  # registers (p=6); alpha_64 = 0.709 (Flajolet et al. 2007)
-
-
 _Q58_ORACLE = f"""
-WITH h AS (
-  SELECT l_returnflag,
-         {sql_sha_int('CAST(l_orderkey AS VARCHAR)')} AS hv
-  FROM lineitem
-),
-r AS (
-  SELECT l_returnflag, hv % {_Q58_HLL_M} AS idx,
-         CASE WHEN hv // {_Q58_HLL_M} = 0 THEN 43
-              ELSE 43 - length(bin(hv // {_Q58_HLL_M})) END AS rho
-  FROM h
-),
-reg AS (
-  SELECT l_returnflag, idx, max(rho) AS mreg FROM r GROUP BY l_returnflag, idx
-),
-est AS (
-  SELECT l_returnflag,
-         CAST(count(*) AS BIGINT) AS n_regs_hit,
-         0.709 * {_Q58_HLL_M * _Q58_HLL_M}.0
-           / (sum(1.0 / (CAST(1 AS BIGINT) << mreg))
-              + ({_Q58_HLL_M} - count(*)) * 1.0) AS hll_est
-  FROM reg GROUP BY l_returnflag
-),
+WITH reg AS ({sql_hll_registers('lineitem', 'l_returnflag', 'l_orderkey')}),
+est AS ({sql_hll_estimate('reg', 'l_returnflag')}),
 exact AS (
   SELECT l_returnflag,
          CAST(count(*) AS BIGINT) AS n,
@@ -407,27 +383,7 @@ def q58(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AND the exact-NDV audit — the audit's distinct shuffle is the only
     # corpus-keyed shuffle in the query
     okd = base.select("l_returnflag", "l_orderkey").distinct()
-    hv = sha_int(F.col("l_orderkey").cast("string"))
-    r = okd.select("l_returnflag", hv.alias("hv")).select(
-        "l_returnflag",
-        (F.col("hv") % _Q58_HLL_M).alias("idx"),
-        F.when(F.expr(f"hv div {_Q58_HLL_M}") == 0, F.lit(43))
-        .otherwise(
-            F.lit(43)
-            - F.length(F.conv(F.expr(f"CAST(hv div {_Q58_HLL_M} AS STRING)"), 10, 2))
-        )
-        .alias("rho"),
-    )
-    reg = r.groupBy("l_returnflag", "idx").agg(F.max("rho").alias("mreg"))
-    inv = F.lit(1.0) / F.expr("shiftleft(CAST(1 AS BIGINT), mreg)")
-    est = reg.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).cast("long").alias("n_regs_hit"),
-        (
-            F.lit(0.709)
-            * F.lit(float(_Q58_HLL_M * _Q58_HLL_M))
-            / (F.sum(inv) + (F.lit(_Q58_HLL_M) - F.count(F.lit(1))) * F.lit(1.0))
-        ).alias("hll_est"),
-    )
+    est = hll_estimate(hll_registers(okd, "l_returnflag", "l_orderkey"), "l_returnflag")
     # value histogram: per-(flag, cents) counts first, so the median
     # windows below run over distinct values / <=40 buckets, not rows
     vc = base.groupBy("l_returnflag", "cents").agg(F.count(F.lit(1)).alias("cnt"))

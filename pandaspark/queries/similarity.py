@@ -381,6 +381,18 @@ def q45(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- q46: IVF-style ANN (centroid cells, 1 probe) -------------------------
 
 
+def _centroids(e: DataFrame) -> DataFrame:
+    """Per-label exact micro-unit integer means of the embeddings, built
+    in one F.expr call (see _sign_bit_spark on why: per-Column py4j
+    composition costs seconds of driver time)."""
+    terms = ", ".join(
+        f"CAST(SUM(CAST(ROUND(CAST(embedding[{i}] AS DOUBLE) * 1000000) AS BIGINT)) AS DOUBLE)"
+        f" / CAST(COUNT(1) AS DOUBLE) / 1000000.0"
+        for i in range(_DIMS)
+    )
+    return e.groupBy("label").agg(F.expr(f"ARRAY({terms})").alias("centroid"))
+
+
 def _sql_centroid_terms() -> str:
     return ", ".join(
         f"CAST(sum(CAST(round(emb[{i + 1}] * 1000000) AS BIGINT)) AS DOUBLE)"
@@ -428,14 +440,7 @@ def q46(spark: SparkSession, sf_dir: str) -> DataFrame:
     The probe score is round4'd with a deterministic cell tie-break, so the
     probed cell is engine-independent."""
     e = spread(load(spark, sf_dir, "embeddings"))
-    # single F.expr call for the 64 micro-unit means (see _sign_bit_spark
-    # on why: per-Column py4j composition costs seconds of driver time)
-    centroid_terms = ", ".join(
-        f"CAST(SUM(CAST(ROUND(CAST(embedding[{i}] AS DOUBLE) * 1000000) AS BIGINT)) AS DOUBLE)"
-        f" / CAST(COUNT(1) AS DOUBLE) / 1000000.0"
-        for i in range(_DIMS)
-    )
-    cents = e.groupBy("label").agg(F.expr(f"ARRAY({centroid_terms})").alias("centroid"))
+    cents = _centroids(e)
     q = e.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import register, sql_cents_sum
+from .relational import _Q25_ORACLE
 from ..session import read_parquet
 from ..streaming import (
     dedup_stream,
@@ -33,19 +34,9 @@ from ..streaming import (
 )
 
 
-_Q165_ORACLE = f"""
-SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-       event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       {sql_cents_sum('value', 'total_value')}
-FROM events
-GROUP BY 1, 2
-"""
-
-
 @register(
     "q165_stream_tumbling",
-    _Q165_ORACLE,
+    _Q25_ORACLE,
     "Structured Streaming tumbling-window agg, hash-checked against batch SQL",
 )
 def q165(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -247,13 +247,17 @@ cand AS (
 
 _Q34_ORACLE = _minhash_oracle_ctes() + "\nSELECT doc_a, doc_b FROM cand"
 
-_Q55_ORACLE = _minhash_oracle_ctes() + f""",
+# the candidates plus each document's distinct shingle set (the oracle side
+# of attach_shingle_sets), shared by the q55, q126 and q175 oracles
+_SHINGLE_SET_CTES = _minhash_oracle_ctes() + f""",
 sh AS (
   SELECT doc_id,
          list_distinct([substring(t, i, {_SHINGLE_K})
                         FOR i IN range(1, greatest(length(t) - {_SHINGLE_K - 1}, 1) + 1)]) AS sh
   FROM norm
-)
+)"""
+
+_Q55_ORACLE = _SHINGLE_SET_CTES + """
 SELECT keep_doc, drop_doc, jaccard FROM (
   SELECT c.doc_a AS keep_doc, c.doc_b AS drop_doc,
          floor(CAST(length(list_intersect(a.sh, b.sh)) AS DOUBLE)

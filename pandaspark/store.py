@@ -282,14 +282,17 @@ def merge_into(
 def upsert_to_path(spark: SparkSession, root: str, batch: DataFrame) -> str:
     """The durable fingerprint MERGE (reference: panda.py:713-728, ON
     CONFLICT (fingerprint) DO UPDATE): matched rows take the batch's
-    derived fields, even when NULL; unmatched batch rows insert whole.
+    derived fields, even when NULL, and keep the store's
+    category_manual (a parsed batch has it NULL; the reference keeps the
+    stored row, so an override survives a re-import); unmatched batch
+    rows insert whole.
     `batch` is a storage frame (`prepare_for_store`). Commits through
     `write_store` and returns the committed snapshot path."""
     current = latest_commit_path(spark, root)
     if current is not None:
         store = read_parquet(spark, current).drop("book_year")
         # a re-sent row keeps the store's transaction_id and imported_at
-        derived = ["transfer_category", "category", "category_manual", "balance_cents"]
+        derived = ["transfer_category", "category", "balance_cents"]
         batch = merge_into(
             store, batch, ["fingerprint"], matched_update={c: f"s.{c}" for c in derived}
         )

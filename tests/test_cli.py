@@ -139,9 +139,17 @@ def test_cli_backup_is_one_file_a_person_can_edit(cli_env, spark, tmp_path):
     assert sorted(p.name for p in tmp_path.iterdir()) == ["backup.yaml", "store"]
     restored = str(tmp_path / "restored")
     assert main(["restore", "--backup", str(backup), "--store", restored]) == 0
-    manual = {r.party: r.category_manual for r in read_store(spark, restored).collect()}
+    rows = {r.party: r for r in read_store(spark, restored).collect()}
     # the first record in canonical order is the 15.01. REWE row
+    manual = {party: r.category_manual for party, r in rows.items()}
     assert manual == {"REWE Märkte GmbH": "urlaub", "Kreuzwerker": None, "Stadtwerke": None}
+    # re-importing the same file matches every row: the override survives
+    argv[argv.index(store)] = restored
+    assert main(argv) == 0
+    again = {r.party: r for r in read_store(spark, restored).collect()}
+    assert {party: r.category_manual for party, r in again.items()} == manual
+    rewe = "REWE Märkte GmbH"
+    assert again[rewe].transaction_id == rows[rewe].transaction_id
 
 
 def test_cli_daily_loop_imports_into_categorized_and_restored_stores(

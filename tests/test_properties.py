@@ -765,7 +765,7 @@ def test_q182_hll_exactness_anchors(spark, ddb):
     import math
 
     from pandaspark.queries import REGISTRY
-    from pandaspark.queries.pipeline14 import _HLL_M
+    from pandaspark.queries.sketches import HLL_M
 
     got = {r.event_type: r for r in REGISTRY["q182_hll_distinct"].fn(spark, SF_DIR).collect()}
     want = dict(
@@ -774,13 +774,13 @@ def test_q182_hll_exactness_anchors(spark, ddb):
         ).fetchall()
     )
     assert set(got) == set(want)
-    band = 5 * 1.04 / (_HLL_M ** 0.5)
+    band = 5 * 1.04 / (HLL_M ** 0.5)
     for et, r in got.items():
         assert r.exact_ndv == want[et]
-        assert 0 < r.n_regs_hit <= _HLL_M
-        if r.exact_ndv <= 2.5 * _HLL_M:
-            assert r.n_regs_hit < _HLL_M, "small range but all registers hit"
-            lc = _HLL_M * math.log(_HLL_M / (_HLL_M - r.n_regs_hit))
+        assert 0 < r.n_regs_hit <= HLL_M
+        if r.exact_ndv <= 2.5 * HLL_M:
+            assert r.n_regs_hit < HLL_M, "small range but all registers hit"
+            lc = HLL_M * math.log(HLL_M / (HLL_M - r.n_regs_hit))
             assert abs(lc / r.exact_ndv - 1) <= 0.35, (et, lc, r.exact_ndv)
         else:
             assert abs(r.rel_err) <= band, (et, r.rel_err)
@@ -1230,7 +1230,8 @@ def test_q196_registers_and_exact_match_python(spark, ddb):
     from collections import defaultdict
 
     from pandaspark.queries import REGISTRY
-    from pandaspark.queries.pipeline17 import _HLL_M, _WIN_DAYS
+    from pandaspark.queries.pipeline17 import _WIN_DAYS
+    from pandaspark.queries.sketches import HLL_M
 
     got = {r.day: r for r in REGISTRY["q196_hll_sliding_distinct"].fn(spark, SF_DIR).collect()}
     rows = ddb.execute("SELECT CAST(ts AS DATE), user_id FROM events").fetchall()
@@ -1247,11 +1248,11 @@ def test_q196_registers_and_exact_match_python(spark, ddb):
         for x in window:
             for uid in by_day[x]:
                 hv = _sha_int_py(str(uid))
-                idx, suf = hv % _HLL_M, hv // _HLL_M
+                idx, suf = hv % HLL_M, hv // HLL_M
                 rho = 43 if suf == 0 else 43 - suf.bit_length()
                 regs[idx] = max(regs.get(idx, 0), rho)
-        est = 0.709 * float(_HLL_M * _HLL_M) / (
-            sum(1.0 / (1 << m) for m in regs.values()) + (_HLL_M - len(regs)) * 1.0
+        est = 0.709 * float(HLL_M * HLL_M) / (
+            sum(1.0 / (1 << m) for m in regs.values()) + (HLL_M - len(regs)) * 1.0
         )
         assert got[d].hll_est == est
         assert got[d].n_regs_hit == len(regs)

@@ -17,8 +17,8 @@ Every defaulted parameter of those definitions must be set by a program
 call; a parameter no program call sets is a constant. Test seams are
 listed by name with the reason they stay.
 
-The cosine has one definition per engine, and its building blocks appear
-nowhere else in the package.
+The cosine and each sketch have one definition per engine, and their
+building blocks appear nowhere else in the package.
 """
 
 from __future__ import annotations
@@ -169,6 +169,38 @@ def test_one_cosine_per_engine():
                 for helper, uses in COSINE_HELPERS.items()
                 if owner != helper and uses(node)
             ]
+    assert stray == []
+
+
+# spellings of the sketch algorithms (queries/sketches.py): the Count-Min /
+# Bloom keyed hash `j || '|' || key`, the HLL estimator's alpha_64 and the
+# integer rho, as DuckDB text or as a Catalyst expression
+SKETCH_SPELLINGS = {
+    "keyed hash": re.compile(r"CAST\(\{?hj\}? AS VARCHAR\) \|\| '\|'|concat_ws\('\|', F\.lit\(str\("),
+    "HLL estimator": re.compile(r"0\.709"),
+    "HLL rho": re.compile(r"43\)? - (F\.)?length\("),
+}
+
+
+def _spelled(node: ast.AST) -> str:
+    if isinstance(node, ast.Constant):
+        return str(node.value)
+    return ast.unparse(node) if isinstance(node, (ast.Call, ast.BinOp, ast.JoinedStr)) else ""
+
+
+def test_one_sketch_per_engine():
+    """Count-Min, the keyed hash and HyperLogLog are written once per
+    engine, in queries/sketches.py. A keyed-hash '|' concat, an HLL 0.709
+    estimator or a `43 - length(` rho anywhere else in the package is a
+    second copy."""
+    home = PKG / "queries" / "sketches.py"
+    stray = sorted({
+        f"{path.relative_to(ROOT)}:{node.lineno} {what}"
+        for path in PKG.rglob("*.py") if path != home
+        for node in ast.walk(ast.parse(path.read_text()))
+        for what, spelling in SKETCH_SPELLINGS.items()
+        if spelling.search(_spelled(node))
+    })
     assert stray == []
 
 
